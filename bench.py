@@ -24,8 +24,8 @@ ride in the output JSON.
 Env:
   SPARK_GRAFT_SF_DIR      input dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS        local[N] cores (default 32)
-  SPARK_GRAFT_REPEATS     timed runs per query job, best-of (default 3)
-  SPARK_GRAFT_BUILD_REPEATS  full index builds, best-of (default 2)
+  SPARK_GRAFT_REPEATS     timed runs per query job, best-of (default 5)
+  SPARK_GRAFT_BUILD_REPEATS  full index builds, best-of (default 3)
   SPARK_GRAFT_SYNTH_DOCS  ALSO build a deterministic synthetic corpus
                           of this many docs (corpus.synth_pages) and
                           report build + kernel numbers under "synth".

@@ -1,4 +1,10 @@
-"""Distributed query execution: fan kernels out with applyInPandas.
+"""Distributed query execution: fan kernels out over Python groups.
+
+Query-major paths run one ``applyInPandas`` group per query (or per
+query and doc range); the batch-major paths (``topk_search_batch``,
+``topk_range_batch``) run one ``cogroup(...).applyInArrow`` group per
+query batch, decoding the batch's payload columns once from Arrow
+buffers (_build_batch_protos).
 
 Two physical strategies, mirroring the reference's two processing
 modes:
@@ -26,6 +32,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F, Window
 
 from pisa_spark.codecs import CODECS
@@ -36,6 +44,7 @@ from pisa_spark.query.kernels import (
     CappedBlockCache,
     adaptive_kernel,
     PRUNE_EPS,
+    Profiler,
     Stats,
     TermPostings,
     and_kernel,
@@ -282,8 +291,6 @@ def topk_search(
         parsed = parsed.join(F.broadcast(thresholds), "query_id", "left")
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        from pisa_spark.query.kernels import Profiler
-
         terms = _group_to_terms(pdf, decode)
         kk = int(pdf["k"].iloc[0]) if "k" in pdf else k
         init = 0.0
@@ -555,10 +562,13 @@ def _merge_range_partials(
     )
 
 
-# Working-set cap for the batch-major decoded-block cache: beyond
-# this many cached postings per term the cache stops growing (blocks
+# Per-term working-set cap for batch-major execution: a term with at
+# most this many postings in a batch decodes eagerly with the batch's
+# columnar pass; beyond it the term decodes lazily per block through a
+# CappedBlockCache that stops growing at the same budget (blocks then
 # decode again per query, exactly as query-major execution). Bounds
-# task memory at ~24 bytes/posting regardless of batch composition.
+# task memory at ~24 bytes/posting/term regardless of batch
+# composition. Read on the driver when an executor is called.
 BATCH_CACHE_MAX_POSTINGS = 1 << 22
 
 # Row cap under which topk_range_batch's (batch x bucket) query-
@@ -568,67 +578,179 @@ BATCH_CACHE_MAX_POSTINGS = 1 << 22
 # decides.
 RANGE_BB_BROADCAST_ROWS = 1 << 20
 
+_PAYLOADS = ("doc_bytes", "tf_bytes", "len_bytes")
+_RANKED_SCHEMA = pa.schema([
+    ("query_id", pa.string()), ("rank", pa.int32()),
+    ("doc_id", pa.int64()), ("score", pa.float64()),
+])
+_PARTIAL_SCHEMA = pa.schema([
+    ("query_id", pa.string()), ("doc_id", pa.int64()),
+    ("score", pa.float64()),
+])
 
-def _build_batch_protos(left: pd.DataFrame, decode):
+
+def _binary_column(table: pa.Table, name: str) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets, values) of a binary column as numpy views of its Arrow
+    buffers — zero-copy for a single-chunk column."""
+    chunks = table.column(name).chunks
+    arr = chunks[0] if len(chunks) == 1 else pa.concat_arrays(chunks)
+    off_type = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    _, off_buf, data_buf = arr.buffers()
+    offsets = np.frombuffer(off_buf, off_type)[arr.offset:arr.offset + len(arr) + 1]
+    return offsets.astype(np.int64), np.frombuffer(data_buf, np.uint8)
+
+
+def _segmented_arange(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """concat(arange(s, s + n) for s, n in zip(starts, lengths))."""
+    ends = np.cumsum(lengths)
+    total = int(ends[-1]) if len(ends) else 0
+    return np.arange(total) + np.repeat(starts - ends + lengths, lengths)
+
+
+def _decode_column(column, rows: np.ndarray, counts: np.ndarray,
+                   decode) -> np.ndarray:
+    """int64 values of ``rows`` (storage row indices, in output order,
+    ``counts`` values each) of one payload ``column`` (offsets,
+    values). Self-delimiting codecs (varint_decode.concat_safe) decode
+    every row in ONE call over one gather of their bytes; other codecs
+    decode per block from zero-copy slices."""
+    off, data = column
+    lo, hi = off[rows], off[rows + 1]
+    if getattr(decode, "concat_safe", False):
+        buf = data[_segmented_arange(lo, hi - lo)]
+        return decode(buf, int(counts.sum())).astype(np.int64)
+    mv = memoryview(data)
+    return np.concatenate([
+        decode(mv[a:b], n)
+        for a, b, n in zip(lo.tolist(), hi.tolist(), counts.tolist())
+    ]).astype(np.int64)
+
+
+def _build_batch_protos(left: pa.Table | pd.DataFrame, decode,
+                        cap: int | None = None):
     """(protos, base_bm) for one cogroup's distinct term segment rows
     — the per-batch TermPostings prototypes both batch-major executors
-    (topk_search_batch, topk_range_batch) share: weight-neutral bounds
-    (weight rebound per query via dataclasses.replace), a shared
-    per-term decoded-block cache, CappedBlockCache beyond the
-    working-set cap."""
+    (topk_search_batch, topk_range_batch) share, with weight-neutral
+    bounds (weight rebound per query via dataclasses.replace).
+
+    One columnar pass: rows sort once by (term_id, block_id); every
+    term with at most ``cap`` postings (default BATCH_CACHE_MAX_POSTINGS)
+    decodes eagerly — one decode call per payload column for
+    self-delimiting codecs, one segmented cumsum rebuilding absolute
+    docIDs — and its proto carries term-level (docs, tfs, lens) views
+    plus block offsets. Over-cap terms keep lazy per-block decode from
+    zero-copy payload slices through a CappedBlockCache, so ``cap``
+    bounds per-term decoded memory either way. A pandas frame (in-
+    process callers) is converted first."""
+    if isinstance(left, pd.DataFrame):
+        left = pa.Table.from_pandas(left, preserve_index=False)
+    if cap is None:
+        cap = BATCH_CACHE_MAX_POSTINGS
     protos: dict[int, TermPostings] = {}
     base_bm: dict[int, np.ndarray] = {}
-    for term_id, g in left.groupby("term_id", sort=True):
-        g = g.sort_values("block_id")
-        tmax = float(g["term_max_score"].iloc[0])
-        if "max_score_q" in g.columns:
-            bm = g["max_score_q"].to_numpy(np.float64) / 255.0 * tmax
+    if left.num_rows == 0:
+        return protos, base_bm
+    order = pc.sort_indices(
+        left, sort_keys=[("term_id", "ascending"), ("block_id", "ascending")]
+    ).to_numpy()
+
+    def col(name, dtype):
+        return left.column(name).to_numpy()[order].astype(dtype, copy=False)
+
+    term = col("term_id", np.int64)
+    counts = col("count", np.int64)
+    df = col("df", np.float64)
+    tmax = col("term_max_score", np.float64)
+    max_doc = col("max_doc_id", np.uint64)
+    if "max_score_q" in left.column_names:
+        bm = col("max_score_q", np.float64) / 255.0 * tmax
+    else:
+        bm = col("max_score", np.float64)
+    bm_micro = bm * MICRO
+    # term t owns sorted rows tb[t]:tb[t + 1]; pcum = postings before row
+    tb = np.concatenate(([0], np.flatnonzero(np.diff(term)) + 1, [len(term)]))
+    pcum = np.concatenate(([0], np.cumsum(counts)))
+    term_postings = pcum[tb[1:]] - pcum[tb[:-1]]
+    eager = term_postings <= cap
+    eager_rows = np.repeat(eager, np.diff(tb))
+    e_counts = counts[eager_rows]
+    columns = {c: _binary_column(left, c) for c in _PAYLOADS}
+    if eager.any():
+        rows = order[eager_rows]
+        payload, tfs, lens = (
+            _decode_column(columns[c], rows, e_counts, decode) for c in _PAYLOADS
+        )
+        tfs += 1
+        lens += 1
+        # Each block's first doc value is absolute, the rest are
+        # gaps-1: one cumsum over value+1, then re-base every block to
+        # its absolute first doc (the re-base cancels whatever the
+        # cumsum carried in, so block starts need no special case).
+        starts = np.cumsum(e_counts) - e_counts
+        docs = payload + 1
+        np.cumsum(docs, out=docs)
+        docs += np.repeat(payload[starts] - docs[starts], e_counts)
+        for a in (docs, tfs, lens):
+            a.setflags(write=False)  # shared by every query of the batch
+        Profiler.blocks += len(rows)
+        Profiler.postings += int(e_counts.sum())
+    e_pos = 0
+    for t in range(len(tb) - 1):
+        r0, r1 = int(tb[t]), int(tb[t + 1])
+        tid = int(term[r0])
+        base_bm[tid] = bm_micro[r0:r1]
+        if eager[t]:
+            sl = slice(e_pos, e_pos + int(term_postings[t]))
+            e_pos = sl.stop
+            payloads = dict(
+                decoded=(docs[sl], tfs[sl], lens[sl]),
+                block_offsets=pcum[r0:r1 + 1] - pcum[r0],
+            )
         else:
-            bm = g["max_score"].to_numpy(np.float64)
-        tid = int(term_id)
-        base_bm[tid] = bm * MICRO
-        cache: dict = {}
-        if int(g["count"].sum()) > BATCH_CACHE_MAX_POSTINGS:
-            # over-cap term: cache its first cap-worth of blocks
-            # (first-come) instead of disabling caching — see
-            # kernels.CappedBlockCache
-            cache = CappedBlockCache(BATCH_CACHE_MAX_POSTINGS)
+            rows = order[r0:r1]
+            payloads = dict(block_cache=CappedBlockCache(cap))
+            for c, (off, data) in columns.items():
+                mv = memoryview(data)
+                payloads[c.replace("_bytes", "_payloads")] = [
+                    mv[off[r]:off[r + 1]] for r in rows.tolist()
+                ]
         protos[tid] = TermPostings(
             term_id=tid,
-            df=float(g["df"].iloc[0]),
+            df=float(df[r0]),
             weight=1.0,
-            max_score=tmax * MICRO + 1.0,
-            block_max_doc=g["max_doc_id"].to_numpy(np.uint64),
+            max_score=float(tmax[r0]) * MICRO + 1.0,
+            block_max_doc=max_doc[r0:r1],
             block_max_score=base_bm[tid] + 1.0,
-            block_count=g["count"].to_numpy(np.int64),
-            doc_payloads=[bytes(x) for x in g["doc_bytes"]],
-            tf_payloads=[bytes(x) for x in g["tf_bytes"]],
-            len_payloads=[bytes(x) for x in g["len_bytes"]],
+            block_count=counts[r0:r1],
             decode=decode,
-            block_cache=cache,
+            **payloads,
         )
     return protos, base_bm
 
 
-def _walk_batch_queries(right: pd.DataFrame, protos, base_bm, kernel, stats):
-    """Column-array walk over a batch's (query-sorted) parsed rows —
-    no per-query pandas groupby/iterrows. Yields (query_id, docs,
-    scores) per query: protos rebound to the query's weights (shared
-    payload/caches), threshold bootstrap honored, per-query k from
-    the mandatory k column, idf caches shared back into the protos."""
+def _walk_batch_queries(right: pa.Table | pd.DataFrame, protos, base_bm,
+                        kernel, stats):
+    """Column-array walk over a batch's parsed rows, sorted by query —
+    no per-query groupby/iterrows. Yields (query_id, docs, scores) per
+    query: protos rebound to the query's weights (shared decoded
+    payloads/caches), threshold bootstrap honored, per-query k from
+    the mandatory k column, idf caches shared back into the protos. A
+    pandas frame (in-process callers) is converted first."""
     from dataclasses import replace
 
-    r = right.sort_values("query_id", kind="stable")
-    q_ids = r["query_id"].to_numpy()
-    t_ids = r["term_id"].to_numpy()
-    weights = r["weight"].to_numpy(np.float64)
-    ks = r["k"].to_numpy()
+    if isinstance(right, pd.DataFrame):
+        right = pa.Table.from_pandas(right, preserve_index=False)
+    r = right.take(pc.sort_indices(right, sort_keys=[("query_id", "ascending")]))
+    q_ids = r.column("query_id").to_numpy()
+    t_ids = r.column("term_id").to_numpy()
+    weights = r.column("weight").to_numpy().astype(np.float64, copy=False)
+    ks = r.column("k").to_numpy()
     thr = (
-        r["threshold_micro"].to_numpy(np.float64)
-        if "threshold_micro" in r
+        r.column("threshold_micro").cast(pa.float64()).to_numpy()
+        if "threshold_micro" in r.column_names
         else None
     )
-    i, n_rows = 0, len(r)
+    i, n_rows = 0, r.num_rows
     while i < n_rows:
         j = i
         terms = []
@@ -654,6 +776,30 @@ def _walk_batch_queries(right: pd.DataFrame, protos, base_bm, kernel, stats):
         i = j
 
 
+def _results_table(walk, schema: pa.Schema) -> pa.Table:
+    """One cogroup's output table from _walk_batch_queries' per-query
+    (query_id, docs, scores), typed exactly as ``schema``; a ``rank``
+    field gets 1..n within each query."""
+    q_ids, docs, scores = [], [], []
+    for qid, d, sc in walk:
+        q_ids.append(qid)
+        docs.append(d)
+        scores.append(sc)
+    n = np.array([len(d) for d in docs], dtype=np.int64)
+    cols = {
+        "query_id": pa.array(q_ids, pa.string()).take(
+            np.repeat(np.arange(len(n)), n)
+        ),
+        "doc_id": np.concatenate(docs).astype(np.int64) if docs else [],
+        "score": np.concatenate(scores).astype(np.float64) if docs else [],
+    }
+    if "rank" in schema.names:
+        cols["rank"] = (
+            np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n) + 1
+        ).astype(np.int32)
+    return pa.table(cols, schema=schema)
+
+
 def topk_search_batch(
     index: InvertedIndex,
     parsed: DataFrame,
@@ -669,10 +815,10 @@ def topk_search_batch(
     own task: a term shared by Q queries is Arrow-transferred and
     block-decoded Q times. This variant hashes queries into
     ``batches`` groups and cogroups (distinct term segments per
-    batch) with (the batch's query table): every term's list crosses
-    the wire ONCE per batch, and a shared per-term block cache
-    (TermPostings.block_cache) decodes each block at most once per
-    batch. Same kernels, same results — per-query weight/bound
+    batch) with (the batch's query table) under ``applyInArrow``:
+    every term's list crosses the wire ONCE per batch and decodes ONCE
+    per batch, columnar, straight from the Arrow payload buffers
+    (_build_batch_protos). Same kernels, same results — per-query weight/bound
     fields are rebuilt per query (cheap per-block arrays), while the
     decoded payloads and the weight-independent idf cache are shared.
 
@@ -682,7 +828,7 @@ def topk_search_batch(
     the low-latency path. Parallelism = ``batches`` tasks; per-task
     working set = the batch's distinct lists (same head-term caveat
     as topk_search — use topk_range for beyond-task-size lists), with
-    cache growth capped at BATCH_CACHE_MAX_POSTINGS postings/term.
+    decoded postings capped at BATCH_CACHE_MAX_POSTINGS per term.
 
     ``batches`` defaults to 2x the cluster's default parallelism —
     the sharing/parallelism sweet spot measured in BENCH.md (at 3200
@@ -742,46 +888,22 @@ def topk_search_batch(
     bt = parsed.select(batch_expr.alias("batch_id"), "term_id").distinct()
     rows = _factored_segment_rows(index, parsed, bt, scan_prune)
 
-    def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    cap = BATCH_CACHE_MAX_POSTINGS
+
+    def run(left: pa.Table, right: pa.Table) -> pa.Table:
         # left: the batch's distinct term segment rows (+ term stats);
         # right: the batch's parsed queries (query_id, k, term_id,
         # weight[, threshold_micro]). Shared proto build + query walk
-        # (_build_batch_protos/_walk_batch_queries); one output frame.
-        protos, base_bm = _build_batch_protos(left, decode)
-        out_q: list = []
-        out_d: list = []
-        out_s: list = []
-        out_n: list = []
-        for qid, docs, scores in _walk_batch_queries(
-            right, protos, base_bm, kernel, stats
-        ):
-            out_q.append(qid)
-            out_d.append(docs)
-            out_s.append(scores)
-            out_n.append(len(docs))
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype=object),
-                 "rank": pd.Series(dtype=np.int32),
-                 "doc_id": pd.Series(dtype=np.int64),
-                 "score": pd.Series(dtype=np.float64)}
-            )
-        counts = np.asarray(out_n)
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(np.asarray(out_q, dtype=object), counts),
-                "rank": np.concatenate(
-                    [np.arange(1, c + 1, dtype=np.int32) for c in out_n]
-                ),
-                "doc_id": np.concatenate(out_d) if out_d else np.empty(0, np.int64),
-                "score": np.concatenate(out_s) if out_s else np.empty(0),
-            }
+        # (_build_batch_protos/_walk_batch_queries); one output table.
+        protos, base_bm = _build_batch_protos(left, decode, cap)
+        return _results_table(
+            _walk_batch_queries(right, protos, base_bm, kernel, stats),
+            _RANKED_SCHEMA,
         )
 
-    schema = "query_id string, rank int, doc_id long, score double"
     rows = rows.repartition(batches, "batch_id")  # AQE-coalesce exempt
-    return rows.groupBy("batch_id").cogroup(pq.groupBy("batch_id")).applyInPandas(
-        lambda left, right: run(left, right), schema
+    return rows.groupBy("batch_id").cogroup(pq.groupBy("batch_id")).applyInArrow(
+        run, "query_id string, rank int, doc_id long, score double"
     )
 
 
@@ -805,7 +927,7 @@ def topk_range_batch(
     via the resident index). This variant cogroups on
     (batch_id, bucket): LEFT = the batch's DISTINCT terms' blocks
     within the bucket (each list crosses the wire once per batch per
-    bucket, decoded at most once via the shared per-term block cache);
+    bucket, decoded once per group by the shared columnar proto build);
     RIGHT = the batch's parsed queries replicated per live bucket
     (fixed-width metadata rows only — payload bytes never replicate).
     Kernels then run per query over the bucket-local protos exactly as
@@ -922,45 +1044,29 @@ def topk_range_batch(
             bb = F.broadcast(bb)
         pq = pq.join(bb, "batch_id")
 
-    def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    cap = BATCH_CACHE_MAX_POSTINGS
+
+    def run(left: pa.Table, right: pa.Table) -> pa.Table:
         # left: the (batch, bucket)'s distinct term blocks (+ stats);
         # right: the batch's parsed queries for this bucket. Shared
         # proto build + query walk (_build_batch_protos/
         # _walk_batch_queries); output is UNranked partials for the
         # window merge.
-        if len(left) and not len(right):
+        if left.num_rows and not right.num_rows:
             # Every real bucket must have received the batch's query
             # replica (see the bb construction above). Fail loudly —
             # returning empty here would silently drop this bucket's
             # docs from the top-k.
+            bucket = (left.column("bucket")[0].as_py()
+                      if "bucket" in left.column_names else "?")
             raise RuntimeError(
-                "topk_range_batch: segment bucket "
-                f"{int(left['bucket'].iloc[0]) if 'bucket' in left else '?'} "
-                "outside the replicated query range — non-dense doc ids?"
+                f"topk_range_batch: segment bucket {bucket} outside the "
+                "replicated query range — non-dense doc ids?"
             )
-        protos, base_bm = _build_batch_protos(left, decode)
-        out_q: list = []
-        out_d: list = []
-        out_s: list = []
-        for qid, docs, scores in _walk_batch_queries(
-            right, protos, base_bm, kernel, stats
-        ):
-            if len(docs):
-                out_q.append(np.repeat(qid, len(docs)))
-                out_d.append(docs)
-                out_s.append(scores)
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype=object),
-                 "doc_id": pd.Series(dtype=np.int64),
-                 "score": pd.Series(dtype=np.float64)}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
+        protos, base_bm = _build_batch_protos(left, decode, cap)
+        return _results_table(
+            _walk_batch_queries(right, protos, base_bm, kernel, stats),
+            _PARTIAL_SCHEMA,
         )
 
     # Pinned partition count (AQE-coalesce exempt, same rationale as
@@ -974,9 +1080,6 @@ def topk_range_batch(
     partial = (
         rows.groupBy("batch_id", "bucket")
         .cogroup(pq.groupBy("batch_id", "bucket"))
-        .applyInPandas(
-            lambda left, right: run(left, right),
-            "query_id string, doc_id long, score double",
-        )
+        .applyInArrow(run, "query_id string, doc_id long, score double")
     )
     return _merge_range_partials(partial, merge_parsed, k)

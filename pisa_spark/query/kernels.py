@@ -2,8 +2,11 @@
 
 These are the engine's custom operators — the part of the reference
 Spark genuinely lacks (cursor-based dynamic pruning,
-query/algorithm/*.hpp). They run inside ``applyInPandas`` groups
-(executor.py), one query per group, all array math vectorized.
+query/algorithm/*.hpp). They run inside the executor's Python groups
+(executor.py): query-major paths call them once per ``applyInPandas``
+group; the batch-major paths run many queries per ``applyInArrow``
+cogroup over term postings decoded once per batch. All array math is
+vectorized.
 
 Result semantics (every kernel, pinned by tests vs the SQL oracle,
 mirroring the reference's own agreement tests
@@ -84,9 +87,15 @@ class CappedBlockCache(dict):
 class TermPostings:
     """One query term's posting data, block-encoded.
 
-    Arrays are per-block, ordered by block_id; payloads decode lazily
-    (decode_block), mirroring the reference cursor's lazy freq-block
-    decode (block_posting_list.hpp:101-159).
+    Arrays are per-block, ordered by block_id. Two payload forms:
+
+    - ``decoded`` + ``block_offsets``: term-level (docs, tfs, lens)
+      arrays already decoded (batch-major execution decodes a whole
+      batch columnar, executor._build_batch_protos); block ``bi`` is
+      the slice ``block_offsets[bi]:block_offsets[bi + 1]``.
+    - per-block ``*_payloads`` decoded lazily (decode_block),
+      mirroring the reference cursor's lazy freq-block decode
+      (block_posting_list.hpp:101-159).
     """
 
     term_id: int
@@ -96,17 +105,19 @@ class TermPostings:
     block_max_doc: np.ndarray  # u64 per block
     block_max_score: np.ndarray  # f64 per block, MICRO units, weight-multiplied
     block_count: np.ndarray  # int per block
-    doc_payloads: list[bytes]
-    tf_payloads: list[bytes]
-    len_payloads: list[bytes]  # per-posting doc_len-1 (rides in the block)
-    decode: object  # codec decode fn
+    doc_payloads: list | None = None  # bytes-like per block
+    tf_payloads: list | None = None
+    len_payloads: list | None = None  # per-posting doc_len-1 (rides in the block)
+    decode: object = None  # codec decode fn
     idf_cache: object = None  # lazily-built constant-idf array (_score)
     # Optional shared decoded-block cache {block_idx: (docs, tfs,
-    # lens)} — populated when batch-major execution (executor.
-    # topk_search_batch) runs many queries over the same term in one
-    # task, so each block decodes at most once per batch. None in
-    # query-major execution (one query per task; nothing to share).
+    # lens)} for lazily decoded terms that batch-major execution runs
+    # many queries over (over-cap terms, executor.
+    # BATCH_CACHE_MAX_POSTINGS), so a block decodes at most once per
+    # batch. None in query-major execution (nothing to share).
     block_cache: object = None
+    decoded: tuple | None = None  # term-level (docs, tfs, lens)
+    block_offsets: np.ndarray | None = None  # int64, n_blocks + 1
 
     def decode_block(self, bi: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(docs, tfs, doc_lens) for one block. Doc lengths are stored
@@ -117,6 +128,10 @@ class TermPostings:
         Self-delimiting codecs (varint_decode.concat_safe) decode the
         three payloads in ONE call — the per-call numpy overhead at
         128-value granularity is the kernels' hot path."""
+        if self.decoded is not None:
+            lo, hi = self.block_offsets[bi], self.block_offsets[bi + 1]
+            d, t, L = self.decoded
+            return d[lo:hi], t[lo:hi], L[lo:hi]
         if self.block_cache is not None:
             hit = self.block_cache.get(bi)
             if hit is not None:
@@ -126,8 +141,8 @@ class TermPostings:
         Profiler.postings += n
         if getattr(self.decode, "concat_safe", False):
             fused = self.decode(
-                self.doc_payloads[bi] + self.tf_payloads[bi]
-                + self.len_payloads[bi],
+                b"".join((self.doc_payloads[bi], self.tf_payloads[bi],
+                          self.len_payloads[bi])),
                 3 * n,
             ).astype(np.int64)
             payload = fused[:n]
@@ -145,10 +160,12 @@ class TermPostings:
         return docs, tfs, lens
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        if len(self.doc_payloads) == 0:
+        if self.decoded is not None:
+            return self.decoded
+        if len(self.block_count) == 0:
             e = np.empty(0, np.int64)
             return e, e, e
-        parts = [self.decode_block(i) for i in range(len(self.doc_payloads))]
+        parts = [self.decode_block(i) for i in range(len(self.block_count))]
         return (
             np.concatenate([p[0] for p in parts]),
             np.concatenate([p[1] for p in parts]),
@@ -288,7 +305,7 @@ class _Cursor:
         self._stats = stats
         self._bmd = tp.block_max_doc.tolist()
         self._bms = tp.block_max_score.tolist()
-        self._n_blocks = len(tp.doc_payloads)
+        self._n_blocks = len(tp.block_count)
         self.ms = tp.max_score  # hot-path copy (skip two attr hops)
         self.bms = 0.0  # current block's max score (python float)
         self.bld = self.SENTINEL  # current block's last docID
@@ -428,7 +445,7 @@ def _interval_sweep(terms: list[TermPostings], k: int, stats: Stats,
     exactly _TopK.would_enter's test, so the top-k (incl. docID
     tie-breaks) is identical to the DAAT form (pinned by
     test_batched_kernels_match_daat)."""
-    terms = [t for t in terms if len(t.doc_payloads)]
+    terms = [t for t in terms if len(t.block_count)]
     if not terms:
         return np.empty(0, np.int64), np.empty(0, np.float64)
     if len(terms) == 1:
@@ -606,7 +623,7 @@ def wand_kernel_daat(terms: list[TermPostings], k: int,
 
     by_docid = attrgetter("docid")
     by_ms = attrgetter("ms")
-    cursors = [_Cursor(tp, stats) for tp in terms if len(tp.doc_payloads)]
+    cursors = [_Cursor(tp, stats) for tp in terms if len(tp.block_count)]
     topk = _TopK(k, init_threshold)
     while True:
         cursors = [c for c in cursors if not c.done]
@@ -655,7 +672,7 @@ def block_max_wand_kernel_daat(terms: list[TermPostings], k: int,
 
     by_docid = attrgetter("docid")
     by_ms = attrgetter("ms")
-    cursors = [_Cursor(tp, stats) for tp in terms if len(tp.doc_payloads)]
+    cursors = [_Cursor(tp, stats) for tp in terms if len(tp.block_count)]
     topk = _TopK(k, init_threshold)
     while True:
         cursors = [c for c in cursors if not c.done]

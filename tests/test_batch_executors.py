@@ -1,0 +1,254 @@
+"""Batch-major executors (topk_search_batch, topk_range_batch).
+
+Two layers:
+
+- the columnar proto build (_build_batch_protos) in-process: eager
+  term-level decode under the per-term cap, lazy CappedBlockCache
+  decode above it, identical kernel results either way;
+- a small pinned configuration matrix (codec x quantization x
+  compressed block maxes) run through both Spark executors, rank-
+  identical to an exhaustive SQL oracle, including an all-OOV batch
+  (empty segment side) and k above the match count.
+"""
+
+from __future__ import annotations
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import Window
+
+from pisa_spark.codecs import CODECS
+from pisa_spark.config import EngineConfig, IndexConfig
+from pisa_spark.query import executor as ex
+from pisa_spark.query import kernels as K
+
+
+def _segment_table(codec: str, seed: int = 5) -> tuple[pa.Table, K.Stats]:
+    """A shuffled, two-chunk segment table (the cogroup's left side)
+    for six terms of very different lengths, blocks of 1-40 postings,
+    with sound block/term maxes."""
+    enc, _ = CODECS[codec]
+    rnd = np.random.default_rng(seed)
+    n_docs = 3000
+    lens_all = rnd.integers(1, 60, size=n_docs)
+    stats = K.Stats(num_docs=float(n_docs), avg_len=float(lens_all.mean()))
+    cols = {c: [] for c in ("term_id", "block_id", "count", "max_doc_id",
+                            "max_score", "doc_bytes", "tf_bytes",
+                            "len_bytes", "df", "term_max_score")}
+    for tid, n in enumerate((3, 40, 200, 900, 1500, 2500)):
+        docs = np.sort(rnd.choice(n_docs, size=n, replace=False))
+        tfs = rnd.integers(1, 9, size=n)
+        lens = lens_all[docs]
+        probe = K.TermPostings(
+            term_id=tid, df=float(n), weight=1.0, max_score=0.0,
+            block_max_doc=None, block_max_score=None, block_count=None,
+        )
+        raw = K._score(probe, tfs, lens, stats) / 1e6
+        cuts = np.cumsum(rnd.integers(1, 41, size=n))
+        cuts = np.concatenate(([0], cuts[cuts < n], [n]))
+        for b, (s, e) in enumerate(zip(cuts[:-1], cuts[1:])):
+            d = docs[s:e]
+            cols["term_id"].append(tid)
+            cols["block_id"].append(b)
+            cols["count"].append(int(e - s))
+            cols["max_doc_id"].append(int(d[-1]))
+            cols["max_score"].append(float(raw[s:e].max()) + 1e-6)
+            cols["doc_bytes"].append(enc(np.concatenate(([d[0]], np.diff(d) - 1))))
+            cols["tf_bytes"].append(enc(tfs[s:e] - 1))
+            cols["len_bytes"].append(enc(lens[s:e] - 1))
+            cols["df"].append(n)
+            cols["term_max_score"].append(float(raw.max()) + 1e-6)
+    table = pa.table(cols)
+    table = table.take(rnd.permutation(table.num_rows))
+    half = table.num_rows // 2
+    return pa.Table.from_batches(
+        table.slice(0, half).to_batches() + table.slice(half).to_batches()
+    ), stats
+
+
+def _queries() -> pa.Table:
+    rows = [("q0", 5, 1.0), ("q0", 4, 2.0), ("q1", 0, 1.0), ("q1", 3, 1.0),
+            ("q1", 5, 1.0), ("q2", 2, 1.0), ("q3", 99, 1.0), ("q4", 4, 1.0)]
+    return pa.table({
+        "query_id": [r[0] for r in rows],
+        "term_id": pa.array([r[1] for r in rows], pa.int64()),
+        "weight": [r[2] for r in rows],
+        "k": pa.array([10, 10, 7, 7, 7, 5000, 10, 3], pa.int32()),
+    })
+
+
+@pytest.mark.parametrize("codec", ["varint", "bitpack"])
+def test_build_batch_protos_cap_splits_eager_and_lazy(codec):
+    """Terms above the cap decode lazily through a CappedBlockCache,
+    terms at or below it decode eagerly into term-level arrays; every
+    block and every kernel result is identical to the all-eager build
+    (varint: one decode call per payload column; bitpack: per block)."""
+    left, stats = _segment_table(codec)
+    decode = CODECS[codec][1]
+    cap = 500
+    eager, _ = ex._build_batch_protos(left, decode, cap=1 << 30)
+    mixed, base_bm = ex._build_batch_protos(left, decode, cap=cap)
+    assert sorted(mixed) == list(range(6))
+    for tid, tp in mixed.items():
+        n = int(tp.block_count.sum())
+        if n > cap:
+            assert tp.decoded is None and tp.doc_payloads
+            assert isinstance(tp.block_cache, K.CappedBlockCache)
+        else:
+            assert tp.decoded is not None and tp.doc_payloads is None
+        ref = eager[tid]
+        for bi in range(len(tp.block_count)):
+            for got, exp in zip(tp.decode_block(bi), ref.decode_block(bi)):
+                np.testing.assert_array_equal(got, exp)
+        for got, exp in zip(tp.decode_all(), ref.decode_all()):
+            np.testing.assert_array_equal(got, exp)
+    over = [tp for tp in mixed.values() if tp.decoded is None]
+    assert over and len(over) < len(mixed)
+    for algo in ("ranked_or", "maxscore", "block_max_maxscore",
+                 "block_max_wand", "wand", "adaptive"):
+        kernel = ex.RANKED_KERNELS[algo]
+        fresh_eager, bm_e = ex._build_batch_protos(left, decode, cap=1 << 30)
+        fresh_mixed, bm_m = ex._build_batch_protos(left, decode, cap=cap)
+        a = list(ex._walk_batch_queries(_queries(), fresh_eager, bm_e, kernel, stats))
+        b = list(ex._walk_batch_queries(_queries(), fresh_mixed, bm_m, kernel, stats))
+        assert [q for q, _, _ in a] == ["q0", "q1", "q2", "q3", "q4"]
+        for (qa, da, sa), (qb, db, sb) in zip(a, b):
+            assert qa == qb
+            np.testing.assert_array_equal(da, db)
+            np.testing.assert_array_equal(sa, sb)
+
+
+def test_build_batch_protos_accepts_pandas_and_counts_eager_decodes():
+    """In-process callers pass pandas frames; eager decodes still feed
+    kernels.Profiler (every shipped block counted once)."""
+    left, stats = _segment_table("varint")
+    decode = CODECS["varint"][1]
+    K.Profiler.reset()
+    protos, base_bm = ex._build_batch_protos(left.to_pandas(), decode)
+    assert K.Profiler.blocks == left.num_rows
+    assert K.Profiler.postings == sum(left["count"].to_pylist())
+    got = list(ex._walk_batch_queries(
+        _queries().to_pandas(), protos, base_bm,
+        ex.RANKED_KERNELS["ranked_or"], stats,
+    ))
+    assert [q for q, _, _ in got] == ["q0", "q1", "q2", "q3", "q4"]
+    assert len(got[3][1]) == 0  # q3: its only term is not in the batch
+
+
+# ---------------------------------------------------------- config matrix
+
+MATRIX = [
+    # (codec, quantize_bits, compress_blockmax)
+    ("varint", 8, False),
+    ("bitpack", None, True),
+    ("ef", None, False),
+    ("pef", 8, True),
+]
+N_DOCS = 300
+BIG_K_QUERY = "q0001"  # four terms incl. two head terms
+VOCAB = 400
+
+
+@pytest.fixture(scope="module")
+def pages(spark):
+    from pisa_spark.corpus import synth_pages
+
+    return synth_pages(spark, N_DOCS, vocab_size=VOCAB, max_len=80).localCheckpoint()
+
+
+@pytest.fixture(scope="module")
+def oracles() -> dict:
+    """quantize_bits -> oracle frame: codecs and block-max compression
+    do not change the exhaustive answer, so it is computed once per
+    quantization setting."""
+    return {}
+
+
+def _oracle(index, parsed) -> pd.DataFrame:
+    """Exhaustive ranked disjunction in SQL, ranked (score desc, doc
+    asc), capped at each query's k: BM25 micro scores over the raw
+    postings, or weight x stored impact over the decoded segments when
+    quantized (impacts exist only there)."""
+    from pisa_spark.build import decode_segments
+    from pisa_spark.functions.scoring import bm25_sql_expr, dlit, micro_sql
+
+    if index.config.index.quantize_bits:
+        post = decode_segments(index.segments, index.config.index)
+        score = "tf"
+    else:
+        post = (
+            index.postings.join(index.doc_sizes, "doc_id")
+            .join(index.lexicon.select("term_id", "df"), "term_id")
+        )
+        score = bm25_sql_expr(
+            tf="tf", df="df", doc_len="doc_len",
+            num_docs=dlit(index.num_docs), avg_len=dlit(index.avg_len),
+            k1=index.config.bm25.k1, b=index.config.bm25.b,
+        )
+    summed = (
+        post.join(parsed.select("query_id", "term_id", "weight"), "term_id")
+        .withColumn("m", F.expr(micro_sql(score, weight="weight")))
+        .groupBy("query_id", "doc_id").agg(F.sum("m").alias("ms"))
+        .filter(F.col("ms") > 0)
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("ms").desc(), F.col("doc_id"))
+    qk = parsed.select("query_id", "k").distinct()
+    return _sorted(
+        summed.withColumn("rank", F.row_number().over(w))
+        .join(qk, "query_id").filter(F.col("rank") <= F.col("k"))
+        .select("query_id", "rank", "doc_id")
+    )
+
+
+def _sorted(df) -> pd.DataFrame:
+    return (
+        df.select("query_id", F.col("rank").cast("long"), "doc_id").toPandas()
+        .sort_values(["query_id", "rank"]).reset_index(drop=True)
+    )
+
+
+@pytest.mark.parametrize("codec,qbits,cbm", MATRIX)
+def test_batch_executors_config_matrix(spark, pages, oracles, codec, qbits, cbm):
+    """Both batch executors rank-identical to the exhaustive oracle per
+    configuration, with one query's k above its match count, and an
+    all-OOV workload (every batch's segment side empty) answering
+    nothing."""
+    from pisa_spark.corpus import synth_queries
+    from pisa_spark.index import build_index
+    from pisa_spark.query.parser import parse_queries
+
+    cfg = EngineConfig(index=IndexConfig(
+        salt_bucket_docs=128, codec=codec, quantize_bits=qbits,
+        compress_blockmax=cbm,
+    ))
+    index = build_index(spark, pages, cfg)
+    qdf = spark.createDataFrame(synth_queries(12, vocab_size=VOCAB, seed=3))
+    parsed = parse_queries(qdf, index.lexicon, pre_tokenized=True).withColumn(
+        "k", F.when(F.col("query_id") == F.lit(BIG_K_QUERY), F.lit(N_DOCS + 50))
+        .otherwise(F.col("k"))
+    ).localCheckpoint()
+    if qbits not in oracles:
+        oracles[qbits] = _oracle(index, parsed)
+    exp = oracles[qbits]
+    assert exp["query_id"].nunique() >= 8
+    big = exp[exp["query_id"] == BIG_K_QUERY]
+    assert 0 < len(big) < N_DOCS + 50  # k above the match count
+    for got in (
+        ex.topk_search_batch(index, parsed, algorithm="block_max_wand", k=10, batches=3),
+        ex.topk_range_batch(index, parsed, algorithm="maxscore", k=10, batches=2),
+    ):
+        pd.testing.assert_frame_equal(_sorted(got), exp)
+
+    if codec == MATRIX[0][0]:
+        oov = spark.createDataFrame(
+            [("x0", -1, 1.0, 10), ("x1", -2, 1.0, 10), ("x1", -3, 2.0, 10)],
+            "query_id string, term_id long, weight double, k int",
+        )
+        for got in (
+            ex.topk_search_batch(index, oov, algorithm="adaptive", k=10, batches=1),
+            ex.topk_range_batch(index, oov, algorithm="adaptive", k=10, batches=1),
+        ):
+            assert got.count() == 0

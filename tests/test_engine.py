@@ -1513,6 +1513,22 @@ def test_range_batch_matches_oracle(index, parsed, oracle_topk, batches):
     np.testing.assert_allclose(got["score"], exp["score"], rtol=0, atol=1e-6)
 
 
+def test_range_batch_guards_bucket_outside_replicated_range(index, parsed):
+    """topk_range_batch replicates queries to ceil(num_docs /
+    salt_bucket_docs) buckets, relying on dense doc ids; a segment
+    bucket beyond that range must fail the job loudly instead of
+    silently dropping its docs from the top-k."""
+    from dataclasses import replace
+
+    from pisa_spark.query.executor import topk_range_batch
+
+    sparse = replace(index, num_docs=100)  # one replicated bucket of four
+    with pytest.raises(Exception, match="outside the replicated query range"):
+        topk_range_batch(
+            sparse, parsed, algorithm="maxscore", k=10, batches=1
+        ).collect()
+
+
 def test_range_batch_live_thresholds(index, parsed, oracle_topk):
     """topk_range_batch with bootstrap thresholds: the Catalyst
     live-range pre-filter path stays rank-identical, and conjunctive
