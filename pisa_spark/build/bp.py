@@ -75,6 +75,9 @@ def _grouped_ranks(d: DataFrame, group_cols: list[str],
         .localCheckpoint(eager=True)
     )
     cnt = ranged.groupBy("__pid", *group_cols).agg(F.count("*").alias("__n"))
+    # Without group_cols this window is unpartitioned (Spark warns "No
+    # Partition Defined"): benign, it runs over ``cnt``, one row per
+    # range partition, never over corpus rows.
     wo = (
         Window.partitionBy(*group_cols).orderBy("__pid")
         .rowsBetween(Window.unboundedPreceding, -1)

@@ -29,21 +29,38 @@ Physical layout (per FIXTURES.md §3, modeled on the reference's
 
 Head-term skew (north rule): Zipf head terms have posting lists far
 bigger than one task. Postings are salted into ``doc_id //
-salt_bucket_docs`` buckets *before* the groupBy, so no single task
-ever materializes a full head-term list; buckets cover disjoint
-ordered docID ranges, so concatenating their blocks in (bucket,
-position) order yields exactly the docID-sorted list — this replaces
-the reference's serial ``merge_batches`` (invert.cpp:167-238) with a
-shuffle-parallel merge.
+salt_bucket_docs`` buckets *before* the (term_id, bucket)
+repartition, so no single task ever materializes a full head-term
+list; buckets cover disjoint ordered docID ranges, so concatenating
+their blocks in (bucket, position) order yields exactly the
+docID-sorted list — this replaces the reference's serial
+``merge_batches`` (invert.cpp:167-238) with a shuffle-parallel merge.
+
+Encoder: one ``mapInArrow`` pass over each partition's sorted Arrow
+batches, like the reference writing every list block by block into
+one buffer. ``complete_groups`` re-cuts the batches into tables of
+complete (term, bucket) groups (carrying at most one batch-spanning
+group), and ``encode_groups`` encodes each table columnar: block
+starts, payloads, BM25 scores, impacts and block maxes in whole-table
+numpy passes, then one encode call per payload column for
+``concat_safe`` codecs (codecs/columns.py). Python work is per batch,
+not per group, at any vocabulary size. ``decode_segments`` is the
+same shape in reverse.
 """
 
 from __future__ import annotations
 
+from typing import Iterable, Iterator
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from pisa_spark.codecs import CODECS
+from pisa_spark.codecs.columns import (
+    binary_column, decode_column, docs_from_payload, encode_column,
+)
 from pisa_spark.config import BM25Params, IndexConfig
 from pisa_spark.functions.scoring import bm25_score_np
 
@@ -102,6 +119,118 @@ def scored_postings(
     )
 
 
+_SEGMENT_SCHEMA = pa.schema([
+    ("term_id", pa.int64()), ("block_id", pa.int64()),
+    ("count", pa.int32()), ("max_doc_id", pa.int64()),
+    ("max_score", pa.float32()), ("doc_bytes", pa.binary()),
+    ("tf_bytes", pa.binary()), ("len_bytes", pa.binary()),
+])
+
+
+def _run_positions(new: np.ndarray) -> np.ndarray:
+    """Position of every element within its run; ``new`` marks run
+    starts (``new[0]`` must be True)."""
+    idx = np.arange(len(new))
+    return idx - np.maximum.accumulate(np.where(new, idx, 0))
+
+
+def encode_groups(groups: pa.Table, cfg: IndexConfig, bm25: BM25Params,
+                  num_docs: int, avg_len: float,
+                  index_max_score: float | None = None) -> pa.RecordBatch:
+    """Encode a table of COMPLETE (term_id, bucket) groups, rows sorted
+    by (term_id, bucket, doc_id), into segment rows in one columnar
+    pass: group and block starts from one key-change mask, payloads,
+    scores and block maxes over the whole table, then one encode call
+    per payload column for concat_safe codecs (codecs/columns.py).
+    Only ``block_partition="variable"`` runs per group: its starts come
+    from the per-list score-optimal DP."""
+    def col(name, dtype):
+        return groups.column(name).to_numpy().astype(dtype, copy=False)
+
+    term, bucket = col("term_id", np.int64), col("bucket", np.int64)
+    docs = col("doc_id", np.uint64)
+    tfs, dls = col("tf", np.uint64), col("doc_len", np.uint64)
+    scores = bm25_score_np(
+        col("tf", np.float64), col("df", np.float64),
+        col("doc_len", np.float64), float(num_docs), float(avg_len),
+        k1=bm25.k1, b=bm25.b,
+    )
+    if cfg.quantize_bits:
+        # impact quantization: the tf slot carries q instead of tf
+        q = np.ceil(
+            scores * float(1 << cfg.quantize_bits) / float(index_max_score)
+        ).astype(np.uint64)
+        tfs = np.maximum(q, 1)
+        scores = tfs.astype(np.float64)  # block maxes bound q sums
+    n = len(term)
+    new = np.ones(n, dtype=bool)
+    new[1:] = (term[1:] != term[:-1]) | (bucket[1:] != bucket[:-1])
+    if cfg.block_partition == "variable":
+        # Score-optimal boundaries (VSBMW DP, build/varblock.py): cuts
+        # follow the score distribution instead of a fixed stride, so
+        # each block's max is a tight bound.
+        from pisa_spark.build.varblock import score_opt_partition
+
+        g = np.append(np.flatnonzero(new), n)
+        starts = np.concatenate([
+            g0 + np.concatenate(([0], score_opt_partition(
+                scores[g0:g1], fixed_cost=cfg.block_lambda)[:-1]))
+            for g0, g1 in zip(g[:-1].tolist(), g[1:].tolist())
+        ]).astype(np.int64)
+    else:
+        starts = np.flatnonzero(_run_positions(new) % cfg.block_size == 0)
+    ends = np.append(starts[1:], n)
+    # payload: gaps-1 everywhere, block-leading values absolute (each
+    # block self-contained; group starts are block starts)
+    payload = np.empty(n, dtype=np.uint64)
+    payload[1:] = docs[1:] - docs[:-1] - 1
+    payload[starts] = docs[starts]
+    encode, _ = CODECS[cfg.codec]
+    return pa.RecordBatch.from_arrays([
+        term[starts],
+        bucket[starts] * blocks_per_bucket(cfg) + _run_positions(new[starts]),
+        (ends - starts).astype(np.int32),
+        docs[ends - 1].astype(np.int64),
+        _round_up_f32(np.maximum.reduceat(scores, starts)),
+        encode_column(payload, starts, encode),
+        encode_column(tfs - 1, starts, encode),
+        encode_column(dls - 1, starts, encode),
+    ], schema=_SEGMENT_SCHEMA)
+
+
+def complete_groups(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.Table]:
+    """Re-cut a partition's (term_id, bucket, doc_id)-sorted Arrow
+    batches into tables of complete (term_id, bucket) groups: each
+    batch's rows up to its last key change complete every group they
+    touch, the trailing (possibly batch-spanning) group is carried
+    forward. The carry is a list of slices concatenated only when its
+    group completes (no quadratic recopying for head-term groups that
+    span many batches), and it holds ONE group, so peak memory stays
+    bounded by one salt bucket."""
+    carry: list[pa.Table] = []  # zero-copy slices of ONE group
+    carry_key = None
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        t = rb.column("term_id").to_numpy()
+        b = rb.column("bucket").to_numpy()
+        chg = np.flatnonzero((t[1:] != t[:-1]) | (b[1:] != b[:-1])) + 1
+        table = pa.Table.from_batches([rb])
+        if len(chg):
+            last = int(chg[-1])
+            yield pa.concat_tables(carry + [table.slice(0, last)])
+            carry = []
+        else:
+            last = 0
+            if carry and (t[0], b[0]) != carry_key:
+                yield pa.concat_tables(carry)
+                carry = []
+        carry.append(table.slice(last))
+        carry_key = (t[last], b[last])
+    if carry:
+        yield pa.concat_tables(carry)
+
+
 def build_segments(
     scored: DataFrame,
     num_docs: int,
@@ -123,188 +252,19 @@ def build_segments(
     params = bm25 or BM25Params()
     if cfg.quantize_bits and not index_max_score:
         raise ValueError("quantized build requires index_max_score")
-    encode, _ = CODECS[cfg.codec]
-    block = cfg.block_size
-    bucket_docs = cfg.salt_bucket_docs
-    stride = blocks_per_bucket(cfg)  # block_id stride per bucket
-    variable = cfg.block_partition == "variable"
-    lam = cfg.block_lambda
 
-    out_schema = (
-        "term_id long, block_id long, count int, max_doc_id long, "
-        "max_score float, doc_bytes binary, tf_bytes binary, "
-        "len_bytes binary"
-    )
-
-    fast_varint = cfg.codec == "varint"
-
-    def encode_one(term_id: int, bucket: int, docs: np.ndarray,
-                   tfs: np.ndarray, dls: np.ndarray, scores: np.ndarray,
-                   acc: dict) -> None:
-        """Encode ONE doc-sorted (term, bucket) group into ``acc``."""
-        if cfg.quantize_bits:
-            # impact quantization: the tf slot carries q instead of tf
-            q = np.ceil(
-                scores * float(1 << cfg.quantize_bits) / float(index_max_score)
-            ).astype(np.uint64)
-            tfs = np.maximum(q, 1)
-            scores = tfs.astype(np.float64)  # block maxes bound q sums
-        n = len(docs)
-        if variable:
-            # Score-optimal boundaries (VSBMW DP, build/varblock.py):
-            # cuts follow the score distribution instead of a fixed
-            # stride, so each block's max is a tight bound.
-            from pisa_spark.build.varblock import score_opt_partition
-
-            ends = score_opt_partition(scores, fixed_cost=lam)
-            starts = np.concatenate(([0], ends[:-1]))
-        else:
-            starts = np.arange(0, n, block)
-            ends = np.minimum(starts + block, n)
-        # whole-list payload: gaps-1 everywhere, block-leading values
-        # absolute (each block self-contained)
-        payload = np.empty(n, dtype=np.uint64)
-        payload[0] = docs[0]
-        payload[1:] = docs[1:] - docs[:-1] - 1
-        payload[starts] = docs[starts]
-        block_max = _round_up_f32(np.maximum.reduceat(scores, starts))
-
-        if fast_varint:
-            # varint is per-value: encode ONCE, slice per block
-            from pisa_spark.codecs.varint import varint_sizes
-
-            d_off = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(varint_sizes(payload), out=d_off[1:])
-            t_off = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(varint_sizes(tfs - 1), out=t_off[1:])
-            l_off = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(varint_sizes(dls - 1), out=l_off[1:])
-            d_enc = encode(payload)
-            t_enc = encode(tfs - 1)
-            l_enc = encode(dls - 1)
-            doc_bytes = [d_enc[d_off[s]:d_off[e]] for s, e in zip(starts, ends)]
-            tf_bytes = [t_enc[t_off[s]:t_off[e]] for s, e in zip(starts, ends)]
-            len_bytes = [l_enc[l_off[s]:l_off[e]] for s, e in zip(starts, ends)]
-        else:
-            doc_bytes = [encode(payload[s:e]) for s, e in zip(starts, ends)]
-            tf_bytes = [encode(tfs[s:e] - 1) for s, e in zip(starts, ends)]
-            len_bytes = [encode(dls[s:e] - 1) for s, e in zip(starts, ends)]
-
-        base_block_id = bucket * stride
-        nb = len(starts)
-        acc["term_id"].append(np.full(nb, term_id, dtype=np.int64))
-        acc["block_id"].append(
-            base_block_id + np.arange(nb, dtype=np.int64))
-        acc["count"].append((ends - starts).astype(np.int32))
-        acc["max_doc_id"].append(docs[ends - 1].astype(np.int64))
-        acc["max_score"].append(block_max)
-        acc["doc_bytes"].extend(doc_bytes)
-        acc["tf_bytes"].extend(tf_bytes)
-        acc["len_bytes"].extend(len_bytes)
-
-    def _encode_frame(pdf: pd.DataFrame, gstarts: np.ndarray) -> pd.DataFrame:
-        """Encode every group in ``pdf`` (rows sorted by term_id,
-        bucket, doc_id; groups start at ``gstarts``) in one pass:
-        columns convert to numpy ONCE, each group is a zero-copy
-        slice — no per-group pandas frames."""
-        t = pdf["term_id"].to_numpy(np.int64)
-        b = pdf["bucket"].to_numpy(np.int64)
-        docs_a = pdf["doc_id"].to_numpy(np.uint64)
-        tfs_a = pdf["tf"].to_numpy(np.uint64)
-        dls_a = pdf["doc_len"].to_numpy(np.uint64)
-        scores_a = bm25_score_np(
-            pdf["tf"].to_numpy(np.float64),
-            pdf["df"].to_numpy(np.float64),
-            pdf["doc_len"].to_numpy(np.float64),
-            float(num_docs),
-            float(avg_len),
-            k1=params.k1,
-            b=params.b,
-        )
-        acc: dict = {
-            "term_id": [], "block_id": [], "count": [],
-            "max_doc_id": [], "max_score": [],
-            "doc_bytes": [], "tf_bytes": [], "len_bytes": [],
-        }
-        bounds = np.concatenate((gstarts, [len(t)]))
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            encode_one(int(t[s]), int(b[s]), docs_a[s:e], tfs_a[s:e],
-                       dls_a[s:e], scores_a[s:e], acc)
-        return pd.DataFrame(
-            {
-                "term_id": np.concatenate(acc["term_id"]),
-                "block_id": np.concatenate(acc["block_id"]),
-                "count": np.concatenate(acc["count"]),
-                "max_doc_id": np.concatenate(acc["max_doc_id"]),
-                "max_score": np.concatenate(acc["max_score"]),
-                "doc_bytes": acc["doc_bytes"],
-                "tf_bytes": acc["tf_bytes"],
-                "len_bytes": acc["len_bytes"],
-            }
-        )
-
-    def kernel(batches):
-        """Stream the partition's Arrow batches, cutting complete
-        (term, bucket) groups at key-change boundaries and carrying
-        the trailing (possibly batch-spanning) group forward. One
-        Python call per BATCH instead of per group: profiling showed
-        per-group applyInPandas machinery costing more than the
-        encode math itself at web-scale vocabularies (~20k+ groups).
-        The carry is a LIST of batch tails concatenated only when its
-        group completes (no quadratic recopying for head-term groups
-        spanning many batches); peak memory stays bounded by one salt
-        bucket — the same bound the groupBy path had."""
-        carry: list[pd.DataFrame] = []  # tail frames of ONE group
-        carry_key: tuple[int, int] | None = None
-
-        def flush_carry() -> pd.DataFrame:
-            g = (carry[0] if len(carry) == 1
-                 else pd.concat(carry, ignore_index=True))
-            return _encode_frame(g.reset_index(drop=True),
-                                 np.array([0], dtype=np.int64))
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            t = pdf["term_id"].to_numpy(np.int64)
-            b = pdf["bucket"].to_numpy(np.int64)
-            if carry and (int(t[0]), int(b[0])) != carry_key:
-                yield flush_carry()
-                carry, carry_key = [], None
-            chg = np.flatnonzero(
-                (t[1:] != t[:-1]) | (b[1:] != b[:-1])) + 1
-            if len(chg) == 0:
-                # whole batch continues (or starts) one group
-                carry.append(pdf)
-                carry_key = (int(t[0]), int(b[0]))
-                continue
-            first, last = int(chg[0]), int(chg[-1])
-            if carry:
-                carry.append(pdf.iloc[:first])
-                yield flush_carry()
-                carry, carry_key = [], None
-            else:
-                first = 0
-            # complete inner groups: [first, last)
-            if last > first:
-                gstarts = np.concatenate(
-                    ([first], chg[(chg > first) & (chg < last)], ))
-                yield _encode_frame(
-                    pdf.iloc[first:last].reset_index(drop=True),
-                    gstarts - first)
-            carry = [pdf.iloc[last:]]
-            carry_key = (int(t[last]), int(b[last]))
-        if carry:
-            yield flush_carry()
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for groups in complete_groups(batches):
+            yield encode_groups(groups, cfg, params, num_docs, avg_len,
+                                index_max_score)
 
     salted = scored.withColumn(
-        "bucket", (F.col("doc_id") / F.lit(bucket_docs)).cast("long")
+        "bucket", (F.col("doc_id") / F.lit(cfg.salt_bucket_docs)).cast("long")
     )
     parted = salted.repartition("term_id", "bucket").sortWithinPartitions(
         "term_id", "bucket", "doc_id"
     )
-    return parted.mapInPandas(kernel, out_schema)
+    return parted.mapInArrow(kernel, from_arrow_schema(_SEGMENT_SCHEMA))
 
 
 def compress_block_maxes(segments: DataFrame, term_meta: DataFrame) -> DataFrame:
@@ -359,39 +319,33 @@ def decode_segments(segments: DataFrame, index_cfg: IndexConfig | None = None,
     """segments -> postings(term_id, doc_id, tf[, doc_len]): the
     verification decode pass (util/verify_collection.hpp,
     compress.cpp:108-110). Every block is self-contained, so this is
-    a stateless mapInPandas. ``include_len`` also decodes the inline
-    per-posting doc lengths (checked against doc_sizes in tests)."""
-    from typing import Iterator
-
+    a stateless mapInArrow, columnar per batch: one decode call per
+    payload column for concat_safe codecs (per block from zero-copy
+    slices otherwise) and one segmented cumsum rebuilding docIDs.
+    ``include_len`` also decodes the inline per-posting doc lengths
+    (checked against doc_sizes in tests)."""
     cfg = index_cfg or IndexConfig()
     _, decode = CODECS[cfg.codec]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            outs = []
-            for row in b.itertuples(index=False):
-                n = int(row.count)
-                payload = decode(bytes(row.doc_bytes), n).astype(np.uint64)
-                docs = payload.copy()
-                docs[1:] += 1
-                docs = np.cumsum(docs)
-                tfs = decode(bytes(row.tf_bytes), n).astype(np.int64) + 1
-                cols = {
-                    "term_id": np.full(n, row.term_id, dtype=np.int64),
-                    "doc_id": docs.astype(np.int64),
-                    "tf": tfs.astype(np.int32),
-                }
-                if include_len:
-                    cols["doc_len"] = (
-                        decode(bytes(row.len_bytes), n).astype(np.int64) + 1
-                    ).astype(np.int32)
-                outs.append(pd.DataFrame(cols))
-            base = {"term_id": [], "doc_id": [], "tf": []}
-            if include_len:
-                base["doc_len"] = []
-            yield pd.concat(outs) if outs else pd.DataFrame(base)
-
-    schema = "term_id long, doc_id long, tf int"
+    payloads = ["doc_bytes", "tf_bytes"] + (["len_bytes"] if include_len else [])
+    fields = [("term_id", pa.int64()), ("doc_id", pa.int64()), ("tf", pa.int32())]
     if include_len:
-        schema += ", doc_len int"
-    return segments.mapInPandas(kernel, schema)
+        fields.append(("doc_len", pa.int32()))
+    schema = pa.schema(fields)
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            counts = rb.column("count").to_numpy().astype(np.int64)
+            doc, *rest = (
+                decode_column(binary_column(rb, c), None, counts, decode)
+                for c in payloads
+            )
+            yield pa.RecordBatch.from_arrays([
+                np.repeat(rb.column("term_id").to_numpy(), counts),
+                docs_from_payload(doc, counts),
+                *((v + 1).astype(np.int32) for v in rest),
+            ], schema=schema)
+
+    return segments.select("term_id", "count", *payloads).mapInArrow(
+        kernel, from_arrow_schema(schema))

@@ -89,7 +89,11 @@ def varint_decode(data: bytes, n: int | None = None) -> np.ndarray:
 
 
 # Self-delimiting per-value code: decode(a + b, n_a + n_b) ==
-# concat(decode(a, n_a), decode(b, n_b)). Kernels exploit this to
-# decode a block's doc/tf/len payloads in ONE call (TermPostings.
-# decode_block) — fixed-layout codecs must NOT set this.
+# concat(decode(a, n_a), decode(b, n_b)) and encode(a ++ b) ==
+# encode(a) + encode(b), with ``sizes`` the per-value byte lengths.
+# The kernels (TermPostings.decode_block) and codecs/columns.py use
+# this to decode or encode many blocks in ONE call — fixed-layout
+# codecs must NOT set it (tests/test_codecs.py checks flagged codecs).
 varint_decode.concat_safe = True
+varint_encode.concat_safe = True
+varint_encode.sizes = varint_sizes

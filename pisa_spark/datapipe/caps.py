@@ -46,11 +46,15 @@ def overcap_keys(df: DataFrame, keys: list[str], cap: int,
 
 
 def drop_overcap(df: DataFrame, keys: list[str], over: DataFrame,
-                 hint_broadcast: bool) -> DataFrame:
+                 cap: int, hint_broadcast: bool,
+                 size_col: str = "bucket_size") -> DataFrame:
     """``df`` minus members of over-cap key groups, as a LeftAnti
-    join. ``over`` is an overcap_keys frame (extra columns are
-    projected away). See the module docstring for when to hint."""
-    over = over.select(*keys)
+    join. ``over`` is an overcap_keys frame; it is re-filtered on
+    ``size_col > cap`` so a caller-supplied frame built at a smaller
+    cap cannot widen the drop set (a frame built at a LARGER cap lacks
+    keys and cannot be repaired here — build it at ``cap`` or below).
+    See the module docstring for when to hint."""
+    over = over.filter(F.col(size_col) > cap).select(*keys)
     if hint_broadcast:
         over = F.broadcast(over)
     return df.join(over, list(keys), "left_anti")

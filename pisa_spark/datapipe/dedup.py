@@ -445,7 +445,7 @@ def _cap_bands(bands: DataFrame, max_bucket: int,
 
     if over is None:
         over = overcap_keys(bands, ["band_id", "band_key"], max_bucket)
-    return drop_overcap(bands, ["band_id", "band_key"], over,
+    return drop_overcap(bands, ["band_id", "band_key"], over, max_bucket,
                         hint_broadcast=False)
 
 
@@ -682,7 +682,8 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = MAX_HAMMING,
     # sides.
     if dropped is None:
         dropped = overcap_keys(chunks, ["ci", "ch"], max_bucket)
-    ex = drop_overcap(chunks, ["ci", "ch"], dropped, hint_broadcast=True)
+    ex = drop_overcap(chunks, ["ci", "ch"], dropped, max_bucket,
+                      hint_broadcast=True)
     x = ex.select(
         F.col("doc_id").alias("doc_a"), F.col("fp").alias("fa"), "ci", "ch"
     )

@@ -178,8 +178,9 @@ def embedding_dup_pairs(emb: DataFrame, tau_micro: int = COS_TAU_MICRO,
     from pisa_spark.datapipe.caps import drop_overcap, overcap_keys
 
     if dropped is None:
-        dropped = overcap_keys(assign, ["cell"], max_cell)
-    capped = drop_overcap(assign, ["cell"], dropped, hint_broadcast=True)
+        dropped = overcap_keys(assign, ["cell"], max_cell, size_col="cell_size")
+    capped = drop_overcap(assign, ["cell"], dropped, max_cell,
+                          hint_broadcast=True, size_col="cell_size")
     x = capped.select(F.col("vec_id").alias("vec_a"), "cell")
     y = capped.select(F.col("vec_id").alias("vec_b"), "cell")
     cand = (

@@ -94,7 +94,8 @@ def build_index(
          dedup), postings (explode + broadcast join + hash agg with
          map-side combine: the ONE corpus-pair shuffle), lexicon df
          counted off the postings (vocabulary-sized)
-      3. segments (salted groupBy + Arrow-batched numpy block encode)
+      3. segments (salted repartition + one columnar mapInArrow encode
+         per Arrow batch)
 
     ``cache=False`` keeps every artifact recomputable from ``pages``
     — which now means the tokenize kernel re-runs per downstream

@@ -37,6 +37,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F, Window
 
 from pisa_spark.codecs import CODECS
+from pisa_spark.codecs.columns import binary_column, decode_column, docs_from_payload
 from pisa_spark.config import EngineConfig
 from pisa_spark.functions.scoring import MICRO
 from pisa_spark.index import InvertedIndex
@@ -589,43 +590,6 @@ _PARTIAL_SCHEMA = pa.schema([
 ])
 
 
-def _binary_column(table: pa.Table, name: str) -> tuple[np.ndarray, np.ndarray]:
-    """(offsets, values) of a binary column as numpy views of its Arrow
-    buffers — zero-copy for a single-chunk column."""
-    chunks = table.column(name).chunks
-    arr = chunks[0] if len(chunks) == 1 else pa.concat_arrays(chunks)
-    off_type = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    _, off_buf, data_buf = arr.buffers()
-    offsets = np.frombuffer(off_buf, off_type)[arr.offset:arr.offset + len(arr) + 1]
-    return offsets.astype(np.int64), np.frombuffer(data_buf, np.uint8)
-
-
-def _segmented_arange(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-    """concat(arange(s, s + n) for s, n in zip(starts, lengths))."""
-    ends = np.cumsum(lengths)
-    total = int(ends[-1]) if len(ends) else 0
-    return np.arange(total) + np.repeat(starts - ends + lengths, lengths)
-
-
-def _decode_column(column, rows: np.ndarray, counts: np.ndarray,
-                   decode) -> np.ndarray:
-    """int64 values of ``rows`` (storage row indices, in output order,
-    ``counts`` values each) of one payload ``column`` (offsets,
-    values). Self-delimiting codecs (varint_decode.concat_safe) decode
-    every row in ONE call over one gather of their bytes; other codecs
-    decode per block from zero-copy slices."""
-    off, data = column
-    lo, hi = off[rows], off[rows + 1]
-    if getattr(decode, "concat_safe", False):
-        buf = data[_segmented_arange(lo, hi - lo)]
-        return decode(buf, int(counts.sum())).astype(np.int64)
-    mv = memoryview(data)
-    return np.concatenate([
-        decode(mv[a:b], n)
-        for a, b, n in zip(lo.tolist(), hi.tolist(), counts.tolist())
-    ]).astype(np.int64)
-
-
 def _build_batch_protos(left: pa.Table | pd.DataFrame, decode,
                         cap: int | None = None):
     """(protos, base_bm) for one cogroup's distinct term segment rows
@@ -674,22 +638,15 @@ def _build_batch_protos(left: pa.Table | pd.DataFrame, decode,
     eager = term_postings <= cap
     eager_rows = np.repeat(eager, np.diff(tb))
     e_counts = counts[eager_rows]
-    columns = {c: _binary_column(left, c) for c in _PAYLOADS}
+    columns = {c: binary_column(left, c) for c in _PAYLOADS}
     if eager.any():
         rows = order[eager_rows]
         payload, tfs, lens = (
-            _decode_column(columns[c], rows, e_counts, decode) for c in _PAYLOADS
+            decode_column(columns[c], rows, e_counts, decode) for c in _PAYLOADS
         )
         tfs += 1
         lens += 1
-        # Each block's first doc value is absolute, the rest are
-        # gaps-1: one cumsum over value+1, then re-base every block to
-        # its absolute first doc (the re-base cancels whatever the
-        # cumsum carried in, so block starts need no special case).
-        starts = np.cumsum(e_counts) - e_counts
-        docs = payload + 1
-        np.cumsum(docs, out=docs)
-        docs += np.repeat(payload[starts] - docs[starts], e_counts)
+        docs = docs_from_payload(payload, e_counts)
         for a in (docs, tfs, lens):
             a.setflags(write=False)  # shared by every query of the batch
         Profiler.blocks += len(rows)

@@ -100,6 +100,8 @@ def aol_queries(lines: DataFrame, unique: bool = False) -> DataFrame:
         & (F.col("query") != "-")
     )
     if unique:
+        # Unpartitioned window (Spark warns "No Partition Defined"):
+        # benign, it numbers the distinct queries of one workload file.
         w = F.row_number().over(Window.orderBy("query")) - 1
         return q.select("query").distinct().select(
             w.cast("string").alias("query_id"), "query"

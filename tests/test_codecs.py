@@ -54,6 +54,40 @@ def test_empty(codec):
     assert dec(b"", 0).size == 0
 
 
+CONCAT_SAFE = [c for c, (enc, _) in CODECS.items()
+               if getattr(enc, "concat_safe", False)]
+
+
+def test_concat_safe_flags_are_set():
+    """The flag the columnar encoder and decoder choose their one-call
+    path by (codecs/columns.py): varint and its maskedvbyte alias carry
+    it on both sides; the property test below guards every flagged
+    codec."""
+    assert {"varint", "maskedvbyte"} <= set(CONCAT_SAFE)
+    for c in CONCAT_SAFE:
+        assert getattr(CODECS[c][1], "concat_safe", False), c
+
+
+@pytest.mark.parametrize("codec", CONCAT_SAFE)
+def test_concat_safe_encode_property(codec):
+    """encode(a ++ b) == encode(a) + encode(b) and len(encode(v)) ==
+    sizes(v).sum() for every codec whose encode is flagged concat_safe
+    — a fixed-layout codec flagged by mistake fails here."""
+    enc, dec = CODECS[codec]
+    rng = np.random.default_rng(3)
+    for _ in range(50):
+        n = int(rng.integers(0, 300))
+        bits = int(rng.integers(1, 64))
+        v = rng.integers(0, 1 << bits, size=n, dtype=np.uint64)
+        cut = int(rng.integers(0, n + 1))
+        a, b = v[:cut], v[cut:]
+        assert enc(v) == enc(a) + enc(b)
+        sizes = enc.sizes(v)
+        assert len(enc(v)) == int(sizes.sum())
+        assert len(enc(a)) == int(sizes[:cut].sum())
+        np.testing.assert_array_equal(dec(enc(a) + enc(b), n), v)
+
+
 def test_varint_wire_format():
     # MSB-terminator layout parity with TightVariableByte
     # (block_codecs.hpp:19-123): last byte of each value has bit 7 set.

@@ -247,8 +247,53 @@ def test_cap_helpers_and_shared_dropped_frame(spark):
     over = overcap_keys(df, ["k"], 2)
     assert [(r["k"], r["bucket_size"]) for r in over.collect()] == [("x", 3)]
     for hint in (True, False):
-        kept = drop_overcap(df, ["k"], over, hint_broadcast=hint)
+        kept = drop_overcap(df, ["k"], over, 2, hint_broadcast=hint)
         assert sorted(r["id"] for r in kept.collect()) == [4]
+
+
+def test_dropped_frame_built_at_smaller_cap_is_refiltered(spark):
+    """A ``dropped=`` frame built at a smaller cap than the pair job's
+    (a superset of its over-cap keys) must not widen the drop set:
+    drop_overcap re-filters it on size > cap, so minhash and simhash
+    pairs equal the no-frame output. Corpus: doc A x8 and doc B x3 —
+    at cap 4 only A's buckets are over cap; a cap-2 frame also holds
+    B's, which without the re-filter would drop B's 3 pairs."""
+    from pisa_spark.datapipe.dedup import (
+        minhash_bands, minhash_dropped_buckets, minhash_lsh_pairs,
+        shingles_df, simhash_chunks, simhash_dropped_chunks, simhash_pairs,
+    )
+
+    src = spark.read.parquet(f"{SF}/documents.parquet").orderBy("doc_id").limit(2)
+    a_id, b_id = (r["doc_id"] for r in src.select("doc_id").collect())
+    parts = []
+    for doc_id, copies in ((a_id, 8), (b_id, 3)):
+        one = src.filter(F.col("doc_id") == doc_id)
+        parts += [one.withColumn("doc_id", F.col("doc_id") + 1000 * i)
+                  for i in range(copies)]
+    docs = parts[0]
+    for p in parts[1:]:
+        docs = docs.unionByName(p)
+    docs = docs.localCheckpoint(eager=True)
+
+    def pairs(df):
+        return df.toPandas().sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
+
+    shd = shingles_df(docs, 3).localCheckpoint(eager=True)
+    bands = minhash_bands(docs, shd=shd).localCheckpoint(eager=True)
+    loose = minhash_dropped_buckets(docs, max_bucket=2, bands=bands)
+    assert loose.count() > minhash_dropped_buckets(
+        docs, max_bucket=4, bands=bands).count()
+    base = pairs(minhash_lsh_pairs(docs, max_bucket=4, shd=shd, bands=bands))
+    assert len(base) == 3
+    assert base.equals(pairs(minhash_lsh_pairs(
+        docs, max_bucket=4, shd=shd, bands=bands, dropped=loose)))
+
+    chunks = simhash_chunks(docs).localCheckpoint(eager=True)
+    loose = simhash_dropped_chunks(docs, max_bucket=2, chunks=chunks)
+    base = pairs(simhash_pairs(docs, max_bucket=4, chunks=chunks))
+    assert len(base) == 3
+    assert base.equals(pairs(simhash_pairs(
+        docs, max_bucket=4, chunks=chunks, dropped=loose)))
 
 
 def test_connected_components_chain_converges_logarithmically(spark):
