@@ -3,7 +3,7 @@
 Protocol (BASELINE.md "Target protocol"): build the inverted index
 over the documents corpus (throughput = docs/sec), then run the
 headline query workloads — exhaustive SQL oracle (pure Catalyst),
-BMW / MaxScore / WAND kernels (applyInPandas), and the
+BMW / MaxScore / WAND kernels (applyInArrow), and the
 training-data-pipeline jobs — each timed after one untimed warmup of
 the Spark session (mirrors the reference's 1-warmup protocol,
 tools/queries.cpp:74-90).
@@ -60,26 +60,20 @@ def kernel_latencies(index, parsed, algos, k: int = 10) -> dict:
     """Per-query kernel latency stats (µs): pull the workload's
     segment rows once (query-term lists only — workload-sized, the
     in-memory form the reference benchmarks), then per query run each
-    kernel with 1 warmup + 3 timed runs and keep the min."""
+    kernel with 1 warmup + 3 timed runs and keep the min. Protos are
+    built with ``cap=0``, so block decode happens inside every timed
+    kernel call."""
     from pisa_spark.codecs import CODECS
     from pisa_spark.query.executor import (
-        RANKED_KERNELS, _group_to_terms, _query_segments,
+        RANKED_KERNELS, _build_batch_protos, _query_segments, _stats,
+        _walk_batch_queries,
     )
-    from pisa_spark.query.kernels import Stats
 
     decode = CODECS[index.config.index.codec][1]
-    stats = Stats(
-        num_docs=float(index.num_docs),
-        avg_len=float(index.avg_len),
-        k1=index.config.bm25.k1,
-        b=index.config.bm25.b,
-        quantized=bool(index.config.index.quantize_bits),
-    )
     pdf = _query_segments(index, parsed).toPandas()
     lat: dict[str, list[float]] = {a: [] for a in algos}
-    for _, g in pdf.groupby("query_id"):
-        terms = _group_to_terms(g, decode)
-        kk = int(g["k"].iloc[0])
+
+    def timed_kernels(terms, kk, stats, init_threshold=0.0):
         for algo in algos:
             kernel = RANKED_KERNELS[algo]
             kernel(terms, kk, stats)  # warmup
@@ -89,6 +83,16 @@ def kernel_latencies(index, parsed, algos, k: int = 10) -> dict:
                 kernel(terms, kk, stats)
                 best = min(best, time.perf_counter() - t)
             lat[algo].append(best * 1e6)
+        return np.empty(0, np.int64), np.empty(0)
+
+    protos, base_bm = _build_batch_protos(
+        pdf.drop_duplicates(["term_id", "block_id"]), decode, cap=0
+    )
+    queries = pdf[["query_id", "k", "term_id", "weight"]].drop_duplicates()
+    for _ in _walk_batch_queries(
+        queries, protos, base_bm, timed_kernels, _stats(index)
+    ):
+        pass
     out = {}
     for algo, xs in lat.items():
         arr = np.asarray(xs)
@@ -286,25 +290,6 @@ def main() -> None:
     parsed = parse_queries(qdf, index.lexicon, pre_tokenized=True).persist()
     parsed.count()
 
-    # Headline kernel jobs run BATCH-MAJOR by default (VERDICT r3
-    # next-#6: batch_major_qps measured 3.3x query-major on the same
-    # workload; the strategy_topk gate entry pins rank-identity
-    # between the two forms every driver round). Set
-    # SPARK_GRAFT_BENCH_STRATEGY=query to time the per-query shape —
-    # the throughput section below always reports BOTH.
-    strategy = os.environ.get("SPARK_GRAFT_BENCH_STRATEGY", "batch")
-
-    from pisa_spark.query.executor import topk_search_batch
-
-    def headline_search(algo, thresholds=None):
-        if strategy == "batch":
-            return topk_search_batch(
-                index, parsed, algorithm=algo, k=10, thresholds=thresholds
-            )
-        return topk_search(
-            index, parsed, algorithm=algo, k=10, thresholds=thresholds
-        )
-
     for algo, key in (
         ("block_max_wand", "bmw_100q"),
         ("block_max_maxscore", "bmm_100q"),
@@ -312,22 +297,11 @@ def main() -> None:
         ("wand", "wand_100q"),
         ("ranked_or", "taat_100q"),
     ):
-        timed(key, lambda a=algo: headline_search(a).count())
-    # Range execution follows the same strategy switch (r4 VERDICT #1:
-    # the query-major form was the round's only regression — payloads
-    # shipped once per (query, bucket); topk_range_batch ships them
-    # once per (batch, bucket), pinned rank-identical by the
-    # range_topk gate entry's batch tags).
-    from pisa_spark.query.executor import topk_range_batch
-
-    def headline_range(algo):
-        if strategy == "batch":
-            return topk_range_batch(index, parsed, algorithm=algo, k=10)
-        return topk_range(index, parsed, algorithm=algo, k=10)
-
+        timed(key, lambda a=algo: topk_search(
+            index, parsed, algorithm=a, k=10).count())
     timed(
         "range_maxscore_100q",
-        lambda: headline_range("maxscore").count(),
+        lambda: topk_range(index, parsed, algorithm="maxscore", k=10).count(),
     )
 
     # Threshold-bootstrapped BMW (kth_threshold pipeline end-to-end).
@@ -339,7 +313,8 @@ def main() -> None:
     est.count()
     timed(
         "bmw_boot_100q",
-        lambda: headline_search("block_max_wand", thresholds=est).count(),
+        lambda: topk_search(index, parsed, algorithm="block_max_wand", k=10,
+                            thresholds=est).count(),
     )
 
     # --- Training-data pipeline jobs (datapipe module), if present.
@@ -351,13 +326,10 @@ def main() -> None:
     except ImportError:
         pass
 
-    # --- Batch throughput: query-major vs batch-major at 3200 queries
-    # (executor.topk_search_batch amortizes payload transfer + block
-    # decode across each batch — BENCH.md "Batch-major execution").
-    # Reported SEPARATELY from `queries` so the summed e2e headline
-    # stays comparable round-over-round.
-    from pisa_spark.query.executor import topk_search_batch
-
+    # --- Batch throughput at 3200 queries (topk_search amortizes
+    # payload transfer + block decode across each batch — BENCH.md
+    # "Batch-major execution"). Reported SEPARATELY from `queries` so
+    # the summed e2e headline stays comparable round-over-round.
     brows = []
     for qi in range(3200):
         n = 1 + qi % 5
@@ -372,22 +344,12 @@ def main() -> None:
     bparsed = parse_queries(bqdf, index.lexicon, pre_tokenized=True).persist()
     bparsed.count()
 
-    qm_s = best_of(
+    bm_s = best_of(
         lambda: topk_search(
             index, bparsed, algorithm="block_max_maxscore", k=10
         ).count()
     )
-    bm_s = best_of(
-        lambda: topk_search_batch(
-            index, bparsed, algorithm="block_max_maxscore", k=10
-        ).count()
-    )
-    throughput = {
-        "n_queries": 3200,
-        "query_major_qps": round(3200 / qm_s, 1),
-        "batch_major_qps": round(3200 / bm_s, 1),
-        "batch_speedup": round(qm_s / bm_s, 2),
-    }
+    throughput = {"n_queries": 3200, "batch_major_qps": round(3200 / bm_s, 1)}
     bparsed.unpersist()
 
     # --- Per-query kernel latency percentiles (reference protocol).

@@ -13,7 +13,8 @@ Spark:
   per-block max-score metadata (block-max WAND sidecar).
 - **Query**: exhaustive ``ranked_or`` top-k BM25 expressed as pure
   Spark SQL (the oracle), plus numpy kernels for WAND / Block-Max WAND /
-  MaxScore / ranked-AND executed distributed via ``applyInPandas``.
+  MaxScore / ranked-AND executed distributed via one
+  ``cogroup(...).applyInArrow`` boundary over query batches.
 - **Training-data ops**: dedup (exact / MinHash-LSH / SimHash / n-gram
   Jaccard / embedding-cosine), similarity search, text quality stats,
   and multimodal column plumbing.

@@ -7,7 +7,7 @@ Two kinds of entries:
   Catalyst, whole-stage codegen; the oracle is the DuckDB dialect of
   the identical skeleton. Agreement is by construction.
 - **Kernel-path**: the Spark side runs the REAL engine — tokenize ->
-  invert -> salted block segments -> numpy kernel via applyInPandas —
+  invert -> salted block segments -> numpy kernel via applyInArrow —
   and the oracle is the exhaustive ranked_or SQL. These entries are
   the driver-visible form of the reference's algorithm-agreement
   tests (test/test_ranked_queries.cpp:99-144): BMW/WAND/MaxScore over
@@ -143,19 +143,19 @@ def _run_kernel(algorithm: str, range_mode: bool = False, variant: str = "defaul
 
 
 def _run_batched(algorithm: str, batches: int = 7):
-    """Batch-major execution (executor.topk_search_batch): shared
-    term payloads + per-batch decoded-block cache; must stay
+    """executor.topk_search at a pinned batch count: shared term
+    payloads + per-batch decoded-block cache; must stay
     rank-identical to ranked_or."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pisa_spark.query.executor import topk_search_batch
+        from pisa_spark.query.executor import topk_search
         from pisa_spark.query.parser import parse_queries
 
         index = _get_index(spark, sf_dir)
         parsed = parse_queries(
             _queries_df(spark), index.lexicon, pre_tokenized=True
         )
-        return topk_search_batch(
+        return topk_search(
             index, parsed, algorithm=algorithm, k=K, batches=batches
         )
 
@@ -451,14 +451,14 @@ def _bmw_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _range_batch(algorithm: str, live: bool = False):
-    """Batch-major range execution (executor.topk_range_batch): term
-    payloads cross the wire once per (batch, bucket) instead of once
-    per (query, bucket); with ``live``, additionally bootstrapped by
-    pair-estimate thresholds through the Catalyst live-range
-    pre-filter. Must stay rank-identical to ranked_or."""
+    """executor.topk_range at a pinned batch count: term payloads
+    cross the wire once per (batch, bucket); with ``live``,
+    additionally bootstrapped by pair-estimate thresholds through the
+    Catalyst live-range pre-filter. Must stay rank-identical to
+    ranked_or."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pisa_spark.query.executor import topk_range_batch
+        from pisa_spark.query.executor import topk_range
         from pisa_spark.query.parser import parse_queries
 
         index = _get_index(spark, sf_dir)
@@ -473,7 +473,7 @@ def _range_batch(algorithm: str, live: bool = False):
 
             cache = kth_score_cache(index, k=K)
             est = estimate_thresholds_with_pairs(index, parsed, cache, k=K)
-        return topk_range_batch(
+        return topk_range(
             index, parsed, algorithm=algorithm, k=K, thresholds=est,
             batches=5,
         )
@@ -487,10 +487,9 @@ def _range_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxscore, BMW, BMW + live-block pre-filter, per-range TAAT
     (range_taat_query.hpp: the accumulator algorithm run range by
     range — here the vectorized TAAT kernel per salt-bucket range,
-    merged by the shared partial-top-k window), and the batch-major
-    range form (shared payloads per (batch, bucket), with and without
-    the live pre-filter), tagged by range_mode — each must stay
-    rank-identical to ranked_or."""
+    merged by the shared partial-top-k window), and a pinned batch
+    count (with and without the live pre-filter), tagged by
+    range_mode — each must stay rank-identical to ranked_or."""
     runs = {
         "maxscore": _run_kernel("maxscore", range_mode=True),
         "bmw": _run_kernel("block_max_wand", range_mode=True),
@@ -509,9 +508,9 @@ def _range_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _strategy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execution strategies over the same workload, tagged: 'adaptive'
     (per-query kernel selection in executor.topk_search) and 'batched'
-    (batch-major executor.topk_search_batch with the shared
-    decoded-block cache) — each must stay rank-identical to the
-    exhaustive ranked_or oracle."""
+    (block_max_maxscore at a pinned batch count, sharing the
+    decoded-block cache across 7 batches) — each must stay
+    rank-identical to the exhaustive ranked_or oracle."""
     runs = {
         "adaptive": _run_kernel("adaptive"),
         "batched": _run_batched("block_max_maxscore"),

@@ -1,26 +1,29 @@
-"""Distributed query execution: fan kernels out over Python groups.
+"""Distributed query execution: one Arrow boundary, two physical shapes.
 
-Query-major paths run one ``applyInPandas`` group per query (or per
-query and doc range); the batch-major paths (``topk_search_batch``,
-``topk_range_batch``) run one ``cogroup(...).applyInArrow`` group per
-query batch, decoding the batch's payload columns once from Arrow
-buffers (_build_batch_protos).
+Every executor runs its kernels inside one kind of Python group: a
+``cogroup(...).applyInArrow`` per query batch. The left side carries
+the batch's DISTINCT term segment rows, the right side the batch's
+parsed queries. Each term's payload crosses the wire once per batch
+and decodes once per batch, columnar, straight from the Arrow buffers
+(_build_batch_protos); the batch's queries then walk the shared
+protos (_walk_batch_queries). This is the amortized shape the
+reference gets from its resident index (tools/queries.cpp batch
+loop).
 
-Two physical strategies, mirroring the reference's two processing
+Two physical shapes, mirroring the reference's two processing
 modes:
 
-- ``topk_search`` (query-major, mirrors tools/queries.cpp:175-288):
-  each query is one task; its terms' segments are shuffled/broadcast
-  to it and a numpy kernel runs the whole query. Right when posting
-  lists fit a task (the query side broadcasts, so Catalyst plans a
-  broadcast-hash join against the big segment table — segments never
-  move).
+- ``topk_search`` / ``boolean_query`` (mirror tools/queries.cpp:
+  175-288): one group per query batch; a task sees the whole posting
+  lists of its batch's terms. The query side broadcasts, so Catalyst
+  plans a broadcast-hash join against the big segment table —
+  segments never move.
 - ``topk_range`` (doc-range-major, mirrors range_query.hpp:8-37):
-  kernels run per (query, docID-bucket) partition producing partial
-  top-k, then a window merges heaps. This is the 10^12-doc path: no
-  task ever sees a full head-term posting list.
+  one group per (query batch, docID bucket) producing partial top-k,
+  then a window merges heaps. This is the 10^12-doc path: no task
+  ever sees a full head-term posting list.
 
-Neither strategy touches any global per-document structure: doc
+Neither shape touches any global per-document structure: doc
 lengths are encoded inside each segment block (segments.py
 ``len_bytes``), so there is no driver-side collect and no broadcast
 of anything proportional to the corpus — the reference's design of
@@ -35,10 +38,10 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F, Window
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from pisa_spark.codecs import CODECS
 from pisa_spark.codecs.columns import binary_column, decode_column, docs_from_payload
-from pisa_spark.config import EngineConfig
 from pisa_spark.functions.scoring import MICRO
 from pisa_spark.index import InvertedIndex
 from pisa_spark.query.kernels import (
@@ -79,7 +82,7 @@ BOOLEAN_KERNELS = {"and": and_kernel, "or": or_kernel}
 # score. Conjunctive algorithms (ranked_and / block_max_ranked_and)
 # restrict candidates to the intersection, whose k-th score can be
 # LOWER than one term's k-th score — bootstrapping them with the same
-# cache silently drops valid results, so topk_search rejects it.
+# cache silently drops valid results, so the executors reject it.
 DISJUNCTIVE_ALGORITHMS = frozenset(
     {"ranked_or", "wand", "block_max_wand", "block_max_maxscore",
      "maxscore", "adaptive"}  # adaptive dispatches to disjunctive only
@@ -156,41 +159,6 @@ def _pruned_segments(
     return index.segments.filter(F.col("term_id").isin(ids))
 
 
-def _group_to_terms(pdf: pd.DataFrame, decode) -> list[TermPostings]:
-    terms = []
-    compressed = "max_score_q" in pdf.columns
-    for term_id, g in pdf.groupby("term_id", sort=True):
-        g = g.sort_values("block_id")
-        weight = float(g["weight"].iloc[0])
-        tmax = float(g["term_max_score"].iloc[0])
-        if compressed:
-            # wand_data_compressed recovery: u8 relative to term max
-            # (quantization rounded up at build -> still one-sided)
-            block_max = g["max_score_q"].to_numpy(np.float64) / 255.0 * tmax
-        else:
-            block_max = g["max_score"].to_numpy(np.float64)
-        # Upper bounds scaled to MICRO units (+1 covers the <=0.5-micro
-        # quantization shift) so they stay sound vs micro-int scores.
-        from pisa_spark.functions.scoring import MICRO
-
-        terms.append(
-            TermPostings(
-                term_id=int(term_id),
-                df=float(g["df"].iloc[0]),
-                weight=weight,
-                max_score=weight * tmax * MICRO + 1.0,
-                block_max_doc=g["max_doc_id"].to_numpy(np.uint64),
-                block_max_score=weight * block_max * MICRO + 1.0,
-                block_count=g["count"].to_numpy(np.int64),
-                doc_payloads=[bytes(x) for x in g["doc_bytes"]],
-                tf_payloads=[bytes(x) for x in g["tf_bytes"]],
-                len_payloads=[bytes(x) for x in g["len_bytes"]],
-                decode=decode,
-            )
-        )
-    return terms
-
-
 def _query_segments(
     index: InvertedIndex, parsed: DataFrame, scan_prune: bool | None = None
 ) -> DataFrame:
@@ -217,13 +185,13 @@ def _factored_segment_rows(
     query_side: DataFrame,
     scan_prune: bool | None,
 ) -> DataFrame:
-    """The ONE place the bound-factor contract is applied (query-major
-    and batch-major execution both come through here, so they can
-    never diverge on pruning bounds): term_meta columns joined to the
-    broadcast-sized ``query_side`` (parsed queries, or a batch term
-    set), joined into the workload-pruned segment scan (driven by
-    ``parsed``), with ``bound_factor`` multiplied into the term max
-    and block maxes."""
+    """The ONE place the bound-factor contract is applied (every
+    executor's segment side and the live-range metadata both come
+    through here, so they can never diverge on pruning bounds):
+    term_meta columns joined to the broadcast-sized ``query_side``
+    (parsed queries, or a batch term set), joined into the
+    workload-pruned segment scan (driven by ``parsed``), with
+    ``bound_factor`` multiplied into the term max and block maxes."""
     # Broadcast the query-sized side into the vocabulary-sized
     # term_meta (never the reverse), then the result into the
     # segment scan.
@@ -250,75 +218,37 @@ def _factored_segment_rows(
     return rows
 
 
-def topk_search(
-    index: InvertedIndex,
-    parsed: DataFrame,
-    algorithm: str = "block_max_wand",
-    k: int = 10,
-    thresholds: DataFrame | None = None,
-    profile: bool = False,
-    scan_prune: bool | None = None,
-) -> DataFrame:
-    """(query_id, rank, doc_id, score) — query-major execution.
-
-    ``thresholds``: optional (query_id, threshold_micro) sound lower
-    bounds (thresholds.estimate_thresholds) that bootstrap each
-    kernel's heap threshold — the fork's kth_threshold pipeline, but
-    safe by construction (no --safe rerun needed). Only valid for
-    DISJUNCTIVE_ALGORITHMS (see above): passing thresholds with a
-    conjunctive algorithm raises ValueError instead of silently
-    dropping intersection results below the single-term bound.
-
-    ``profile``: adds (blocks_decoded, postings_decoded) per query —
-    the reference's profile_queries/block_profiler counters — making
-    pruning effectiveness measurable (a pruned kernel must decode
-    fewer blocks than the exhaustive one on the same query)."""
-    kernel = RANKED_KERNELS[algorithm]
-    decode = CODECS[index.config.index.codec][1]
-    stats = Stats(
+def _stats(index: InvertedIndex) -> Stats:
+    """The kernels' collection statistics and BM25 parameters."""
+    return Stats(
         num_docs=float(index.num_docs),
         avg_len=float(index.avg_len),
         k1=index.config.bm25.k1,
         b=index.config.bm25.b,
         quantized=bool(index.config.index.quantize_bits),
     )
-    if thresholds is not None:
-        if algorithm not in DISJUNCTIVE_ALGORITHMS:
-            raise ValueError(
-                f"threshold bootstrapping is unsound for conjunctive "
-                f"algorithm {algorithm!r}: the cached k-th single-term "
-                f"score can exceed the intersection's k-th score"
-            )
-        parsed = parsed.join(F.broadcast(thresholds), "query_id", "left")
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        terms = _group_to_terms(pdf, decode)
-        kk = int(pdf["k"].iloc[0]) if "k" in pdf else k
-        init = 0.0
-        if "threshold_micro" in pdf and pd.notna(pdf["threshold_micro"].iloc[0]):
-            # estimate is a true lower bound; keep the quantization
-            # slack so boundary ties are never pruned
-            init = float(pdf["threshold_micro"].iloc[0]) - PRUNE_EPS
-        Profiler.reset()
-        docs, scores = kernel(terms, kk, stats, init_threshold=init)
-        out = pd.DataFrame(
-            {
-                "query_id": pdf["query_id"].iloc[0],
-                "rank": np.arange(1, len(docs) + 1, dtype=np.int32),
-                "doc_id": docs,
-                "score": scores,
-            }
+
+def _bootstrapped(parsed: DataFrame, algorithm: str, thresholds) -> DataFrame:
+    """``parsed`` with each query's ``threshold_micro`` joined on (NULL
+    = no bootstrap); conjunctive algorithms are rejected."""
+    if thresholds is None:
+        return parsed
+    if algorithm not in DISJUNCTIVE_ALGORITHMS:
+        raise ValueError(
+            f"threshold bootstrapping is unsound for conjunctive "
+            f"algorithm {algorithm!r}: the cached k-th single-term "
+            f"score can exceed the intersection's k-th score"
         )
-        if profile:
-            out["blocks_decoded"] = np.int64(Profiler.blocks)
-            out["postings_decoded"] = np.int64(Profiler.postings)
-        return out
+    return parsed.join(F.broadcast(thresholds), "query_id", "left")
 
-    schema = "query_id string, rank int, doc_id long, score double"
-    if profile:
-        schema += ", blocks_decoded long, postings_decoded long"
-    rows = _query_segments(index, parsed, scan_prune)
-    return rows.groupBy("query_id").applyInPandas(run, schema)
+
+def _with_k(parsed: DataFrame, k: int) -> DataFrame:
+    """``parsed`` with a per-query ``k`` column, the ``k`` argument
+    where it had none (a cogroup ships the column)."""
+    if "k" in parsed.columns:
+        return parsed
+    return parsed.withColumn("k", F.lit(int(k)))
 
 
 def topk_search_safe(
@@ -384,9 +314,8 @@ def topk_search_safe(
         )
     )
     counts = reliable.groupBy("query_id").agg(F.count("*").alias("nres"))
-    qk = parsed.select(
-        "query_id",
-        (F.col("k") if "k" in parsed.columns else F.lit(k)).alias("qk"),
+    qk = _with_k(parsed, k).select(
+        "query_id", F.col("k").alias("qk")
     ).distinct()
     # only a genuinely bootstrapped heap (non-negative estimate) can
     # under-fill from over-pruning; NULL/sentinel-threshold queries
@@ -416,17 +345,24 @@ def boolean_query(
     op: str = "and",
     scan_prune: bool | None = None,
 ) -> DataFrame:
-    """(query_id, doc_id) Boolean AND/OR result sets."""
-    kernel = BOOLEAN_KERNELS[op]
+    """(query_id, doc_id) Boolean AND/OR result sets, through the same
+    per-batch cogroup, proto build and query walk as topk_search."""
+    op_kernel = BOOLEAN_KERNELS[op]
     decode = CODECS[index.config.index.codec][1]
+    cap = BATCH_CACHE_MAX_POSTINGS
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        docs = kernel(_group_to_terms(pdf, decode))
-        return pd.DataFrame({"query_id": pdf["query_id"].iloc[0], "doc_id": docs})
+    def kernel(terms, k, stats, init_threshold=0.0):  # docs, no scores
+        return op_kernel(terms), None
 
-    rows = _query_segments(index, parsed, scan_prune)
-    return rows.groupBy("query_id").applyInPandas(
-        run, "query_id string, doc_id long"
+    def run(left: pa.Table, right: pa.Table) -> pa.Table:
+        protos, base_bm = _build_batch_protos(left, decode, cap)
+        return _results_table(
+            _walk_batch_queries(right, protos, base_bm, kernel, None),
+            _BOOLEAN_SCHEMA,
+        )
+
+    return _batch_cogroup(
+        index, _with_k(parsed, 0), None, scan_prune, run, _BOOLEAN_SCHEMA
     )
 
 
@@ -437,7 +373,8 @@ def live_ranges(rows: DataFrame) -> DataFrame:
     thresholds ⨝ bucket) table; a range's score upper bound is the
     sum over query terms of the term's best weighted block-max inside
     the range (micro units, +1 quantization margin exactly like
-    _group_to_terms). Queries with NULL thresholds keep every range."""
+    _build_batch_protos). Queries with NULL thresholds keep every
+    range."""
     if "max_score_q" in rows.columns:  # wand_data_compressed segments
         bm = F.col("max_score_q") / F.lit(255.0) * F.col("term_max_score")
     else:
@@ -459,82 +396,6 @@ def live_ranges(rows: DataFrame) -> DataFrame:
         )
         .select("query_id", "bucket")
     )
-
-
-def topk_range(
-    index: InvertedIndex,
-    parsed: DataFrame,
-    algorithm: str = "maxscore",
-    k: int = 10,
-    blocks_per_range: int | None = None,
-    thresholds: DataFrame | None = None,
-    scan_prune: bool | None = None,
-) -> DataFrame:
-    """(query_id, rank, doc_id, score) — doc-range-major execution
-    (range_query.hpp: run the algorithm per docID range with a shared
-    heap; Spark shape = partial top-k per range + window merge).
-
-    No global doc-length structure exists anywhere: lengths ride
-    inside each block's ``len_bytes`` payload, so every (query,
-    bucket) task is self-contained. Bucket granularity reuses the
-    segment salt buckets (segments never re-shuffle across buckets).
-
-    ``thresholds`` (query_id, threshold_micro — sound lower bounds on
-    the k-th final score, disjunctive algorithms only) enables the
-    LIVE-BLOCK pruning of wand_data_range.hpp compute_live_blocks:
-    a (query, bucket) range whose summed per-term block-max upper
-    bound cannot beat the threshold is dropped by a pure Catalyst
-    pre-filter BEFORE any kernel task runs — dead ranges cost one
-    aggregation row, not a Python group."""
-    from pisa_spark.build.segments import blocks_per_bucket
-
-    kernel = RANKED_KERNELS[algorithm]
-    decode = CODECS[index.config.index.codec][1]
-    cfg = index.config.index
-    bucket_stride = blocks_per_bucket(cfg)
-    stats = Stats(
-        num_docs=float(index.num_docs),
-        avg_len=float(index.avg_len),
-        k1=index.config.bm25.k1,
-        b=index.config.bm25.b,
-        quantized=bool(index.config.index.quantize_bits),
-    )
-
-    if thresholds is not None and algorithm not in DISJUNCTIVE_ALGORITHMS:
-        raise ValueError(
-            f"threshold bootstrapping is unsound for conjunctive "
-            f"algorithm {algorithm!r}"
-        )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        terms = _group_to_terms(pdf, decode)
-        kk = int(pdf["k"].iloc[0]) if "k" in pdf else k
-        init = 0.0
-        if "threshold_micro" in pdf and pd.notna(pdf["threshold_micro"].iloc[0]):
-            init = float(pdf["threshold_micro"].iloc[0]) - PRUNE_EPS
-        docs, scores = kernel(terms, kk, stats, init_threshold=init)
-        return pd.DataFrame(
-            {
-                "query_id": pdf["query_id"].iloc[0],
-                "doc_id": docs,
-                "score": scores,
-            }
-        )
-
-    if thresholds is not None:
-        parsed = parsed.join(F.broadcast(thresholds), "query_id", "left")
-    rows = _query_segments(index, parsed, scan_prune).withColumn(
-        "bucket", (F.col("block_id") / F.lit(bucket_stride)).cast("long")
-    )
-    if thresholds is not None:
-        # no broadcast hint: at 10^12 docs the live set can be large;
-        # the join keys match the following groupBy, so the shuffle is
-        # shared (AQE broadcasts small live sets on its own)
-        rows = rows.join(live_ranges(rows), ["query_id", "bucket"])
-    partial = rows.groupBy("query_id", "bucket").applyInPandas(
-        run, "query_id string, doc_id long, score double"
-    )
-    return _merge_range_partials(partial, parsed, k)
 
 
 def _merge_range_partials(
@@ -567,12 +428,12 @@ def _merge_range_partials(
 # most this many postings in a batch decodes eagerly with the batch's
 # columnar pass; beyond it the term decodes lazily per block through a
 # CappedBlockCache that stops growing at the same budget (blocks then
-# decode again per query, exactly as query-major execution). Bounds
+# decode again per query). Bounds
 # task memory at ~24 bytes/posting/term regardless of batch
 # composition. Read on the driver when an executor is called.
 BATCH_CACHE_MAX_POSTINGS = 1 << 22
 
-# Row cap under which topk_range_batch's (batch x bucket) query-
+# Row cap under which topk_range's (batch x bucket) query-
 # replication table keeps its broadcast hint; it grows linearly with
 # the corpus (n_buckets = docs / salt_bucket_docs), and the repo rule
 # is hints on known-small sides only — above the cap the planner
@@ -584,18 +445,22 @@ _RANKED_SCHEMA = pa.schema([
     ("query_id", pa.string()), ("rank", pa.int32()),
     ("doc_id", pa.int64()), ("score", pa.float64()),
 ])
+_PROFILE_SCHEMA = _RANKED_SCHEMA.append(
+    pa.field("blocks_decoded", pa.int64())
+).append(pa.field("postings_decoded", pa.int64()))
 _PARTIAL_SCHEMA = pa.schema([
     ("query_id", pa.string()), ("doc_id", pa.int64()),
     ("score", pa.float64()),
 ])
+_BOOLEAN_SCHEMA = pa.schema([("query_id", pa.string()), ("doc_id", pa.int64())])
 
 
 def _build_batch_protos(left: pa.Table | pd.DataFrame, decode,
                         cap: int | None = None):
     """(protos, base_bm) for one cogroup's distinct term segment rows
-    — the per-batch TermPostings prototypes both batch-major executors
-    (topk_search_batch, topk_range_batch) share, with weight-neutral
-    bounds (weight rebound per query via dataclasses.replace).
+    — the per-batch TermPostings prototypes every executor shares,
+    with weight-neutral bounds (weight rebound per query via
+    dataclasses.replace).
 
     One columnar pass: rows sort once by (term_id, block_id); every
     term with at most ``cap`` postings (default BATCH_CACHE_MAX_POSTINGS)
@@ -604,8 +469,11 @@ def _build_batch_protos(left: pa.Table | pd.DataFrame, decode,
     docIDs — and its proto carries term-level (docs, tfs, lens) views
     plus block offsets. Over-cap terms keep lazy per-block decode from
     zero-copy payload slices through a CappedBlockCache, so ``cap``
-    bounds per-term decoded memory either way. A pandas frame (in-
-    process callers) is converted first."""
+    bounds per-term decoded memory either way. ``cap=0`` makes every
+    term lazy with a cache that holds nothing, so each block decode
+    happens (and is counted by kernels.Profiler) inside the query
+    that needs it. A pandas frame (in-process callers) is converted
+    first."""
     if isinstance(left, pd.DataFrame):
         left = pa.Table.from_pandas(left, preserve_index=False)
     if cap is None:
@@ -627,6 +495,8 @@ def _build_batch_protos(left: pa.Table | pd.DataFrame, decode,
     tmax = col("term_max_score", np.float64)
     max_doc = col("max_doc_id", np.uint64)
     if "max_score_q" in left.column_names:
+        # wand_data_compressed recovery: u8 relative to term max
+        # (quantization rounded up at build -> still one-sided)
         bm = col("max_score_q", np.float64) / 255.0 * tmax
     else:
         bm = col("max_score", np.float64)
@@ -671,6 +541,8 @@ def _build_batch_protos(left: pa.Table | pd.DataFrame, decode,
                 payloads[c.replace("_bytes", "_payloads")] = [
                     mv[off[r]:off[r + 1]] for r in rows.tolist()
                 ]
+        # Upper bounds in MICRO units (+1 covers the <=0.5-micro
+        # quantization shift) so they stay sound vs micro-int scores.
         protos[tid] = TermPostings(
             term_id=tid,
             df=float(df[r0]),
@@ -724,6 +596,8 @@ def _walk_batch_queries(right: pa.Table | pd.DataFrame, protos, base_bm,
             j += 1
         init = 0.0
         if thr is not None and not np.isnan(thr[i]):
+            # estimate is a true lower bound; keep the quantization
+            # slack so boundary ties are never pruned
             init = float(thr[i]) - PRUNE_EPS
         docs, scores = kernel(terms, int(ks[i]), stats, init_threshold=init)
         for tp in terms:  # idf grows once, shared thereafter
@@ -736,7 +610,8 @@ def _walk_batch_queries(right: pa.Table | pd.DataFrame, protos, base_bm,
 def _results_table(walk, schema: pa.Schema) -> pa.Table:
     """One cogroup's output table from _walk_batch_queries' per-query
     (query_id, docs, scores), typed exactly as ``schema``; a ``rank``
-    field gets 1..n within each query."""
+    field gets 1..n within each query, and a schema without ``score``
+    (Boolean results) leaves the scores out."""
     q_ids, docs, scores = [], [], []
     for qid, d, sc in walk:
         q_ids.append(qid)
@@ -748,8 +623,11 @@ def _results_table(walk, schema: pa.Schema) -> pa.Table:
             np.repeat(np.arange(len(n)), n)
         ),
         "doc_id": np.concatenate(docs).astype(np.int64) if docs else [],
-        "score": np.concatenate(scores).astype(np.float64) if docs else [],
     }
+    if "score" in schema.names:
+        cols["score"] = (
+            np.concatenate(scores).astype(np.float64) if docs else []
+        )
     if "rank" in schema.names:
         cols["rank"] = (
             np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n) + 1
@@ -757,73 +635,25 @@ def _results_table(walk, schema: pa.Schema) -> pa.Table:
     return pa.table(cols, schema=schema)
 
 
-def topk_search_batch(
+def _batch_cogroup(
     index: InvertedIndex,
     parsed: DataFrame,
-    algorithm: str = "block_max_maxscore",
-    k: int = 10,
-    thresholds: DataFrame | None = None,
-    batches: int | None = None,
-    scan_prune: bool | None = None,
+    batches: int | None,
+    scan_prune: bool | None,
+    run,
+    schema: pa.Schema,
 ) -> DataFrame:
-    """(query_id, rank, doc_id, score) — BATCH-major execution.
-
-    Query-major `topk_search` ships each query's term lists to its
-    own task: a term shared by Q queries is Arrow-transferred and
-    block-decoded Q times. This variant hashes queries into
-    ``batches`` groups and cogroups (distinct term segments per
-    batch) with (the batch's query table) under ``applyInArrow``:
-    every term's list crosses the wire ONCE per batch and decodes ONCE
-    per batch, columnar, straight from the Arrow payload buffers
-    (_build_batch_protos). Same kernels, same results — per-query weight/bound
-    fields are rebuilt per query (cheap per-block arrays), while the
-    decoded payloads and the weight-independent idf cache are shared.
-
-    This is the amortized shape a production workload wants (the
-    reference amortizes the same way through the OS page cache on a
-    resident index, tools/queries.cpp batch loop); query-major stays
-    the low-latency path. Parallelism = ``batches`` tasks; per-task
-    working set = the batch's distinct lists (same head-term caveat
-    as topk_search — use topk_range for beyond-task-size lists), with
-    decoded postings capped at BATCH_CACHE_MAX_POSTINGS per term.
+    """``run(left, right)`` once per query batch: queries hash into
+    ``batches`` groups, and (the batch's distinct term segment rows)
+    cogroup with (the batch's parsed queries) under ``applyInArrow``.
 
     ``batches`` defaults to 2x the cluster's default parallelism —
     the sharing/parallelism sweet spot measured in BENCH.md (at 3200
-    queries, sf0.1: 1x par = 3.7x over query-major but the largest
-    per-task frames; 2x = 2.9x; 4x = 2.3x; AQE-uncoalesced 16x =
-    1.2x). Fewer batches share more but each task's distinct-term
-    frame grows; 2x keeps working sets half the size of 1x and
-    smooths hash-collision stragglers across two waves. Both cogroup
-    sides are explicitly ``repartition(batches, batch_id)`` — the
-    count is then exempt from AQE coalescing, which otherwise merges
-    these byte-light, CPU-heavy Python groups onto a fraction of the
-    cores (measured: 512 batches coalesced to 10 tasks).
-    """
-    kernel = RANKED_KERNELS[algorithm]
-    decode = CODECS[index.config.index.codec][1]
-    stats = Stats(
-        num_docs=float(index.num_docs),
-        avg_len=float(index.avg_len),
-        k1=index.config.bm25.k1,
-        b=index.config.bm25.b,
-        quantized=bool(index.config.index.quantize_bits),
-    )
-    if thresholds is not None:
-        if algorithm not in DISJUNCTIVE_ALGORITHMS:
-            raise ValueError(
-                f"threshold bootstrapping is unsound for conjunctive "
-                f"algorithm {algorithm!r}: the cached k-th single-term "
-                f"score can exceed the intersection's k-th score"
-            )
-        parsed = parsed.join(F.broadcast(thresholds), "query_id", "left")
-
-    # Parity with topk_search: a parsed frame without a per-query k
-    # column falls back to the k argument (query-major reads it
-    # row-wise inside the UDF; here the column must exist before the
-    # cogroup ships it).
-    if "k" not in parsed.columns:
-        parsed = parsed.withColumn("k", F.lit(int(k)))
-
+    queries, sf0.1: 1x par = 3.7x over one group per query but the
+    largest per-task frames; 2x = 2.9x; 4x = 2.3x; AQE-uncoalesced
+    16x = 1.2x). Fewer batches share more but each task's
+    distinct-term frame grows; 2x keeps working sets half the size of
+    1x and smooths hash-collision stragglers across two waves."""
     if batches is None:
         batches = 2 * index.segments.sparkSession.sparkContext.defaultParallelism
     batch_expr = F.pmod(F.xxhash64("query_id"), F.lit(batches)).cast("int")
@@ -843,9 +673,50 @@ def topk_search_batch(
     # batch_id is recomputed from `parsed` (not projected off `pq`) so
     # the cogroup's two sides carry distinct attribute ids.
     bt = parsed.select(batch_expr.alias("batch_id"), "term_id").distinct()
-    rows = _factored_segment_rows(index, parsed, bt, scan_prune)
+    rows = _factored_segment_rows(index, parsed, bt, scan_prune).repartition(
+        batches, "batch_id"
+    )
+    return rows.groupBy("batch_id").cogroup(pq.groupBy("batch_id")).applyInArrow(
+        run, from_arrow_schema(schema)
+    )
 
-    cap = BATCH_CACHE_MAX_POSTINGS
+
+def topk_search(
+    index: InvertedIndex,
+    parsed: DataFrame,
+    algorithm: str = "block_max_wand",
+    k: int = 10,
+    thresholds: DataFrame | None = None,
+    batches: int | None = None,
+    scan_prune: bool | None = None,
+    profile: bool = False,
+) -> DataFrame:
+    """(query_id, rank, doc_id, score), one cogroup group per query
+    batch (_batch_cogroup). Parallelism = ``batches`` tasks; per-task
+    working set = the batch's distinct lists (use topk_range for
+    beyond-task-size head lists), with decoded postings capped at
+    BATCH_CACHE_MAX_POSTINGS per term. A parsed frame without a
+    per-query ``k`` column falls back to the ``k`` argument.
+
+    ``thresholds``: optional (query_id, threshold_micro) sound lower
+    bounds (thresholds.estimate_thresholds) that bootstrap each
+    kernel's heap threshold — the fork's kth_threshold pipeline, but
+    safe by construction (no --safe rerun needed). Only valid for
+    DISJUNCTIVE_ALGORITHMS (see above): passing thresholds with a
+    conjunctive algorithm raises ValueError instead of silently
+    dropping intersection results below the single-term bound.
+
+    ``profile``: adds (blocks_decoded, postings_decoded) per query —
+    the reference's profile_queries/block_profiler counters — making
+    pruning effectiveness measurable (a pruned kernel must decode
+    fewer blocks than the exhaustive one on the same query). Profiled
+    batches decode every block inside the query that needs it
+    (``cap=0``), so the counts are per query."""
+    kernel = RANKED_KERNELS[algorithm]
+    decode = CODECS[index.config.index.codec][1]
+    stats = _stats(index)
+    parsed = _with_k(_bootstrapped(parsed, algorithm, thresholds), k)
+    cap = 0 if profile else BATCH_CACHE_MAX_POSTINGS
 
     def run(left: pa.Table, right: pa.Table) -> pa.Table:
         # left: the batch's distinct term segment rows (+ term stats);
@@ -853,18 +724,38 @@ def topk_search_batch(
         # weight[, threshold_micro]). Shared proto build + query walk
         # (_build_batch_protos/_walk_batch_queries); one output table.
         protos, base_bm = _build_batch_protos(left, decode, cap)
-        return _results_table(
-            _walk_batch_queries(right, protos, base_bm, kernel, stats),
+        if not profile:
+            return _results_table(
+                _walk_batch_queries(right, protos, base_bm, kernel, stats),
+                _RANKED_SCHEMA,
+            )
+        per_query = []  # (results, blocks, postings) from Profiler deltas
+
+        def profiled(terms, kk, stats, init_threshold=0.0):
+            b0, p0 = Profiler.blocks, Profiler.postings
+            docs, scores = kernel(terms, kk, stats, init_threshold=init_threshold)
+            per_query.append(
+                (len(docs), Profiler.blocks - b0, Profiler.postings - p0)
+            )
+            return docs, scores
+
+        table = _results_table(
+            _walk_batch_queries(right, protos, base_bm, profiled, stats),
             _RANKED_SCHEMA,
         )
+        n, blocks, postings = np.array(per_query, np.int64).reshape(-1, 3).T
+        return table.append_column(
+            "blocks_decoded", pa.array(np.repeat(blocks, n))
+        ).append_column("postings_decoded", pa.array(np.repeat(postings, n)))
 
-    rows = rows.repartition(batches, "batch_id")  # AQE-coalesce exempt
-    return rows.groupBy("batch_id").cogroup(pq.groupBy("batch_id")).applyInArrow(
-        run, "query_id string, rank int, doc_id long, score double"
-    )
+    schema = _PROFILE_SCHEMA if profile else _RANKED_SCHEMA
+    return _batch_cogroup(index, parsed, batches, scan_prune, run, schema)
 
 
-def topk_range_batch(
+topk_search_batch = topk_search
+
+
+def topk_range(
     index: InvertedIndex,
     parsed: DataFrame,
     algorithm: str = "maxscore",
@@ -873,39 +764,32 @@ def topk_range_batch(
     batches: int | None = None,
     scan_prune: bool | None = None,
 ) -> DataFrame:
-    """(query_id, rank, doc_id, score) — BATCH-major RANGE execution.
+    """(query_id, rank, doc_id, score) — doc-range-major execution
+    (range_query.hpp: run the algorithm per docID range with a shared
+    heap; Spark shape = partial top-k per range + window merge).
 
-    ``topk_range`` ships each (query, docID-bucket) group its own copy
-    of the bucket's term blocks: a term shared by Q queries is
-    Arrow-transferred and block-decoded Q times per bucket — the same
-    per-query payload duplication topk_search_batch removes for the
-    query-major path (reference analogue: range_query.hpp's shared
-    per-range state amortized across the tools/queries.cpp batch loop
-    via the resident index). This variant cogroups on
-    (batch_id, bucket): LEFT = the batch's DISTINCT terms' blocks
-    within the bucket (each list crosses the wire once per batch per
-    bucket, decoded once per group by the shared columnar proto build);
+    Bucket granularity reuses the segment salt buckets (segments
+    never re-shuffle across buckets). The cogroup keys on (batch_id,
+    bucket): LEFT = the batch's DISTINCT terms' blocks within the
+    bucket (each list crosses the wire and decodes once per group);
     RIGHT = the batch's parsed queries replicated per live bucket
     (fixed-width metadata rows only — payload bytes never replicate).
-    Kernels then run per query over the bucket-local protos exactly as
-    topk_range's per-group kernel would, and the partial top-k rows
-    merge through the same shared-heap window — results are identical
-    by construction.
 
     Scale shape: parallelism = batches x buckets tasks; per-task
-    working set = the batch's distinct lists WITHIN ONE BUCKET, so the
-    head-term caveat of topk_search_batch does not apply — no task
-    ever sees a full posting list, same as topk_range. ``batches``
-    defaults to ceil(defaultParallelism / bucket-count): buckets
-    already provide the parallelism axis at scale (batches -> 1, full
-    sharing per bucket), while small corpora (few buckets) keep the
-    cores busy via query batching.
+    working set = the batch's distinct lists WITHIN ONE BUCKET, so no
+    task ever sees a full posting list. ``batches`` defaults to
+    ceil(defaultParallelism / bucket-count): buckets already provide
+    the parallelism axis at scale (batches -> 1, full sharing per
+    bucket), while small corpora (few buckets) keep the cores busy
+    via query batching.
 
-    ``thresholds`` enables the same Catalyst live-range pre-filter as
-    topk_range (wand_data_range.hpp compute_live_blocks): the
-    (query, bucket) live set prunes the replicated query side, and its
-    per-batch projection prunes dead buckets off the segment side
-    before any payload ships.
+    ``thresholds`` (query_id, threshold_micro — sound lower bounds on
+    the k-th final score, disjunctive algorithms only) enables the
+    LIVE-BLOCK pruning of wand_data_range.hpp compute_live_blocks:
+    the (query, bucket) live set prunes the replicated query side,
+    and its per-batch projection prunes dead buckets off the segment
+    side before any payload ships — dead ranges cost one aggregation
+    row, not a Python group.
     """
     import math
 
@@ -915,23 +799,10 @@ def topk_range_batch(
     decode = CODECS[index.config.index.codec][1]
     cfg = index.config.index
     bucket_stride = blocks_per_bucket(cfg)
-    stats = Stats(
-        num_docs=float(index.num_docs),
-        avg_len=float(index.avg_len),
-        k1=index.config.bm25.k1,
-        b=index.config.bm25.b,
-        quantized=bool(index.config.index.quantize_bits),
-    )
-    if thresholds is not None:
-        if algorithm not in DISJUNCTIVE_ALGORITHMS:
-            raise ValueError(
-                f"threshold bootstrapping is unsound for conjunctive "
-                f"algorithm {algorithm!r}"
-            )
-        parsed = parsed.join(F.broadcast(thresholds), "query_id", "left")
+    stats = _stats(index)
+    parsed = _bootstrapped(parsed, algorithm, thresholds)
     merge_parsed = parsed  # k-column presence decides the merge cap
-    if "k" not in parsed.columns:
-        parsed = parsed.withColumn("k", F.lit(int(k)))
+    parsed = _with_k(parsed, k)
 
     par = index.segments.sparkSession.sparkContext.defaultParallelism
     n_buckets = max(
@@ -941,8 +812,8 @@ def topk_range_batch(
         # Buckets are the parallelism axis at scale (batches -> 1,
         # maximal payload sharing per bucket); small corpora (few
         # buckets) keep the cores busy via query batching. 1x the
-        # cores — unlike topk_search_batch's 2x — because each
-        # (batch, bucket) group is already bucket-bounded, so the
+        # cores — unlike topk_search's 2x — because each (batch,
+        # bucket) group is already bucket-bounded, so the
         # straggler-smoothing second wave buys less than the extra
         # payload copies cost (measured at 100q/sf0.1: 1x par 0.63 s,
         # 2x par 0.87 s).
@@ -950,7 +821,7 @@ def topk_range_batch(
     batch_expr = F.pmod(F.xxhash64("query_id"), F.lit(batches)).cast("int")
     pq = parsed.withColumn("batch_id", batch_expr)
     # Segment side: distinct terms per batch (the dedup that removes
-    # the per-query payload copies), bucketed exactly as topk_range.
+    # per-query payload copies), bucketed by salt bucket.
     bt = parsed.select(batch_expr.alias("batch_id"), "term_id").distinct()
     rows = _factored_segment_rows(index, parsed, bt, scan_prune).withColumn(
         "bucket", (F.col("block_id") / F.lit(bucket_stride)).cast("long")
@@ -961,6 +832,8 @@ def topk_range_batch(
         # payload bytes out of this pass): the per-(query, bucket)
         # live set filters the replicated query side; its per-batch
         # bucket projection filters the payload-carrying segment side.
+        # No broadcast hint: at 10^12 docs the live set can be large
+        # (AQE broadcasts small live sets on its own).
         qmeta = _query_segments(index, parsed, scan_prune).withColumn(
             "bucket", (F.col("block_id") / F.lit(bucket_stride)).cast("long")
         )
@@ -1017,7 +890,7 @@ def topk_range_batch(
             bucket = (left.column("bucket")[0].as_py()
                       if "bucket" in left.column_names else "?")
             raise RuntimeError(
-                f"topk_range_batch: segment bucket {bucket} outside the "
+                f"topk_range: segment bucket {bucket} outside the "
                 "replicated query range — non-dense doc ids?"
             )
         protos, base_bm = _build_batch_protos(left, decode, cap)
@@ -1027,7 +900,7 @@ def topk_range_batch(
         )
 
     # Pinned partition count (AQE-coalesce exempt, same rationale as
-    # topk_search_batch): ~one (batch, bucket) group per partition up
+    # _batch_cogroup): ~one (batch, bucket) group per partition up
     # to 4x the cores — beyond that, groups within a partition run
     # sequentially inside one task, which is the right shape when
     # buckets vastly outnumber cores (10^12-doc corpora).
@@ -1037,6 +910,6 @@ def topk_range_batch(
     partial = (
         rows.groupBy("batch_id", "bucket")
         .cogroup(pq.groupBy("batch_id", "bucket"))
-        .applyInArrow(run, "query_id string, doc_id long, score double")
+        .applyInArrow(run, from_arrow_schema(_PARTIAL_SCHEMA))
     )
     return _merge_range_partials(partial, merge_parsed, k)

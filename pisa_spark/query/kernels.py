@@ -3,8 +3,7 @@
 These are the engine's custom operators — the part of the reference
 Spark genuinely lacks (cursor-based dynamic pruning,
 query/algorithm/*.hpp). They run inside the executor's Python groups
-(executor.py): query-major paths call them once per ``applyInPandas``
-group; the batch-major paths run many queries per ``applyInArrow``
+(executor.py): every executor runs many queries per ``applyInArrow``
 cogroup over term postings decoded once per batch. All array math is
 vectorized.
 
@@ -114,7 +113,8 @@ class TermPostings:
     # lens)} for lazily decoded terms that batch-major execution runs
     # many queries over (over-cap terms, executor.
     # BATCH_CACHE_MAX_POSTINGS), so a block decodes at most once per
-    # batch. None in query-major execution (nothing to share).
+    # batch within the cache's budget. None for in-process callers
+    # that build TermPostings by hand.
     block_cache: object = None
     decoded: tuple | None = None  # term-level (docs, tfs, lens)
     block_offsets: np.ndarray | None = None  # int64, n_blocks + 1

@@ -41,9 +41,11 @@ def main() -> None:
     from pisa_spark.config import AnalyzerConfig, EngineConfig, IndexConfig
     from pisa_spark.corpus import pages_from_documents
     from pisa_spark.index import build_index
-    from pisa_spark.query.executor import _group_to_terms, _query_segments
+    from pisa_spark.query.executor import (
+        _build_batch_protos, _query_segments, _stats, _walk_batch_queries,
+    )
     from pisa_spark.query.kernels import (
-        Stats, block_max_maxscore_kernel, maxscore_kernel, ranked_or_kernel,
+        block_max_maxscore_kernel, maxscore_kernel, ranked_or_kernel,
     )
     from pisa_spark.query.parser import parse_queries
 
@@ -78,18 +80,14 @@ def main() -> None:
     pdf = _query_segments(index, parsed).toPandas()
 
     decode = CODECS[cfg.index.codec][1]
-    stats = Stats(
-        num_docs=float(index.num_docs), avg_len=float(index.avg_len),
-        k1=cfg.bm25.k1, b=cfg.bm25.b, quantized=False,
-    )
     kernels = {
         "taat": ranked_or_kernel,
         "bmm": block_max_maxscore_kernel,
         "maxscore": maxscore_kernel,
     }
     recs = []
-    for _, g in pdf.groupby("query_id"):
-        tps = _group_to_terms(g, decode)
+
+    def timed_kernels(tps, k, stats, init_threshold=0.0):
         total_df = sum(int(t.df) for t in tps)
         rec = {"total_df": total_df, "n_terms": len(tps)}
         for name, kern in kernels.items():
@@ -101,6 +99,17 @@ def main() -> None:
                 best = min(best, time.perf_counter() - t)
             rec[name] = best * 1e6
         recs.append(rec)
+        return np.empty(0, np.int64), np.empty(0)
+
+    # cap=0: block decode stays inside every timed kernel call
+    protos, base_bm = _build_batch_protos(
+        pdf.drop_duplicates(["term_id", "block_id"]), decode, cap=0
+    )
+    queries = pdf[["query_id", "k", "term_id", "weight"]].drop_duplicates()
+    for _ in _walk_batch_queries(
+        queries, protos, base_bm, timed_kernels, _stats(index)
+    ):
+        pass
     df = pd.DataFrame(recs)
     edges = [0, 256, 512, 1024, 2048, 4096, 8192, 16384, 1 << 30]
     df["bucket"] = pd.cut(df["total_df"], edges)

@@ -48,12 +48,6 @@ def main() -> None:
     # maxscore 4.26) with rank-identity pinned every round by the
     # strategy_topk gate entry's 'adaptive' tag.
     ap.add_argument("--algorithm", default="adaptive")
-    ap.add_argument("--strategy", default="query",
-                    choices=["query", "batched"],
-                    help="query-major (one task per query, the latency "
-                         "shape) or batch-major (cogrouped batches with a "
-                         "shared block cache — the amortized throughput "
-                         "shape, executor.topk_search_batch)")
     ap.add_argument("--warmup", type=int, default=1,
                     help="run an untimed small warmup build first")
     ap.add_argument("--codec-profile", default="phased",
@@ -120,19 +114,15 @@ def main() -> None:
     from pisa_spark.build.pipeline import BuildPipeline
     from pisa_spark.config import EngineConfig
     from pisa_spark.corpus import synth_pages, synth_queries
-    from pisa_spark.query.executor import topk_search, topk_search_batch
+    from pisa_spark.query.executor import topk_search
     from pisa_spark.query.parser import parse_queries
 
     def search(index, parsed, **kw):
-        if args.strategy == "batched":
-            # batches pinned to the fixed partition count so the job
-            # is IDENTICAL at every parallelism level (the batch
-            # count otherwise defaults to 2x cluster parallelism,
-            # which would change the measured work between N and 4N)
-            return topk_search_batch(
-                index, parsed, batches=args.partitions, **kw
-            )
-        return topk_search(index, parsed, **kw)
+        # batches pinned to the fixed partition count so the job is
+        # IDENTICAL at every parallelism level (the batch count
+        # otherwise defaults to 2x cluster parallelism, which would
+        # change the measured work between N and 4N)
+        return topk_search(index, parsed, batches=args.partitions, **kw)
 
     # Untimed warmup build on a small slice (JIT, codegen, Python
     # worker pool, shuffle paths) — the reference bench protocol also
@@ -211,7 +201,6 @@ def main() -> None:
                 "build_wall_s": round(build_wall, 3),
                 "build_docs_per_sec": round(args.n_docs / build_wall, 2),
                 "n_queries": args.n_queries,
-                "strategy": args.strategy,
                 "query_wall_s": round(query_wall, 3),
                 "queries_per_sec": round(args.n_queries / query_wall, 2),
                 "result_rows": n_rows,

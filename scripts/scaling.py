@@ -28,14 +28,12 @@ REPO = Path(__file__).resolve().parent.parent
 
 
 def run_once(cores: int, n_docs: int, n_queries: int, out: str,
-             strategy: str = "query",
              conf: list[str] | None = None) -> dict:
     shutil.rmtree(out, ignore_errors=True)
     cmd = [
         sys.executable, str(REPO / "scripts" / "run_pipeline.py"),
         "--local", str(cores), "--n-docs", str(n_docs),
         "--n-queries", str(n_queries), "--out", out,
-        "--strategy", strategy,
     ]
     for kv in conf or []:
         cmd += ["--conf", kv]
@@ -60,11 +58,6 @@ def main() -> None:
     ap.add_argument("--repeats", type=int, default=2,
                     help="repeats per level; best throughput wins "
                          "(the sandbox VM sees neighbor CPU steal)")
-    ap.add_argument("--strategy", default="query",
-                    choices=["query", "batched"],
-                    help="query execution strategy passed through to "
-                         "run_pipeline (batched = amortized throughput "
-                         "shape with a fixed batch count)")
     ap.add_argument("--conf", action="append", default=[],
                     metavar="K=V",
                     help="extra spark conf forwarded to run_pipeline "
@@ -91,8 +84,7 @@ def main() -> None:
 
     def run_level(cores: int, i: int) -> dict:
         return run_once(cores, args.n_docs, args.queries,
-                        f"{args.out_dir}/idx{cores}_{i}", args.strategy,
-                        conf=args.conf)
+                        f"{args.out_dir}/idx{cores}_{i}", conf=args.conf)
 
     rounds = []
     if args.interleave:
@@ -133,7 +125,6 @@ def main() -> None:
     result = {
         "n_docs": args.n_docs,
         "n_queries": args.queries,
-        "strategy": args.strategy,
         "conf": args.conf,
         "codec_profile": lo.get("codec_profile", "flat"),
         "low": {"cores": n, "build_docs_per_sec": lo["build_docs_per_sec"],
@@ -177,8 +168,8 @@ partitioning, same {args.queries}-query batch, fresh JVM) at
 | query batch (queries/sec) | {lo['queries_per_sec']} | {hi['queries_per_sec']} | **{q_eff:.3f}** |
 | query batch wall (s) | {lo['query_wall_s']} | {hi['query_wall_s']} | |
 
-Reproduce: `python scripts/scaling.py --n {n} --n-docs {args.n_docs} --queries {args.queries} --repeats {args.repeats} --strategy {args.strategy}`
-(best-of-{args.repeats} per level, {args.strategy}-major queries; the
+Reproduce: `python scripts/scaling.py --n {n} --n-docs {args.n_docs} --queries {args.queries} --repeats {args.repeats}`
+(best-of-{args.repeats} per level; the
 shared-host VM sees neighbor CPU steal — compare only runs from a
 quiet window, BENCH.md "Measurement discipline")
 """

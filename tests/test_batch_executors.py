@@ -1,4 +1,4 @@
-"""Batch-major executors (topk_search_batch, topk_range_batch).
+"""Batch-major executors (topk_search, topk_range).
 
 Two layers:
 
@@ -237,8 +237,8 @@ def test_batch_executors_config_matrix(spark, pages, oracles, codec, qbits, cbm)
     big = exp[exp["query_id"] == BIG_K_QUERY]
     assert 0 < len(big) < N_DOCS + 50  # k above the match count
     for got in (
-        ex.topk_search_batch(index, parsed, algorithm="block_max_wand", k=10, batches=3),
-        ex.topk_range_batch(index, parsed, algorithm="maxscore", k=10, batches=2),
+        ex.topk_search(index, parsed, algorithm="block_max_wand", k=10, batches=3),
+        ex.topk_range(index, parsed, algorithm="maxscore", k=10, batches=2),
     ):
         pd.testing.assert_frame_equal(_sorted(got), exp)
 
@@ -248,7 +248,7 @@ def test_batch_executors_config_matrix(spark, pages, oracles, codec, qbits, cbm)
             "query_id string, term_id long, weight double, k int",
         )
         for got in (
-            ex.topk_search_batch(index, oov, algorithm="adaptive", k=10, batches=1),
-            ex.topk_range_batch(index, oov, algorithm="adaptive", k=10, batches=1),
+            ex.topk_search(index, oov, algorithm="adaptive", k=10, batches=1),
+            ex.topk_range(index, oov, algorithm="adaptive", k=10, batches=1),
         ):
             assert got.count() == 0

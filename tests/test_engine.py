@@ -206,9 +206,15 @@ def test_ranked_and_matches_sql(spark, index, parsed, and_algo):
     )
 
 
-def test_boolean_and_or(spark, index, parsed):
-    got_and = boolean_query(index, parsed, "and").groupBy("query_id").count()
-    got_or = boolean_query(index, parsed, "or").groupBy("query_id").count()
+@pytest.mark.parametrize("with_k", [True, False], ids=["parsed", "no_k"])
+def test_boolean_and_or(spark, index, parsed, with_k):
+    """Boolean AND/OR result sets equal the SQL join's (query_id,
+    doc_id) sets — also for a parsed frame without the k column that
+    Boolean callers never had to supply."""
+    queries = parsed if with_k else parsed.drop("k")
+    got_and = boolean_query(index, queries, "and")
+    got_or = boolean_query(index, queries, "or")
+    assert got_and.columns == got_or.columns == ["query_id", "doc_id"]
     nterms = parsed.groupBy("query_id").agg(F.count("*").alias("n_terms"))
     exp_and = (
         parsed.join(index.postings, "term_id")
@@ -216,18 +222,18 @@ def test_boolean_and_or(spark, index, parsed):
         .agg(F.count("*").alias("nt"))
         .join(nterms, "query_id")
         .filter(F.col("nt") == F.col("n_terms"))
-        .groupBy("query_id")
-        .count()
+        .select("query_id", "doc_id")
     )
     exp_or = (
         parsed.join(index.postings, "term_id")
         .select("query_id", "doc_id")
         .distinct()
-        .groupBy("query_id")
-        .count()
     )
-    assert sorted(got_and.collect()) == sorted(exp_and.collect())
-    assert sorted(got_or.collect()) == sorted(exp_or.collect())
+    for got, exp in ((got_and, exp_and), (got_or, exp_or)):
+        got_rows = [tuple(r) for r in got.collect()]
+        assert len(got_rows) == len(set(got_rows))
+        assert set(got_rows) == {tuple(r) for r in exp.collect()}
+    assert got_or.count() > got_and.count() > 0
 
 
 def test_weighted_query_duplicates(spark, index):
@@ -1346,9 +1352,10 @@ def test_batched_kernels_match_daat(index, parsed, spark):
     import numpy as np
 
     from pisa_spark.codecs import CODECS
-    from pisa_spark.query.executor import _group_to_terms, _query_segments
+    from pisa_spark.query.executor import (
+        _build_batch_protos, _query_segments, _stats, _walk_batch_queries,
+    )
     from pisa_spark.query.kernels import (
-        Stats,
         block_max_wand_kernel,
         block_max_wand_kernel_daat,
         wand_kernel,
@@ -1356,16 +1363,11 @@ def test_batched_kernels_match_daat(index, parsed, spark):
     )
 
     decode = CODECS[index.config.index.codec][1]
-    stats = Stats(
-        num_docs=float(index.num_docs), avg_len=float(index.avg_len),
-        k1=index.config.bm25.k1, b=index.config.bm25.b,
-    )
     from pisa_spark.query.kernels import PRUNE_EPS, ranked_or_kernel
 
-    pdf = _query_segments(index, parsed).toPandas()
-    n_q = 0
-    for _, g in pdf.groupby("query_id"):
-        terms = _group_to_terms(g, decode)
+    n_q = [0]
+
+    def compare(terms, k, stats, init_threshold=0.0):
         # thresholds must be SOUND lower bounds on the k-th final
         # score (the executor contract) — with an unsound bound the
         # tail below the true k-th may legitimately differ between
@@ -1383,8 +1385,20 @@ def test_batched_kernels_match_daat(index, parsed, spark):
                 want = daat(terms, 10, stats, init_threshold=init)
                 assert np.array_equal(got[0], want[0])
                 assert np.allclose(got[1], want[1])
-        n_q += 1
-    assert n_q >= 10
+        n_q[0] += 1
+        return np.empty(0, np.int64), np.empty(0)
+
+    # cap=0: every kernel decodes its own blocks, none shared
+    pdf = _query_segments(index, parsed).toPandas()
+    protos, base_bm = _build_batch_protos(
+        pdf.drop_duplicates(["term_id", "block_id"]), decode, cap=0
+    )
+    queries = pdf[["query_id", "k", "term_id", "weight"]].drop_duplicates()
+    for _ in _walk_batch_queries(
+        queries, protos, base_bm, compare, _stats(index)
+    ):
+        pass
+    assert n_q[0] >= 10
 
 
 def test_adaptive_choice_is_metadata_only():
@@ -1409,14 +1423,14 @@ def test_adaptive_choice_is_metadata_only():
 def test_batch_executor_matches_oracle(index, parsed, oracle_topk):
     """Batch-major execution (shared term payloads + decoded-block
     cache across a batch's queries) must be rank-identical to the
-    query-major path and the exhaustive oracle, across batch counts
-    (1 = everything shares one cache; 7 = uneven hash groups)."""
-    from pisa_spark.query.executor import topk_search_batch
+    exhaustive oracle across batch counts (1 = everything shares one
+    cache; 7 = uneven hash groups)."""
+    from pisa_spark.query.executor import topk_search
 
     exp = oracle_topk.astype({"rank": "int64", "doc_id": "int64"})
     for algo in ("block_max_maxscore", "adaptive", "ranked_or"):
         for b in (1, 7):
-            got = _fetch(topk_search_batch(
+            got = _fetch(topk_search(
                 index, parsed, algorithm=algo, k=10, batches=b
             ))
             pd.testing.assert_frame_equal(
@@ -1429,14 +1443,14 @@ def test_batch_executor_matches_oracle(index, parsed, oracle_topk):
 
 
 def test_batch_executor_with_thresholds(spark, index, parsed, oracle_topk):
-    from pisa_spark.query.executor import topk_search_batch
+    from pisa_spark.query.executor import topk_search
     from pisa_spark.query.thresholds import (
         estimate_thresholds, kth_score_cache,
     )
 
     cache = kth_score_cache(index, k=10)
     est = estimate_thresholds(parsed, cache)
-    got = _fetch(topk_search_batch(
+    got = _fetch(topk_search(
         index, parsed, algorithm="block_max_maxscore", k=10,
         thresholds=est, batches=5,
     ))
@@ -1447,15 +1461,15 @@ def test_batch_executor_with_thresholds(spark, index, parsed, oracle_topk):
     )
 
 
-def test_batch_executor_k_fallback_matches_query_major(index, parsed, oracle_topk):
+def test_batch_executor_k_fallback_matches_oracle(index, parsed, oracle_topk):
     """A parsed frame WITHOUT a per-query k column must fall back to
-    the k argument in BOTH executors (query-major reads it row-wise;
-    batch-major materializes the column before the cogroup)."""
-    from pisa_spark.query.executor import topk_search_batch
+    the k argument (the executor materializes the column before the
+    cogroup ships it)."""
+    from pisa_spark.query.executor import topk_search
 
     no_k = parsed.drop("k")
     exp = oracle_topk.astype({"rank": "int64", "doc_id": "int64"})
-    got = _fetch(topk_search_batch(
+    got = _fetch(topk_search(
         index, no_k, algorithm="block_max_maxscore", k=10, batches=3
     ))
     pd.testing.assert_frame_equal(
@@ -1464,11 +1478,12 @@ def test_batch_executor_k_fallback_matches_query_major(index, parsed, oracle_top
     )
 
 
-def test_range_executor_heterogeneous_k_matches_query_major(index, parsed):
+def test_range_executor_heterogeneous_k_matches_search(index, parsed):
     """Per-query k parity: the range executor's merge must cap each
     query at ITS OWN k (the per-bucket partials already honor it), and
     a parsed frame without a k column must fall back to the k arg —
-    both matching query-major topk_search."""
+    both matching topk_search, whose groups are whole query batches
+    instead of (batch, doc bucket) pairs."""
     from pyspark.sql import functions as F
 
     mixed = parsed.withColumn(
@@ -1494,15 +1509,14 @@ def test_range_executor_heterogeneous_k_matches_query_major(index, parsed):
 
 @pytest.mark.parametrize("batches", [1, 3, 16])
 def test_range_batch_matches_oracle(index, parsed, oracle_topk, batches):
-    """Batch-major range execution (topk_range_batch): payloads ship
-    once per (batch, bucket) instead of once per (query, bucket) but
-    results stay rank-identical to the exhaustive oracle at every
-    batch count (1 = full sharing, 16 > query count = query-major
-    degenerate)."""
-    from pisa_spark.query.executor import topk_range_batch
+    """Range execution (topk_range): payloads ship once per (batch,
+    bucket) and results stay rank-identical to the exhaustive oracle
+    at every batch count (1 = full sharing, 16 > query count = about
+    one query per batch)."""
+    from pisa_spark.query.executor import topk_range
 
     got = _fetch(
-        topk_range_batch(
+        topk_range(
             index, parsed, algorithm="maxscore", k=10, batches=batches
         )
     )
@@ -1514,26 +1528,26 @@ def test_range_batch_matches_oracle(index, parsed, oracle_topk, batches):
 
 
 def test_range_batch_guards_bucket_outside_replicated_range(index, parsed):
-    """topk_range_batch replicates queries to ceil(num_docs /
+    """topk_range replicates queries to ceil(num_docs /
     salt_bucket_docs) buckets, relying on dense doc ids; a segment
     bucket beyond that range must fail the job loudly instead of
     silently dropping its docs from the top-k."""
     from dataclasses import replace
 
-    from pisa_spark.query.executor import topk_range_batch
+    from pisa_spark.query.executor import topk_range
 
     sparse = replace(index, num_docs=100)  # one replicated bucket of four
     with pytest.raises(Exception, match="outside the replicated query range"):
-        topk_range_batch(
+        topk_range(
             sparse, parsed, algorithm="maxscore", k=10, batches=1
         ).collect()
 
 
 def test_range_batch_live_thresholds(index, parsed, oracle_topk):
-    """topk_range_batch with bootstrap thresholds: the Catalyst
-    live-range pre-filter path stays rank-identical, and conjunctive
-    bootstrapping is rejected exactly like the query-major form."""
-    from pisa_spark.query.executor import topk_range_batch
+    """topk_range with bootstrap thresholds at a pinned batch count:
+    the Catalyst live-range pre-filter path stays rank-identical, and
+    conjunctive bootstrapping is rejected."""
+    from pisa_spark.query.executor import topk_range
     from pisa_spark.query.thresholds import (
         estimate_thresholds_with_pairs, kth_score_cache,
     )
@@ -1541,7 +1555,7 @@ def test_range_batch_live_thresholds(index, parsed, oracle_topk):
     cache = kth_score_cache(index, k=10)
     est = estimate_thresholds_with_pairs(index, parsed, cache, k=10)
     got = _fetch(
-        topk_range_batch(
+        topk_range(
             index, parsed, algorithm="block_max_wand", k=10,
             thresholds=est, batches=3,
         )
@@ -1552,24 +1566,23 @@ def test_range_batch_live_thresholds(index, parsed, oracle_topk):
     )
 
     with pytest.raises(ValueError, match="unsound"):
-        topk_range_batch(
+        topk_range(
             index, parsed, algorithm="ranked_and", k=10, thresholds=est
         )
 
 
 def test_range_batch_heterogeneous_k(index, parsed):
-    """Per-query k parity for the batch-major range form, plus the
-    no-k-column fallback to the k argument."""
+    """Per-query k parity for the range form at a pinned batch count,
+    plus the no-k-column fallback to the k argument."""
     mixed = parsed.withColumn(
         "k",
         F.when(F.pmod(F.xxhash64("query_id"), F.lit(2)) == 0, F.lit(4))
         .otherwise(F.lit(9)),
     )
-    from pisa_spark.query.executor import topk_range_batch
 
     exp = _fetch(topk_search(index, mixed, algorithm="maxscore", k=10))
     got = _fetch(
-        topk_range_batch(index, mixed, algorithm="maxscore", k=10, batches=2)
+        topk_range(index, mixed, algorithm="maxscore", k=10, batches=2)
     )
     pd.testing.assert_frame_equal(
         got[["query_id", "rank", "doc_id"]],
@@ -1579,7 +1592,7 @@ def test_range_batch_heterogeneous_k(index, parsed):
     no_k = parsed.drop("k")
     exp = _fetch(topk_search(index, no_k, algorithm="maxscore", k=7))
     got = _fetch(
-        topk_range_batch(index, no_k, algorithm="maxscore", k=7, batches=2)
+        topk_range(index, no_k, algorithm="maxscore", k=7, batches=2)
     )
     pd.testing.assert_frame_equal(
         got[["query_id", "rank", "doc_id"]],
@@ -1637,7 +1650,7 @@ def test_batch_executor_over_cap_term_matches(index, parsed, oracle_topk,
 
     monkeypatch.setattr(executor, "BATCH_CACHE_MAX_POSTINGS", 4)
     exp = oracle_topk.astype({"rank": "int64", "doc_id": "int64"})
-    got = _fetch(executor.topk_search_batch(
+    got = _fetch(executor.topk_search(
         index, parsed, algorithm="block_max_maxscore", k=10, batches=2
     ))
     pd.testing.assert_frame_equal(

@@ -114,6 +114,22 @@ def test_segments_never_broadcast(index, parsed):
             assert "doc_bytes" not in sub, sub
 
 
+def test_query_executors_share_one_arrow_boundary(index, parsed):
+    """topk_search, topk_range and boolean_query all run their kernels
+    in ``cogroup(...).applyInArrow`` groups over query batches; no
+    per-query ``applyInPandas`` path remains."""
+    from pisa_spark.query.executor import boolean_query, topk_range, topk_search
+
+    for df in (
+        topk_search(index, parsed, algorithm="block_max_wand"),
+        topk_range(index, parsed, algorithm="maxscore"),
+        boolean_query(index, parsed, op="and"),
+    ):
+        plan = _plan_str(df)
+        assert "FlatMapCoGroupsInArrow" in plan, plan
+        assert "FlatMapGroupsInPandas" not in plan, plan
+
+
 def test_threshold_zero_disables_lexicon_broadcast(spark):
     from pisa_spark.build.invert import maybe_broadcast
     from pisa_spark.corpus import pages_from_documents

@@ -35,7 +35,7 @@ from pyspark.sql import Window, functions as F
 from pisa_spark.config import AnalyzerConfig, EngineConfig
 from pisa_spark.functions.scoring import bm25_sql_expr, dlit, micro_sql
 from pisa_spark.index import build_index
-from pisa_spark.query.executor import topk_search, topk_search_batch
+from pisa_spark.query.executor import topk_search
 from pisa_spark.query.parser import parse_queries
 
 TEST_DATA = Path("/root/reference/test/test_data")
@@ -212,7 +212,7 @@ def test_kernels_rank_identical_on_real_webtext(spark, clueweb_index):
         lambda: topk_search(
             clueweb_index, parsed, algorithm="maxscore", k=10
         ),
-        lambda: topk_search_batch(
+        lambda: topk_search(
             clueweb_index, parsed, algorithm="block_max_maxscore", k=10,
             batches=3,
         ),

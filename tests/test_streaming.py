@@ -789,13 +789,13 @@ def test_twenty_generation_soak_with_midstream_compact(spark, tmp_path):
 
 
 def test_range_batch_on_incremental_index(spark, tmp_path):
-    """topk_range_batch over a two-generation incremental index (with
-    real bound_factor inflation in term_meta): the batch-major range
-    form must agree rank-identically with query-major topk_search on
-    the same index — the bound-factor contract goes through the shared
-    _factored_segment_rows, so this pins that the newest executor path
-    honors it too."""
-    from pisa_spark.query.executor import topk_range_batch, topk_search
+    """topk_range at a pinned batch count over a two-generation
+    incremental index (with real bound_factor inflation in term_meta)
+    must agree rank-identically with topk_search on the same index —
+    the bound-factor contract goes through the shared
+    _factored_segment_rows, so this pins that both physical shapes
+    honor it."""
+    from pisa_spark.query.executor import topk_range, topk_search
     from pisa_spark.query.parser import parse_queries
     from pisa_spark.streaming import IncrementalIndexer
 
@@ -823,7 +823,7 @@ def test_range_batch_on_incremental_index(spark, tmp_path):
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
     got = (
-        topk_range_batch(idx, parsed, algorithm="maxscore", k=10, batches=3)
+        topk_range(idx, parsed, algorithm="maxscore", k=10, batches=3)
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(
