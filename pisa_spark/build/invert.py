@@ -33,14 +33,16 @@ def build_lexicon(docs: DataFrame) -> DataFrame:
     with the reference's sorted global term space); df = number of
     distinct docs containing the term.
 
-    Standalone convenience (one corpus-pair shuffle of its own). The
-    full build (build_index / BuildPipeline) does NOT call this: it
-    goes ids-first — ``build_term_ids`` (distinct terms only, a tiny
-    shuffle thanks to map-side partial dedup) -> ``build_postings``
-    (the single corpus-pair shuffle) -> ``lexicon_with_df`` (df
-    counted off the postings, vocabulary-sized) — so the corpus is
-    exploded and pair-shuffled exactly once per build instead of
-    twice. Both routes produce value-identical lexicons.
+    Kept as the agreement reference for the ids-first lexicon
+    (``test_ids_first_lexicon_matches_standalone``), with one
+    corpus-pair shuffle of its own. The build DAG
+    (``pipeline.build_dag``) does NOT call this: it goes ids-first —
+    ``build_term_ids`` (distinct terms only, a tiny shuffle thanks to
+    map-side partial dedup) -> ``build_postings`` (the single
+    corpus-pair shuffle) -> ``lexicon_with_df`` (df counted off the
+    postings, vocabulary-sized) — so the corpus is exploded and
+    pair-shuffled exactly once per build instead of twice. Both
+    routes produce value-identical lexicons.
     """
     term_docs = docs.select(
         F.explode("terms").alias("term"), F.col("doc_id")

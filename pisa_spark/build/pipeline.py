@@ -1,31 +1,38 @@
-"""Checkpointed, resumable index-build pipeline with lineage + metrics.
+"""The index-build DAG, written once, over two stage stores.
 
-North-rule requirement: the build must be "resumable from
-per-partition checkpoints with lineage and row/byte metrics recorded
-per partition". The reference's analogue is its batch-spill files
-(`.batch.N.{docs,freqs,sizes}`, src/invert.cpp:139-165) which let a
-crashed invert restart from finished batches; here each STAGE is a
-parquet checkpoint directory and each written part-file is the
-per-partition unit:
-
-    out_dir/<stage>/part-*.parquet      stage output, partitioned
-    out_dir/<stage>/_MANIFEST.json      lineage + per-partition metrics
-
-A manifest records: the stage's config fingerprint, its parents'
-manifest fingerprints (lineage chain), wall seconds, and per
-part-file rows/bytes (read from parquet footers — no extra scan).
-``run`` skips any stage whose manifest exists and whose fingerprint
-(config + parents) is unchanged — so a killed build resumes from the
-last finished stage, and a config change invalidates exactly the
-stages downstream of it.
-
-Stage DAG (each arrow is a shuffle boundary, SURVEY §3.1):
+``build_dag`` is the reference's parse_collection -> invert ->
+create_wand_data -> compress chain (docs/source/indexing_pipeline.md)
+as one stage graph (each arrow is a shuffle boundary, SURVEY §3.1):
 
     pages -> docs -> term_ids -> postings -> lexicon -> segments
                   \\-> stats                     \\-> term_meta
 
-(doc_sizes / docmap are column-pruned projections of the docs
-checkpoint, not separate stages)
+(quantized builds add ``term_meta_raw`` ahead of ``term_meta``;
+doc_sizes / docmap are column-pruned projections of docs, not
+stages). Each stage goes through ``store.stage(name, parents,
+compute)``; the store decides only how it is kept:
+
+- ``BuildPipeline`` (this module) checkpoints every stage to parquet,
+  so a killed build resumes. The reference's analogue is its
+  batch-spill files (`.batch.N.{docs,freqs,sizes}`,
+  src/invert.cpp:139-165); here each STAGE is a directory and each
+  part-file the per-partition unit:
+
+      out_dir/<stage>/part-*.parquet      stage output, partitioned
+      out_dir/<stage>/_MANIFEST.json      lineage + per-partition metrics
+
+  A manifest records the stage's config fingerprint, its parents'
+  manifest fingerprints (lineage chain), wall seconds, and per
+  part-file rows/bytes (read from parquet footers — no extra scan).
+  ``run`` skips any stage whose manifest exists and whose fingerprint
+  (config + parents) is unchanged, so a config change invalidates
+  exactly the stages downstream of it.
+- ``index.build_index`` keeps stages in memory: docs and postings
+  persisted, the lexicon lazily local-checkpointed, the rest lazy.
+
+A store also answers ``n_rows(name, counted)`` (vocabulary size:
+the manifest, or the free ``count_out`` of the compute) and
+``discard()`` (cleanup when the duplicate-url guard fires).
 """
 
 from __future__ import annotations
@@ -39,8 +46,15 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pisa_spark.build import (
+    build_doc_sizes, build_postings, build_segments, build_term_ids,
+    build_term_meta, collection_stats, lexicon_with_df, tokenize_pages,
+)
+from pisa_spark.build.forward import ID_BROADCAST_ROWS
+from pisa_spark.build.segments import scored_postings
 from pisa_spark.codecs import WIRE_VERSION
 from pisa_spark.config import EngineConfig
+from pisa_spark.index import InvertedIndex, quantized_rescale
 
 MANIFEST = "_MANIFEST.json"
 
@@ -78,8 +92,108 @@ def _partition_metrics(stage_dir: Path) -> list[dict]:
     return out
 
 
+def build_dag(pages: DataFrame, config: EngineConfig, store,
+              lang_filter: str | None = None) -> InvertedIndex:
+    """pages(url, warc_ts, html, text, lang[, doc_id]) -> InvertedIndex
+    through the stage graph above, each stage kept by ``store``."""
+    bcast = config.index.lexicon_broadcast_threshold
+    # ONE corpus-sized stage: docIDs are a function of url alone, so
+    # they are assigned over the column-pruned url projection of the
+    # INPUT and joined back into the tokenize scan — broadcast when
+    # the counted doc count is under the gate (capped by the
+    # configured threshold; 0 disables), else a plain join for AQE.
+    ids: dict = {}
+    docs = store.stage("docs", [], lambda: tokenize_pages(
+        pages, config.analyzer, lang_filter=lang_filter, stats_out=ids,
+        id_broadcast_rows=min(bcast, ID_BROADCAST_ROWS),
+    ))
+    # Ids-first invert (invert.build_lexicon docstring): term ids from
+    # distinct terms (map-side partial dedup -> a vocabulary-sized
+    # shuffle), build_postings is the ONE corpus-pair shuffle, and the
+    # lexicon's df is a vocabulary-sized aggregate off the postings.
+    vocab: dict = {}
+    term_ids = store.stage(
+        "term_ids", ["docs"], lambda: build_term_ids(docs, count_out=vocab)
+    )
+    # gates the broadcast hints (invert.maybe_broadcast)
+    lexicon_size = store.n_rows("term_ids", vocab)
+    doc_sizes = build_doc_sizes(docs)
+    stats = store.stage(
+        "stats", ["docs"], lambda: collection_stats(doc_sizes)
+    ).collect()[0]
+    num_docs = int(stats["num_docs"])
+    avg_len = float(stats["avg_len"] or 0.0)
+    collection_len = int(stats["collection_len"] or 0)
+    if ids and num_docs != ids["n_rows"]:
+        # Duplicate-url guard (free: both counts are in hand): the id
+        # join fans out on duplicate urls, and a doubled index (tf,
+        # stats) must fail the build, not ship. NULL urls were already
+        # rejected inside the id assignment (forward._with_assigned_ids).
+        store.discard()
+        raise ValueError(
+            f"duplicate urls in input: {ids['n_rows']} distinct-"
+            f"numbered urls joined into {num_docs} doc rows "
+            "(url is the corpus key and must be unique)"
+        )
+
+    # carry_doc_len: postings keep doc_len, so the segment encode
+    # never re-shuffles the pairs on doc_id for the doc_sizes join.
+    postings = store.stage(
+        "postings", ["docs", "term_ids"],
+        lambda: build_postings(
+            docs, term_ids, lexicon_size=lexicon_size,
+            broadcast_threshold=bcast, carry_doc_len=True,
+        ),
+    )
+    lexicon = store.stage(
+        "lexicon", ["term_ids", "postings"],
+        lambda: lexicon_with_df(term_ids, postings),
+    )
+    scored = scored_postings(
+        postings, doc_sizes, lexicon, num_docs, avg_len,
+        lexicon_size=lexicon_size, broadcast_threshold=bcast,
+    )
+    # Quantized builds need the index-wide max term weight BEFORE the
+    # segment encode, and their term_meta carries quantized bounds:
+    # the raw metadata is its own stage so a resume has it.
+    bits = config.index.quantize_bits
+    seg_parents = ["postings", "lexicon", "stats"]
+    term_meta = store.stage(
+        "term_meta_raw" if bits else "term_meta", seg_parents,
+        lambda: build_term_meta(scored, num_docs, avg_len, config.bm25),
+    )
+    index_max_score = None
+    if bits:
+        index_max_score, rescaled = quantized_rescale(term_meta, bits)
+        term_meta = store.stage("term_meta", ["term_meta_raw"], lambda: rescaled)
+        seg_parents = seg_parents + ["term_meta_raw"]
+    if config.index.compress_blockmax:
+        seg_parents = seg_parents + ["term_meta"]
+    segments = store.stage("segments", seg_parents, lambda: build_segments(
+        scored, num_docs, avg_len, config.index, config.bm25,
+        index_max_score=index_max_score, term_meta=term_meta,
+    ))
+    return InvertedIndex(
+        lexicon=lexicon,
+        docmap=docs.select("doc_id", "url"),
+        doc_sizes=doc_sizes,
+        # Public contract: (term_id, doc_id, tf); doc_len is a
+        # build-internal column (see build_postings).
+        postings=postings.select("term_id", "doc_id", "tf"),
+        segments=segments,
+        term_meta=term_meta,
+        num_docs=num_docs,
+        avg_len=avg_len,
+        collection_len=collection_len,
+        config=config,
+        segments_file_backed=store.file_backed,
+        num_terms=int(lexicon_size) if lexicon_size is not None else None,
+    )
+
+
 class BuildPipeline:
-    """Drives the build DAG with per-stage checkpoints.
+    """The checkpoint store: runs ``build_dag`` with every stage
+    written to (or resumed from) parquet under ``out_dir``.
 
     >>> pipe = BuildPipeline(spark, out_dir, config)
     >>> index = pipe.run(pages)        # full build or resume
@@ -111,6 +225,8 @@ class BuildPipeline:
         self.executed: list[str] = []  # stages actually computed this run
         self.skipped: list[str] = []
 
+    file_backed = True  # segments read stored parquet (scan pruning)
+
     # ------------------------------------------------------------- stages
 
     def _manifest_path(self, stage: str) -> Path:
@@ -122,9 +238,9 @@ class BuildPipeline:
             return json.loads(p.read_text())
         return None
 
-    def _stage(self, stage: str, parents: list[str],
-               compute: Callable[[], DataFrame],
-               partition_by: list[str] | None = None) -> DataFrame:
+    def stage(self, stage: str, parents: list[str],
+              compute: Callable[[], DataFrame],
+              partition_by: list[str] | None = None) -> DataFrame:
         """Run-or-resume one stage; returns the checkpointed DataFrame."""
         parent_fps = {
             p: (self._load_manifest(p) or {}).get("fingerprint", "?")
@@ -139,6 +255,13 @@ class BuildPipeline:
 
         t0 = time.perf_counter()
         df = compute()
+        if stage == "segments":
+            # Cluster the stored table by term_id so parquet row-group
+            # min/max + dictionary stats are tight: the executor's
+            # workload IN(term_id) pushdown (_pruned_segments) then
+            # skips whole row groups instead of reading the corpus per
+            # query batch. Per-partition sort only — no extra shuffle.
+            df = df.sortWithinPartitions("term_id", "block_id")
         writer = df.write.mode("overwrite").option(
             "compression", CHECKPOINT_CODEC
         )
@@ -163,175 +286,27 @@ class BuildPipeline:
         self.executed.append(stage)
         return self.spark.read.parquet(str(stage_dir))
 
+    def n_rows(self, stage: str, counted: dict) -> int | None:
+        """Row count off the stage manifest (also on resume, when the
+        compute that would have filled ``counted`` never ran)."""
+        return (self._load_manifest(stage) or {}).get("n_rows")
+
+    def discard(self) -> None:
+        """Failed build: delete every checkpoint this run wrote, so a
+        rerun recomputes them (and re-raises) instead of resuming a
+        corrupt docs stage with the guard's id count missing."""
+        import shutil
+
+        for stage in self.executed:
+            shutil.rmtree(self.out / stage, ignore_errors=True)
+
     # ---------------------------------------------------------------- run
 
-    def run(self, pages: DataFrame):
+    def run(self, pages: DataFrame) -> InvertedIndex:
         """Build (or resume) the full index; returns InvertedIndex
         backed by the checkpoint parquet (every artifact re-readable
         without recompute)."""
-        from pisa_spark.build import (
-            build_doc_sizes, build_postings, build_term_ids,
-            lexicon_with_df,
-            build_segments, build_term_meta, collection_stats, tokenize_pages,
-        )
-        from pisa_spark.build.segments import scored_postings
-        from pisa_spark.index import InvertedIndex
-
-        # ONE corpus-sized checkpoint: docIDs are a function of url
-        # alone, so they are assigned over the column-pruned url
-        # projection of the INPUT (tiny: one row per doc, no terms
-        # arrays) and joined back into the tokenize scan — the join is
-        # broadcast when the counted doc count is known small, else a
-        # plain join for AQE. The previous shape (tokenize checkpoint,
-        # then range-shuffle + localCheckpoint + window over the full
-        # terms arrays just to number rows) wrote the corpus to disk
-        # twice and moved it through a shuffle once more; at 100 TB
-        # that is corpus-scale I/O spent on an id column.
-        from pisa_spark.build.forward import ID_BROADCAST_ROWS
-
-        cnt: dict = {}
-        docs = self._stage(
-            "docs", [],
-            lambda: tokenize_pages(
-                pages, self.config.analyzer, stats_out=cnt,
-                id_broadcast_rows=min(
-                    self.config.index.lexicon_broadcast_threshold,
-                    ID_BROADCAST_ROWS,
-                ),
-            ),
-        )
-        # Duplicate-url guard (free: the docs manifest already counts
-        # rows): the id join fans out on duplicate urls — a corrupted
-        # index (doubled tf, inflated stats) must fail the build, not
-        # ship. The corrupt checkpoint is DELETED before raising:
-        # otherwise a rerun would resume it with ``cnt`` empty and the
-        # guard skipped, shipping exactly the corruption this blocks.
-        # (NULL urls are caught earlier, inside the id assignment's
-        # offset collect — forward._with_assigned_ids forbid_null.)
-        if cnt:
-            docs_rows = (self._load_manifest("docs") or {}).get("n_rows")
-            if docs_rows is not None and docs_rows != cnt["n_rows"]:
-                import shutil
-
-                shutil.rmtree(self.out / "docs", ignore_errors=True)
-                raise ValueError(
-                    f"duplicate urls in input: {cnt['n_rows']} distinct-"
-                    f"numbered urls joined into {docs_rows} doc rows "
-                    "(url is the corpus key and must be unique); the "
-                    "docs checkpoint was removed"
-                )
-        # Ids-first invert (invert.build_lexicon docstring): the
-        # term_ids stage shuffles only distinct terms (map-side partial
-        # dedup -> per-task local vocabularies), build_postings is the
-        # single corpus-pair shuffle, and the lexicon's df is a
-        # vocabulary-sized aggregate off the postings checkpoint — the
-        # old lexicon stage's second corpus-wide distinct(term, doc)
-        # pass is gone, and the extra checkpoint (term_ids) is
-        # vocabulary-sized, not corpus-sized.
-        term_ids = self._stage(
-            "term_ids", ["docs"], lambda: build_term_ids(docs)
-        )
-        # doc_sizes / docmap are pure projections of the docs
-        # checkpoint: parquet column pruning makes reading them off
-        # docs exactly as cheap as a dedicated copy, without the extra
-        # stage write (two fewer corpus-keyed write jobs per build).
-        doc_sizes = build_doc_sizes(docs)
-        stats_df = self._stage(
-            "stats", ["docs"], lambda: collection_stats(doc_sizes)
-        )
-        stats = stats_df.collect()[0]
-        num_docs = int(stats["num_docs"])
-        avg_len = float(stats["avg_len"] or 0.0)
-        collection_len = int(stats["collection_len"] or 0)
-
-        # Vocabulary size comes free from the term_ids stage manifest;
-        # it gates the broadcast hints (invert.maybe_broadcast).
-        lexicon_size = (self._load_manifest("term_ids") or {}).get("n_rows")
-        bcast = self.config.index.lexicon_broadcast_threshold
-        # carry_doc_len: the postings checkpoint stores doc_len too
-        # (~1 varint-packed column), so the segment encode never
-        # re-shuffles the pairs on doc_id for the doc_sizes join.
-        postings = self._stage(
-            "postings", ["docs", "term_ids"],
-            lambda: build_postings(
-                docs, term_ids,
-                lexicon_size=lexicon_size, broadcast_threshold=bcast,
-                carry_doc_len=True,
-            ),
-        )
-        lexicon = self._stage(
-            "lexicon", ["term_ids", "postings"],
-            lambda: lexicon_with_df(term_ids, postings),
-        )
-        scored = scored_postings(
-            postings, doc_sizes, lexicon, num_docs, avg_len,
-            lexicon_size=lexicon_size, broadcast_threshold=bcast,
-        )
-        # Quantized configs need the index-wide max term weight BEFORE
-        # segment encoding, and the final term_meta carries quantized
-        # bounds — same routing as build_index (via quantized_rescale),
-        # with the raw metadata checkpointed so resume works.
-        index_max_score = None
-        seg_parents = ["postings", "lexicon", "stats"]
-        if self.config.index.quantize_bits:
-            from pisa_spark.index import quantized_rescale
-
-            term_meta_raw = self._stage(
-                "term_meta_raw", ["postings", "lexicon", "stats"],
-                lambda: build_term_meta(
-                    scored, num_docs, avg_len, self.config.bm25
-                ),
-            )
-            index_max_score, rescaled = quantized_rescale(
-                term_meta_raw, self.config.index.quantize_bits
-            )
-            term_meta = self._stage(
-                "term_meta", ["term_meta_raw"], lambda: rescaled
-            )
-            seg_parents = seg_parents + ["term_meta_raw"]
-        else:
-            term_meta = self._stage(
-                "term_meta", ["postings", "lexicon", "stats"],
-                lambda: build_term_meta(
-                    scored, num_docs, avg_len, self.config.bm25
-                ),
-            )
-        def _compute_segments():
-            seg = build_segments(
-                scored, num_docs, avg_len, self.config.index, self.config.bm25,
-                index_max_score=index_max_score,
-            )
-            if self.config.index.compress_blockmax:
-                from pisa_spark.build.segments import compress_block_maxes
-
-                seg = compress_block_maxes(seg, term_meta)
-            # Cluster the stored table by term_id so parquet row-group
-            # min/max + dictionary stats are tight: the executor's
-            # workload IN(term_id) pushdown (_pruned_segments) then
-            # skips whole row groups instead of reading the corpus per
-            # query batch. Per-partition sort only — no extra shuffle.
-            return seg.sortWithinPartitions("term_id", "block_id")
-
-        if self.config.index.compress_blockmax:
-            seg_parents = seg_parents + ["term_meta"]
-        segments = self._stage("segments", seg_parents, _compute_segments)
-        docmap = docs.select("doc_id", "url")
-        return InvertedIndex(
-            lexicon=lexicon,
-            docmap=docmap,
-            doc_sizes=doc_sizes,
-            # Public contract: (term_id, doc_id, tf); doc_len in the
-            # checkpoint is a build-internal column (see build_postings).
-            postings=postings.select("term_id", "doc_id", "tf"),
-            segments=segments,
-            term_meta=term_meta,
-            num_docs=num_docs,
-            avg_len=avg_len,
-            collection_len=collection_len,
-            config=self.config,
-            segments_file_backed=True,
-            num_terms=int(lexicon_size) if lexicon_size is not None else None,
-        )
+        return build_dag(pages, self.config, self)
 
     # ------------------------------------------------------------- report
 

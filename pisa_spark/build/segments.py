@@ -238,6 +238,7 @@ def build_segments(
     index_cfg: IndexConfig | None = None,
     bm25: BM25Params | None = None,
     index_max_score: float | None = None,
+    term_meta: DataFrame | None = None,
 ) -> DataFrame:
     """scored postings -> segments (see module docstring for layout).
 
@@ -247,11 +248,17 @@ def build_segments(
     quantized build src/compress.cpp:72-91); ``index_max_score`` (the
     index-wide max term weight, wand_data ``index_max_term_weight``)
     is then required. Query-side the ``quantized`` scorer returns the
-    stored impact as-is (scorer/quantized.hpp)."""
+    stored impact as-is (scorer/quantized.hpp).
+
+    With ``index_cfg.compress_blockmax`` set, block maxes are stored
+    as u8 ``max_score_q`` relative to each term's max in
+    ``term_meta`` (``compress_block_maxes``), which is then required."""
     cfg = index_cfg or IndexConfig()
     params = bm25 or BM25Params()
     if cfg.quantize_bits and not index_max_score:
         raise ValueError("quantized build requires index_max_score")
+    if cfg.compress_blockmax and term_meta is None:
+        raise ValueError("compressed block maxes require term_meta")
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for groups in complete_groups(batches):
@@ -264,7 +271,10 @@ def build_segments(
     parted = salted.repartition("term_id", "bucket").sortWithinPartitions(
         "term_id", "bucket", "doc_id"
     )
-    return parted.mapInArrow(kernel, from_arrow_schema(_SEGMENT_SCHEMA))
+    segments = parted.mapInArrow(kernel, from_arrow_schema(_SEGMENT_SCHEMA))
+    if cfg.compress_blockmax:
+        segments = compress_block_maxes(segments, term_meta)
+    return segments
 
 
 def compress_block_maxes(segments: DataFrame, term_meta: DataFrame) -> DataFrame:

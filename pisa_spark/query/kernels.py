@@ -353,8 +353,8 @@ class _Cursor:
             if nbi >= self._n_blocks:
                 self.done = True
                 self.docid = self.SENTINEL
-                self.bms = 0.0  # match _load's done branch so external
-                self.bld = self.SENTINEL  # block_* reads are never stale
+                self.bms = 0.0  # match _load's done branch so
+                self.bld = self.SENTINEL  # bms/bld reads are never stale
                 return
             self._load(nbi)
         pos = bisect_left(self.docs, target, self.pos)
@@ -363,15 +363,6 @@ class _Cursor:
         else:
             self.pos = pos
             self.docid = self.docs[pos]
-
-    # current-block bounds live as plain attributes (self.bms /
-    # self.bld, refreshed by _load) — kept as methods too for any
-    # external callers
-    def block_max_score(self) -> float:
-        return self.bms if not self.done else 0.0
-
-    def block_last_doc(self) -> int:
-        return self.bld
 
 
 # Pruning margin in MICRO units: per-posting quantization moves a

@@ -655,17 +655,15 @@ class IncrementalIndexer:
             scored, n_new, avg_new, self.config.bm25
         ).withColumn("bound_factor", F.lit(1.0))
 
+        # Compressed block maxes are u8 relative to the FRESH
+        # affected-term max — the same max affected_meta stores, so
+        # query-side recovery (q/255 * term_max * bound_factor) is
+        # exact-generation sound; factor starts at 1 and inflates both
+        # together.
         gen_segments = build_segments(
-            scored, n_new, avg_new, self.config.index, self.config.bm25
+            scored, n_new, avg_new, self.config.index, self.config.bm25,
+            term_meta=affected_meta,
         )
-        if self.config.index.compress_blockmax:
-            # u8 maxima relative to the FRESH affected-term max — the
-            # same max affected_meta stores, so query-side recovery
-            # (q/255 * term_max * bound_factor) is exact-generation
-            # sound; factor starts at 1 and inflates both together.
-            from pisa_spark.build.segments import compress_block_maxes
-
-            gen_segments = compress_block_maxes(gen_segments, affected_meta)
         # term_id-clustered files -> tight row-group stats for the
         # executor's workload IN(term_id) scan pruning (_pruned_segments)
         gen_segments.withColumn("segment_gen", F.lit(gen)).sortWithinPartitions(
@@ -738,12 +736,9 @@ class IncrementalIndexer:
         ).localCheckpoint(eager=True)
         term_meta = build_term_meta(scored, n, avg, self.config.bm25)
         fresh = build_segments(
-            scored, n, avg, self.config.index, self.config.bm25
+            scored, n, avg, self.config.index, self.config.bm25,
+            term_meta=term_meta,
         )
-        if self.config.index.compress_blockmax:
-            from pisa_spark.build.segments import compress_block_maxes
-
-            fresh = compress_block_maxes(fresh, term_meta)
         fresh.withColumn("segment_gen", F.lit(gen)).sortWithinPartitions(
             "term_id", "block_id"
         ).write.mode("append").partitionBy("segment_gen").parquet(

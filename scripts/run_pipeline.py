@@ -149,12 +149,12 @@ def main() -> None:
     datagen_wall = time.perf_counter() - tgen0
     pages = spark.read.parquet(pages_dir)
 
+    # one input identity for the build and the phased resume, so the
+    # resume's stage fingerprints match the build's
+    input_desc = {"gen": "synth_pages", "n_docs": args.n_docs,
+                  "partitions": args.partitions}
     t0 = time.perf_counter()
-    pipe = BuildPipeline(
-        spark, args.out, EngineConfig(),
-        input_desc={"gen": "synth_pages", "n_docs": args.n_docs,
-                    "partitions": args.partitions},
-    )
+    pipe = BuildPipeline(spark, args.out, EngineConfig(), input_desc=input_desc)
     index = pipe.run(pages)
     index.segments.count()
     build_wall = time.perf_counter() - t0
@@ -172,9 +172,7 @@ def main() -> None:
         spark = make_session({"spark.io.compression.codec": "lz4"})
         pages = spark.read.parquet(pages_dir)
         index = BuildPipeline(
-            spark, args.out, EngineConfig(),
-            input_desc={"gen": "synth_pages", "n_docs": args.n_docs,
-                        "partitions": args.partitions},
+            spark, args.out, EngineConfig(), input_desc=input_desc
         ).run(pages)
 
     qpdf = synth_queries(args.n_queries)

@@ -36,9 +36,9 @@ def test_build_checkpoint_resume_and_metrics(spark, pages, tmp_path):
     idx1 = pipe1.run(pages)
     n_seg = idx1.segments.count()
     assert n_seg > 0
-    all_stages = {"docs", "term_ids", "lexicon", "stats",
-                  "postings", "segments", "term_meta"}
-    assert set(pipe1.executed) == all_stages
+    all_stages = ["docs", "term_ids", "stats", "postings", "lexicon",
+                  "term_meta", "segments"]
+    assert pipe1.executed == all_stages
 
     # Manifests carry lineage + per-partition rows/bytes.
     man = json.loads((tmp_path / "index" / "segments" / MANIFEST).read_text())
@@ -52,11 +52,11 @@ def test_build_checkpoint_resume_and_metrics(spark, pages, tmp_path):
     pipe2 = BuildPipeline(spark, out, CFG)
     idx2 = pipe2.run(pages)
     assert pipe2.executed == []
-    assert set(pipe2.skipped) == all_stages
+    assert pipe2.skipped == all_stages
     assert idx2.segments.count() == n_seg
 
     report = pipe2.report()
-    assert set(report["stages"]) == all_stages
+    assert set(report["stages"]) == set(all_stages)
     assert report["stages"]["postings"]["n_rows"] == idx2.postings.count()
 
 
@@ -133,6 +133,38 @@ def test_quantized_pipeline_builds_and_queries(spark, pages, tmp_path):
     pipe2 = BuildPipeline(spark, out, cfg_q)
     pipe2.run(pages)
     assert pipe2.executed == []
+
+
+@pytest.mark.parametrize("index_cfg", [
+    {}, {"quantize_bits": 8}, {"compress_blockmax": True},
+], ids=["default", "q8", "compress_blockmax"])
+def test_build_index_and_pipeline_build_the_same_index(
+        spark, pages, tmp_path, index_cfg):
+    """The in-memory store (build_index) and the checkpoint store
+    (BuildPipeline) run one build DAG: same lexicon, term_meta,
+    collection stats and segment bytes."""
+    from dataclasses import replace
+
+    import pandas as pd
+
+    from pisa_spark.index import build_index
+    from test_segments import segments_digest
+
+    cfg = replace(CFG, index=replace(CFG.index, **index_cfg))
+    mem = build_index(spark, pages, cfg)
+    ckpt = BuildPipeline(spark, str(tmp_path / "index"), cfg).run(pages)
+
+    for name in ("lexicon", "term_meta"):
+        a, b = (
+            getattr(idx, name).toPandas().sort_values("term_id")
+            .reset_index(drop=True)
+            for idx in (mem, ckpt)
+        )
+        pd.testing.assert_frame_equal(a, b[a.columns], check_exact=True)
+    assert (mem.num_docs, mem.avg_len, mem.collection_len) == (
+        ckpt.num_docs, ckpt.avg_len, ckpt.collection_len)
+    assert segments_digest(mem.segments.toPandas()) == segments_digest(
+        ckpt.segments.toPandas())
 
 
 def test_resumed_index_answers_queries(spark, pages, tmp_path):
@@ -479,8 +511,8 @@ def test_ciff_sharded_import_zero_posting_lists(spark, tmp_path):
 def test_duplicate_urls_fail_loudly(spark, tmp_path):
     """url is the corpus key: a duplicated url must fail the build
     (the id join would otherwise fan out into a silently doubled
-    index — doubled tf, inflated stats). Both build paths guard it
-    with the free row-count comparison."""
+    index — doubled tf, inflated stats). The build DAG guards it with
+    the free row-count comparison, under both stage stores."""
     from pisa_spark.corpus import synth_pages
     from pisa_spark.index import build_index
 

@@ -48,13 +48,17 @@ PINNED = {
 
 def segments_digest(pdf) -> str:
     """sha256 over every column of the (term_id, block_id)-sorted rows,
-    max_score by its float32 bits."""
+    max_score by its float32 bits (``max_score_q`` as int32 when the
+    block maxes are compressed)."""
     pdf = pdf.sort_values(["term_id", "block_id"]).reset_index(drop=True)
     h = hashlib.sha256()
     for c in ("term_id", "block_id", "max_doc_id"):
         h.update(pdf[c].to_numpy(np.int64).tobytes())
     h.update(pdf["count"].to_numpy(np.int32).tobytes())
-    h.update(pdf["max_score"].to_numpy(np.float32).tobytes())
+    if "max_score_q" in pdf:
+        h.update(pdf["max_score_q"].to_numpy(np.int32).tobytes())
+    else:
+        h.update(pdf["max_score"].to_numpy(np.float32).tobytes())
     for c in ("doc_bytes", "tf_bytes", "len_bytes"):
         for v in pdf[c]:
             b = bytes(v)
