@@ -9,17 +9,69 @@ Both are "row_number over a global sort" — which in naive Spark
 dies at scale.
 
 ``assign_global_ids`` is the scalable idiom, all JVM-native:
-range-repartition (distributed sort), count rows per partition
-(cheap agg), broadcast the per-partition offsets back, and number
-with ``offset[pid] + row_number() over (partition by pid order by
-col)`` — a PARTITIONED window, so no single-reducer stage and no
-Python anywhere. Deterministic because range boundaries only affect
-WHERE a row is numbered, not its global rank.
+range-repartition and sort within each range (a distributed sort),
+pin that layout with an eager localCheckpoint, count rows per
+partition (a partition-count-sized collect), then number every row IN
+PLACE as ``offset[pid] + its position inside the partition``. The
+offsets are a literal array indexed by partition id
+(``partition_offsets``) and the position is the partition-local row
+counter of ``monotonically_increasing_id()`` — no window, no second
+exchange, no offsets table and no Python anywhere. Deterministic
+because range boundaries only affect WHERE a row is numbered, not its
+global rank.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+# monotonically_increasing_id() = (partition index << 33) + row
+# position inside the partition; the low 33 bits are the position.
+_ROW_IN_PARTITION = (1 << 33) - 1
+
+
+def pinned_ranges(df: DataFrame, order_col: str,
+                  num_partitions: int | None = None) -> DataFrame:
+    """``df`` range-partitioned and sorted on ``order_col``, tagged with
+    its partition id ``__pid``, and materialized NOW.
+
+    Pinning the physical partitioning is load-bearing: offsets
+    collected from this frame must describe the SAME partitioning the
+    numbering reads — otherwise the range partitioner re-samples on
+    the second job and boundaries can shift (observed: duplicate ids).
+    localCheckpoint(eager=True) materializes it once and, unlike
+    persist() (whose CacheManager entry survives driver GC), is
+    released by the ContextCleaner once the frame goes out of scope —
+    so per-micro-batch callers (IncrementalIndexer) don't accumulate
+    cached partitions forever."""
+    # Default to the input's partition count (parallelism-independent:
+    # the same input produces the same layout at any core count);
+    # defaultParallelism only as a floor for degenerate 1-part inputs.
+    spark = df.sparkSession
+    parts = num_partitions or max(
+        df.rdd.getNumPartitions(),
+        spark.sparkContext.defaultParallelism,
+    )
+    return (
+        df.repartitionByRange(parts, F.col(order_col))
+        .sortWithinPartitions(order_col)
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
+
+
+def partition_offsets(totals: dict[int, int]) -> Column:
+    """Per row: the sum of ``totals`` over every partition id below the
+    row's ``__pid`` (an exclusive prefix sum over partitions; ids
+    missing from ``totals`` are empty partitions). A literal array, so
+    the offsets need no table, no job and no broadcast join."""
+    offsets, acc = [], 0
+    for pid in range(max(totals, default=0) + 1):
+        offsets.append(F.lit(acc))
+        acc += totals.get(pid, 0)
+    return F.element_at(
+        F.array(*offsets).cast("array<bigint>"), F.col("__pid") + 1
+    )
 
 
 def assign_global_ids(
@@ -50,26 +102,7 @@ def assign_global_ids(
     violates the uniqueness contract and — for callers that JOIN the
     ids back on the key (forward._with_assigned_ids) — would silently
     drop the row in the inner join instead of failing."""
-    # Default to the input's partition count (parallelism-independent:
-    # the same input produces the same layout at any core count);
-    # defaultParallelism only as a floor for degenerate 1-part inputs.
-    spark = df.sparkSession
-    parts = num_partitions or max(
-        df.rdd.getNumPartitions(),
-        spark.sparkContext.defaultParallelism,
-    )
-    # Pinning the physical partitioning is load-bearing: the offsets
-    # collected below must describe the SAME partitioning the numbering
-    # job reads — otherwise the range partitioner re-samples on the
-    # second job and boundaries can shift (observed: duplicate ids).
-    # localCheckpoint(eager=True) materializes it NOW and, unlike
-    # persist() (whose CacheManager entry survives driver GC), is
-    # released by the ContextCleaner once this DataFrame goes out of
-    # scope — so per-micro-batch callers (IncrementalIndexer) don't
-    # accumulate cached partitions forever.
-    ranged = df.repartitionByRange(parts, F.col(order_col)).withColumn(
-        "__pid", F.spark_partition_id()
-    ).localCheckpoint(eager=True)
+    ranged = pinned_ranges(df, order_col, num_partitions)
     aggs = [F.count("*").alias("__n")]
     if sum_col is not None:
         aggs.append(F.sum(sum_col).alias("__s"))
@@ -86,20 +119,26 @@ def assign_global_ids(
                 f"input: {order_col} is the unique key and must be "
                 "non-null"
             )
-    counts = {r["__pid"]: r["__n"] for r in rows}
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
+    counts = {r["__pid"]: int(r["__n"]) for r in rows}
     if count_out is not None:
-        count_out["n_rows"] = acc
+        count_out["n_rows"] = sum(counts.values())
         if sum_col is not None:
             count_out["sum"] = sum(int(r["__s"] or 0) for r in rows)
-    off_df = spark.createDataFrame(offsets, schema="__pid int, __off long")
 
-    w = Window.partitionBy("__pid").orderBy(order_col)
-    return (
-        ranged.join(F.broadcast(off_df), "__pid")
-        .withColumn(id_col, F.col("__off") + F.row_number().over(w) - 1)
-        .drop("__pid", "__off")
+    # The position counter restarts in every task, so it is a row's
+    # rank inside its range only while each task reads exactly the
+    # checkpoint partition the offsets were counted from, in its
+    # stored (sorted) order. A plan that re-partitions the checkpoint
+    # before this projection would silently number rows twice — fail
+    # the task instead.
+    position = F.monotonically_increasing_id().bitwiseAND(
+        F.lit(_ROW_IN_PARTITION)
     )
+    rid = F.when(
+        F.spark_partition_id() == F.col("__pid"),
+        partition_offsets(counts) + position,
+    ).otherwise(F.raise_error(F.lit(
+        "assign_global_ids: checkpoint partitioning changed before "
+        "numbering (dense ids would repeat)"
+    )))
+    return ranged.withColumn(id_col, rid).drop("__pid")

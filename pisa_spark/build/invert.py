@@ -65,7 +65,13 @@ def build_term_ids(
     ``count_out`` receives ``{"n_rows": vocabulary size}`` for free
     (assign_global_ids' offset collect)."""
     terms = docs.select(F.explode("terms").alias("term")).distinct()
-    return assign_global_ids(terms, "term", "term_id", count_out=count_out)
+    # Range over the distinct's planned partition count: left to
+    # default, assign_global_ids would read it off ``terms.rdd``, and
+    # AQE answers that by RUNNING the explode->distinct map stage
+    # outside the query, which then runs it again.
+    parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return assign_global_ids(terms, "term", "term_id", num_partitions=parts,
+                             count_out=count_out)
 
 
 def lexicon_with_df(term_ids: DataFrame, postings: DataFrame) -> DataFrame:

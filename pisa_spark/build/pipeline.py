@@ -73,15 +73,11 @@ def _fingerprint(payload: dict) -> str:
 
 
 def _partition_metrics(stage_dir: Path) -> list[dict]:
-    """Per part-file (rows, bytes) from parquet footers only.
-
-    Recursive: a stage written with partition_by nests its part-files
-    under key=value directories, so a top-level glob would record 0
-    rows/bytes for it."""
+    """Per part-file (rows, bytes) from parquet footers only."""
     import pyarrow.parquet as pq
 
     out = []
-    for f in sorted(stage_dir.rglob("*.parquet")):
+    for f in sorted(stage_dir.glob("*.parquet")):
         out.append(
             {
                 "file": str(f.relative_to(stage_dir)),
@@ -238,10 +234,23 @@ class BuildPipeline:
             return json.loads(p.read_text())
         return None
 
+    def _job_ids(self) -> list[int]:
+        """Spark job ids the status tracker holds for the calling
+        thread's job group (None when unset). The pipeline never sets
+        a group itself, so a caller's own groups keep attributing its
+        jobs."""
+        sc = self.spark.sparkContext
+        return sc.statusTracker().getJobIdsForGroup(
+            sc.getLocalProperty("spark.jobGroup.id")
+        )
+
     def stage(self, stage: str, parents: list[str],
-              compute: Callable[[], DataFrame],
-              partition_by: list[str] | None = None) -> DataFrame:
-        """Run-or-resume one stage; returns the checkpointed DataFrame."""
+              compute: Callable[[], DataFrame]) -> DataFrame:
+        """Run-or-resume one stage; returns the checkpointed DataFrame.
+
+        A resumed stage is read back with parquet schema inference
+        (itself a Spark job); a fresh one with the schema of the frame
+        it just wrote, so reading it back submits no job."""
         parent_fps = {
             p: (self._load_manifest(p) or {}).get("fingerprint", "?")
             for p in parents
@@ -254,6 +263,7 @@ class BuildPipeline:
             return self.spark.read.parquet(str(stage_dir))
 
         t0 = time.perf_counter()
+        last_job = max(self._job_ids(), default=-1)
         df = compute()
         if stage == "segments":
             # Cluster the stored table by term_id so parquet row-group
@@ -262,13 +272,11 @@ class BuildPipeline:
             # skips whole row groups instead of reading the corpus per
             # query batch. Per-partition sort only — no extra shuffle.
             df = df.sortWithinPartitions("term_id", "block_id")
-        writer = df.write.mode("overwrite").option(
+        df.write.mode("overwrite").option(
             "compression", CHECKPOINT_CODEC
-        )
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(stage_dir))
+        ).parquet(str(stage_dir))
         wall = time.perf_counter() - t0
+        n_jobs = sum(1 for j in self._job_ids() if j > last_job)
         parts = _partition_metrics(stage_dir)
         manifest = {
             "stage": stage,
@@ -276,6 +284,7 @@ class BuildPipeline:
             "config": self.cfg_fp,
             "parents": parent_fps,
             "wall_s": round(wall, 3),
+            "n_jobs": n_jobs,
             "n_rows": sum(p["rows"] for p in parts),
             "n_bytes": sum(p["bytes"] for p in parts),
             "n_partitions": len(parts),
@@ -284,7 +293,7 @@ class BuildPipeline:
         }
         self._manifest_path(stage).write_text(json.dumps(manifest, indent=1))
         self.executed.append(stage)
-        return self.spark.read.parquet(str(stage_dir))
+        return self.spark.read.schema(df.schema).parquet(str(stage_dir))
 
     def n_rows(self, stage: str, counted: dict) -> int | None:
         """Row count off the stage manifest (also on resume, when the
@@ -319,6 +328,8 @@ class BuildPipeline:
                 "fingerprint": m["fingerprint"],
                 "parents": m["parents"],
                 "wall_s": m["wall_s"],
+                # absent from manifests written before it was recorded
+                "n_jobs": m.get("n_jobs"),
                 "n_rows": m["n_rows"],
                 "n_bytes": m["n_bytes"],
                 "n_partitions": m["n_partitions"],

@@ -15,7 +15,8 @@ the plan is what must be exact, distributed, and reproducible.
 Scale shape (100 TB): the only global coordination is the exclusive
 prefix sum of per-doc token counts, computed the assign_global_ids
 way — range-shuffle ONE small (doc_id, n_tokens) projection, collect
-a partition-count-sized offset table, then a per-partition window —
+per-partition sums (read back as literal offsets), then a
+per-partition window —
 never a single-partition global window (a naive
 ``SUM() OVER (ORDER BY doc_id)`` puts the whole corpus in one task).
 Everything downstream is per-row ``sequence`` + ``explode`` Catalyst
@@ -30,6 +31,8 @@ exactness against the distributed form is the gate contract.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from pisa_spark.build.ids import partition_offsets, pinned_ranges
 
 SEQ_LEN = 2048  # default training sequence length (tokens)
 
@@ -50,35 +53,21 @@ def exclusive_prefix_sum(
     localCheckpoint so the offsets describe the partitioning the
     second job reads — see ids.py for the duplicate-id race this
     prevents), collect per-partition weight sums (partition-count
-    rows), cumulate offsets on the driver, then a per-partition
-    window adds local prefix sums. ``order_col`` must be unique."""
-    spark = df.sparkSession
-    parts = num_partitions or max(
-        df.rdd.getNumPartitions(),
-        spark.sparkContext.defaultParallelism,
-    )
-    ranged = df.repartitionByRange(parts, F.col(order_col)).withColumn(
-        "__pid", F.spark_partition_id()
-    ).localCheckpoint(eager=True)
+    rows) into literal offsets (``ids.partition_offsets``), then a
+    per-partition window adds local prefix sums. ``order_col`` must be
+    unique."""
+    ranged = pinned_ranges(df, order_col, num_partitions)
     rows = ranged.groupBy("__pid").agg(
         F.sum(weight_col).alias("__w")
     ).collect()  # tiny: one row per partition
-    sums = {r["__pid"]: int(r["__w"] or 0) for r in rows}
-    offsets, acc = [], 0
-    for pid in sorted(sums):
-        offsets.append((pid, acc))
-        acc += sums[pid]
-    off_df = spark.createDataFrame(offsets or [(0, 0)],
-                                   schema="__pid int, __off long")
+    off = partition_offsets({r["__pid"]: int(r["__w"] or 0) for r in rows})
     w = Window.partitionBy("__pid").orderBy(order_col)
     return (
-        ranged.join(F.broadcast(off_df), "__pid")
-        .withColumn(
+        ranged.withColumn(
             out_col,
-            (F.col("__off") + F.sum(weight_col).over(w)
-             - F.col(weight_col)).cast("long"),
+            (off + F.sum(weight_col).over(w) - F.col(weight_col)).cast("long"),
         )
-        .drop("__pid", "__off")
+        .drop("__pid")
     )
 
 

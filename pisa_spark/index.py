@@ -70,8 +70,8 @@ def quantized_rescale(term_meta: DataFrame, quantize_bits: int):
 class _MemoryStore:
     """build_index's stage store: nothing is written, and a stage is
     materialized only where reuse pays for it. term_ids needs no cut
-    of its own: assign_global_ids already pins it with an eager
-    localCheckpoint."""
+    of its own: assign_global_ids numbers it in place over its eager
+    localCheckpoint, so every reuse is a projection of pinned rows."""
 
     file_backed = False
 

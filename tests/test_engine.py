@@ -1621,6 +1621,80 @@ def test_assign_global_ids_count_and_sum_out(spark):
     assert sorted(r["rid"] for r in res.select("rid").collect()) == list(range(777))
 
 
+def _row_number_ids(df, key="key"):
+    """The single-partition reference: row_number() over the key - 1."""
+    from pyspark.sql import Window
+
+    rid = F.row_number().over(Window.orderBy(key)) - 1
+    return {r[key]: r["rid"] for r in df.select(key, rid.alias("rid")).collect()}
+
+
+@pytest.mark.parametrize("n_keys,parts", [(3, 12), (500, 1)])
+def test_assign_global_ids_matches_row_number(spark, n_keys, parts):
+    """In-place numbering equals the row_number reference when most
+    range partitions are empty (3 keys over 12) and when everything
+    is one partition; count_out/sum_col ride the same collect."""
+    from pisa_spark.build.ids import assign_global_ids
+
+    keys = [f"k{(i * 7919) % n_keys:04d}" for i in range(n_keys)]
+    df = spark.createDataFrame(
+        [(k, i + 1) for i, k in enumerate(keys)], "key string, w int"
+    ).repartition(4)
+    out: dict = {}
+    got = assign_global_ids(df, "key", "rid", num_partitions=parts,
+                            count_out=out, sum_col="w")
+    assert {r["key"]: r["rid"] for r in got.collect()} == _row_number_ids(df)
+    assert out == {"n_rows": n_keys, "sum": n_keys * (n_keys + 1) // 2}
+
+
+def test_assign_global_ids_forbid_null_raises(spark):
+    from pisa_spark.build.ids import assign_global_ids
+
+    df = spark.createDataFrame([("a",), (None,), ("b",)], "key string")
+    with pytest.raises(ValueError, match="1 NULL 'key'"):
+        assign_global_ids(df, "key", "rid", forbid_null=True)
+
+
+def test_assign_global_ids_rejects_repartitioned_checkpoint(spark, monkeypatch):
+    """The in-place numbering reads each row's position from the task
+    it runs in: if anything re-partitions the pinned checkpoint before
+    the numbering projection, the partition-id guard must fail the job
+    instead of handing out repeated ids."""
+    import pisa_spark.build.ids as ids
+
+    pinned = ids.pinned_ranges
+    monkeypatch.setattr(
+        ids, "pinned_ranges", lambda *a, **k: pinned(*a, **k).repartition(3)
+    )
+    df = spark.createDataFrame([(f"k{i:02d}",) for i in range(50)], "key string")
+    with pytest.raises(Exception, match="checkpoint partitioning changed"):
+        ids.assign_global_ids(df, "key", "rid", num_partitions=4).collect()
+
+
+def test_shuffled_id_join_matches_broadcast(spark):
+    """Above the id broadcast gate (id_broadcast_rows=0 here, and no
+    runtime broadcast either) the (url, doc_id) side joins through a
+    shuffle; the doc ids must equal the broadcast regime's."""
+    from pisa_spark.build.forward import tokenize_pages
+    from pisa_spark.config import AnalyzerConfig
+
+    pages = synth_pages(spark, 300)
+    analyzer = AnalyzerConfig(tokenizer="whitespace")
+    want = tokenize_pages(pages, analyzer).select("url", "doc_id")
+    want = {r["url"]: r["doc_id"] for r in want.collect()}
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        docs = tokenize_pages(pages, analyzer, id_broadcast_rows=0)
+        got = {r["url"]: r["doc_id"] for r in docs.select("url", "doc_id").collect()}
+        plan = docs._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
+    assert "Broadcast" not in plan, plan
+    assert got == want and sorted(got.values()) == list(range(300))
+
+
 def test_capped_block_cache_budget():
     """CappedBlockCache: first-come blocks cache until the posting
     budget is spent; later inserts are no-ops (over-cap terms keep

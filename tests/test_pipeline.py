@@ -22,6 +22,12 @@ CFG = EngineConfig(
 )
 
 
+# Spark jobs a fresh BuildPipeline build of the 100-page fixture
+# submits, summed over its stage manifests (measured: term_ids 7,
+# every other stage 2-3).
+N_JOBS_100_PAGES = 23
+
+
 @pytest.fixture()
 def pages(spark):
     from pisa_spark.corpus import pages_from_documents
@@ -58,6 +64,18 @@ def test_build_checkpoint_resume_and_metrics(spark, pages, tmp_path):
     report = pipe2.report()
     assert set(report["stages"]) == set(all_stages)
     assert report["stages"]["postings"]["n_rows"] == idx2.postings.count()
+
+    # A fresh stage is read back with the schema it was written with,
+    # a resumed one with the inferred schema: the two must agree.
+    for art in ("lexicon", "docmap", "doc_sizes", "postings", "segments",
+                "term_meta"):
+        assert getattr(idx1, art).schema == getattr(idx2, art).schema, art
+
+    # Spark jobs per stage (statusTracker count, recorded by the fresh
+    # run): the build's per-job overhead, pinned at its measured total.
+    n_jobs = {s: m["n_jobs"] for s, m in report["stages"].items()}
+    assert all(n >= 1 for n in n_jobs.values()), n_jobs
+    assert sum(n_jobs.values()) <= N_JOBS_100_PAGES, n_jobs
 
 
 def test_deleted_stage_recomputes_only_downstream(spark, pages, tmp_path):
