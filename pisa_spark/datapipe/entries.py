@@ -504,12 +504,3 @@ def datapipe_oracle_sql():
         "mm_decode_bmp": multimodal.decode_bmp_oracle(),
     }
 
-
-def bench_jobs():
-    """Headline datapipe jobs timed by bench.py (count() forces)."""
-    return {
-        "dedup_minhash_lsh": lambda s, d: dedup.minhash_lsh_pairs(_docs(s, d)).count(),
-        "dedup_simhash": lambda s, d: dedup.simhash_pairs(_docs(s, d)).count(),
-        "ann_cosine_topk": lambda s, d: similarity.ann_topk(_emb(s, d)).count(),
-        "quality_score": lambda s, d: textstats.quality_score(_docs(s, d)).count(),
-    }

@@ -125,20 +125,18 @@ def _queries_df(spark: SparkSession) -> DataFrame:
     )
 
 
-def _run_kernel(algorithm: str, range_mode: bool = False, variant: str = "default"):
+def _run_kernel(algorithm: str, variant: str = "default"):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pisa_spark.query.executor import topk_range, topk_search
+        from pisa_spark.query.executor import topk_search
         from pisa_spark.query.parser import parse_queries
 
         index = _get_index(spark, sf_dir, variant)
         parsed = parse_queries(
             _queries_df(spark), index.lexicon, pre_tokenized=True
         )
-        if range_mode:
-            return topk_range(index, parsed, algorithm=algorithm, k=K)
         return topk_search(index, parsed, algorithm=algorithm, k=K)
 
-    fn.__name__ = f"gated_{'range_' if range_mode else ''}{variant}_{algorithm}"
+    fn.__name__ = f"gated_{variant}_{algorithm}"
     return fn
 
 
@@ -163,13 +161,15 @@ def _run_batched(algorithm: str, batches: int = 7):
     return fn
 
 
-def _run_bootstrapped(algorithm: str):
+def _run_bootstrapped(algorithm: str, batches: int | None = None):
     """Kernel run with kth-threshold bootstrapping (the fork's
     threshold-estimation pipeline end-to-end): single-term k-th-score
     cache + workload-pair disjunction k-th scores
     (kth_threshold.cpp pair mode), per-query lower bound = max of
-    both, heaps start there. Result must still be rank-identical to
-    ranked_or."""
+    both, heaps start there; on a multi-bucket index the same bounds
+    prune dead (query, docID-range) groups before any kernel task
+    runs (wand_data_range.hpp compute_live_blocks). Result must still
+    be rank-identical to ranked_or."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pisa_spark.query.executor import topk_search
@@ -184,7 +184,10 @@ def _run_bootstrapped(algorithm: str):
         )
         cache = kth_score_cache(index, k=K)
         est = estimate_thresholds_with_pairs(index, parsed, cache, k=K)
-        return topk_search(index, parsed, algorithm=algorithm, k=K, thresholds=est)
+        return topk_search(
+            index, parsed, algorithm=algorithm, k=K, thresholds=est,
+            batches=batches,
+        )
 
     fn.__name__ = f"gated_bootstrap_{algorithm}"
     return fn
@@ -218,31 +221,6 @@ def _run_sampling_safe(algorithm: str):
         )
 
     fn.__name__ = f"gated_sampling_safe_{algorithm}"
-    return fn
-
-
-def _run_range_live(algorithm: str):
-    """Range execution with the live-range pre-filter
-    (wand_data_range.hpp compute_live_blocks): bootstrap thresholds
-    prune dead (query, docID-range) groups in Catalyst before any
-    kernel task runs. Must stay rank-identical to ranked_or."""
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pisa_spark.query.executor import topk_range
-        from pisa_spark.query.parser import parse_queries
-        from pisa_spark.query.thresholds import (
-            estimate_thresholds_with_pairs, kth_score_cache,
-        )
-
-        index = _get_index(spark, sf_dir)
-        parsed = parse_queries(
-            _queries_df(spark), index.lexicon, pre_tokenized=True
-        )
-        cache = kth_score_cache(index, k=K)
-        est = estimate_thresholds_with_pairs(index, parsed, cache, k=K)
-        return topk_range(index, parsed, algorithm=algorithm, k=K, thresholds=est)
-
-    fn.__name__ = f"gated_range_live_{algorithm}"
     return fn
 
 
@@ -450,53 +428,22 @@ def _bmw_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _range_batch(algorithm: str, live: bool = False):
-    """executor.topk_range at a pinned batch count: term payloads
-    cross the wire once per (batch, bucket); with ``live``,
-    additionally bootstrapped by pair-estimate thresholds through the
-    Catalyst live-range pre-filter. Must stay rank-identical to
-    ranked_or."""
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pisa_spark.query.executor import topk_range
-        from pisa_spark.query.parser import parse_queries
-
-        index = _get_index(spark, sf_dir)
-        parsed = parse_queries(
-            _queries_df(spark), index.lexicon, pre_tokenized=True
-        )
-        est = None
-        if live:
-            from pisa_spark.query.thresholds import (
-                estimate_thresholds_with_pairs, kth_score_cache,
-            )
-
-            cache = kth_score_cache(index, k=K)
-            est = estimate_thresholds_with_pairs(index, parsed, cache, k=K)
-        return topk_range(
-            index, parsed, algorithm=algorithm, k=K, thresholds=est,
-            batches=5,
-        )
-
-    fn.__name__ = f"gated_range_batch{'_live' if live else ''}_{algorithm}"
-    return fn
-
-
 def _range_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Doc-range-partitioned execution (wand_data_range) under
-    maxscore, BMW, BMW + live-block pre-filter, per-range TAAT
-    (range_taat_query.hpp: the accumulator algorithm run range by
-    range — here the vectorized TAAT kernel per salt-bucket range,
-    merged by the shared partial-top-k window), and a pinned batch
-    count (with and without the live pre-filter), tagged by
+    """Doc-range-partitioned execution (wand_data_range: the gate
+    index spans several salt buckets, so executor.topk_search runs
+    per (batch, bucket) and merges partial top-k) under maxscore,
+    BMW, BMW + live-block pre-filter, per-range TAAT
+    (range_taat_query.hpp: the vectorized TAAT kernel per salt-bucket
+    range, merged by the shared partial-top-k window), and a pinned
+    batch count (with and without the live pre-filter), tagged by
     range_mode — each must stay rank-identical to ranked_or."""
     runs = {
-        "maxscore": _run_kernel("maxscore", range_mode=True),
-        "bmw": _run_kernel("block_max_wand", range_mode=True),
-        "bmw_live": _run_range_live("block_max_wand"),
-        "taat": _run_kernel("ranked_or", range_mode=True),
-        "batch": _range_batch("maxscore"),
-        "batch_live": _range_batch("block_max_wand", live=True),
+        "maxscore": _run_kernel("maxscore"),
+        "bmw": _run_kernel("block_max_wand"),
+        "bmw_live": _run_bootstrapped("block_max_wand"),
+        "taat": _run_kernel("ranked_or"),
+        "batch": _run_batched("maxscore", batches=5),
+        "batch_live": _run_bootstrapped("block_max_wand", batches=5),
     }
     return tagged_union(
         "range_mode",

@@ -1,29 +1,29 @@
-"""Distributed query execution: one Arrow boundary, two physical shapes.
+"""Distributed query execution: one Arrow boundary, one physical shape.
 
 Every executor runs its kernels inside one kind of Python group: a
-``cogroup(...).applyInArrow`` per query batch. The left side carries
-the batch's DISTINCT term segment rows, the right side the batch's
-parsed queries. Each term's payload crosses the wire once per batch
-and decodes once per batch, columnar, straight from the Arrow buffers
+``cogroup(...).applyInArrow`` per (query batch, docID bucket)
+(_cogroup). The left side carries the batch's DISTINCT term segment
+rows within the bucket, the right side the batch's parsed queries.
+Each term's payload crosses the wire once per group and decodes once
+per group, columnar, straight from the Arrow buffers
 (_build_batch_protos); the batch's queries then walk the shared
 protos (_walk_batch_queries). This is the amortized shape the
 reference gets from its resident index (tools/queries.cpp batch
-loop).
+loop), run range by range with a shared heap (range_query.hpp:8-37).
 
-Two physical shapes, mirroring the reference's two processing
-modes:
+Buckets are the segment salt buckets, ceil(num_docs /
+salt_bucket_docs) of them:
 
-- ``topk_search`` / ``boolean_query`` (mirror tools/queries.cpp:
-  175-288): one group per query batch; a task sees the whole posting
-  lists of its batch's terms. The query side broadcasts, so Catalyst
-  plans a broadcast-hash join against the big segment table —
-  segments never move.
-- ``topk_range`` (doc-range-major, mirrors range_query.hpp:8-37):
-  one group per (query batch, docID bucket) producing partial top-k,
-  then a window merges heaps. This is the 10^12-doc path: no task
-  ever sees a full head-term posting list.
+- one bucket: a group is a whole query batch (tools/queries.cpp:
+  175-288). Nothing is replicated and nothing merged; the query side
+  broadcasts, so Catalyst plans a broadcast-hash join against the big
+  segment table — segments never move.
+- several buckets: the batch's queries replicate to every (live)
+  bucket, each group returns a partial top-k, and a window merges the
+  partial heaps per query. This is the 10^12-doc shape: no task ever
+  sees a full head-term posting list.
 
-Neither shape touches any global per-document structure: doc
+No group touches any global per-document structure: doc
 lengths are encoded inside each segment block (segments.py
 ``len_bytes``), so there is no driver-side collect and no broadcast
 of anything proportional to the corpus — the reference's design of
@@ -33,6 +33,8 @@ form.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -40,6 +42,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F, Window
 from pyspark.sql.pandas.types import from_arrow_schema
 
+from pisa_spark.build.segments import blocks_per_bucket
 from pisa_spark.codecs import CODECS
 from pisa_spark.codecs.columns import binary_column, decode_column, docs_from_payload
 from pisa_spark.functions.scoring import MICRO
@@ -346,7 +349,8 @@ def boolean_query(
     scan_prune: bool | None = None,
 ) -> DataFrame:
     """(query_id, doc_id) Boolean AND/OR result sets, through the same
-    per-batch cogroup, proto build and query walk as topk_search."""
+    cogroup, proto build and query walk as topk_search. The buckets
+    are disjoint doc ranges, so their results need no merge."""
     op_kernel = BOOLEAN_KERNELS[op]
     decode = CODECS[index.config.index.codec][1]
     cap = BATCH_CACHE_MAX_POSTINGS
@@ -356,13 +360,16 @@ def boolean_query(
 
     def run(left: pa.Table, right: pa.Table) -> pa.Table:
         protos, base_bm = _build_batch_protos(left, decode, cap)
+        if op == "and":
+            right = _complete_queries(right, protos)
         return _results_table(
             _walk_batch_queries(right, protos, base_bm, kernel, None),
             _BOOLEAN_SCHEMA,
         )
 
-    return _batch_cogroup(
-        index, _with_k(parsed, 0), None, scan_prune, run, _BOOLEAN_SCHEMA
+    return _cogroup(
+        index, _with_k(parsed, 0), None, scan_prune, run, _BOOLEAN_SCHEMA,
+        _n_buckets(index),
     )
 
 
@@ -398,21 +405,21 @@ def live_ranges(rows: DataFrame) -> DataFrame:
     )
 
 
-def _merge_range_partials(
+def _merge_partials(
     partial: DataFrame, parsed: DataFrame, k: int
 ) -> DataFrame:
-    """Shared heap merge for range execution (range_query.hpp's single
-    heap across ranges, in window form): rank the per-bucket partial
-    top-k rows per query and cap at the query's k."""
+    """Shared heap merge across buckets (range_query.hpp's single heap
+    across ranges, in window form): rank the per-bucket partial top-k
+    rows per query and cap at the query's k."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
     merged = partial.withColumn("rank", F.row_number().over(w))
     if "k" in parsed.columns:
-        # Per-query k parity with topk_search: each bucket's partial
-        # already honored the query's own k, so the merge must cap at
-        # the same per-query value (the arg k is only the no-column
-        # fallback). Query-count-sized side -> broadcast.
+        # Per-query k: each bucket's partial already honored the
+        # query's own k, so the merge must cap at the same per-query
+        # value (the arg k is only the no-column fallback).
+        # Query-count-sized side -> broadcast.
         qk = parsed.select("query_id", F.col("k").alias("merge_k")).distinct()
         merged = merged.join(F.broadcast(qk), "query_id").filter(
             F.col("rank") <= F.col("merge_k")
@@ -433,13 +440,6 @@ def _merge_range_partials(
 # composition. Read on the driver when an executor is called.
 BATCH_CACHE_MAX_POSTINGS = 1 << 22
 
-# Row cap under which topk_range's (batch x bucket) query-
-# replication table keeps its broadcast hint; it grows linearly with
-# the corpus (n_buckets = docs / salt_bucket_docs), and the repo rule
-# is hints on known-small sides only — above the cap the planner
-# decides.
-RANGE_BB_BROADCAST_ROWS = 1 << 20
-
 _PAYLOADS = ("doc_bytes", "tf_bytes", "len_bytes")
 _RANKED_SCHEMA = pa.schema([
     ("query_id", pa.string()), ("rank", pa.int32()),
@@ -448,10 +448,6 @@ _RANKED_SCHEMA = pa.schema([
 _PROFILE_SCHEMA = _RANKED_SCHEMA.append(
     pa.field("blocks_decoded", pa.int64())
 ).append(pa.field("postings_decoded", pa.int64()))
-_PARTIAL_SCHEMA = pa.schema([
-    ("query_id", pa.string()), ("doc_id", pa.int64()),
-    ("score", pa.float64()),
-])
 _BOOLEAN_SCHEMA = pa.schema([("query_id", pa.string()), ("doc_id", pa.int64())])
 
 
@@ -635,49 +631,123 @@ def _results_table(walk, schema: pa.Schema) -> pa.Table:
     return pa.table(cols, schema=schema)
 
 
-def _batch_cogroup(
+def _n_buckets(index: InvertedIndex) -> int:
+    """The index's docID buckets: its segment salt buckets, which the
+    dense doc ids (build/ids.assign_global_ids; incremental
+    generations stack contiguous offsets) fill in order."""
+    docs = max(int(index.num_docs), 1)
+    return math.ceil(docs / index.config.index.salt_bucket_docs)
+
+
+def _complete_queries(right: pa.Table, protos) -> pa.Table:
+    """``right`` without the queries that miss a term in ``protos``:
+    a conjunction is empty over a docID bucket where one of its terms
+    has no posting."""
+    present = pc.is_in(
+        right.column("term_id"), value_set=pa.array(list(protos), pa.int64())
+    )
+    drop = pc.unique(pc.filter(right.column("query_id"), pc.invert(present)))
+    return right.filter(
+        pc.invert(pc.is_in(right.column("query_id"), value_set=drop))
+    )
+
+
+def _cogroup(
     index: InvertedIndex,
     parsed: DataFrame,
     batches: int | None,
     scan_prune: bool | None,
     run,
     schema: pa.Schema,
+    n_buckets: int,
 ) -> DataFrame:
-    """``run(left, right)`` once per query batch: queries hash into
-    ``batches`` groups, and (the batch's distinct term segment rows)
-    cogroup with (the batch's parsed queries) under ``applyInArrow``.
+    """``run(left, right)`` once per (query batch, docID bucket) over
+    ``n_buckets`` buckets (_n_buckets, or 1 for whole docID ranges):
+    queries hash into ``batches`` batches, and (the batch's distinct
+    term segment rows within the bucket) cogroup with (the batch's
+    parsed queries) under ``applyInArrow``.
 
-    ``batches`` defaults to 2x the cluster's default parallelism —
-    the sharing/parallelism sweet spot measured in BENCH.md (at 3200
-    queries, sf0.1: 1x par = 3.7x over one group per query but the
-    largest per-task frames; 2x = 2.9x; 4x = 2.3x; AQE-uncoalesced
-    16x = 1.2x). Fewer batches share more but each task's
-    distinct-term frame grows; 2x keeps working sets half the size of
-    1x and smooths hash-collision stragglers across two waves."""
+    ``batches`` defaults to ceil(2 x defaultParallelism / buckets).
+    At one bucket that is 2x the cores — the sharing/parallelism
+    sweet spot measured in BENCH.md (at 3200 queries, sf0.1: 1x par =
+    3.7x over one group per query but the largest per-task frames;
+    2x = 2.9x; 4x = 2.3x; AQE-uncoalesced 16x = 1.2x): 2x keeps
+    working sets half the size of 1x and smooths hash-collision
+    stragglers across two waves. At scale buckets are the parallelism
+    axis, so batches -> 1 (full payload sharing per bucket).
+
+    With several buckets each query replicates to every bucket (an
+    explode — only fixed-width query rows replicate, never payload
+    bytes), or, when ``parsed`` carries bootstrap thresholds, only to
+    its LIVE buckets (live_ranges), whose per-batch projection also
+    drops dead buckets off the segment side before any payload ships.
+    At one bucket none of that runs: a group is a whole batch."""
+    par = index.segments.sparkSession.sparkContext.defaultParallelism
     if batches is None:
-        batches = 2 * index.segments.sparkSession.sparkContext.defaultParallelism
+        batches = math.ceil(2 * par / n_buckets)
     batch_expr = F.pmod(F.xxhash64("query_id"), F.lit(batches)).cast("int")
-    # Explicit repartition(batches) on BOTH cogroup sides: the
-    # cogroup's required hash distribution on batch_id is already
-    # satisfied, so no extra shuffle is planned — and the
-    # user-specified partition count is exempt from AQE coalescing,
-    # which otherwise merges these byte-light but CPU-heavy Python
-    # groups onto a fraction of the cores (measured: AQE coalesced
-    # 512 batches to 10 tasks; pinning restored full parallelism).
-    pq = parsed.withColumn("batch_id", batch_expr).repartition(
-        batches, "batch_id"
-    )
+    pq = parsed.withColumn("batch_id", batch_expr)
     # Segments side: DISTINCT terms per batch (this dedup is the whole
     # point) joined with term stats, then broadcast into the segment
     # scan — segments still never shuffle and are never broadcast.
     # batch_id is recomputed from `parsed` (not projected off `pq`) so
     # the cogroup's two sides carry distinct attribute ids.
     bt = parsed.select(batch_expr.alias("batch_id"), "term_id").distinct()
-    rows = _factored_segment_rows(index, parsed, bt, scan_prune).repartition(
-        batches, "batch_id"
-    )
-    return rows.groupBy("batch_id").cogroup(pq.groupBy("batch_id")).applyInArrow(
-        run, from_arrow_schema(schema)
+    rows = _factored_segment_rows(index, parsed, bt, scan_prune)
+    keys = ["batch_id"]
+    if n_buckets > 1:
+        keys.append("bucket")
+        bucket = (
+            F.col("block_id") / F.lit(blocks_per_bucket(index.config.index))
+        ).cast("long")
+        rows = rows.withColumn("bucket", bucket)
+        if "threshold_micro" in parsed.columns:
+            # Live-range pruning in Catalyst (metadata columns only —
+            # the aggregate reads block maxes/weights, so column
+            # pruning keeps payload bytes out of this pass). No
+            # broadcast hint: at 10^12 docs the live set can be large
+            # (AQE broadcasts small live sets on its own).
+            live = live_ranges(
+                _query_segments(index, parsed, scan_prune)
+                .withColumn("bucket", bucket)
+            ).localCheckpoint()
+            live_b = live.join(
+                pq.select("query_id", "batch_id").distinct(), "query_id"
+            ).select(*keys).distinct()
+            rows = rows.join(live_b, keys)
+            pq = pq.join(live, "query_id")
+        else:
+            # Every bucket: doc ids are dense, so every real bucket is
+            # < n_buckets; `guarded` below fails loudly otherwise.
+            pq = pq.withColumn("bucket", F.explode(
+                F.sequence(F.lit(0), F.lit(n_buckets - 1)).cast("array<long>")
+            ))
+    # Explicit repartition on BOTH cogroup sides: the cogroup's
+    # required hash distribution is then already satisfied, so no
+    # extra shuffle is planned — and the user-specified partition
+    # count is exempt from AQE coalescing, which otherwise merges
+    # these byte-light but CPU-heavy Python groups onto a fraction of
+    # the cores (measured: AQE coalesced 512 batches to 10 tasks).
+    # ~One group per partition up to 4x the cores; beyond that the
+    # groups of a partition run in sequence inside one task, the right
+    # shape when buckets vastly outnumber cores.
+    n_parts = max(batches, min(batches * n_buckets, 4 * par))
+    rows = rows.repartition(n_parts, *keys)
+    pq = pq.repartition(n_parts, *keys)
+
+    def guarded(left: pa.Table, right: pa.Table) -> pa.Table:
+        if left.num_rows and not right.num_rows:
+            # A group with segment rows but no queries: returning empty
+            # would silently drop its docs from every result.
+            group = {c: left.column(c)[0].as_py() for c in keys}
+            raise RuntimeError(
+                f"segment group {group} outside the replicated query "
+                "range — non-dense doc ids?"
+            )
+        return run(left, right)
+
+    return rows.groupBy(*keys).cogroup(pq.groupBy(*keys)).applyInArrow(
+        guarded, from_arrow_schema(schema)
     )
 
 
@@ -691,17 +761,20 @@ def topk_search(
     scan_prune: bool | None = None,
     profile: bool = False,
 ) -> DataFrame:
-    """(query_id, rank, doc_id, score), one cogroup group per query
-    batch (_batch_cogroup). Parallelism = ``batches`` tasks; per-task
-    working set = the batch's distinct lists (use topk_range for
-    beyond-task-size head lists), with decoded postings capped at
+    """(query_id, rank, doc_id, score), one cogroup group per (query
+    batch, docID bucket) (_cogroup). With several buckets each group
+    returns a partial top-k and a window merges them per query
+    (range_query.hpp's per-range runs, merged instead of sharing one
+    heap), so per-task working set = the batch's distinct lists
+    WITHIN ONE BUCKET, with decoded postings capped at
     BATCH_CACHE_MAX_POSTINGS per term. A parsed frame without a
     per-query ``k`` column falls back to the ``k`` argument.
 
     ``thresholds``: optional (query_id, threshold_micro) sound lower
     bounds (thresholds.estimate_thresholds) that bootstrap each
     kernel's heap threshold — the fork's kth_threshold pipeline, but
-    safe by construction (no --safe rerun needed). Only valid for
+    safe by construction (no --safe rerun needed) — and prune dead
+    (query, bucket) ranges before any kernel runs. Only valid for
     DISJUNCTIVE_ALGORITHMS (see above): passing thresholds with a
     conjunctive algorithm raises ValueError instead of silently
     dropping intersection results below the single-term bound.
@@ -710,20 +783,25 @@ def topk_search(
     the reference's profile_queries/block_profiler counters — making
     pruning effectiveness measurable (a pruned kernel must decode
     fewer blocks than the exhaustive one on the same query). Profiled
-    batches decode every block inside the query that needs it
-    (``cap=0``), so the counts are per query."""
+    batches run over the whole docID space, one heap per query like
+    the reference's: a bucket's fresh heap cannot skip a list that
+    has one block in the bucket. They decode every block inside the
+    query that needs it (``cap=0``), so the counts are per query."""
     kernel = RANKED_KERNELS[algorithm]
     decode = CODECS[index.config.index.codec][1]
     stats = _stats(index)
-    parsed = _with_k(_bootstrapped(parsed, algorithm, thresholds), k)
+    parsed = _bootstrapped(parsed, algorithm, thresholds)
+    n_buckets = 1 if profile else _n_buckets(index)
     cap = 0 if profile else BATCH_CACHE_MAX_POSTINGS
 
     def run(left: pa.Table, right: pa.Table) -> pa.Table:
-        # left: the batch's distinct term segment rows (+ term stats);
+        # left: the group's distinct term segment rows (+ term stats);
         # right: the batch's parsed queries (query_id, k, term_id,
         # weight[, threshold_micro]). Shared proto build + query walk
         # (_build_batch_protos/_walk_batch_queries); one output table.
         protos, base_bm = _build_batch_protos(left, decode, cap)
+        if algorithm not in DISJUNCTIVE_ALGORITHMS:
+            right = _complete_queries(right, protos)
         if not profile:
             return _results_table(
                 _walk_batch_queries(right, protos, base_bm, kernel, stats),
@@ -749,167 +827,10 @@ def topk_search(
         ).append_column("postings_decoded", pa.array(np.repeat(postings, n)))
 
     schema = _PROFILE_SCHEMA if profile else _RANKED_SCHEMA
-    return _batch_cogroup(index, parsed, batches, scan_prune, run, schema)
+    out = _cogroup(
+        index, _with_k(parsed, k), batches, scan_prune, run, schema, n_buckets
+    )
+    return _merge_partials(out, parsed, k) if n_buckets > 1 else out
 
 
 topk_search_batch = topk_search
-
-
-def topk_range(
-    index: InvertedIndex,
-    parsed: DataFrame,
-    algorithm: str = "maxscore",
-    k: int = 10,
-    thresholds: DataFrame | None = None,
-    batches: int | None = None,
-    scan_prune: bool | None = None,
-) -> DataFrame:
-    """(query_id, rank, doc_id, score) — doc-range-major execution
-    (range_query.hpp: run the algorithm per docID range with a shared
-    heap; Spark shape = partial top-k per range + window merge).
-
-    Bucket granularity reuses the segment salt buckets (segments
-    never re-shuffle across buckets). The cogroup keys on (batch_id,
-    bucket): LEFT = the batch's DISTINCT terms' blocks within the
-    bucket (each list crosses the wire and decodes once per group);
-    RIGHT = the batch's parsed queries replicated per live bucket
-    (fixed-width metadata rows only — payload bytes never replicate).
-
-    Scale shape: parallelism = batches x buckets tasks; per-task
-    working set = the batch's distinct lists WITHIN ONE BUCKET, so no
-    task ever sees a full posting list. ``batches`` defaults to
-    ceil(defaultParallelism / bucket-count): buckets already provide
-    the parallelism axis at scale (batches -> 1, full sharing per
-    bucket), while small corpora (few buckets) keep the cores busy
-    via query batching.
-
-    ``thresholds`` (query_id, threshold_micro — sound lower bounds on
-    the k-th final score, disjunctive algorithms only) enables the
-    LIVE-BLOCK pruning of wand_data_range.hpp compute_live_blocks:
-    the (query, bucket) live set prunes the replicated query side,
-    and its per-batch projection prunes dead buckets off the segment
-    side before any payload ships — dead ranges cost one aggregation
-    row, not a Python group.
-    """
-    import math
-
-    from pisa_spark.build.segments import blocks_per_bucket
-
-    kernel = RANKED_KERNELS[algorithm]
-    decode = CODECS[index.config.index.codec][1]
-    cfg = index.config.index
-    bucket_stride = blocks_per_bucket(cfg)
-    stats = _stats(index)
-    parsed = _bootstrapped(parsed, algorithm, thresholds)
-    merge_parsed = parsed  # k-column presence decides the merge cap
-    parsed = _with_k(parsed, k)
-
-    par = index.segments.sparkSession.sparkContext.defaultParallelism
-    n_buckets = max(
-        1, math.ceil(max(int(index.num_docs), 1) / cfg.salt_bucket_docs)
-    )
-    if batches is None:
-        # Buckets are the parallelism axis at scale (batches -> 1,
-        # maximal payload sharing per bucket); small corpora (few
-        # buckets) keep the cores busy via query batching. 1x the
-        # cores — unlike topk_search's 2x — because each (batch,
-        # bucket) group is already bucket-bounded, so the
-        # straggler-smoothing second wave buys less than the extra
-        # payload copies cost (measured at 100q/sf0.1: 1x par 0.63 s,
-        # 2x par 0.87 s).
-        batches = max(1, math.ceil(par / n_buckets))
-    batch_expr = F.pmod(F.xxhash64("query_id"), F.lit(batches)).cast("int")
-    pq = parsed.withColumn("batch_id", batch_expr)
-    # Segment side: distinct terms per batch (the dedup that removes
-    # per-query payload copies), bucketed by salt bucket.
-    bt = parsed.select(batch_expr.alias("batch_id"), "term_id").distinct()
-    rows = _factored_segment_rows(index, parsed, bt, scan_prune).withColumn(
-        "bucket", (F.col("block_id") / F.lit(bucket_stride)).cast("long")
-    )
-    if thresholds is not None:
-        # Live-range pruning in Catalyst (metadata columns only — the
-        # aggregate reads block maxes/weights, so column pruning keeps
-        # payload bytes out of this pass): the per-(query, bucket)
-        # live set filters the replicated query side; its per-batch
-        # bucket projection filters the payload-carrying segment side.
-        # No broadcast hint: at 10^12 docs the live set can be large
-        # (AQE broadcasts small live sets on its own).
-        qmeta = _query_segments(index, parsed, scan_prune).withColumn(
-            "bucket", (F.col("block_id") / F.lit(bucket_stride)).cast("long")
-        )
-        live = live_ranges(qmeta).localCheckpoint()
-        live_b = (
-            live.join(pq.select("query_id", "batch_id").distinct(), "query_id")
-            .select("batch_id", "bucket")
-            .distinct()
-        )
-        rows = rows.join(live_b, ["batch_id", "bucket"])
-        # inner join on query_id adds the query's live buckets — the
-        # replication step for this path, restricted to live ranges
-        pq = pq.join(live, ["query_id"])
-    else:
-        # Replicate the batch's queries to every bucket: a pure
-        # driver-side (batches x n_buckets) literal table — NO segment
-        # pass (a data-derived distinct(batch, bucket) costs a full
-        # workload-metadata aggregation per call; measured ~0.2 s of
-        # the bench job). Sound because this engine's doc ids are
-        # DENSE by construction (build/ids.assign_global_ids;
-        # incremental generations stack contiguous offsets), so every
-        # real bucket < ceil(num_docs / salt_bucket_docs); the kernel
-        # below still guards loudly against a bucket outside the
-        # range (left rows with no replicated queries) rather than
-        # ever dropping results silently.
-        spark = index.segments.sparkSession
-        bb = spark.range(int(batches)).select(
-            F.col("id").cast("int").alias("batch_id")
-        ).crossJoin(
-            spark.range(int(n_buckets)).select(F.col("id").alias("bucket"))
-        )
-        # Broadcast hint only while the replication table is known
-        # small (repo rule: hints on counted-small sides only). At
-        # 10^12 docs n_buckets ~ 10^6 and the table grows linearly
-        # with the corpus — beyond the cap the hint comes off and the
-        # planner (AQE) chooses; the join itself stays the same.
-        if batches * n_buckets <= RANGE_BB_BROADCAST_ROWS:
-            bb = F.broadcast(bb)
-        pq = pq.join(bb, "batch_id")
-
-    cap = BATCH_CACHE_MAX_POSTINGS
-
-    def run(left: pa.Table, right: pa.Table) -> pa.Table:
-        # left: the (batch, bucket)'s distinct term blocks (+ stats);
-        # right: the batch's parsed queries for this bucket. Shared
-        # proto build + query walk (_build_batch_protos/
-        # _walk_batch_queries); output is UNranked partials for the
-        # window merge.
-        if left.num_rows and not right.num_rows:
-            # Every real bucket must have received the batch's query
-            # replica (see the bb construction above). Fail loudly —
-            # returning empty here would silently drop this bucket's
-            # docs from the top-k.
-            bucket = (left.column("bucket")[0].as_py()
-                      if "bucket" in left.column_names else "?")
-            raise RuntimeError(
-                f"topk_range: segment bucket {bucket} outside the "
-                "replicated query range — non-dense doc ids?"
-            )
-        protos, base_bm = _build_batch_protos(left, decode, cap)
-        return _results_table(
-            _walk_batch_queries(right, protos, base_bm, kernel, stats),
-            _PARTIAL_SCHEMA,
-        )
-
-    # Pinned partition count (AQE-coalesce exempt, same rationale as
-    # _batch_cogroup): ~one (batch, bucket) group per partition up
-    # to 4x the cores — beyond that, groups within a partition run
-    # sequentially inside one task, which is the right shape when
-    # buckets vastly outnumber cores (10^12-doc corpora).
-    n_parts = int(max(batches, min(batches * n_buckets, 4 * par)))
-    rows = rows.repartition(n_parts, "batch_id", "bucket")
-    pq = pq.repartition(n_parts, "batch_id", "bucket")
-    partial = (
-        rows.groupBy("batch_id", "bucket")
-        .cogroup(pq.groupBy("batch_id", "bucket"))
-        .applyInArrow(run, from_arrow_schema(_PARTIAL_SCHEMA))
-    )
-    return _merge_range_partials(partial, merge_parsed, k)

@@ -3,7 +3,7 @@
 Measured evidence for the "survives 100x" argument (VERDICT r4 next-#4):
 run the SAME synthetic job at a ladder of corpus sizes, each in a FRESH
 local session with the UI's REST endpoint enabled. ``--job build``
-(default) probes the index build (bench.py's _synth_section shape);
+(default) probes the synthetic-pages index build;
 ``--job dedup`` probes the two headline dedup scale paths
 (minhash_lsh_pairs banded-LSH + simhash_pairs pigeonhole chunks) over
 the same synthetic pages — the measured form of SCALE.md's

@@ -1,4 +1,4 @@
-"""Batch-major executors (topk_search, topk_range).
+"""The batch-major ranked executor (topk_search).
 
 Two layers:
 
@@ -6,9 +6,10 @@ Two layers:
   term-level decode under the per-term cap, lazy CappedBlockCache
   decode above it, identical kernel results either way;
 - a small pinned configuration matrix (codec x quantization x
-  compressed block maxes) run through both Spark executors, rank-
-  identical to an exhaustive SQL oracle, including an all-OOV batch
-  (empty segment side) and k above the match count.
+  compressed block maxes, over three docID buckets, plus one config
+  at one bucket) run through the Spark executor, rank-identical to an
+  exhaustive SQL oracle, including an all-OOV batch (empty segment
+  side) and k above the match count.
 """
 
 from __future__ import annotations
@@ -212,43 +213,43 @@ def _sorted(df) -> pd.DataFrame:
 
 @pytest.mark.parametrize("codec,qbits,cbm", MATRIX)
 def test_batch_executors_config_matrix(spark, pages, oracles, codec, qbits, cbm):
-    """Both batch executors rank-identical to the exhaustive oracle per
+    """The executor rank-identical to the exhaustive oracle per
     configuration, with one query's k above its match count, and an
     all-OOV workload (every batch's segment side empty) answering
-    nothing."""
+    nothing. The first config also runs at one bucket (whole-batch
+    groups, no merge) against the same oracle."""
     from pisa_spark.corpus import synth_queries
     from pisa_spark.index import build_index
     from pisa_spark.query.parser import parse_queries
 
-    cfg = EngineConfig(index=IndexConfig(
-        salt_bucket_docs=128, codec=codec, quantize_bits=qbits,
-        compress_blockmax=cbm,
-    ))
-    index = build_index(spark, pages, cfg)
-    qdf = spark.createDataFrame(synth_queries(12, vocab_size=VOCAB, seed=3))
-    parsed = parse_queries(qdf, index.lexicon, pre_tokenized=True).withColumn(
-        "k", F.when(F.col("query_id") == F.lit(BIG_K_QUERY), F.lit(N_DOCS + 50))
-        .otherwise(F.col("k"))
-    ).localCheckpoint()
-    if qbits not in oracles:
-        oracles[qbits] = _oracle(index, parsed)
-    exp = oracles[qbits]
-    assert exp["query_id"].nunique() >= 8
-    big = exp[exp["query_id"] == BIG_K_QUERY]
-    assert 0 < len(big) < N_DOCS + 50  # k above the match count
-    for got in (
-        ex.topk_search(index, parsed, algorithm="block_max_wand", k=10, batches=3),
-        ex.topk_range(index, parsed, algorithm="maxscore", k=10, batches=2),
-    ):
+    first = (codec, qbits, cbm) == MATRIX[0]
+    # 128-doc salt buckets: three over N_DOCS; 1 << 20: one
+    for salt in (128, 1 << 20) if first else (128,):
+        cfg = EngineConfig(index=IndexConfig(
+            salt_bucket_docs=salt, codec=codec, quantize_bits=qbits,
+            compress_blockmax=cbm,
+        ))
+        index = build_index(spark, pages, cfg)
+        qdf = spark.createDataFrame(synth_queries(12, vocab_size=VOCAB, seed=3))
+        parsed = parse_queries(qdf, index.lexicon, pre_tokenized=True).withColumn(
+            "k", F.when(F.col("query_id") == F.lit(BIG_K_QUERY), F.lit(N_DOCS + 50))
+            .otherwise(F.col("k"))
+        ).localCheckpoint()
+        if qbits not in oracles:
+            oracles[qbits] = _oracle(index, parsed)
+        exp = oracles[qbits]
+        assert exp["query_id"].nunique() >= 8
+        big = exp[exp["query_id"] == BIG_K_QUERY]
+        assert 0 < len(big) < N_DOCS + 50  # k above the match count
+        got = ex.topk_search(
+            index, parsed, algorithm="block_max_wand", k=10, batches=3
+        )
         pd.testing.assert_frame_equal(_sorted(got), exp)
 
-    if codec == MATRIX[0][0]:
-        oov = spark.createDataFrame(
-            [("x0", -1, 1.0, 10), ("x1", -2, 1.0, 10), ("x1", -3, 2.0, 10)],
-            "query_id string, term_id long, weight double, k int",
-        )
-        for got in (
-            ex.topk_search(index, oov, algorithm="adaptive", k=10, batches=1),
-            ex.topk_range(index, oov, algorithm="adaptive", k=10, batches=1),
-        ):
+        if first:
+            oov = spark.createDataFrame(
+                [("x0", -1, 1.0, 10), ("x1", -2, 1.0, 10), ("x1", -3, 2.0, 10)],
+                "query_id string, term_id long, weight double, k int",
+            )
+            got = ex.topk_search(index, oov, algorithm="adaptive", k=10, batches=1)
             assert got.count() == 0

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pisa_spark.config import EngineConfig, IndexConfig
 from pisa_spark.corpus import synth_pages, synth_queries
 from pisa_spark.index import build_index
-from pisa_spark.query.executor import boolean_query, topk_range, topk_search
+from pisa_spark.query.executor import boolean_query, topk_search
 from pisa_spark.query.parser import parse_queries
 
 N_DOCS = 400
@@ -145,14 +145,6 @@ def test_kernels_match_oracle(index, parsed, oracle_topk, algorithm):
         got[["query_id", "rank", "doc_id"]], exp[["query_id", "rank", "doc_id"]]
     )
     np.testing.assert_allclose(got["score"], exp["score"], rtol=0, atol=1e-6)
-
-
-def test_range_executor_matches_oracle(index, parsed, oracle_topk):
-    got = _fetch(topk_range(index, parsed, algorithm="maxscore", k=10))
-    exp = oracle_topk.astype({"rank": "int64", "doc_id": "int64"})
-    pd.testing.assert_frame_equal(
-        got[["query_id", "rank", "doc_id"]], exp[["query_id", "rank", "doc_id"]]
-    )
 
 
 @pytest.mark.parametrize("and_algo", ["ranked_and", "block_max_ranked_and"])
@@ -1250,8 +1242,9 @@ def test_estimator_mixed_k_soundness(spark, index, parsed):
 
 def test_range_live_prefilter(spark, index, parsed, oracle_topk):
     """Live-range pruning (wand_data_range compute_live_blocks in
-    Catalyst): bootstrapped topk_range stays rank-identical while the
-    live-range filter provably drops dead (query, bucket) groups."""
+    Catalyst): bootstrapped topk_search over this four-bucket index
+    stays rank-identical while the live-range filter provably drops
+    dead (query, bucket) groups."""
     from pisa_spark.query.executor import _query_segments, live_ranges
     from pisa_spark.query.thresholds import (
         estimate_thresholds_with_pairs, kth_score_cache,
@@ -1260,7 +1253,7 @@ def test_range_live_prefilter(spark, index, parsed, oracle_topk):
     cache = kth_score_cache(index, k=10)
     est = estimate_thresholds_with_pairs(index, parsed, cache, k=10)
     got = _fetch(
-        topk_range(index, parsed, algorithm="maxscore", k=10, thresholds=est)
+        topk_search(index, parsed, algorithm="maxscore", k=10, thresholds=est)
     )
     exp = oracle_topk.astype({"rank": "int64", "doc_id": "int64"})
     pd.testing.assert_frame_equal(
@@ -1279,7 +1272,7 @@ def test_range_live_prefilter(spark, index, parsed, oracle_topk):
     assert live < total, (live, total)
 
     with pytest.raises(ValueError, match="unsound"):
-        topk_range(
+        topk_search(
             index, parsed, algorithm="ranked_and", k=10, thresholds=est
         )
 
@@ -1478,45 +1471,14 @@ def test_batch_executor_k_fallback_matches_oracle(index, parsed, oracle_topk):
     )
 
 
-def test_range_executor_heterogeneous_k_matches_search(index, parsed):
-    """Per-query k parity: the range executor's merge must cap each
-    query at ITS OWN k (the per-bucket partials already honor it), and
-    a parsed frame without a k column must fall back to the k arg —
-    both matching topk_search, whose groups are whole query batches
-    instead of (batch, doc bucket) pairs."""
-    from pyspark.sql import functions as F
-
-    mixed = parsed.withColumn(
-        "k",
-        F.when(F.pmod(F.xxhash64("query_id"), F.lit(2)) == 0, F.lit(4))
-        .otherwise(F.lit(9)),
-    )
-    exp = _fetch(topk_search(index, mixed, algorithm="maxscore", k=10))
-    got = _fetch(topk_range(index, mixed, algorithm="maxscore", k=10))
-    pd.testing.assert_frame_equal(
-        got[["query_id", "rank", "doc_id"]],
-        exp[["query_id", "rank", "doc_id"]],
-    )
-
-    no_k = parsed.drop("k")
-    exp = _fetch(topk_search(index, no_k, algorithm="maxscore", k=7))
-    got = _fetch(topk_range(index, no_k, algorithm="maxscore", k=7))
-    pd.testing.assert_frame_equal(
-        got[["query_id", "rank", "doc_id"]],
-        exp[["query_id", "rank", "doc_id"]],
-    )
-
-
 @pytest.mark.parametrize("batches", [1, 3, 16])
 def test_range_batch_matches_oracle(index, parsed, oracle_topk, batches):
-    """Range execution (topk_range): payloads ship once per (batch,
-    bucket) and results stay rank-identical to the exhaustive oracle
-    at every batch count (1 = full sharing, 16 > query count = about
-    one query per batch)."""
-    from pisa_spark.query.executor import topk_range
-
+    """Range execution over this four-bucket index: payloads ship once
+    per (batch, bucket) and results stay rank-identical to the
+    exhaustive oracle at every batch count (1 = full sharing, 16 >
+    query count = about one query per batch)."""
     got = _fetch(
-        topk_range(
+        topk_search(
             index, parsed, algorithm="maxscore", k=10, batches=batches
         )
     )
@@ -1528,26 +1490,25 @@ def test_range_batch_matches_oracle(index, parsed, oracle_topk, batches):
 
 
 def test_range_batch_guards_bucket_outside_replicated_range(index, parsed):
-    """topk_range replicates queries to ceil(num_docs /
+    """topk_search replicates queries to ceil(num_docs /
     salt_bucket_docs) buckets, relying on dense doc ids; a segment
     bucket beyond that range must fail the job loudly instead of
-    silently dropping its docs from the top-k."""
+    silently dropping its docs from the top-k. (At one replicated
+    bucket nothing replicates: a group is the whole batch, so no
+    bucket can fall outside.)"""
     from dataclasses import replace
 
-    from pisa_spark.query.executor import topk_range
-
-    sparse = replace(index, num_docs=100)  # one replicated bucket of four
+    sparse = replace(index, num_docs=200)  # two replicated buckets of four
     with pytest.raises(Exception, match="outside the replicated query range"):
-        topk_range(
+        topk_search(
             sparse, parsed, algorithm="maxscore", k=10, batches=1
         ).collect()
 
 
 def test_range_batch_live_thresholds(index, parsed, oracle_topk):
-    """topk_range with bootstrap thresholds at a pinned batch count:
+    """topk_search with bootstrap thresholds at a pinned batch count:
     the Catalyst live-range pre-filter path stays rank-identical, and
     conjunctive bootstrapping is rejected."""
-    from pisa_spark.query.executor import topk_range
     from pisa_spark.query.thresholds import (
         estimate_thresholds_with_pairs, kth_score_cache,
     )
@@ -1555,7 +1516,7 @@ def test_range_batch_live_thresholds(index, parsed, oracle_topk):
     cache = kth_score_cache(index, k=10)
     est = estimate_thresholds_with_pairs(index, parsed, cache, k=10)
     got = _fetch(
-        topk_range(
+        topk_search(
             index, parsed, algorithm="block_max_wand", k=10,
             thresholds=est, batches=3,
         )
@@ -1566,33 +1527,38 @@ def test_range_batch_live_thresholds(index, parsed, oracle_topk):
     )
 
     with pytest.raises(ValueError, match="unsound"):
-        topk_range(
+        topk_search(
             index, parsed, algorithm="ranked_and", k=10, thresholds=est
         )
 
 
-def test_range_batch_heterogeneous_k(index, parsed):
-    """Per-query k parity for the range form at a pinned batch count,
-    plus the no-k-column fallback to the k argument."""
+def test_range_batch_heterogeneous_k(index, parsed, oracle_topk):
+    """Per-query k at a pinned batch count: the cross-bucket merge caps
+    each query at ITS OWN k (the per-bucket partials already honor
+    it), and a parsed frame without a k column falls back to the k
+    argument — both the oracle's top-10 cut at that k."""
     mixed = parsed.withColumn(
         "k",
         F.when(F.pmod(F.xxhash64("query_id"), F.lit(2)) == 0, F.lit(4))
         .otherwise(F.lit(9)),
     )
-
-    exp = _fetch(topk_search(index, mixed, algorithm="maxscore", k=10))
+    qk = mixed.select("query_id", "k").distinct().toPandas()
+    oracle = oracle_topk.astype({"rank": "int64", "doc_id": "int64"})
+    exp = oracle.merge(qk, on="query_id")
+    exp = exp[exp["rank"] <= exp["k"]].reset_index(drop=True)
     got = _fetch(
-        topk_range(index, mixed, algorithm="maxscore", k=10, batches=2)
+        topk_search(index, mixed, algorithm="maxscore", k=10, batches=2)
     )
+    assert set(qk["k"]) == {4, 9}
     pd.testing.assert_frame_equal(
         got[["query_id", "rank", "doc_id"]],
         exp[["query_id", "rank", "doc_id"]],
     )
 
-    no_k = parsed.drop("k")
-    exp = _fetch(topk_search(index, no_k, algorithm="maxscore", k=7))
+    exp = oracle[oracle["rank"] <= 7].reset_index(drop=True)
     got = _fetch(
-        topk_range(index, no_k, algorithm="maxscore", k=7, batches=2)
+        topk_search(index, parsed.drop("k"), algorithm="maxscore", k=7,
+                    batches=2)
     )
     pd.testing.assert_frame_equal(
         got[["query_id", "rank", "doc_id"]],

@@ -1,7 +1,7 @@
 """Dead-weight guard (VERDICT r3 next-#8): every public top-level
 function/class defined in pisa_spark must be REFERENCED by name
 somewhere outside its defining module — package code, scripts/,
-tests/, bench.py, or __spark_entry__.py. Superseded helpers get
+tests/, or __spark_entry__.py. Superseded helpers get
 deleted, not carried; deliberate agreement baselines (DAAT kernel
 forms) are referenced by their agreement tests, so they pass without
 an allowlist.
@@ -39,8 +39,7 @@ def test_every_public_symbol_is_referenced():
     for root in (PKG, REPO / "tests", REPO / "scripts"):
         for py in root.rglob("*.py"):
             corpus.append((str(py.relative_to(REPO)), py.read_text()))
-    for f in ("bench.py", "__spark_entry__.py"):
-        corpus.append((f, (REPO / f).read_text()))
+    corpus.append(("__spark_entry__.py", (REPO / "__spark_entry__.py").read_text()))
 
     texts = dict(corpus)
     dead: list[str] = []

@@ -626,7 +626,7 @@ def _rebuilt_from_postings(idx, postings, doc_sizes):
 
 def _topk_frame(index, spark, k=10):
     """Deterministic 25-query top-k over ``index`` (workload drawn
-    from the lexicon exactly like bench.py's kernel section)."""
+    from the lexicon)."""
     import pandas as pd
 
     from pisa_spark.query.executor import topk_search

@@ -40,7 +40,20 @@ def index(spark):
 
 
 @pytest.fixture(scope="module")
-def parsed(spark, index):
+def multi(spark):
+    """The same 200 pages over four 64-doc salt buckets (``index`` has
+    one): the executor's replicated, merged shape."""
+    from dataclasses import replace
+
+    from pisa_spark.corpus import pages_from_documents
+    from pisa_spark.index import build_index
+
+    pages = pages_from_documents(spark, SF).limit(200)
+    cfg = replace(CFG, index=IndexConfig(salt_bucket_docs=64))
+    return build_index(spark, pages, cfg)
+
+
+def _parse(spark, index):
     from pisa_spark.query.parser import parse_queries
 
     terms = [r["term"] for r in index.lexicon.limit(12).collect()]
@@ -51,6 +64,16 @@ def parsed(spark, index):
         schema="query_id string, terms array<string>, k int",
     )
     return parse_queries(qdf, index.lexicon, pre_tokenized=True)
+
+
+@pytest.fixture(scope="module")
+def parsed(spark, index):
+    return _parse(spark, index)
+
+
+@pytest.fixture(scope="module")
+def multi_parsed(spark, multi):
+    return _parse(spark, multi)
 
 
 def _plan_str(df) -> str:
@@ -97,15 +120,16 @@ def test_kernel_path_has_no_sort_merge_join(index, parsed):
     assert "BroadcastHashJoin" in plan  # the intended strategy
 
 
-def test_segments_never_broadcast(index, parsed):
+def test_segments_never_broadcast(index, parsed, multi, multi_parsed):
     """No BroadcastExchange subtree may contain the segments payload
     columns (doc_bytes is segments-only) — the broadcast sides must be
-    the query-sized parsed/term_meta tables."""
-    from pisa_spark.query.executor import topk_range, topk_search
+    the query-sized parsed/term_meta tables, at one bucket and at
+    several."""
+    from pisa_spark.query.executor import topk_search
 
     for df in (
         topk_search(index, parsed, algorithm="block_max_wand"),
-        topk_range(index, parsed, algorithm="maxscore"),
+        topk_search(multi, multi_parsed, algorithm="maxscore"),
     ):
         plan = _plan_str(df)
         subtrees = list(_subtree_lines(plan, "BroadcastExchange"))
@@ -114,20 +138,61 @@ def test_segments_never_broadcast(index, parsed):
             assert "doc_bytes" not in sub, sub
 
 
-def test_query_executors_share_one_arrow_boundary(index, parsed):
-    """topk_search, topk_range and boolean_query all run their kernels
-    in ``cogroup(...).applyInArrow`` groups over query batches; no
-    per-query ``applyInPandas`` path remains."""
-    from pisa_spark.query.executor import boolean_query, topk_range, topk_search
+def test_query_executors_share_one_arrow_boundary(
+    index, parsed, multi, multi_parsed
+):
+    """topk_search and boolean_query run their kernels in exactly one
+    ``cogroup(...).applyInArrow`` over (batch, bucket) groups, at one
+    bucket and at several; no per-query ``applyInPandas`` path
+    remains."""
+    from pisa_spark.query.executor import boolean_query, topk_search
 
     for df in (
         topk_search(index, parsed, algorithm="block_max_wand"),
-        topk_range(index, parsed, algorithm="maxscore"),
+        topk_search(multi, multi_parsed, algorithm="maxscore"),
         boolean_query(index, parsed, op="and"),
+        boolean_query(multi, multi_parsed, op="and"),
     ):
         plan = _plan_str(df)
-        assert "FlatMapCoGroupsInArrow" in plan, plan
+        assert plan.count("FlatMapCoGroupsInArrow") == 1, plan
         assert "FlatMapGroupsInPandas" not in plan, plan
+
+
+def _cogroup_exchanges(plan: str) -> list[str]:
+    """The hash columns of the cogroup's two pinned repartitions."""
+    import re
+
+    return [
+        re.sub(r"#\d+L?", "", m)
+        for m in re.findall(
+            r"Exchange hashpartitioning\(([^)]*)\), REPARTITION_BY_NUM", plan
+        )
+    ]
+
+
+def test_ranked_executor_plan_shapes(
+    spark, index, parsed, multi, multi_parsed
+):
+    """One executor, two plan shapes by bucket count. One bucket (every
+    index up to salt_bucket_docs docs): both cogroup sides hash on
+    batch_id alone into 2 x defaultParallelism partitions, with no
+    bucket replication and no merge Window. Several buckets: both
+    sides hash on (batch_id, bucket), the query side replicates by a
+    Generate (no join), and the partial top-k merge is a Window."""
+    from pisa_spark.query.executor import topk_search
+
+    par = spark.sparkContext.defaultParallelism
+    one = _plan_str(topk_search(index, parsed, algorithm="maxscore"))
+    assert _cogroup_exchanges(one) == [f"batch_id, {2 * par}"] * 2, one
+    assert "Window" not in one, one
+    assert not [ln for ln in one.splitlines()
+                if "Generate" in ln and "bucket" in ln], one
+
+    many = _plan_str(topk_search(multi, multi_parsed, algorithm="maxscore"))
+    assert _cogroup_exchanges(many) == [f"batch_id, bucket, {2 * par}"] * 2, many
+    assert "Window" in many, many
+    assert [ln for ln in many.splitlines()
+            if "Generate" in ln and "bucket" in ln], many
 
 
 def test_threshold_zero_disables_lexicon_broadcast(spark):
@@ -218,18 +283,18 @@ def test_in_memory_index_skips_scan_prune(index, parsed):
     assert _pruned_segments(index, parsed, None) is index.segments
 
 
-def test_live_range_join_is_unhinted(index, parsed, spark):
+def test_live_range_join_is_unhinted(multi, multi_parsed):
     """The (rows x live_ranges) join deliberately carries NO broadcast
     hint — at 10^12 docs the live set can be large; AQE must pick the
     strategy. Pin: no BroadcastExchange subtree under that join's
     aggregate contains doc_bytes (covered above) and the plan builds
     without a hard hint from our side."""
-    from pisa_spark.query.executor import topk_range
+    from pisa_spark.query.executor import topk_search
 
-    thr = parsed.select("query_id").distinct().withColumn(
+    thr = multi_parsed.select("query_id").distinct().withColumn(
         "threshold_micro", F.lit(0).cast("long")
     )
-    df = topk_range(index, parsed, algorithm="maxscore", thresholds=thr)
+    df = topk_search(multi, multi_parsed, algorithm="maxscore", thresholds=thr)
     analyzed = df._jdf.queryExecution().analyzed().toString()
     # exactly the broadcasts we hint (parsed/qt/thresholds) — counted
     # conservatively: every ResolvedHint line must reference a
