@@ -102,7 +102,6 @@ def tokenize_pages(
     pages: DataFrame,
     cfg: AnalyzerConfig | None = None,
     lang_filter: str | None = None,
-    assign_doc_ids: bool = True,
     stats_out: dict | None = None,
     id_broadcast_rows: int | None = None,
 ) -> DataFrame:
@@ -116,8 +115,7 @@ def tokenize_pages(
 
     ``stats_out``: when THIS call assigns doc ids, the dict receives
     ``{"n_rows": num_docs}`` for free from the id assignment's offset
-    collect. Left empty on the pre-assigned-doc_id and
-    assign_doc_ids=False paths (the caller must aggregate itself).
+    collect. Left empty on the pre-assigned-doc_id path.
     """
     cfg = cfg or AnalyzerConfig()
     if lang_filter:
@@ -140,8 +138,6 @@ def tokenize_pages(
         )
         if has_doc_id:
             return docs.select("doc_id", "url", "terms", "doc_len")
-        if not assign_doc_ids:
-            return docs.select("url", "terms", "doc_len")
         docs = _with_assigned_ids(
             base, docs, stats_out,
             id_broadcast_rows if id_broadcast_rows is not None
@@ -176,8 +172,6 @@ def tokenize_pages(
     docs = pages.mapInPandas(kernel, cols)
     if has_doc_id:
         return docs.select("doc_id", "url", "terms", "doc_len")
-    if not assign_doc_ids:
-        return docs.select("url", "terms", "doc_len")
     docs = _with_assigned_ids(
         base, docs, stats_out,
         id_broadcast_rows if id_broadcast_rows is not None
@@ -219,8 +213,9 @@ def _with_assigned_ids(
     would multiply through this join, where the old in-place
     numbering silently gave duplicates arbitrary distinct ids.
     Callers that can count the joined result cheaply should compare
-    it against ``stats_out['n_rows']`` (build_index and BuildPipeline
-    both do) — any fan-out is a duplicate-url input error."""
+    it against ``stats_out['n_rows']`` (build_dag and every
+    IncrementalIndexer generation do) — any fan-out is a duplicate-url
+    input error."""
     from pisa_spark.build.invert import maybe_broadcast
 
     cnt: dict = {}

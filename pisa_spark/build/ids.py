@@ -80,7 +80,6 @@ def assign_global_ids(
     id_col: str = "id",
     num_partitions: int | None = None,
     count_out: dict | None = None,
-    sum_col: str | None = None,
     forbid_null: bool = False,
 ) -> DataFrame:
     """Add ``id_col`` = 0-based dense rank of ``order_col`` (must be
@@ -90,12 +89,6 @@ def assign_global_ids(
     free — the per-partition offset collect below already knows the
     total, so callers that need the row count (e.g. the lexicon
     broadcast gate) don't have to run a separate count job.
-    ``sum_col``: additionally receive ``{"sum": SUM(sum_col)}`` from
-    the SAME collect — one aggregate column on a partition-count-sized
-    result, so e.g. collection length (sum of doc lengths) costs no
-    extra pass over the frame (IncrementalIndexer's per-batch delta
-    numbering uses this; the batch builds assign ids over a bare url
-    projection and aggregate stats separately).
 
     ``forbid_null=True`` raises if any ``order_col`` value is NULL
     (checked from the same offset collect, no extra job). A NULL key
@@ -104,8 +97,6 @@ def assign_global_ids(
     drop the row in the inner join instead of failing."""
     ranged = pinned_ranges(df, order_col, num_partitions)
     aggs = [F.count("*").alias("__n")]
-    if sum_col is not None:
-        aggs.append(F.sum(sum_col).alias("__s"))
     if forbid_null:
         # count(col) skips NULLs, count(*) does not — the difference
         # is the null-key count, from the same partition-sized result
@@ -122,8 +113,6 @@ def assign_global_ids(
     counts = {r["__pid"]: int(r["__n"]) for r in rows}
     if count_out is not None:
         count_out["n_rows"] = sum(counts.values())
-        if sum_col is not None:
-            count_out["sum"] = sum(int(r["__s"] or 0) for r in rows)
 
     # The position counter restarts in every task, so it is a row's
     # rank inside its range only while each task reads exactly the

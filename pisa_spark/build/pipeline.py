@@ -30,6 +30,11 @@ compute)``; the store decides only how it is kept:
 - ``index.build_index`` keeps stages in memory: docs and postings
   persisted, the lexicon lazily local-checkpointed, the rest lazy.
 
+The encode tail (``term_meta`` -> ``segments``) is its own function,
+``encode_stages``, so an ``IncrementalIndexer`` generation runs it
+too, over a generation store that appends segments under
+``segment_gen=g`` (streaming/incremental.py).
+
 A store also answers ``n_rows(name, counted)`` (vocabulary size:
 the manifest, or the free ``count_out`` of the compute) and
 ``discard()`` (cleanup when the duplicate-url guard fires).
@@ -121,16 +126,8 @@ def build_dag(pages: DataFrame, config: EngineConfig, store,
     avg_len = float(stats["avg_len"] or 0.0)
     collection_len = int(stats["collection_len"] or 0)
     if ids and num_docs != ids["n_rows"]:
-        # Duplicate-url guard (free: both counts are in hand): the id
-        # join fans out on duplicate urls, and a doubled index (tf,
-        # stats) must fail the build, not ship. NULL urls were already
-        # rejected inside the id assignment (forward._with_assigned_ids).
         store.discard()
-        raise ValueError(
-            f"duplicate urls in input: {ids['n_rows']} distinct-"
-            f"numbered urls joined into {num_docs} doc rows "
-            "(url is the corpus key and must be unique)"
-        )
+        raise duplicate_urls(ids["n_rows"], num_docs)
 
     # carry_doc_len: postings keep doc_len, so the segment encode
     # never re-shuffles the pairs on doc_id for the doc_sizes join.
@@ -149,6 +146,44 @@ def build_dag(pages: DataFrame, config: EngineConfig, store,
         postings, doc_sizes, lexicon, num_docs, avg_len,
         lexicon_size=lexicon_size, broadcast_threshold=bcast,
     )
+    term_meta, segments = encode_stages(store, scored, num_docs, avg_len,
+                                        config)
+    return InvertedIndex(
+        lexicon=lexicon,
+        docmap=docs.select("doc_id", "url"),
+        doc_sizes=doc_sizes,
+        # Public contract: (term_id, doc_id, tf); doc_len is a
+        # build-internal column (see build_postings).
+        postings=postings.select("term_id", "doc_id", "tf"),
+        segments=segments,
+        term_meta=term_meta,
+        num_docs=num_docs,
+        avg_len=avg_len,
+        collection_len=collection_len,
+        config=config,
+        segments_file_backed=store.file_backed,
+        num_terms=int(lexicon_size) if lexicon_size is not None else None,
+    )
+
+
+def duplicate_urls(n_ids: int, num_docs: int) -> ValueError:
+    """The duplicate-url guard's error (free: both counts are in
+    hand): the id join fans out on duplicate urls, and a doubled index
+    (tf, stats) must fail the build, not ship. NULL urls were already
+    rejected inside the id assignment (forward._with_assigned_ids)."""
+    return ValueError(
+        f"duplicate urls in input: {n_ids} distinct-numbered urls "
+        f"joined into {num_docs} doc rows (url is the corpus key and "
+        "must be unique)"
+    )
+
+
+def encode_stages(store, scored: DataFrame, num_docs: int, avg_len: float,
+                  config: EngineConfig) -> tuple[DataFrame, DataFrame]:
+    """The build's encode tail: scored postings -> (term_meta,
+    segments), each a ``store`` stage. ``build_dag`` and every
+    IncrementalIndexer generation (refresh and compact) run it, so
+    this is the one place term metadata and segments are built."""
     # Quantized builds need the index-wide max term weight BEFORE the
     # segment encode, and their term_meta carries quantized bounds:
     # the raw metadata is its own stage so a resume has it.
@@ -169,22 +204,7 @@ def build_dag(pages: DataFrame, config: EngineConfig, store,
         scored, num_docs, avg_len, config.index, config.bm25,
         index_max_score=index_max_score, term_meta=term_meta,
     ))
-    return InvertedIndex(
-        lexicon=lexicon,
-        docmap=docs.select("doc_id", "url"),
-        doc_sizes=doc_sizes,
-        # Public contract: (term_id, doc_id, tf); doc_len is a
-        # build-internal column (see build_postings).
-        postings=postings.select("term_id", "doc_id", "tf"),
-        segments=segments,
-        term_meta=term_meta,
-        num_docs=num_docs,
-        avg_len=avg_len,
-        collection_len=collection_len,
-        config=config,
-        segments_file_backed=store.file_backed,
-        num_terms=int(lexicon_size) if lexicon_size is not None else None,
-    )
+    return term_meta, segments
 
 
 class BuildPipeline:

@@ -30,6 +30,13 @@ rewritten):
     (docID monotonicity means a (term, doc) pair lives in exactly one
     generation), never recounted from all postings; global stats ride
     a single-row ``stats`` file (counts added, never rescanned).
+- A generation runs the batch build's own stage functions
+  (``tokenize_pages``' docIDs + ``doc_base``, the ``stats`` stage's
+  duplicate-url guard, ``build_postings``, the ``encode_stages``
+  term_meta -> segments tail) through a generation store that
+  appends segments under ``segment_gen=g``; refresh and ``compact()``
+  share one encode (``_encode``). Only the delta-additive lexicon df
+  and global stats are the stream's own.
 - Stale-bound repair is QUERY-SIDE: BM25 scores of untouched terms
   still shift because num_docs/avg_len moved. Exact per-posting
   scores are always recomputed at query time from fresh stats, so
@@ -89,15 +96,19 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from pisa_spark.build import (
-    build_doc_sizes, build_segments, build_term_meta, tokenize_pages,
+    build_doc_sizes, build_postings, collection_stats, tokenize_pages,
 )
 from pisa_spark.build.ids import assign_global_ids
-from pisa_spark.codecs import WIRE_VERSION
+from pisa_spark.build.pipeline import duplicate_urls, encode_stages
 from pisa_spark.build.segments import scored_postings
+from pisa_spark.codecs import WIRE_VERSION
 from pisa_spark.config import EngineConfig
 from pisa_spark.index import InvertedIndex
 
 _STATS_RE = re.compile(r"stats_g(\d+)")
+# Versioned vocabulary snapshots and commit pointers (one dir per
+# generation): rolled back above the committed one, dropped below it.
+_SNAPSHOT_RE = re.compile(r"(?:lexicon|term_meta|stats)_g(\d+)")
 log = logging.getLogger(__name__)
 
 # Schemas for generation-partitioned tables that can legitimately be
@@ -123,6 +134,26 @@ def _cfg_fp(payload: dict) -> str:
     return hashlib.sha256(
         json.dumps(payload, sort_keys=True, default=str).encode()
     ).hexdigest()[:16]
+
+
+class _GenerationStore:
+    """A generation's stage store for the build's encode tail
+    (pipeline.encode_stages): ``segments`` is APPENDED under
+    ``segment_gen=gen``, clustered by (term_id, block_id) so parquet
+    row-group stats stay tight for the executor's IN(term_id) scan
+    pruning (_pruned_segments); every other stage is returned as
+    computed."""
+
+    def __init__(self, path: str, gen: int):
+        self.path, self.gen = path, gen
+
+    def stage(self, name: str, parents: list[str], compute) -> DataFrame:
+        df = compute()
+        if name == "segments":
+            df.withColumn("segment_gen", F.lit(self.gen)).sortWithinPartitions(
+                "term_id", "block_id"
+            ).write.mode("append").partitionBy("segment_gen").parquet(self.path)
+        return df
 
 
 class IncrementalIndexer:
@@ -220,12 +251,6 @@ class IncrementalIndexer:
                     best = g if best is None else max(best, g)
         return best
 
-    def _stats_row(self) -> dict:
-        gen = self._committed_gen()
-        if gen is None:
-            raise ValueError(f"{self.out}: no committed generation")
-        return self._read(f"stats_g{gen}").collect()[0].asDict()
-
     def _commit(self, gen: int, num_docs: int, collection_len: int,
                 next_doc_id: int, next_term_id: int,
                 epoch_id: int | None = None) -> None:
@@ -286,17 +311,49 @@ class IncrementalIndexer:
                 if m and int(m.group(1)) > committed:
                     shutil.rmtree(d)
         for d in self.out.iterdir():
-            m = re.fullmatch(r"(?:lexicon|term_meta|stats)_g(\d+)", d.name)
+            m = _SNAPSHOT_RE.fullmatch(d.name)
             if m and int(m.group(1)) > committed:
                 shutil.rmtree(d)
 
-    def _begin(self, recoding: bool = False) -> int | None:
+    def _checked_stats(self, recoding: bool = False) -> dict:
+        """The committed stats row, refused unless the stored index
+        matches this indexer: codec wire version, analyzer and —
+        unless ``recoding`` (compact re-encodes every segment) — the
+        scorer/layout config. Mixed generations or a mis-read layout
+        would silently mis-decode or mis-bound (e.g. f32 vs u8
+        maxima). Legacy rows without fingerprints skip those checks."""
+        gen = self._committed_gen()
+        if gen is None:
+            raise ValueError(f"{self.out}: no committed generation")
+        st = self._read(f"stats_g{gen}").collect()[0].asDict()
+        stored = st.get("wire_version", 1)
+        if stored != WIRE_VERSION:
+            raise ValueError(
+                f"{self.out}: stored segments use codec wire version "
+                f"{stored} but this build is {WIRE_VERSION} — mixing or "
+                "reading them would mis-decode; rebuild (or compact "
+                "with the writing version first)"
+            )
+        a_fp, b_fp = st.get("analyzer_fp"), st.get("build_fp")
+        if a_fp not in (None, self._analyzer_fp):
+            raise ValueError(
+                f"{self.out}: stored generations were tokenized under "
+                "a different analyzer config (two tokenizations of one "
+                "corpus); open with the stored config, or rebuild"
+            )
+        if not recoding and b_fp not in (None, self._build_fp):
+            raise ValueError(
+                f"{self.out}: stored segments were encoded under a "
+                "different scorer/layout config; open with the stored "
+                "config, or compact() with the new one to re-encode"
+            )
+        return st
+
+    def _begin(self, recoding: bool = False) -> dict | None:
         """Start a mutating call: refuse an uncommitted-foreign or
-        config-mismatched dir, roll back crash leftovers, return the
-        committed generation. ``recoding=True`` (compact) permits a
-        changed BUILD config — the call re-encodes every segment under
-        it — while an append never may (mixed generations would
-        corrupt decoding or pruning bounds, e.g. f32 vs u8 maxima)."""
+        config-mismatched (``_checked_stats``) dir, roll back crash
+        leftovers, return the committed stats row (None for a virgin
+        dir)."""
         committed = self._committed_gen()
         if committed is None:
             stray = [t for t, _ in self._GEN_TABLES if self._exists(t)]
@@ -319,38 +376,10 @@ class IncrementalIndexer:
                         "(clear the dir, or rebuild it with this "
                         "version, to proceed)"
                     )
-        else:
-            st = self._stats_row()
-            stored = st.get("wire_version", 1)
-            if stored != WIRE_VERSION:
-                raise ValueError(
-                    f"{self.out}: stored segments use codec wire "
-                    f"version {stored} but this build is "
-                    f"{WIRE_VERSION} — appending would mix layouts "
-                    "and mis-decode kept generations; rebuild (or "
-                    "compact with the writing version first)"
-                )
-            # Legacy stats rows (no fingerprint columns) skip the
-            # check rather than refusing a working dir.
-            a_fp, b_fp = st.get("analyzer_fp"), st.get("build_fp")
-            if a_fp is not None and a_fp != self._analyzer_fp:
-                raise ValueError(
-                    f"{self.out}: stored generations were tokenized "
-                    "under a different analyzer config — appending "
-                    "would mix two tokenizations of one corpus; "
-                    "rebuild from the raw pages"
-                )
-            if not recoding and b_fp is not None and b_fp != self._build_fp:
-                raise ValueError(
-                    f"{self.out}: stored segments were encoded under "
-                    "a different scorer/layout config — appending "
-                    "would mix incompatible generations (block "
-                    "maxima/codec layout); compact() with the new "
-                    "config to re-encode, or reopen with the stored "
-                    "one"
-                )
-            self._rollback(committed)
-        return committed
+            return None
+        st = self._checked_stats(recoding)
+        self._rollback(committed)
+        return st
 
     # ------------------------------------------------------------- update
 
@@ -406,17 +435,17 @@ class IncrementalIndexer:
                     "empty batch"
                 )
             return prev
-        prev = self._begin()
-        first = prev is None
+        st = self._begin()
+        first = st is None
         if first:
             # ownership marker BEFORE the first table write: a crashed
             # generation 0 must be recognizably ours so _begin can
             # roll it back on retry (one atomic file create)
             (self.out / _MARKER).touch()
-            gen, doc_base, term_base = 0, 0, 0
+            prev, gen, doc_base, term_base = None, 0, 0, 0
             n_old, len_old, avg_old = 0, 0, 0.0
         else:
-            st = self._stats_row()
+            prev = int(st["gen"])
             if epoch_id is not None:
                 last_epoch = st.get("epoch_id")
                 if last_epoch is not None and epoch_id <= int(last_epoch):
@@ -431,12 +460,9 @@ class IncrementalIndexer:
             len_old = int(st["collection_len"])
             avg_old = (len_old / n_old) if n_old else 0.0
 
-        # url-key guards on the RAW input's url projection (same url
-        # set as the tokenized frame, no tokenize kernel run;
-        # delta-sized jobs — the batch builds guard the same two ways,
-        # forward._with_assigned_ids / pipeline.run): a duplicate url
-        # inside the batch would get two doc_ids nondeterministically;
-        # NULL urls are rejected inside the id assignment below.
+        # url-key guards: NULL urls are rejected inside the id
+        # assignment and duplicate urls by the stats guard below (both
+        # the batch build's own); recrawls of stored urls here.
         if on_recrawl not in ("error", "filter"):
             raise ValueError(
                 f"on_recrawl={on_recrawl!r}: expected 'error' or 'filter'"
@@ -474,48 +500,51 @@ class IncrementalIndexer:
                     "indexed urls; skipped (committed no-op)"
                 )
                 return prev
-        else:
-            dup = (
-                pages.groupBy("url").agg(F.count("*").alias("n"))
-                .filter(F.col("n") > 1).limit(1).collect()
+        elif not first and check_recrawls:
+            # recrawled url = a second doc_id for the same key. One
+            # column-pruned stored-urls scan per batch (see docstring).
+            seen = (
+                self._read("docs").select("url")
+                .join(F.broadcast(pages.select("url").distinct()), "url")
+                .limit(1).collect()
             )
-            if dup:
+            if seen:
                 raise ValueError(
-                    f"duplicate url in batch (e.g. {dup[0]['url']!r}): url "
-                    "is the corpus key and must be unique per batch"
+                    f"url {seen[0]['url']!r} was already indexed by a "
+                    "previous generation: url is the corpus key "
+                    "(dedup recrawls upstream, pass "
+                    "check_recrawls=False if uniqueness is guaranteed "
+                    "there, or on_recrawl='filter' to keep-first and "
+                    "continue)"
                 )
-            if not first and check_recrawls:
-                # recrawled url = a second doc_id for the same key. One
-                # column-pruned stored-urls scan per batch (see
-                # docstring).
-                seen = (
-                    self._read("docs").select("url")
-                    .join(F.broadcast(pages.select("url").distinct()), "url")
-                    .limit(1).collect()
-                )
-                if seen:
-                    raise ValueError(
-                        f"url {seen[0]['url']!r} was already indexed by a "
-                        "previous generation: url is the corpus key "
-                        "(dedup recrawls upstream, pass "
-                        "check_recrawls=False if uniqueness is guaranteed "
-                        "there, or on_recrawl='filter' to keep-first and "
-                        "continue)"
-                    )
-        toks = tokenize_pages(pages, self.config.analyzer, assign_doc_ids=False)
-        doc_stats: dict = {}
-        new_docs = assign_global_ids(
-            toks, "url", "doc_id", count_out=doc_stats, sum_col="doc_len",
-            forbid_null=True,
+        # docIDs: the batch build's url-projection numbering
+        # (tokenize_pages), offset past every stored doc. An input
+        # doc_id would be kept verbatim, so it is dropped: ids stay
+        # dense from doc_base.
+        ids: dict = {}
+        tokenize_pages(
+            pages.drop("doc_id"), self.config.analyzer, stats_out=ids
         ).withColumn(
             "doc_id", F.col("doc_id") + F.lit(doc_base)
-        ).withColumn("generation", F.lit(gen))
-        new_docs.write.mode("append").partitionBy("generation").parquet(
-            self._path("docs")
-        )
+        ).withColumn("generation", F.lit(gen)).write.mode(
+            "append"
+        ).partitionBy("generation").parquet(self._path("docs"))
+        gen_docs = self._read("docs").filter(F.col("generation") == gen)
+        # The batch build's stats stage and duplicate-url guard, over
+        # this generation's docs; global stats add, never rescan.
+        gen_sizes = build_doc_sizes(gen_docs)
+        stats = collection_stats(gen_sizes).collect()[0]
+        n_delta = int(stats["num_docs"])
+        if n_delta != ids["n_rows"]:
+            raise duplicate_urls(ids["n_rows"], n_delta)
+        n_new = n_old + n_delta
+        len_new = len_old + int(stats["collection_len"] or 0)
+        avg_new = (len_new / n_new) if n_new else 0.0
+        gen_sizes.withColumn("generation", F.lit(gen)).write.mode(
+            "append"
+        ).partitionBy("generation").parquet(self._path("doc_sizes"))
 
         # Stable lexicon growth: unseen terms get ids after term_base.
-        gen_docs = self._read("docs").filter(F.col("generation") == gen)
         new_terms = gen_docs.select(F.explode("terms").alias("term")).distinct()
         if not first:
             new_terms = new_terms.join(
@@ -523,9 +552,15 @@ class IncrementalIndexer:
                 .select("term"),
                 "term", "left_anti",
             )
+        # Ranged over the planned shuffle partition count, as
+        # invert.build_term_ids: left to default, AQE would run the
+        # explode->distinct->anti-join map stage outside the query to
+        # answer new_terms.rdd.getNumPartitions(), then again inside it.
         lex_count: dict = {}
+        parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         appended_lex = assign_global_ids(
-            new_terms, "term", "term_id", count_out=lex_count
+            new_terms, "term", "term_id", num_partitions=parts,
+            count_out=lex_count,
         ).withColumn(
             "term_id", F.col("term_id") + F.lit(term_base)
         ).withColumn("generation", F.lit(gen))
@@ -542,8 +577,6 @@ class IncrementalIndexer:
         # SHARED invert.build_postings, with no lexicon_size: lex_ids
         # is the FULL vocabulary (grows with the crawl), so no
         # broadcast hint — AQE picks the strategy from parquet stats.
-        from pisa_spark.build.invert import build_postings
-
         lex_ids = self._read_or_empty("lexicon_ids", _LEX_IDS_DDL)
         new_postings = build_postings(gen_docs, lex_ids).withColumn(
             "generation", F.lit(gen)
@@ -551,19 +584,6 @@ class IncrementalIndexer:
         new_postings.write.mode("append").partitionBy("generation").parquet(
             self._path("postings")
         )
-
-        # Per-doc sizes: append the new docs' rows only.
-        gen_sizes = build_doc_sizes(
-            gen_docs.select("doc_id", "terms", "doc_len")
-        ).withColumn("generation", F.lit(gen))
-        gen_sizes.write.mode("append").partitionBy("generation").parquet(
-            self._path("doc_sizes")
-        )
-        # Incremental global stats (adds, never rescans) — the batch
-        # count/length rode the doc-id assignment's offset collect.
-        n_delta, len_delta = int(doc_stats["n_rows"]), int(doc_stats["sum"])
-        n_new, len_new = n_old + n_delta, len_old + len_delta
-        avg_new = (len_new / n_new) if n_new else 0.0
 
         self._refresh_metadata(gen, prev, n_old, avg_old, n_new, avg_new)
 
@@ -582,7 +602,7 @@ class IncrementalIndexer:
         import shutil
 
         for d in self.out.iterdir():
-            m = re.fullmatch(r"(?:lexicon|term_meta|stats)_g(\d+)", d.name)
+            m = _SNAPSHOT_RE.fullmatch(d.name)
             if m and int(m.group(1)) < before:
                 shutil.rmtree(d, ignore_errors=True)
 
@@ -636,40 +656,12 @@ class IncrementalIndexer:
 
         # Re-encode ONLY affected terms (full lists, fresh stats) into
         # the new generation's partition — prior partitions untouched.
-        affected = delta_meta.select("term_id")
-        doc_sizes = self._read("doc_sizes").drop("generation")
-        # Eager localCheckpoint (the compact() pattern, CLAUDE.md):
-        # `scored` feeds the segment write AND the term_meta snapshot
-        # (and the compressed-blockmax join) — pin the affected-term
-        # score join once instead of recomputing it per consumer
-        # every micro-batch (a touched head term re-scores its full
-        # list each time otherwise).
-        scored = scored_postings(
-            postings.join(affected, "term_id").select("term_id", "doc_id", "tf"),
-            doc_sizes, self._read(f"lexicon_g{gen}"), n_new, avg_new,
-        ).localCheckpoint(eager=True)
-        # term_meta: affected terms exactly from `scored` (already
-        # needed for the re-encode); untouched terms keep their stored
+        # Their term_meta is exact; untouched terms keep their stored
         # values and accumulate the sound query-side bound inflation.
-        affected_meta = build_term_meta(
-            scored, n_new, avg_new, self.config.bm25
-        ).withColumn("bound_factor", F.lit(1.0))
-
-        # Compressed block maxes are u8 relative to the FRESH
-        # affected-term max — the same max affected_meta stores, so
-        # query-side recovery (q/255 * term_max * bound_factor) is
-        # exact-generation sound; factor starts at 1 and inflates both
-        # together.
-        gen_segments = build_segments(
-            scored, n_new, avg_new, self.config.index, self.config.bm25,
-            term_meta=affected_meta,
-        )
-        # term_id-clustered files -> tight row-group stats for the
-        # executor's workload IN(term_id) scan pruning (_pruned_segments)
-        gen_segments.withColumn("segment_gen", F.lit(gen)).sortWithinPartitions(
-            "term_id", "block_id"
-        ).write.mode("append").partitionBy("segment_gen").parquet(
-            self._path("segments")
+        affected = delta_meta.select("term_id")
+        affected_meta = self._encode(
+            gen, postings.join(affected, "term_id"),
+            self._read(f"lexicon_g{gen}"), n_new, avg_new,
         )
         if first:
             term_meta = affected_meta
@@ -691,6 +683,33 @@ class IncrementalIndexer:
             )
             term_meta = untouched.unionByName(affected_meta)
         term_meta.write.mode("overwrite").parquet(self._path(f"term_meta_g{gen}"))
+
+    def _encode(self, gen: int, postings: DataFrame, lexicon: DataFrame,
+                num_docs: int, avg_len: float) -> DataFrame:
+        """Score ``postings`` under (num_docs, avg_len) and run the
+        build's encode tail (pipeline.encode_stages) over them: their
+        segments are appended as generation ``gen``, and their
+        term_meta is returned with ``bound_factor`` 1 — fresh stats,
+        exact bounds. Compressed block maxes are u8 relative to that
+        same fresh term max, so query-side recovery (q/255 * term_max
+        * bound_factor) is sound, and the factor inflates both
+        together.
+
+        Eager localCheckpoint (CLAUDE.md): ``scored`` feeds the
+        segment write AND the term_meta (and the compressed-blockmax
+        join) — pin the score join once instead of recomputing it per
+        consumer (a touched head term re-scores its full list every
+        micro-batch otherwise)."""
+        scored = scored_postings(
+            postings.select("term_id", "doc_id", "tf"),
+            self._read("doc_sizes").drop("generation"), lexicon,
+            num_docs, avg_len,
+        ).localCheckpoint(eager=True)
+        term_meta, _ = encode_stages(
+            _GenerationStore(self._path("segments"), gen), scored,
+            num_docs, avg_len, self.config,
+        )
+        return term_meta.withColumn("bound_factor", F.lit(1.0))
 
     # ------------------------------------------------------------ compact
 
@@ -718,37 +737,19 @@ class IncrementalIndexer:
         SURVEY §2.4). Returns the new generation number."""
         import shutil
 
-        prev = self._begin(recoding=True)
-        if prev is None:
+        st = self._begin(recoding=True)
+        if st is None:
             raise ValueError(f"{self.out}: nothing to compact")
-        st = self._stats_row()
-        gen = prev + 1
+        gen = int(st["gen"]) + 1
         n, ln = int(st["num_docs"]), int(st["collection_len"])
-        avg = (ln / n) if n else 0.0
-        # Eager localCheckpoint: `scored` feeds the segment write AND
-        # term_meta — pin the rows once instead of recomputing the
-        # corpus-sized score job per consumer.
-        scored = scored_postings(
-            self._read_or_empty("postings", _POSTINGS_DDL)
-            .select("term_id", "doc_id", "tf"),
-            self._read("doc_sizes").drop("generation"),
-            self._read(f"lexicon_g{prev}"), n, avg,
-        ).localCheckpoint(eager=True)
-        term_meta = build_term_meta(scored, n, avg, self.config.bm25)
-        fresh = build_segments(
-            scored, n, avg, self.config.index, self.config.bm25,
-            term_meta=term_meta,
+        lexicon = self._read(f"lexicon_g{gen - 1}")
+        term_meta = self._encode(
+            gen, self._read_or_empty("postings", _POSTINGS_DDL), lexicon,
+            n, (ln / n) if n else 0.0,
         )
-        fresh.withColumn("segment_gen", F.lit(gen)).sortWithinPartitions(
-            "term_id", "block_id"
-        ).write.mode("append").partitionBy("segment_gen").parquet(
-            self._path("segments")
-        )
-        lexicon = self._read(f"lexicon_g{prev}").withColumn(
-            "seg_gen", F.lit(gen)
-        )
-        lexicon.write.mode("overwrite").parquet(self._path(f"lexicon_g{gen}"))
-        term_meta = term_meta.withColumn("bound_factor", F.lit(1.0))
+        lexicon.withColumn("seg_gen", F.lit(gen)).write.mode(
+            "overwrite"
+        ).parquet(self._path(f"lexicon_g{gen}"))
         term_meta.write.mode("overwrite").parquet(
             self._path(f"term_meta_g{gen}")
         )
@@ -785,34 +786,15 @@ class IncrementalIndexer:
         ).drop("seg_gen", "segment_gen")
 
     def index(self) -> InvertedIndex:
-        committed = self._committed_gen()
-        if committed is None:
-            raise ValueError(f"{self.out}: no committed generation yet")
+        # a read-only open refuses a mismatched stored index too, or
+        # queries decode old-layout payloads (silent garbage) or
+        # parse/score inconsistently with the stored segments
+        st = self._checked_stats()
+        committed = int(st["gen"])
         # Committed-state reads: the generation filters prune any
         # partition a crashed (not yet rolled-back) generation left.
         live = F.col("generation") <= committed
         docs = self._read("docs").filter(live)
-        st = self._stats_row()
-        stored_wire = st.get("wire_version", 1)
-        if stored_wire != WIRE_VERSION:
-            # Same guard _begin() applies before appending: a read-only
-            # open must refuse too, or queries decode old-layout
-            # payloads with the new byte layout (silent garbage).
-            raise ValueError(
-                f"{self.out}: stored segments use codec wire version "
-                f"{stored_wire} but this build decodes {WIRE_VERSION} "
-                "— opening would mis-decode; re-encode with compact() "
-                "under the writing version, or rebuild"
-            )
-        a_fp, b_fp = st.get("analyzer_fp"), st.get("build_fp")
-        if (a_fp is not None and a_fp != self._analyzer_fp) or (
-                b_fp is not None and b_fp != self._build_fp):
-            raise ValueError(
-                f"{self.out}: this indexer's config differs from the "
-                "one the stored index was built with — queries would "
-                "parse/score inconsistently with the stored segments; "
-                "open with the stored config"
-            )
         n = int(st["num_docs"])
         ln = int(st["collection_len"])
         return InvertedIndex(

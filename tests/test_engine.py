@@ -1566,27 +1566,6 @@ def test_range_batch_heterogeneous_k(index, parsed, oracle_topk):
     )
 
 
-def test_assign_global_ids_count_and_sum_out(spark):
-    """count_out rides the offset collect: n_rows AND (with sum_col)
-    the column sum must be exact — build_index and the incremental
-    indexer derive collection stats from these with no extra corpus
-    pass."""
-    import pandas as pd
-
-    from pisa_spark.build.ids import assign_global_ids
-
-    pdf = pd.DataFrame({
-        "key": [f"k{i:04d}" for i in range(777)],
-        "w": [(i * 7) % 23 + 1 for i in range(777)],
-    })
-    df = spark.createDataFrame(pdf, schema="key string, w int").repartition(9)
-    out: dict = {}
-    res = assign_global_ids(df, "key", "rid", count_out=out, sum_col="w")
-    assert out["n_rows"] == 777
-    assert out["sum"] == int(pdf["w"].sum())
-    assert sorted(r["rid"] for r in res.select("rid").collect()) == list(range(777))
-
-
 def _row_number_ids(df, key="key"):
     """The single-partition reference: row_number() over the key - 1."""
     from pyspark.sql import Window
@@ -1599,18 +1578,16 @@ def _row_number_ids(df, key="key"):
 def test_assign_global_ids_matches_row_number(spark, n_keys, parts):
     """In-place numbering equals the row_number reference when most
     range partitions are empty (3 keys over 12) and when everything
-    is one partition; count_out/sum_col ride the same collect."""
+    is one partition; count_out rides the same collect."""
     from pisa_spark.build.ids import assign_global_ids
 
     keys = [f"k{(i * 7919) % n_keys:04d}" for i in range(n_keys)]
-    df = spark.createDataFrame(
-        [(k, i + 1) for i, k in enumerate(keys)], "key string, w int"
-    ).repartition(4)
+    df = spark.createDataFrame([(k,) for k in keys], "key string").repartition(4)
     out: dict = {}
     got = assign_global_ids(df, "key", "rid", num_partitions=parts,
-                            count_out=out, sum_col="w")
+                            count_out=out)
     assert {r["key"]: r["rid"] for r in got.collect()} == _row_number_ids(df)
-    assert out == {"n_rows": n_keys, "sum": n_keys * (n_keys + 1) // 2}
+    assert out == {"n_rows": n_keys}
 
 
 def test_assign_global_ids_forbid_null_raises(spark):

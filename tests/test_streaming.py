@@ -289,6 +289,49 @@ def test_compact_reclaims_superseded_generations(spark, tmp_path):
     assert np.allclose(got["score"].values, want["score"].values, atol=1e-9)
 
 
+def test_compacted_generations_equal_batch_build(spark, tmp_path):
+    """compact() and build_index encode through one tail
+    (pipeline.encode_stages): after two generations and a compact,
+    term_meta equals the batch build's per term string EXACTLY on df,
+    occurrence_count and max_score, and the decoded segments hold the
+    same (term, url, tf) postings (docIDs differ by design)."""
+    from pisa_spark.build import decode_segments
+    from pisa_spark.index import build_index
+    from pisa_spark.streaming import IncrementalIndexer
+
+    pages = _pages(spark).persist()
+    inc = IncrementalIndexer(spark, str(tmp_path / "inc_tail"), CFG)
+    inc.add_generation(pages.filter(F.crc32(F.col("url")) % 2 == 0))
+    inc.add_generation(pages.filter(F.crc32(F.col("url")) % 2 == 1))
+    inc.compact()
+    inc_index = inc.index()
+    batch_index = build_index(spark, pages, CFG)
+
+    def term_meta(idx):
+        return (
+            idx.term_meta.join(idx.lexicon.select("term", "term_id"), "term_id")
+            .select("term", "df", "occurrence_count", "max_score")
+            .toPandas().sort_values("term").reset_index(drop=True)
+        )
+
+    def postings(idx):
+        return (
+            decode_segments(idx.segments, CFG.index)
+            .join(idx.lexicon.select("term", "term_id"), "term_id")
+            .join(idx.docmap, "doc_id")
+            .select("term", "url", "tf")
+            .toPandas().sort_values(["term", "url"]).reset_index(drop=True)
+        )
+
+    want = term_meta(batch_index)
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(term_meta(inc_index), want, check_exact=True)
+    want = postings(batch_index)
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(postings(inc_index), want, check_exact=True)
+    pages.unpersist()
+
+
 def test_structured_streaming_drains_landing_zone(spark, tmp_path):
     from pisa_spark.streaming import run_stream_indexing
 
