@@ -1,16 +1,36 @@
-"""Threshold estimation: single-term k-th-score caches.
+"""Threshold estimation: the reference fork's k-th-score estimator families.
 
 The reference fork's research theme (tools/kth_threshold*.cpp, ~24
-variants, SURVEY §2.13): precompute each term's k-th best single-term
-score; a disjunctive query's k-th final score is >= the max of its
-terms' cached k-th scores (every term contribution is >= 0), so that
-max is a SOUND initial heap threshold — WAND/BMW/MaxScore start
-pruning immediately instead of warming the heap from 0, and no
-safe-mode rerun is ever needed (unlike the reference's risky
-estimates, tools/queries.cpp:74-90).
+variants, SURVEY §2.13): estimate a query's k-th best final score
+before running it, so WAND/BMW/MaxScore start pruning from a warm heap
+threshold instead of 0. Every family here is SOUND — each estimate
+sums or maxes exact, non-negative score components over a subset of
+the query's terms or docs, so it never exceeds the true k-th and no
+safe-mode rerun is needed (unlike the reference's risky estimates,
+tools/queries.cpp:74-90) — except sampling, the fork's risky analysis
+tool (executor.topk_search_safe reruns its under-filled queries).
 
-Build side: one window over the scored postings per term — a single
-range-shuffle, partial top-k per partition under AQE.
+Families: the single-term cache (kth_score_cache, estimate_thresholds)
+and its budgeted form; term pairs; sampling; combine-did (per-term
+prefix SUM), combine-did-new (comb prefix MAX), substructure (deduped
+per-term components of comb prefixes); intersection (set-partition
+slicings); lookup (budgeted drain + exact lookup); and the simulators'
+evaluation protocol (real_kth_thresholds, quality_ranked,
+estimator_quality).
+
+Every family is composed from the same private primitives — a new
+estimator composes them too, instead of writing its own window:
+- ``_micro_postings``: the one BM25 micro scoring expression,
+  optionally weighted by a workload's per-query term weights;
+- ``_top_n_per_group``: the two-phase salted top-n, the module's only
+  window;
+- the comb cache, ``_gram_comb_members`` + ``_comb_prefix``: every
+  <= gram subset ("comb") of a query's terms and the top-n (did,
+  score) prefix of its disjunctive sub-query;
+- ``_kth_tail``: the per-query k-th best with the forks' sentinels
+  (getTopKFromMap, tools/kth_threshold_intersection_new.cpp:211-232);
+- ``_at_k`` / ``_cached_kth`` (the per-k guards) and ``_most_queried``
+  (the budget forks' exist-list selection).
 """
 
 from __future__ import annotations
@@ -20,6 +40,203 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pisa_spark.functions.scoring import micro_sql
 from pisa_spark.index import InvertedIndex
 
+# First-phase salt count of _top_n_per_group — the SCALE KNOB: size it
+# so head_list_len / _SALTS postings fit one task (64 suits the test
+# corpora; a 10^12-doc deployment wants ~2^16+). Output is identical
+# for every value.
+_SALTS = 64
+
+_COMB_GRAM_ERROR = ("gram combs support 1 <= gram <= 4 "
+                    "(the fork's single..quadruplet prefix files)")
+
+
+def _at_k(parsed: DataFrame, k: int) -> DataFrame:
+    """The workload rows whose query asks this ``k`` (every row when
+    ``parsed`` carries no k): an estimate computed for one k is not a
+    bound for a query asking another, so such queries get none."""
+    if "k" in parsed.columns:
+        return parsed.filter(F.col("k") == F.lit(k))
+    return parsed
+
+
+def _cached_kth(parsed: DataFrame, cache: DataFrame) -> DataFrame:
+    """``parsed`` left-joined to a broadcast single-term cache, with
+    ``kth_micro`` nulled where the cache was built for a different k
+    than the query asks (a smaller-k cache returns a higher k'-th
+    score, which is NOT a lower bound for the query's k)."""
+    joined = parsed.join(F.broadcast(cache), "term_id", "left")
+    if "cache_k" in cache.columns and "k" in parsed.columns:
+        joined = joined.withColumn(
+            "kth_micro",
+            F.when(F.col("cache_k") == F.col("k"), F.col("kth_micro")),
+        )
+    return joined
+
+
+def _micro_postings(index: InvertedIndex, parsed: DataFrame | None = None,
+                    postings: DataFrame | None = None) -> DataFrame:
+    """Postings scored with the engine's micro BM25 as ``m`` — the one
+    scoring expression of this module. Without ``parsed``: every
+    posting, unweighted (term_id, doc_id, m). With it: (query_id,
+    term_id, doc_id, m), each workload term's postings scaled by the
+    query's term weight in the SAME micro quantization the kernels
+    use; the broadcast of the tiny parsed side prunes the postings
+    scan to workload terms. ``postings`` overrides the index table
+    (the sampling fork passes a deterministic doc sample)."""
+    from pisa_spark.build.segments import scored_postings
+    from pisa_spark.functions.scoring import bm25_sql_expr
+
+    scored = scored_postings(
+        postings if postings is not None else index.postings,
+        index.doc_sizes, index.lexicon,
+        index.num_docs, index.avg_len,
+    )
+    bm25 = bm25_sql_expr(
+        tf="tf", df="df", doc_len="doc_len",
+        num_docs=str(float(index.num_docs)), avg_len=str(float(index.avg_len)),
+        k1=index.config.bm25.k1, b=index.config.bm25.b,
+    )
+    if parsed is None:
+        return scored.withColumn("m", F.expr(micro_sql(bm25)))
+    return (
+        scored.join(
+            F.broadcast(parsed.select("query_id", "term_id", "weight")),
+            "term_id",
+        )
+        .withColumn("m", F.expr(micro_sql(bm25, weight="weight")))
+        .select("query_id", "term_id", "doc_id", "m")
+    )
+
+
+def _top_n_per_group(df: DataFrame, keys: list[str], n: int,
+                     value_col: str) -> DataFrame:
+    """Rows ranked <= ``n`` per ``keys`` group under (value DESC,
+    doc_id ASC), rank exposed as ``rn`` — the two-phase salted
+    window behind every cache, prefix and k-th in this module: a
+    per-(group, salt) partial top-n first (any salt's top-n
+    superset-contains the group-global top-n members that landed in
+    it, for ANY salt count), then the exact window over the <=
+    _SALTS*n survivors, so no single window partition ever spans a
+    posting-list-sized group (at 10^12 docs a head term has ~10^11
+    postings — one partition would be a straggler)."""
+    salted = df.withColumn("salt", F.col("doc_id") % _SALTS)
+    w1 = Window.partitionBy(*keys, "salt").orderBy(
+        F.col(value_col).desc(), F.col("doc_id").asc()
+    )
+    cand = (
+        salted.withColumn("rn1", F.row_number().over(w1))
+        .filter(F.col("rn1") <= n)
+    )
+    w2 = Window.partitionBy(*keys).orderBy(
+        F.col(value_col).desc(), F.col("doc_id").asc()
+    )
+    return (
+        cand.withColumn("rn", F.row_number().over(w2))
+        .filter(F.col("rn") <= n)
+        .drop("salt", "rn1")
+    )
+
+
+def _doc_sums(pm: DataFrame) -> DataFrame:
+    """(query_id, doc_id, ms): each doc's disjunctive score summed over
+    the workload micro postings ``pm`` it appears in."""
+    return pm.groupBy("query_id", "doc_id").agg(
+        F.sum("m").cast("long").alias("ms")
+    )
+
+
+def _most_queried(rows: DataFrame, key: str, budget: int) -> DataFrame:
+    """The ``budget`` values of ``key`` used by the most distinct
+    queries of ``rows`` (query_id, key, ...), ties by ``key`` ASC in
+    its own type — terms as numbers, combs as strings: the budget
+    forks' deterministic exist-list selection
+    (kth_threshold_budget_origional.cpp:73-125)."""
+    return (
+        rows.select("query_id", key).distinct()
+        .groupBy(key)
+        .agg(F.count("*").alias("qn"))
+        .orderBy(F.col("qn").desc(), F.col(key).asc())
+        .limit(budget)
+        .select(key)
+    )
+
+
+def _gram_comb_members(parsed: DataFrame, gram: int) -> DataFrame:
+    """(query_id, comb_key, term_id): every comb (subset) of 1..``gram``
+    of the query's distinct terms, keyed by the ascending '-'-joined
+    member ids — the forks' gram enumeration
+    (kth_threshold_combine_did_new.cpp getAllPossibleComb :96-146 /
+    term_to_string). Workload-sized throughout (<= queries x
+    C(n, <=gram) rows); every join is broadcast. Callers validate
+    ``gram`` against their own fork's range."""
+    qdist = parsed.select("query_id", "term_id").distinct()
+    sized = qdist.select(
+        "query_id", F.array("term_id").alias("members")
+    )
+    out = sized
+    for _ in range(gram - 1):
+        sized = (
+            sized.join(F.broadcast(qdist), "query_id")
+            .filter(F.col("term_id") > F.element_at("members", -1))
+            .select(
+                "query_id",
+                F.concat("members", F.array("term_id")).alias("members"),
+            )
+        )
+        out = out.unionByName(sized)
+    return out.select(
+        "query_id",
+        F.concat_ws("-", F.col("members").cast("array<string>"))
+        .alias("comb_key"),
+        F.explode("members").alias("term_id"),
+    )
+
+
+def _comb_prefix(members: DataFrame, pm: DataFrame, n: int) -> DataFrame:
+    """(query_id, comb_key, doc_id, ms, rn): the comb cache — each
+    comb's top-``n`` (did, score) entries of its own disjunctive
+    sub-query (a doc under any member sums the present members'
+    weighted micros; union semantics), ranked ``rn`` — the forks'
+    single/duplet/triplet/quadruplet prefix files
+    (kth_threshold_combine_did_new.cpp:370-428). ``members`` comes
+    from _gram_comb_members (possibly budget- or size-filtered), ``pm``
+    from _micro_postings. A head-term comb is posting-list sized, so
+    the prefix is the two-phase salted top-n."""
+    combdoc = (
+        pm.join(F.broadcast(members), ["query_id", "term_id"])
+        .groupBy("query_id", "comb_key", "doc_id")
+        .agg(F.sum("m").cast("long").alias("ms"))
+    )
+    return _top_n_per_group(combdoc, ["query_id", "comb_key"], n, "ms")
+
+
+def _kth_tail(parsed: DataFrame, perdoc: DataFrame, k: int, missing: int,
+              max_terms: int | None = None) -> DataFrame:
+    """(query_id, threshold_micro): the k-th best ``ms`` per query over
+    ``perdoc`` (query_id, doc_id, ms) with the forks' pinned tie order
+    (ms DESC, doc_id ASC), ``missing`` for every ``parsed`` query
+    holding fewer than k docs (getTopKFromMap's sentinel), and -1 for
+    queries of more than ``max_terms`` distinct terms (the forks skip
+    them before estimating) — the shared tail of every per-query
+    estimator."""
+    kth = (
+        _top_n_per_group(perdoc, ["query_id"], k, "ms")
+        .filter(F.col("rn") == k)
+        .select("query_id", "ms")
+    )
+    value = F.coalesce(F.col("ms"), F.lit(missing))
+    if max_terms is None:
+        qids = parsed.select("query_id").distinct()
+    else:
+        qids = (
+            parsed.select("query_id", "term_id").distinct()
+            .groupBy("query_id").agg(F.count("*").alias("n"))
+        )
+        value = F.when(F.col("n") > max_terms, F.lit(-1)).otherwise(value)
+    return qids.join(F.broadcast(kth), "query_id", "left").select(
+        "query_id", value.cast("long").alias("threshold_micro"),
+    )
+
 
 def kth_score_cache(index: InvertedIndex, k: int = 10) -> DataFrame:
     """(term_id, kth_micro, cache_k): the k-th best unweighted
@@ -28,25 +245,12 @@ def kth_score_cache(index: InvertedIndex, k: int = 10) -> DataFrame:
     ``estimate_thresholds`` only uses entries whose cache_k matches
     the query's k (a cache built with a SMALLER k returns a higher
     k'-th score, which is NOT a lower bound for the query's k)."""
-    from pisa_spark.build.segments import scored_postings
-    from pisa_spark.functions.scoring import bm25_sql_expr
-
-    scored = scored_postings(
-        index.postings, index.doc_sizes, index.lexicon,
-        index.num_docs, index.avg_len,
-    )
-    bm25 = bm25_sql_expr(
-        tf="tf", df="df", doc_len="doc_len",
-        num_docs=str(float(index.num_docs)), avg_len=str(float(index.avg_len)),
-        k1=index.config.bm25.k1, b=index.config.bm25.b,
-    )
-    with_micro = scored.withColumn("micro", F.expr(micro_sql(bm25)))
     return (
-        _top_n_per_group(with_micro, ["term_id"], k, "micro")
+        _top_n_per_group(_micro_postings(index), ["term_id"], k, "m")
         .filter(F.col("rn") == k)
         .select(
             "term_id",
-            F.col("micro").alias("kth_micro"),
+            F.col("m").alias("kth_micro"),
             F.lit(k).alias("cache_k"),
         )
     )
@@ -66,13 +270,7 @@ def estimate_thresholds(parsed: DataFrame, cache: DataFrame) -> DataFrame:
     # broadcast the filtered cache into the left join — neither join
     # ever hints a vocabulary-sized side.
     qterms = parsed.select("term_id").distinct()
-    cache_small = cache.join(F.broadcast(qterms), "term_id")
-    joined = parsed.join(F.broadcast(cache_small), "term_id", "left")
-    if "cache_k" in joined.columns and "k" in parsed.columns:
-        joined = joined.withColumn(
-            "kth_micro",
-            F.when(F.col("cache_k") == F.col("k"), F.col("kth_micro")),
-        )
+    joined = _cached_kth(parsed, cache.join(F.broadcast(qterms), "term_id"))
     # w * (m-1) < w * true_score*1e6 < weighted_micro + 0.5, so
     # floor(w*(m-1)) never exceeds the weighted micro the kernels
     # compute — w*m alone could, because m rounds half-up.
@@ -84,95 +282,6 @@ def estimate_thresholds(parsed: DataFrame, cache: DataFrame) -> DataFrame:
     )
     return joined.select("query_id", est.alias("est")).groupBy("query_id").agg(
         F.max("est").alias("threshold_micro")
-    )
-
-
-def _workload_micro_postings(index: InvertedIndex, parsed: DataFrame,
-                             postings: DataFrame | None = None) -> DataFrame:
-    """(query_id, term_id, doc_id, m): each workload term's postings
-    scored with the query's weighted micro BM25 — the shared input of
-    every fork-family estimator. The broadcast of the tiny parsed
-    side prunes the postings scan to workload terms; ``postings``
-    overrides the index table (the sampling fork passes a
-    deterministic doc sample)."""
-    from pisa_spark.build.segments import scored_postings
-    from pisa_spark.functions.scoring import bm25_sql_expr
-
-    scored = scored_postings(
-        postings if postings is not None else index.postings,
-        index.doc_sizes, index.lexicon,
-        index.num_docs, index.avg_len,
-    )
-    bm25 = bm25_sql_expr(
-        tf="tf", df="df", doc_len="doc_len",
-        num_docs=str(float(index.num_docs)), avg_len=str(float(index.avg_len)),
-        k1=index.config.bm25.k1, b=index.config.bm25.b,
-    )
-    return (
-        scored.join(
-            F.broadcast(parsed.select("query_id", "term_id", "weight")),
-            "term_id",
-        )
-        .withColumn("m", F.expr(micro_sql(bm25, weight="weight")))
-        .select("query_id", "term_id", "doc_id", "m")
-    )
-
-
-def _top_n_per_group(df: DataFrame, keys: list[str], n: int,
-                     value_col: str, salts: int = 64) -> DataFrame:
-    """Rows ranked <= ``n`` per ``keys`` group under (value DESC,
-    doc_id ASC), rank exposed as ``rn`` — the two-phase salted
-    window shared by every estimator cache: a per-(group, salt)
-    partial top-n first (any salt's top-n superset-contains the
-    group-global top-n members that landed in it, for ANY salt
-    count), then the exact window over the <= salts*n survivors, so
-    no single window partition ever spans a posting-list-sized group
-    (at 10^12 docs a head term has ~10^11 postings — one partition
-    would be a straggler). ``salts`` is the SCALE KNOB: size it so
-    head_list_len / salts fits one task (the default 64 suits the
-    test corpora; a 10^12-doc deployment wants ~2^16+); the output is
-    identical for every value."""
-    salted = df.withColumn("salt", F.col("doc_id") % salts)
-    w1 = Window.partitionBy(*keys, "salt").orderBy(
-        F.col(value_col).desc(), F.col("doc_id").asc()
-    )
-    cand = (
-        salted.withColumn("rn1", F.row_number().over(w1))
-        .filter(F.col("rn1") <= n)
-    )
-    w2 = Window.partitionBy(*keys).orderBy(
-        F.col(value_col).desc(), F.col("doc_id").asc()
-    )
-    return (
-        cand.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= n)
-        .drop("salt", "rn1")
-    )
-
-
-def _pair_doc_scores(pm: DataFrame, parsed: DataFrame) -> DataFrame:
-    """(query_id, ta, tb, doc_id, ms): each workload term-PAIR's
-    disjunctive weighted micro scores (ta < tb, union semantics:
-    a doc present under either member sums the present members) —
-    shared by the pair cache and the lookup drain's gram-2 combs."""
-    qp = (
-        parsed.select("query_id", F.col("term_id").alias("ta"))
-        .join(F.broadcast(
-            parsed.select("query_id", F.col("term_id").alias("tb"))
-        ), "query_id")
-        .filter(F.col("ta") < F.col("tb"))
-    )
-    pda = pm.withColumnRenamed("term_id", "ta").join(
-        F.broadcast(qp), ["query_id", "ta"]
-    )
-    pdb = pm.withColumnRenamed("term_id", "tb").join(
-        F.broadcast(qp), ["query_id", "tb"]
-    )
-    cols = ["query_id", "ta", "tb", "doc_id", "m"]
-    return (
-        pda.select(*cols).unionByName(pdb.select(*cols))
-        .groupBy("query_id", "ta", "tb", "doc_id")
-        .agg(F.sum("m").cast("long").alias("ms"))
     )
 
 
@@ -188,19 +297,19 @@ def pair_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
     query's own weights in the SAME micro quantization the kernels
     use, so the bound is exact-integer tight (no -1 slack needed).
     Pairs come from the workload itself — the budgeted form of the
-    fork's pairs file.
+    fork's pairs file: the comb cache's size-2 combs at depth k.
 
     Mirrors the single-term cache_k guard: a query whose own ``k``
     differs from this cache's ``k`` gets NO pair estimate (its pair
     k-th score at a different k is not a lower bound for its k), so
     it falls back to estimate_thresholds' own guarded value."""
-    if "k" in parsed.columns:
-        parsed = parsed.filter(F.col("k") == F.lit(k))
-
-    pm = _workload_micro_postings(index, parsed)
-    pairdoc = _pair_doc_scores(pm, parsed)
+    parsed = _at_k(parsed, k)
+    # a single's comb_key has no '-': keep the pairs only
+    pairs = _gram_comb_members(parsed, 2).filter(
+        F.col("comb_key").contains("-")
+    )
     return (
-        _top_n_per_group(pairdoc, ["query_id", "ta", "tb"], k, "ms")
+        _comb_prefix(pairs, _micro_postings(index, parsed), k)
         .filter(F.col("rn") == k)
         .groupBy("query_id")
         .agg(F.max("ms").alias("pair_micro"))
@@ -226,22 +335,9 @@ def budget_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
     <= budget terms (semi-join prunes the postings scan before the
     window), so cost shrinks with the budget — the fork's entire
     point."""
-    sel = (
-        parsed.groupBy("term_id")
-        .agg(F.count_distinct("query_id").alias("qn"))
-        .orderBy(F.col("qn").desc(), F.col("term_id").asc())
-        .limit(budget)
-        .select("term_id")
-    )
+    sel = _most_queried(parsed, "term_id", budget)
     cache = kth_score_cache(index, k=k).join(F.broadcast(sel), "term_id")
-    joined = parsed.join(F.broadcast(cache), "term_id", "left")
-    if "k" in parsed.columns:
-        # same guard as estimate_thresholds: a cache built for a
-        # different k is NOT a lower bound for this query's k
-        joined = joined.withColumn(
-            "kth_micro",
-            F.when(F.col("cache_k") == F.col("k"), F.col("kth_micro")),
-        )
+    joined = _cached_kth(parsed, cache)
     # Every non-skipped query has weight 1 on every term (a dup is
     # skipped below), so the UNWEIGHTED cached k-th micro equals the
     # kernels' weighted micro exactly — no estimate_thresholds-style
@@ -298,35 +394,19 @@ def sampling_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
     sample, each independently with probability 1/sample_mod.
 
     Scale shape: the sample filter lands in the postings scan
-    (Catalyst pushdown), the per-query top-k' reuses the two-phase
-    salted window, and nothing query-independent is materialized."""
-    if "k" in parsed.columns:
-        # same guard as pair_kth_thresholds: an estimate computed for
-        # this k is meaningless for a query asking a different k
-        parsed = parsed.filter(F.col("k") == F.lit(k))
+    (Catalyst pushdown), the per-query k'-th is the shared tail's
+    two-phase salted window, and nothing query-independent is
+    materialized."""
+    parsed = _at_k(parsed, k)
     k_prime = sampling_k_prime(k, 1.0 / sample_mod, target_o)
-    qids = parsed.select("query_id").distinct()
     if k_prime < 0:
-        return qids.select(
+        return parsed.select("query_id").distinct().select(
             "query_id", F.lit(-1).cast("long").alias("threshold_micro")
         )
-    qdoc = (
-        _workload_micro_postings(
-            index, parsed,
-            postings=index.postings.filter(F.col("doc_id") % sample_mod == 0),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("m").cast("long").alias("ms"))
-    )
-    kth = (
-        _top_n_per_group(qdoc, ["query_id"], k_prime, "ms")
-        .filter(F.col("rn") == k_prime)
-        .select("query_id", "ms")
-    )
-    return qids.join(F.broadcast(kth), "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("ms"), F.lit(-1)).cast("long")
-        .alias("threshold_micro"),
+    sample = index.postings.filter(F.col("doc_id") % sample_mod == 0)
+    return _kth_tail(
+        parsed, _doc_sums(_micro_postings(index, parsed, sample)),
+        k_prime, missing=-1,
     )
 
 
@@ -349,9 +429,9 @@ def combine_did_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
     kernel bootstrap. Tighter than the single-term cache whenever two
     of a query's terms share a prefix did (the fork's whole point).
 
-    Singles-gram form; the reference's termConsidered >= 2 modes add
-    pair/triple prefixes into the same did map, which this table-layout
-    extends naturally (union more gram caches before the did sum).
+    Singles-gram form (the comb cache's gram-1 combs); the reference's
+    termConsidered >= 2 modes are combine_did_new /
+    substructure_kth_thresholds.
 
     ``budget`` models the BUDGETED combine-did fork
     (tools/kth_threshold_budget_combine_did.cpp:100-145,254-262: the
@@ -362,139 +442,21 @@ def combine_did_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
     cached prefixes; the others contribute 0 to every did. Still
     sound — dropping components only shrinks the combined sums.
 
-    Scale shape: top-d per (query, term) is the same two-phase salted
-    window as kth_score_cache; everything downstream is prefix-sized
+    Scale shape: everything after the comb prefixes is prefix-sized
     (<= terms * d rows per query), not posting-list-sized; the budget
-    cap is one tiny workload aggregate semi-joined into pm (cost
-    SHRINKS with the budget — the fork's whole point)."""
-    if "k" in parsed.columns:
-        # same guard as pair_kth_thresholds: a combined k-th computed
-        # for this k is not a bound for a query asking a different k
-        parsed = parsed.filter(F.col("k") == F.lit(k))
-
-    pm = _workload_micro_postings(index, parsed)
+    cap is one tiny workload aggregate (cost SHRINKS with the budget —
+    the fork's whole point)."""
+    parsed = _at_k(parsed, k)
+    singles = _gram_comb_members(parsed, 1)
     if budget is not None:
-        sel = (
-            parsed.groupBy("term_id")
-            .agg(F.count_distinct("query_id").alias("qn"))
-            .orderBy(F.col("qn").desc(), F.col("term_id").asc())
-            .limit(budget)
-            .select("term_id")
+        singles = singles.join(
+            F.broadcast(_most_queried(parsed, "term_id", budget)), "term_id"
         )
-        pm = pm.join(F.broadcast(sel), "term_id")
-    prefix = _top_n_per_group(pm, ["query_id", "term_id"], d, "m")
+    prefix = _comb_prefix(singles, _micro_postings(index, parsed), d)
     combined = prefix.groupBy("query_id", "doc_id").agg(
-        F.sum("m").cast("long").alias("ms")
+        F.sum("ms").cast("long").alias("ms")
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("ms").desc(), F.col("doc_id").asc()
-    )
-    kth = (
-        combined.withColumn("qrn", F.row_number().over(wq))
-        .filter(F.col("qrn") == k)
-        .select("query_id", "ms")
-    )
-    qids = parsed.select("query_id").distinct()
-    return qids.join(F.broadcast(kth), "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("ms"), F.lit(-2)).cast("long")
-        .alias("threshold_micro"),
-    )
-
-
-def _gram_comb_members(parsed: DataFrame, gram: int) -> DataFrame:
-    """(query_id, comb_key, term_id): every comb (subset) of 1..``gram``
-    of the query's distinct terms, keyed by the sorted '-'-joined
-    member ids — the combine-did-new / substructure forks' gram
-    enumeration (kth_threshold_combine_did_new.cpp getAllPossibleComb
-    :96-146 / term_to_string). Workload-sized throughout (<= queries
-    x C(n, <=gram) rows); every join is broadcast."""
-    if gram not in (1, 2, 3, 4):
-        raise ValueError("gram combs support 1 <= gram <= 4 "
-                         "(the fork's single..quadruplet prefix files)")
-    qdist = parsed.select("query_id", "term_id").distinct()
-    sized = qdist.select(
-        "query_id", F.array("term_id").alias("members")
-    )
-    out = sized
-    for _ in range(gram - 1):
-        sized = (
-            sized.join(F.broadcast(qdist), "query_id")
-            .filter(F.col("term_id") > F.element_at("members", -1))
-            .select(
-                "query_id",
-                F.concat("members", F.array("term_id")).alias("members"),
-            )
-        )
-        out = out.unionByName(sized)
-    return out.select(
-        "query_id",
-        F.concat_ws("-", F.col("members").cast("array<string>"))
-        .alias("comb_key"),
-        F.explode("members").alias("term_id"),
-    )
-
-
-def _gram_comb_prefixes(index: InvertedIndex, parsed: DataFrame,
-                        d: int, gram: int,
-                        budget: int | None = None):
-    """Shared cache layer of the combine-did-new / substructure forks:
-    ``members`` (query_id, comb_key, term_id) comb membership, ``pm``
-    the workload micro postings, and ``prefix`` (query_id, comb_key,
-    doc_id, ms) — each cached comb's top-``d`` dids by its disjunctive
-    summed score (the forks' single/duplet/triplet/quadruplet prefix
-    files, kth_threshold_combine_did_new.cpp:370-428).
-
-    ``budget`` models the budgeted variants
-    (kth_threshold_combine_did_new_budget.cpp load_lexicon: only
-    grams on the freq list have cached prefixes): keep the ``budget``
-    most-queried combs (distinct-query count DESC, comb_key ASC —
-    the same deterministic exist-list selection as the budget fork);
-    uncached combs contribute no prefix entries."""
-    members = _gram_comb_members(parsed, gram)
-    if budget is not None:
-        sel = (
-            members.select("query_id", "comb_key").distinct()
-            .groupBy("comb_key")
-            .agg(F.count("*").alias("qn"))
-            .orderBy(F.col("qn").desc(), F.col("comb_key").asc())
-            .limit(budget)
-            .select("comb_key")
-        )
-        members = members.join(F.broadcast(sel), "comb_key")
-    pm = _workload_micro_postings(index, parsed)
-    combdoc = (
-        pm.join(F.broadcast(members), ["query_id", "term_id"])
-        .groupBy("query_id", "comb_key", "doc_id")
-        .agg(F.sum("m").cast("long").alias("ms"))
-    )
-    # head-term combs are posting-list sized -> two-phase salted top-d
-    prefix = _top_n_per_group(
-        combdoc, ["query_id", "comb_key"], d, "ms"
-    ).select("query_id", "comb_key", "doc_id", "ms")
-    return members, pm, prefix
-
-
-def _qids_with_kth(parsed: DataFrame, perdoc: DataFrame, k: int,
-                   missing: int = -2) -> DataFrame:
-    """k-th best ``ms`` per query over ``perdoc`` (query_id, doc_id,
-    ms) with the forks' pinned tie order (ms DESC, doc_id ASC),
-    ``missing`` when fewer than k dids are cached (getTopKFromMap's
-    sentinel) — the shared tail of every combine-family estimator."""
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("ms").desc(), F.col("doc_id").asc()
-    )
-    kth = (
-        perdoc.withColumn("qrn", F.row_number().over(wq))
-        .filter(F.col("qrn") == k)
-        .select("query_id", "ms")
-    )
-    qids = parsed.select("query_id").distinct()
-    return qids.join(F.broadcast(kth), "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("ms"), F.lit(missing)).cast("long")
-        .alias("threshold_micro"),
-    )
+    return _kth_tail(parsed, combined, k, missing=-2)
 
 
 def combine_did_new_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
@@ -521,23 +483,33 @@ def combine_did_new_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
     union of cached components instead of taking the best single
     comb — see substructure_kth_thresholds).
 
+    ``budget`` models the budgeted variant
+    (kth_threshold_combine_did_new_budget.cpp load_lexicon: only
+    grams on the freq list have cached prefixes): keep the ``budget``
+    most-queried combs (distinct-query count DESC, comb_key ASC —
+    the same deterministic exist-list selection as the budget fork);
+    uncached combs contribute no prefix entries.
+
     Deviation, documented: the tool pushes -1 for queries whose TRUE
     result set holds < k docs (its simulator skips them before
     estimating, :368-374); that coupling belongs to the quality
     harness (estimator_quality), not the estimator — here such
     queries estimate from their caches like any other.
 
-    Scale shape: comb enumeration is workload-sized; comb prefixes
-    reuse the two-phase salted top-d window; everything downstream is
-    prefix-sized (<= combs x d rows per query)."""
-    if "k" in parsed.columns:
-        # same guard as the other per-k estimators
-        parsed = parsed.filter(F.col("k") == F.lit(k))
-    _, _, prefix = _gram_comb_prefixes(index, parsed, d, gram, budget)
-    best = prefix.groupBy("query_id", "doc_id").agg(
-        F.max("ms").alias("ms")
-    )
-    return _qids_with_kth(parsed, best, k)
+    Scale shape: comb enumeration is workload-sized; everything after
+    the comb prefixes is prefix-sized (<= combs x d rows per query)."""
+    if gram not in (1, 2, 3, 4):
+        raise ValueError(_COMB_GRAM_ERROR)
+    parsed = _at_k(parsed, k)
+    members = _gram_comb_members(parsed, gram)
+    if budget is not None:
+        members = members.join(
+            F.broadcast(_most_queried(members, "comb_key", budget)),
+            "comb_key",
+        )
+    prefix = _comb_prefix(members, _micro_postings(index, parsed), d)
+    best = prefix.groupBy("query_id", "doc_id").agg(F.max("ms").alias("ms"))
+    return _kth_tail(parsed, best, k, missing=-2)
 
 
 def substructure_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
@@ -563,24 +535,23 @@ def substructure_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
     semi-join back into the workload-pruned postings scan (the
     reference reads the score bytes it already holds; columnar
     postings re-read them instead of widening every prefix row)."""
-    if "k" in parsed.columns:
-        # same guard as the other per-k estimators
-        parsed = parsed.filter(F.col("k") == F.lit(k))
-    members, pm, prefix = _gram_comb_prefixes(index, parsed, d, gram)
+    if gram not in (1, 2, 3, 4):
+        raise ValueError(_COMB_GRAM_ERROR)
+    parsed = _at_k(parsed, k)
+    members = _gram_comb_members(parsed, gram)
+    pm = _micro_postings(index, parsed)
     # per-term components of every cached entry: a (did, term) pair
     # absent from pm is the reference's zero score byte (adds 0)
     comps = (
-        prefix.select("query_id", "comb_key", "doc_id")
+        _comb_prefix(members, pm, d).select("query_id", "comb_key", "doc_id")
         .join(F.broadcast(members), ["query_id", "comb_key"])
         .select("query_id", "term_id", "doc_id")
         .distinct()
     )
-    sums = (
+    sums = _doc_sums(
         pm.join(F.broadcast(comps), ["query_id", "term_id", "doc_id"])
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("m").cast("long").alias("ms"))
     )
-    return _qids_with_kth(parsed, sums, k)
+    return _kth_tail(parsed, sums, k, missing=-2)
 
 
 # Set-partition "slicings" of an n-distinct-term query, keyed by n —
@@ -688,71 +659,46 @@ def intersection_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
     scores — consistent with every other estimator here.
 
     Scale shape: slicing enumeration is a 264-row literal inline
-    table joined per query (no array indexing, no Python per row);
-    comb caches reuse the two-phase salted top-d window so no window
-    partition spans a head-term posting list; everything after the
+    table joined per query (no Python per row); the comb cache is
+    built once per query for its 2-5-term queries only (a comb shared
+    by several slicings is one prefix, joined by comb_key), so long
+    queries never enumerate C(n, <=5) combs; everything after the
     prefixes is comb-count x d sized, not posting-list sized."""
-    from pisa_spark.build.segments import scored_postings
-    from pisa_spark.functions.scoring import bm25_sql_expr
-
-    if "k" in parsed.columns:
-        # same guard as the other per-k estimators
-        parsed = parsed.filter(F.col("k") == F.lit(k))
-
-    spark = parsed.sparkSession
-    slice_pos = spark.createDataFrame(
+    parsed = _at_k(parsed, k)
+    slice_pos = parsed.sparkSession.createDataFrame(
         slicing_position_rows(), "n INT, slicing_id INT, comb_id INT, pos INT"
     )
-
-    # per-query sorted-distinct-term rank: pos is the slicing tables'
-    # index into the sorted term list
-    qdist = parsed.select("query_id", "term_id").distinct()
-    wpos = Window.partitionBy("query_id").orderBy(F.col("term_id").asc())
-    qrank = qdist.withColumn("pos", F.row_number().over(wpos) - 1)
-    qn = qdist.groupBy("query_id").agg(F.count("*").alias("n"))
-
-    # comb membership: (query_id, slicing_id, comb_id, term_id) for
-    # queries with a slicing table (2 <= n <= 5)
-    qcomb = (
-        qrank.join(F.broadcast(qn), "query_id")
-        .join(F.broadcast(slice_pos), ["n", "pos"])
-        .select("query_id", "slicing_id", "comb_id", "term_id")
+    # each query's ascending distinct terms: pos indexes the slicing
+    # tables into this list
+    qterms = parsed.groupBy("query_id").agg(
+        F.array_sort(F.collect_set("term_id")).alias("terms")
     )
-    # the gram knob: only combs of <= gram terms are cached
-    csz = qcomb.groupBy("query_id", "slicing_id", "comb_id").agg(
-        F.count("*").alias("csz")
-    )
-    qcomb = qcomb.join(
-        F.broadcast(csz.filter(F.col("csz") <= gram)),
-        ["query_id", "slicing_id", "comb_id"],
-    )
-
-    pm = _workload_micro_postings(index, parsed)
-    # each comb's disjunctive sub-query scores; distinct combs are
-    # deduplicated across slicings via the sorted member-term key so a
-    # comb's top-d is computed once per query, not once per slicing
+    # the slicings' combs of <= gram terms, keyed like the comb cache
+    # (queries without a slicing table, n = 1 or n > 5, have none)
     combkey = (
-        qcomb.groupBy("query_id", "slicing_id", "comb_id")
-        .agg(F.concat_ws("-", F.array_sort(F.collect_list("term_id")))
-             .alias("comb_key"))
-    )
-    combterms = (
-        qcomb.join(
-            F.broadcast(combkey), ["query_id", "slicing_id", "comb_id"]
+        qterms.select(
+            "query_id", F.size("terms").alias("n"),
+            F.posexplode("terms").alias("pos", "term_id"),
         )
-        .select("query_id", "comb_key", "term_id")
-        .distinct()
+        .join(F.broadcast(slice_pos), ["n", "pos"])
+        .groupBy("query_id", "slicing_id", "comb_id")
+        .agg(
+            F.concat_ws("-", F.array_sort(F.collect_list("term_id")))
+            .alias("comb_key"),
+            F.count("*").alias("csz"),
+        )
+        .filter(F.col("csz") <= gram)
     )
-    combdoc = (
-        pm.join(F.broadcast(combterms), ["query_id", "term_id"])
-        .groupBy("query_id", "comb_key", "doc_id")
-        .agg(F.sum("m").cast("long").alias("ms"))
+    sliced = parsed.join(
+        F.broadcast(
+            qterms.filter(F.size("terms").between(2, 5)).select("query_id")
+        ),
+        "query_id",
     )
-    # a head-term comb's doc set is posting-list sized — two-phase
-    # salted top-d so no single window partition spans one
-    prefix = _top_n_per_group(
-        combdoc, ["query_id", "comb_key"], d, "ms"
-    ).select("query_id", "comb_key", "doc_id", "ms")
+    prefix = _comb_prefix(
+        _gram_comb_members(sliced, min(gram, 5)),
+        _micro_postings(index, sliced), d,
+    )
     # per-slicing did sums over the cached prefixes, then max across
     # slicings, then the per-query k-th best
     slsum = (
@@ -760,27 +706,8 @@ def intersection_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
         .groupBy("query_id", "slicing_id", "doc_id")
         .agg(F.sum("ms").cast("long").alias("ms"))
     )
-    bestdoc = slsum.groupBy("query_id", "doc_id").agg(
-        F.max("ms").alias("ms")
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("ms").desc(), F.col("doc_id").asc()
-    )
-    kth = (
-        bestdoc.withColumn("qrn", F.row_number().over(wq))
-        .filter(F.col("qrn") == k)
-        .select("query_id", "ms")
-    )
-    return (
-        qn.join(F.broadcast(kth), "query_id", "left")
-        .select(
-            "query_id",
-            F.when(F.col("n") > 5, F.lit(-1))
-            .otherwise(F.coalesce(F.col("ms"), F.lit(-2)))
-            .cast("long")
-            .alias("threshold_micro"),
-        )
-    )
+    best = slsum.groupBy("query_id", "doc_id").agg(F.max("ms").alias("ms"))
+    return _kth_tail(parsed, best, k, missing=-2, max_terms=5)
 
 
 def lookup_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
@@ -814,11 +741,13 @@ def lookup_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
     with unordered tie-break and does not charge the per-comb head
     entries against the budget — set-wise we take the global
     top-``budget`` prefix rows per query with pinned ties (ms DESC,
-    doc_id ASC, comb ASC); scores stay in the engine's shared micro
-    quantization rather than the fork's short-quantized lookup units;
-    and combs are over distinct weighted terms like every estimator
-    here. gram in {1, 2} (singles / singles+pairs) — the fork's
-    experiments run termConsidered in the same range.
+    doc_id ASC; rows tied on both name the same did, so the drained
+    did SET is the same whichever comb's row is drained); scores stay
+    in the engine's shared micro quantization rather than the fork's
+    short-quantized lookup units; and combs are over distinct weighted
+    terms like every estimator here. gram in {1, 2} (singles /
+    singles+pairs) — the fork's experiments run termConsidered in the
+    same range.
 
     ``sample_mod`` models the SAMPLING-lookup fork
     (tools/kth_threshold_sampling_lookup.cpp:380-430,820-835: the
@@ -833,80 +762,29 @@ def lookup_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
     primitive and is not modeled: lookups here are set-oriented, one
     semi-join per batch rather than per-term RPC rounds.
 
-    Scale shape: per-comb prefixes reuse the two-phase salted top-N
-    window (N = budget caps what one comb can contribute); the global
-    drain is a per-query window over <= combs x budget rows; the
-    lookup is one semi-join of the candidate set against the
-    workload-pruned postings scan — never a full-index pass."""
+    Scale shape: per-comb prefixes are the comb cache at depth N =
+    budget (what one comb can contribute); the global drain is the
+    same two-phase top-N over <= combs x budget rows; the lookup is
+    one semi-join of the candidate set against the workload-pruned
+    postings scan — never a full-index pass."""
     if gram not in (1, 2):
         raise ValueError("lookup_kth_thresholds supports gram 1 or 2")
-    if "k" in parsed.columns:
-        # same guard as the other per-k estimators
-        parsed = parsed.filter(F.col("k") == F.lit(k))
-
-    pm = _workload_micro_postings(index, parsed)
+    parsed = _at_k(parsed, k)
+    pm = _micro_postings(index, parsed)
     # the sampled drain: only in-sample dids may become candidates;
     # their LOOKUP below still reads full exact scores from pm
-    pmd = (
-        pm.filter(F.col("doc_id") % sample_mod == 0)
-        if sample_mod is not None else pm
+    drained = pm if sample_mod is None else pm.filter(
+        F.col("doc_id") % sample_mod == 0
     )
-    # cached comb prefix rows: (query_id, comb, doc_id, ms)
-    combdoc = pmd.select(
-        "query_id",
-        F.concat_ws("-", F.col("term_id")).alias("comb"),
-        "doc_id",
-        F.col("m").cast("long").alias("ms"),
-    )
-    if gram == 2:
-        pairdoc = _pair_doc_scores(pmd, parsed).select(
-            "query_id",
-            F.concat_ws("-", F.col("ta"), F.col("tb")).alias("comb"),
-            "doc_id", "ms",
-        )
-        combdoc = combdoc.unionByName(pairdoc)
-    # two-phase salted per-comb top-budget (one comb can contribute at
-    # most `budget` drained entries), then the global budget drain
-    prefix = _top_n_per_group(
-        combdoc, ["query_id", "comb"], budget, "ms"
-    ).select("query_id", "comb", "doc_id", "ms")
-    wg = Window.partitionBy("query_id").orderBy(
-        F.col("ms").desc(), F.col("doc_id").asc(), F.col("comb").asc()
-    )
+    prefix = _comb_prefix(_gram_comb_members(parsed, gram), drained, budget)
     candidates = (
-        prefix.withColumn("grn", F.row_number().over(wg))
-        .filter(F.col("grn") <= budget)
+        _top_n_per_group(prefix, ["query_id"], budget, "ms")
         .select("query_id", "doc_id")
         .distinct()
     )
     # exact full-score lookup for every candidate
-    full = (
-        pm.join(F.broadcast(candidates), ["query_id", "doc_id"])
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("m").cast("long").alias("ms"))
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("ms").desc(), F.col("doc_id").asc()
-    )
-    kth = (
-        full.withColumn("qrn", F.row_number().over(wq))
-        .filter(F.col("qrn") == k)
-        .select("query_id", "ms")
-    )
-    qn = (
-        parsed.select("query_id", "term_id").distinct()
-        .groupBy("query_id").agg(F.count("*").alias("n"))
-    )
-    return (
-        qn.join(F.broadcast(kth), "query_id", "left")
-        .select(
-            "query_id",
-            F.when(F.col("n") > 16, F.lit(-1))
-            .otherwise(F.coalesce(F.col("ms"), F.lit(-2)))
-            .cast("long")
-            .alias("threshold_micro"),
-        )
-    )
+    full = _doc_sums(pm.join(F.broadcast(candidates), ["query_id", "doc_id"]))
+    return _kth_tail(parsed, full, k, missing=-2, max_terms=16)
 
 
 def real_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
@@ -916,19 +794,9 @@ def real_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
     tool's reference lists (kth_threshold_origional_score_generator
     .cpp:144-179: k in {10, 100, 1000}; 0 when the query has fewer
     results, its sentinel). The ground truth every simulator /
-    real-world fork evaluates its estimates against.
-
-    Scale shape: one disjunctive sum per (query, did) + one window
-    per query capped at max(ks) rows read — the workload-pruned
-    postings scan, never a full-index pass."""
-    pm = _workload_micro_postings(index, parsed)
-    full = pm.groupBy("query_id", "doc_id").agg(
-        F.sum("m").cast("long").alias("ms")
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("ms").desc(), F.col("doc_id").asc()
-    )
-    ranked = full.withColumn("rn", F.row_number().over(wq)).filter(
+    real-world fork evaluates its estimates against: quality_ranked
+    down to max(ks), read at each k."""
+    ranked = quality_ranked(index, parsed, max(ks, default=0)).filter(
         F.col("rn").isin(list(ks))
     )
     kdf = parsed.sparkSession.createDataFrame(
@@ -953,19 +821,15 @@ def real_kth_thresholds(index: InvertedIndex, parsed: DataFrame,
 
 def quality_ranked(index: InvertedIndex, parsed: DataFrame,
                    depth: int) -> DataFrame:
-    """(query_id, ms, rn): each query's true ranked disjunctive
-    scores down to ``depth`` — the simulator tools' reference heap,
-    shared by estimator_quality so a multi-family report computes
-    this ONE truth job instead of one per family."""
-    pm = _workload_micro_postings(index, parsed)
-    full = pm.groupBy("query_id", "doc_id").agg(
-        F.sum("m").cast("long").alias("ms")
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("ms").desc(), F.col("doc_id").asc()
-    )
-    return full.withColumn("rn", F.row_number().over(wq)).filter(
-        F.col("rn") <= depth
+    """(query_id, doc_id, ms, rn): each query's true ranked
+    disjunctive scores down to ``depth`` — the simulator tools'
+    reference heap, shared by estimator_quality so a multi-family
+    report computes this ONE truth job instead of one per family.
+    Scale shape: one disjunctive sum per (query, did) over the
+    workload-pruned postings scan, then the two-phase salted top-depth
+    — never a full-index pass."""
+    return _top_n_per_group(
+        _doc_sums(_micro_postings(index, parsed)), ["query_id"], depth, "ms"
     )
 
 

@@ -1315,6 +1315,80 @@ def test_pair_threshold_bootstrap(spark, index, parsed, oracle_topk):
     assert blocks(combo) <= blocks(single)
 
 
+def test_pair_kth_thresholds_values(spark, index, parsed):
+    """pair_kth_thresholds equals an independent pandas recompute of
+    the pair cache (kth_threshold.cpp:126-138): per query, every term
+    pair ta < tb scores each doc under EITHER term by the sum of the
+    present members' weighted micros (union semantics), the pair's
+    k-th best (ms DESC, doc_id ASC) is its cached value, and the
+    estimate is the max over the query's pairs; queries with no pair
+    reaching k docs are absent, and so is every query asking a
+    different k (the per-k guard)."""
+    from itertools import combinations
+
+    from pisa_spark.functions.scoring import bm25_sql_expr, dlit, micro_sql
+    from pisa_spark.query.thresholds import pair_kth_thresholds
+
+    K = 10
+    pm = (
+        parsed.join(index.postings.select("term_id", "doc_id", "tf"), "term_id")
+        .join(index.doc_sizes.select("doc_id", "doc_len"), "doc_id")
+        .join(index.lexicon.select("term_id", "df"), "term_id")
+        .withColumn(
+            "m",
+            F.expr(
+                micro_sql(
+                    bm25_sql_expr(
+                        num_docs=dlit(index.num_docs),
+                        avg_len=dlit(index.avg_len),
+                    ),
+                    weight="weight",
+                )
+            ),
+        )
+        .select("query_id", "term_id", "doc_id", "m")
+        .toPandas()
+    )
+    expected: dict[str, int] = {}
+    for qid, grp in pm.groupby("query_id"):
+        best = None
+        for ta, tb in combinations(sorted(grp["term_id"].unique()), 2):
+            vals = (
+                grp[grp["term_id"].isin([ta, tb])]
+                .groupby("doc_id")["m"].sum().reset_index()
+                .sort_values(["m", "doc_id"], ascending=[False, True])
+                ["m"].tolist()
+            )
+            if len(vals) >= K:
+                best = max(best or 0, int(vals[K - 1]))
+        if best is not None:
+            expected[qid] = best
+
+    got = (
+        pair_kth_thresholds(index, parsed, k=K)
+        .toPandas().set_index("query_id")["pair_micro"].to_dict()
+    )
+    assert expected, "workload should hold pairs reaching k docs"
+    assert got == expected
+
+    # per-k guard: queries asking k=5 get no k=10 pair estimate
+    mixed = parsed.withColumn(
+        "k",
+        F.when(F.crc32(F.col("query_id")) % 2 == 0, F.lit(5))
+        .otherwise(F.lit(K)),
+    )
+    k5 = {
+        r["query_id"]
+        for r in mixed.filter(F.col("k") == 5).select("query_id").collect()
+    }
+    assert k5 & set(expected)
+    got_mixed = (
+        pair_kth_thresholds(index, mixed, k=K)
+        .toPandas().set_index("query_id")["pair_micro"].to_dict()
+    )
+    assert got_mixed == {q: v for q, v in expected.items() if q not in k5}
+
+
 def test_pruned_kernels_decode_fewer_blocks(spark, index, parsed):
     """profile_queries analogue: dynamic pruning must actually skip
     work — BMW/maxscore decode fewer blocks than the exhaustive TAAT
