@@ -188,13 +188,23 @@ def _factored_segment_rows(
     query_side: DataFrame,
     scan_prune: bool | None,
 ) -> DataFrame:
+    """_factored_rows over the segment scan pruned by ``parsed``'s
+    workload (_pruned_segments)."""
+    return _factored_rows(
+        index, _pruned_segments(index, parsed, scan_prune), query_side
+    )
+
+
+def _factored_rows(
+    index: InvertedIndex, segments: DataFrame, query_side: DataFrame
+) -> DataFrame:
     """The ONE place the bound-factor contract is applied (every
     executor's segment side and the live-range metadata both come
     through here, so they can never diverge on pruning bounds):
     term_meta columns joined to the broadcast-sized ``query_side``
-    (parsed queries, or a batch term set), joined into the
-    workload-pruned segment scan (driven by ``parsed``), with
-    ``bound_factor`` multiplied into the term max and block maxes."""
+    (parsed queries, or a batch term set), joined into ``segments``
+    (a _pruned_segments scan), with ``bound_factor`` multiplied into
+    the term max and block maxes."""
     # Broadcast the query-sized side into the vocabulary-sized
     # term_meta (never the reverse), then the result into the
     # segment scan.
@@ -204,9 +214,7 @@ def _factored_segment_rows(
     if has_factor:
         cols.append("bound_factor")
     qt = tm.select(*cols).join(F.broadcast(query_side), "term_id")
-    rows = _pruned_segments(index, parsed, scan_prune).join(
-        F.broadcast(qt), "term_id"
-    )
+    rows = segments.join(F.broadcast(qt), "term_id")
     if has_factor:
         rows = rows.withColumn(
             "term_max_score", F.col("term_max_score") * F.col("bound_factor")
@@ -693,7 +701,10 @@ def _cogroup(
     # batch_id is recomputed from `parsed` (not projected off `pq`) so
     # the cogroup's two sides carry distinct attribute ids.
     bt = parsed.select(batch_expr.alias("batch_id"), "term_id").distinct()
-    rows = _factored_segment_rows(index, parsed, bt, scan_prune)
+    # One workload-pruned scan (one distinct-term collect) feeds both
+    # the cogroup rows and the live-range metadata.
+    segments = _pruned_segments(index, parsed, scan_prune)
+    rows = _factored_rows(index, segments, bt)
     keys = ["batch_id"]
     if n_buckets > 1:
         keys.append("bucket")
@@ -708,7 +719,7 @@ def _cogroup(
             # broadcast hint: at 10^12 docs the live set can be large
             # (AQE broadcasts small live sets on its own).
             live = live_ranges(
-                _query_segments(index, parsed, scan_prune)
+                _factored_rows(index, segments, parsed)
                 .withColumn("bucket", bucket)
             ).localCheckpoint()
             live_b = live.join(

@@ -28,8 +28,11 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from pisa_spark.session import local_worker_conf
+
     spark = (
         SparkSession.builder.master("local[8]")
+        .config(map=local_worker_conf("local[8]"))
         .appName("calibrate-adaptive")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")

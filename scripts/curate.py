@@ -168,9 +168,12 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from pisa_spark.session import local_worker_conf
+
     b = SparkSession.builder.appName("pisa-spark-curate")
     if args.local:
-        b = b.master(f"local[{args.local}]").config(
+        master = f"local[{args.local}]"
+        b = b.master(master).config(map=local_worker_conf(master)).config(
             "spark.sql.shuffle.partitions", str(max(args.local * 2, 8)))
     spark = (
         b.config("spark.sql.execution.arrow.pyspark.enabled", "true")

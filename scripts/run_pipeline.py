@@ -72,10 +72,13 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from pisa_spark.session import local_worker_conf
+
     def make_session(phase_conf: dict[str, str]):
         b = SparkSession.builder.appName("pisa-spark-pipeline")
         if args.local:
-            b = b.master(f"local[{args.local}]")
+            master = f"local[{args.local}]"
+            b = b.master(master).config(map=local_worker_conf(master))
             # 2 task waves per scan on small local inputs (straggler
             # smoothing; see pisa_spark.session). Under spark-submit
             # the executor-count default is left in charge.

@@ -51,9 +51,12 @@ def probe_one(n_docs: int, cores: int, port: int, job: str = "build") -> dict:
     from pisa_spark.config import EngineConfig
     from pisa_spark.corpus import synth_pages
     from pisa_spark.index import build_index
+    from pisa_spark.session import local_worker_conf
 
+    master = f"local[{cores}]"
     spark = (
-        SparkSession.builder.master(f"local[{cores}]")
+        SparkSession.builder.master(master)
+        .config(map=local_worker_conf(master))
         .appName(f"scale-probe-{n_docs}")
         .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.driver.memory", "24g")

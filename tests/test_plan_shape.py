@@ -275,6 +275,53 @@ def test_workload_term_filter_reaches_parquet_scan(spark, tmp_path_factory):
         ex.SCAN_PRUNE_MAX_VOCAB_FRAC = orig
 
 
+def test_bootstrapped_request_collects_workload_terms_once(
+    spark, tmp_path_factory
+):
+    """A bootstrapped topk_search over a file-backed several-bucket
+    index prunes its segment scan ONCE: the cogroup rows and the
+    live-range metadata share one _pruned_segments frame, so forcing
+    the prune adds exactly one distinct-term collect's jobs to the
+    request, not one per consumer."""
+    from dataclasses import replace
+
+    from pisa_spark.build.pipeline import BuildPipeline
+    from pisa_spark.corpus import pages_from_documents
+    from pisa_spark.query.executor import _n_buckets, topk_search
+
+    cfg = replace(CFG, index=IndexConfig(salt_bucket_docs=64))
+    out = str(tmp_path_factory.mktemp("pipe_multi"))
+    pages = pages_from_documents(spark, SF).limit(200)
+    idx = BuildPipeline(spark, out, cfg).run(pages)
+    assert idx.segments_file_backed and _n_buckets(idx) > 1
+    parsed = _parse(spark, idx)
+    thr = parsed.select("query_id").distinct().withColumn(
+        "threshold_micro", F.lit(0).cast("long")
+    )
+    sc = spark.sparkContext
+
+    def jobs(name, action):
+        sc.setJobGroup(name, name)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    def request(prune):
+        return lambda: topk_search(
+            idx, parsed, algorithm="maxscore", thresholds=thr,
+            scan_prune=prune,
+        ).collect()
+
+    one_collect = jobs("prune_collect", lambda: parsed.select(
+        "term_id").distinct().limit(4097).collect())
+    assert one_collect >= 1
+    plain = jobs("request_plain", request(False))
+    pruned = jobs("request_pruned", request(True))
+    assert pruned - plain == one_collect, (plain, pruned, one_collect)
+
+
 def test_in_memory_index_skips_scan_prune(index, parsed):
     """The auto heuristic must NOT add the collect+filter for computed
     (non-file-backed) segment DAGs — there is no scan to prune."""
