@@ -161,8 +161,6 @@ def build_dag(pages: DataFrame, config: EngineConfig, store,
         avg_len=avg_len,
         collection_len=collection_len,
         config=config,
-        segments_file_backed=store.file_backed,
-        num_terms=int(lexicon_size) if lexicon_size is not None else None,
     )
 
 
@@ -241,8 +239,6 @@ class BuildPipeline:
         self.executed: list[str] = []  # stages actually computed this run
         self.skipped: list[str] = []
 
-    file_backed = True  # segments read stored parquet (scan pruning)
-
     # ------------------------------------------------------------- stages
 
     def _manifest_path(self, stage: str) -> Path:
@@ -285,13 +281,6 @@ class BuildPipeline:
         t0 = time.perf_counter()
         last_job = max(self._job_ids(), default=-1)
         df = compute()
-        if stage == "segments":
-            # Cluster the stored table by term_id so parquet row-group
-            # min/max + dictionary stats are tight: the executor's
-            # workload IN(term_id) pushdown (_pruned_segments) then
-            # skips whole row groups instead of reading the corpus per
-            # query batch. Per-partition sort only — no extra shuffle.
-            df = df.sortWithinPartitions("term_id", "block_id")
         df.write.mode("overwrite").option(
             "compression", CHECKPOINT_CODEC
         ).parquet(str(stage_dir))

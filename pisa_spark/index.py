@@ -31,19 +31,6 @@ class InvertedIndex:
     avg_len: float
     collection_len: int
     config: EngineConfig
-    # True when `segments` reads stored parquet (BuildPipeline /
-    # IncrementalIndexer): the executor then pushes the workload's
-    # term_ids into the scan (executor._pruned_segments) so each query
-    # batch reads O(workload lists), not O(corpus). In-memory builds
-    # leave it False — there is no scan to prune.
-    segments_file_backed: bool = False
-    # Vocabulary size when known for free (build_index counts it for
-    # the broadcast gate; BuildPipeline reads it off the term_ids
-    # manifest). The executor's auto scan-prune uses it to disengage
-    # when the workload covers so much of the vocabulary that an
-    # IN(term_id) filter cannot skip row groups (executor.
-    # SCAN_PRUNE_MAX_VOCAB_FRAC). None = unknown -> no fraction check.
-    num_terms: int | None = None
     # NOTE deliberately no doc_lens_array(): per-posting doc lengths
     # are encoded inside the segment blocks (segments.py len_bytes),
     # so query execution never collects or broadcasts anything
@@ -72,8 +59,6 @@ class _MemoryStore:
     materialized only where reuse pays for it. term_ids needs no cut
     of its own: assign_global_ids numbers it in place over its eager
     localCheckpoint, so every reuse is a projection of pinned rows."""
-
-    file_backed = False
 
     def __init__(self):
         self.persisted: list[DataFrame] = []

@@ -23,6 +23,15 @@ salt_bucket_docs) of them:
   partial heaps per query. This is the 10^12-doc shape: no task ever
   sees a full head-term posting list.
 
+The segment side has one shape for every request (_factored_rows):
+``segments ⨝ broadcast(term_meta ⨝ broadcast(query side))``. There
+is no per-request scan decision, as the reference answers every query
+from its resident index: building an executor's DataFrame submits no
+Spark job, only the caller's action does. (A per-request term_id
+filter on the parquet scan, and segments partitioned by term range
+for dynamic partition pruning, were both measured to cost more jobs
+or scan tasks than they saved; ROADMAP.md keeps the numbers.)
+
 No group touches any global per-document structure: doc
 lengths are encoded inside each segment block (segments.py
 ``len_bytes``), so there is no driver-side collect and no broadcast
@@ -91,130 +100,34 @@ DISJUNCTIVE_ALGORITHMS = frozenset(
      "maxscore", "adaptive"}  # adaptive dispatches to disjunctive only
 )
 
-# Scan pruning: push the workload's distinct term_ids into the parquet
-# segment scan as a literal IN filter. The broadcast-hash join already
-# restricts ROWS, but a join alone prunes nothing at the SCAN — every
-# query batch reads the full 100TB segment table. An IN(term_id)
-# predicate reaches the parquet reader (PushedFilters) and skips whole
-# row groups via min/max + dictionary stats, which is what makes the
-# per-batch read O(workload lists), not O(corpus) — provided segments
-# were written sorted by term_id (build/pipeline.py does). The id list
-# is WORKLOAD-sized (distinct query terms, capped), never corpus-sized.
-SCAN_PRUNE_MAX_TERMS = 4096
-# Auto mode additionally disengages when the workload covers more than
-# this fraction of the vocabulary: with terms spread across most row
-# groups the IN filter skips nothing and just adds a collect job plus
-# per-row filter work (measured 12% slower on a 3200-query batch over
-# a 6.4k-term vocab). At 10^12-doc scale (vocab >= 10^8) any workload
-# under SCAN_PRUNE_MAX_TERMS passes trivially — the fraction gate only
-# bites small-vocab corpora, exactly where pruning cannot help.
-# scan_prune=True bypasses the fraction gate (forced).
-SCAN_PRUNE_MAX_VOCAB_FRAC = 0.02
 
+def _factored_rows(index: InvertedIndex, query_side: DataFrame) -> DataFrame:
+    """``index.segments ⨝ broadcast(term_meta ⨝ broadcast(query_side))``
+    — the one segment-side shape of every executor. ``query_side`` is
+    the parsed queries (query_id, k, term_id, weight) or a batch term
+    set; it is tiny, so it broadcasts into the vocabulary-sized
+    term_meta (never the reverse), and the result broadcasts into the
+    segment scan: the segment table (the 100TB side) is scanned once
+    with a broadcast-hash join and never shuffled. Building the frame
+    submits no Spark job.
 
-def _is_bare_relation(df: DataFrame) -> bool:
-    """True iff ``df`` is a direct table read (file-source relation at
-    the analyzed-plan root, no computation on top) — the artifact-backed
-    index shape produced by BuildPipeline.run / IncrementalIndexer._read
-    where an extra tiny collect to build the pushdown filter is always
-    worth one avoided full scan. In-memory indexes (the test/bench gate
-    builds) skip pruning: their segment "scan" is a computed DAG, so
-    there is no row group to skip and the filter would only add a job."""
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return False
-    return plan.split("\n", 1)[0].startswith("Relation")
-
-
-def _pruned_segments(
-    index: InvertedIndex, parsed: DataFrame, scan_prune: bool | None
-) -> DataFrame:
-    """index.segments, IN-filtered to the workload's term_ids when
-    pruning applies. ``scan_prune=None`` auto-enables for file-backed
-    segment tables only; True forces (useful when segments sit under a
-    view/filter the heuristic does not see); False disables. The
-    collect here is workload-sized and capped (SCAN_PRUNE_MAX_TERMS) —
-    beyond the cap the IN literal would bloat the plan, so we fall back
-    to the plain join (still correct, just unpruned)."""
-    auto = scan_prune is None
-    if auto:
-        scan_prune = index.segments_file_backed or _is_bare_relation(
-            index.segments
-        )
-    if not scan_prune:
-        return index.segments
-    cap = SCAN_PRUNE_MAX_TERMS
-    if auto and index.num_terms:
-        # vocab-fraction gate (see SCAN_PRUNE_MAX_VOCAB_FRAC)
-        cap = min(cap, int(SCAN_PRUNE_MAX_VOCAB_FRAC * index.num_terms))
-    if cap < 1:
-        return index.segments
-    ids = [
-        r[0]
-        for r in parsed.select("term_id")
-        .distinct()
-        .limit(cap + 1)
-        .collect()
-    ]
-    if not ids or len(ids) > cap:
-        return index.segments
-    return index.segments.filter(F.col("term_id").isin(ids))
-
-
-def _query_segments(
-    index: InvertedIndex, parsed: DataFrame, scan_prune: bool | None = None
-) -> DataFrame:
-    """parsed(query_id, k, term_id, weight) ⨝ term_meta ⨝ segments.
-
-    The parsed-query side is tiny -> broadcast, so the segment table
-    (the 100TB side) is scanned once with a broadcast-hash join and
-    never shuffled — and for file-backed indexes the scan itself is
-    row-group-pruned by the workload's term_ids (_pruned_segments).
-
+    This is also the ONE place the bound-factor contract is applied
+    (every executor's segment side and the live-range metadata both
+    come through here, so they can never diverge on pruning bounds).
     Incrementally-built indexes carry a per-term ``bound_factor`` in
     term_meta (streaming/incremental.py): the sound upper-bound
     inflation for terms whose stored blocks were encoded under older
-    global stats. It is applied HERE — to the term max and the block
-    maxes — so stored segments stay immutable while every kernel's
+    global stats. It is multiplied into the term max and the block
+    maxes here, so stored segments stay immutable while every kernel's
     pruning bounds stay one-sided. Batch indexes have no such column
     (factor 1 by construction)."""
-    return _factored_segment_rows(index, parsed, parsed, scan_prune)
-
-
-def _factored_segment_rows(
-    index: InvertedIndex,
-    parsed: DataFrame,
-    query_side: DataFrame,
-    scan_prune: bool | None,
-) -> DataFrame:
-    """_factored_rows over the segment scan pruned by ``parsed``'s
-    workload (_pruned_segments)."""
-    return _factored_rows(
-        index, _pruned_segments(index, parsed, scan_prune), query_side
-    )
-
-
-def _factored_rows(
-    index: InvertedIndex, segments: DataFrame, query_side: DataFrame
-) -> DataFrame:
-    """The ONE place the bound-factor contract is applied (every
-    executor's segment side and the live-range metadata both come
-    through here, so they can never diverge on pruning bounds):
-    term_meta columns joined to the broadcast-sized ``query_side``
-    (parsed queries, or a batch term set), joined into ``segments``
-    (a _pruned_segments scan), with ``bound_factor`` multiplied into
-    the term max and block maxes."""
-    # Broadcast the query-sized side into the vocabulary-sized
-    # term_meta (never the reverse), then the result into the
-    # segment scan.
     tm = index.term_meta
     has_factor = "bound_factor" in tm.columns
     cols = ["term_id", "df", F.col("max_score").alias("term_max_score")]
     if has_factor:
         cols.append("bound_factor")
     qt = tm.select(*cols).join(F.broadcast(query_side), "term_id")
-    rows = segments.join(F.broadcast(qt), "term_id")
+    rows = index.segments.join(F.broadcast(qt), "term_id")
     if has_factor:
         rows = rows.withColumn(
             "term_max_score", F.col("term_max_score") * F.col("bound_factor")
@@ -227,6 +140,18 @@ def _factored_rows(
         # term max and inherit its scaling automatically
         rows = rows.drop("bound_factor")
     return rows
+
+
+# The two hooks below are kept only because perfbench's query probe
+# (perfbench/workloads.py) calls them with these positional
+# signatures; drop them once the benchmark stops doing so.
+def _pruned_segments(index: InvertedIndex, _parsed, _flag) -> DataFrame:
+    return index.segments
+
+
+def _factored_segment_rows(index: InvertedIndex, _parsed, query_side,
+                           _flag) -> DataFrame:
+    return _factored_rows(index, query_side)
 
 
 def _stats(index: InvertedIndex) -> Stats:
@@ -268,7 +193,6 @@ def topk_search_safe(
     algorithm: str = "block_max_wand",
     k: int = 10,
     thresholds: DataFrame | None = None,
-    scan_prune: bool | None = None,
 ) -> DataFrame:
     """topk_search bootstrapped by POSSIBLY-UNSOUND threshold
     estimates, made exact by the reference's --safe rerun
@@ -304,8 +228,7 @@ def topk_search_safe(
     anti-join. The rerun side is workload-sized — never a second full
     pass."""
     first = topk_search(
-        index, parsed, algorithm=algorithm, k=k,
-        thresholds=thresholds, scan_prune=scan_prune,
+        index, parsed, algorithm=algorithm, k=k, thresholds=thresholds,
     )
     if thresholds is None:
         return first
@@ -344,7 +267,7 @@ def topk_search_safe(
     rerun = topk_search(
         index,
         parsed.join(F.broadcast(under), "query_id"),
-        algorithm=algorithm, k=k, thresholds=None, scan_prune=scan_prune,
+        algorithm=algorithm, k=k, thresholds=None,
     )
     kept = first.join(F.broadcast(under), "query_id", "left_anti")
     return kept.unionByName(rerun)
@@ -354,7 +277,6 @@ def boolean_query(
     index: InvertedIndex,
     parsed: DataFrame,
     op: str = "and",
-    scan_prune: bool | None = None,
 ) -> DataFrame:
     """(query_id, doc_id) Boolean AND/OR result sets, through the same
     cogroup, proto build and query walk as topk_search. The buckets
@@ -376,7 +298,7 @@ def boolean_query(
         )
 
     return _cogroup(
-        index, _with_k(parsed, 0), None, scan_prune, run, _BOOLEAN_SCHEMA,
+        index, _with_k(parsed, 0), None, run, _BOOLEAN_SCHEMA,
         _n_buckets(index),
     )
 
@@ -664,7 +586,6 @@ def _cogroup(
     index: InvertedIndex,
     parsed: DataFrame,
     batches: int | None,
-    scan_prune: bool | None,
     run,
     schema: pa.Schema,
     n_buckets: int,
@@ -701,10 +622,7 @@ def _cogroup(
     # batch_id is recomputed from `parsed` (not projected off `pq`) so
     # the cogroup's two sides carry distinct attribute ids.
     bt = parsed.select(batch_expr.alias("batch_id"), "term_id").distinct()
-    # One workload-pruned scan (one distinct-term collect) feeds both
-    # the cogroup rows and the live-range metadata.
-    segments = _pruned_segments(index, parsed, scan_prune)
-    rows = _factored_rows(index, segments, bt)
+    rows = _factored_rows(index, bt)
     keys = ["batch_id"]
     if n_buckets > 1:
         keys.append("bucket")
@@ -719,7 +637,7 @@ def _cogroup(
             # broadcast hint: at 10^12 docs the live set can be large
             # (AQE broadcasts small live sets on its own).
             live = live_ranges(
-                _factored_rows(index, segments, parsed)
+                _factored_rows(index, parsed)
                 .withColumn("bucket", bucket)
             ).localCheckpoint()
             live_b = live.join(
@@ -769,7 +687,6 @@ def topk_search(
     k: int = 10,
     thresholds: DataFrame | None = None,
     batches: int | None = None,
-    scan_prune: bool | None = None,
     profile: bool = False,
 ) -> DataFrame:
     """(query_id, rank, doc_id, score), one cogroup group per (query
@@ -839,7 +756,7 @@ def topk_search(
 
     schema = _PROFILE_SCHEMA if profile else _RANKED_SCHEMA
     out = _cogroup(
-        index, _with_k(parsed, k), batches, scan_prune, run, schema, n_buckets
+        index, _with_k(parsed, k), batches, run, schema, n_buckets
     )
     return _merge_partials(out, parsed, k) if n_buckets > 1 else out
 

@@ -35,6 +35,14 @@ Kernel inventory:
                       max-score suffix sums, vectorized lookup phase —
                       the bench fast path (prunes while staying in
                       numpy instead of a per-doc Python loop)
+- block_max_maxscore_kernel  BMM (block_max_maxscore_query.hpp:9-99):
+                      MaxScore plus per-block bound tightening before
+                      any non-essential block is decoded
+- block_max_ranked_and_kernel  ranked conjunction with block-max
+                      skipping (block_max_ranked_and_query.hpp:9-86)
+- adaptive_kernel     per-query choice between ranked_or (few total
+                      postings) and block_max_maxscore, from pre-decode
+                      metadata only (choose_algorithm)
 """
 
 from __future__ import annotations
@@ -944,9 +952,13 @@ def maxscore_kernel(terms: list[TermPostings], k: int,
 # Candidate-set size below which exhaustive TAAT wins: decoding every
 # posting is cheaper than pruning bookkeeping (threshold maintenance,
 # block-bound scans) when the whole query touches few postings.
-# Calibrated with scripts/calibrate_adaptive.py on the sf0.1 workload
-# (BENCH.md): pruned kernels win 5-10% above ~4k total postings; at or
-# below, TAAT matches or beats them.
+# Measured with scripts/calibrate_adaptive.py on the sf0.1 workload,
+# whose vocabulary has 31 terms (BENCH.md): there pruned kernels won
+# 5-10% above ~4k total postings, and at or below TAAT matched or beat
+# them. That calibration does not carry over: an offline replay of the
+# Zipf query_batch workload (ROADMAP.md) puts its optimum at
+# always-exhaustive. One 4,000-doc corpus is too narrow to set the
+# value from, so it stays until a larger synth index re-derives it.
 ADAPTIVE_TAAT_MAX_POSTINGS = 4096
 
 

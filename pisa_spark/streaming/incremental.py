@@ -48,7 +48,7 @@ rewritten):
   ``idf(df, N_new)/idf(df, N_old) * max(1, avg_new/avg_old)``
   per generation for untouched terms (re-encoded terms reset to 1).
   The executor multiplies both the term max and the block maxes by it
-  on the query path (executor._query_segments, which already joins
+  on the query path (executor._factored_rows, which already joins
   term_meta into every query) — bounds stay one-sided, kernels stay
   exact, stored segments stay immutable. The factor only compounds
   for terms never re-touched; ``compact()`` resets it to 1 exactly.
@@ -139,10 +139,7 @@ def _cfg_fp(payload: dict) -> str:
 class _GenerationStore:
     """A generation's stage store for the build's encode tail
     (pipeline.encode_stages): ``segments`` is APPENDED under
-    ``segment_gen=gen``, clustered by (term_id, block_id) so parquet
-    row-group stats stay tight for the executor's IN(term_id) scan
-    pruning (_pruned_segments); every other stage is returned as
-    computed."""
+    ``segment_gen=gen``; every other stage is returned as computed."""
 
     def __init__(self, path: str, gen: int):
         self.path, self.gen = path, gen
@@ -150,9 +147,9 @@ class _GenerationStore:
     def stage(self, name: str, parents: list[str], compute) -> DataFrame:
         df = compute()
         if name == "segments":
-            df.withColumn("segment_gen", F.lit(self.gen)).sortWithinPartitions(
-                "term_id", "block_id"
-            ).write.mode("append").partitionBy("segment_gen").parquet(self.path)
+            df.withColumn("segment_gen", F.lit(self.gen)).write.mode(
+                "append"
+            ).partitionBy("segment_gen").parquet(self.path)
         return df
 
 
@@ -194,7 +191,7 @@ class IncrementalIndexer:
         # compress_blockmax IS supported: u8 block maxima are relative
         # to the term max AS STORED in term_meta at encode time, and
         # the query-side recovery multiplies term_max * bound_factor
-        # (executor._query_segments) — so kept blocks' recovered
+        # (executor._factored_rows) — so kept blocks' recovered
         # bounds inflate by exactly the same sound factor as f32
         # bounds, and re-encoded terms reset max+factor together.
         if self.config.index.quantize_bits:
@@ -809,9 +806,6 @@ class IncrementalIndexer:
             avg_len=(ln / n) if n else 0.0,
             collection_len=ln,
             config=self.config,
-            segments_file_backed=True,
-            # dense term ids start at 0, so next_term_id == vocab size
-            num_terms=int(st["next_term_id"]),
         )
 
 

@@ -45,7 +45,7 @@ def main() -> None:
     from pisa_spark.corpus import pages_from_documents
     from pisa_spark.index import build_index
     from pisa_spark.query.executor import (
-        _build_batch_protos, _query_segments, _stats, _walk_batch_queries,
+        _build_batch_protos, _factored_rows, _stats, _walk_batch_queries,
     )
     from pisa_spark.query.kernels import (
         block_max_maxscore_kernel, maxscore_kernel, ranked_or_kernel,
@@ -80,7 +80,7 @@ def main() -> None:
         schema="query_id string, terms array<string>, k int",
     )
     parsed = parse_queries(qdf, index.lexicon, pre_tokenized=True)
-    pdf = _query_segments(index, parsed).toPandas()
+    pdf = _factored_rows(index, parsed).toPandas()
 
     decode = CODECS[cfg.index.codec][1]
     kernels = {

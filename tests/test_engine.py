@@ -1245,7 +1245,7 @@ def test_range_live_prefilter(spark, index, parsed, oracle_topk):
     Catalyst): bootstrapped topk_search over this four-bucket index
     stays rank-identical while the live-range filter provably drops
     dead (query, bucket) groups."""
-    from pisa_spark.query.executor import _query_segments, live_ranges
+    from pisa_spark.query.executor import _factored_rows, live_ranges
     from pisa_spark.query.thresholds import (
         estimate_thresholds_with_pairs, kth_score_cache,
     )
@@ -1264,7 +1264,7 @@ def test_range_live_prefilter(spark, index, parsed, oracle_topk):
     from pisa_spark.build.segments import blocks_per_bucket
 
     stride = blocks_per_bucket(index.config.index)
-    rows = _query_segments(
+    rows = _factored_rows(
         index, parsed.join(F.broadcast(est), "query_id", "left")
     ).withColumn("bucket", (F.col("block_id") / F.lit(stride)).cast("long"))
     total = rows.select("query_id", "bucket").distinct().count()
@@ -1420,7 +1420,7 @@ def test_batched_kernels_match_daat(index, parsed, spark):
 
     from pisa_spark.codecs import CODECS
     from pisa_spark.query.executor import (
-        _build_batch_protos, _query_segments, _stats, _walk_batch_queries,
+        _build_batch_protos, _factored_rows, _stats, _walk_batch_queries,
     )
     from pisa_spark.query.kernels import (
         block_max_wand_kernel,
@@ -1456,7 +1456,7 @@ def test_batched_kernels_match_daat(index, parsed, spark):
         return np.empty(0, np.int64), np.empty(0)
 
     # cap=0: every kernel decodes its own blocks, none shared
-    pdf = _query_segments(index, parsed).toPandas()
+    pdf = _factored_rows(index, parsed).toPandas()
     protos, base_bm = _build_batch_protos(
         pdf.drop_duplicates(["term_id", "block_id"]), decode, cap=0
     )

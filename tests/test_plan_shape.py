@@ -221,113 +221,52 @@ def test_threshold_zero_disables_lexicon_broadcast(spark):
     assert idx.postings.count() > 0 and idx.segments.count() > 0
 
 
-def test_workload_term_filter_reaches_parquet_scan(spark, tmp_path_factory):
-    """File-backed indexes (BuildPipeline) get the workload's term_ids
-    pushed INTO the parquet segment scan (PushedFilters: In(term_id,..))
-    so each query batch row-group-prunes instead of reading the whole
-    table; results are identical with pruning off; in-memory indexes
-    skip the extra job entirely."""
-    from pisa_spark.build.pipeline import BuildPipeline
-    from pisa_spark.corpus import pages_from_documents
-    from pisa_spark.query.executor import _pruned_segments, topk_search
-    from pisa_spark.query.parser import parse_queries
-
-    out = str(tmp_path_factory.mktemp("pipe_idx"))
-    pages = pages_from_documents(spark, SF).limit(200)
-    idx = BuildPipeline(spark, out, CFG).run(pages)
-    assert idx.segments_file_backed
-
-    terms = [r["term"] for r in idx.lexicon.limit(8).collect()]
-    qdf = spark.createDataFrame(
-        pd.DataFrame(
-            [(f"q{i}", [terms[i], terms[i + 4]], 10) for i in range(4)],
-            columns=["query_id", "terms", "k"],
-        ),
-        schema="query_id string, terms array<string>, k int",
-    )
-    parsed = parse_queries(qdf, idx.lexicon, pre_tokenized=True)
-
-    pruned = topk_search(idx, parsed, algorithm="maxscore", scan_prune=True)
-    plan = _plan_str(pruned)
-    assert "In(term_id" in plan or "term_id IN" in plan, plan
-
-    plain = topk_search(idx, parsed, algorithm="maxscore", scan_prune=False)
-    assert "In(term_id" not in _plan_str(plain)
-    a = pruned.toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    b = plain.toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-
-    # AUTO mode's vocab-fraction gate: this workload's 8 distinct terms
-    # cover ~26% of the tiny vocabulary — far past
-    # SCAN_PRUNE_MAX_VOCAB_FRAC — so the IN filter could not skip any
-    # row group and auto must fall back to the plain join (the 100TB
-    # case, vocab >= 1e8, passes the gate for any capped workload).
-    import pisa_spark.query.executor as ex
-
-    assert idx.num_terms and idx.num_terms > 0
-    assert _pruned_segments(idx, parsed, None) is idx.segments
-    # With a generous fraction the same workload auto-engages.
-    orig = ex.SCAN_PRUNE_MAX_VOCAB_FRAC
-    ex.SCAN_PRUNE_MAX_VOCAB_FRAC = 0.9
-    try:
-        assert _pruned_segments(idx, parsed, None) is not idx.segments
-    finally:
-        ex.SCAN_PRUNE_MAX_VOCAB_FRAC = orig
-
-
-def test_bootstrapped_request_collects_workload_terms_once(
-    spark, tmp_path_factory
-):
-    """A bootstrapped topk_search over a file-backed several-bucket
-    index prunes its segment scan ONCE: the cogroup rows and the
-    live-range metadata share one _pruned_segments frame, so forcing
-    the prune adds exactly one distinct-term collect's jobs to the
-    request, not one per consumer."""
+def test_file_backed_request_builds_lazily(spark, tmp_path_factory):
+    """Building an executor's DataFrame over a file-backed index
+    submits no Spark job: every request plans the same lazy
+    ``segments ⨝ broadcast(term_meta ⨝ broadcast(queries))`` scan, with
+    no driver collect deciding a scan filter first. Only the caller's
+    action runs, and its top-k equals the exhaustive disjunction."""
     from dataclasses import replace
 
     from pisa_spark.build.pipeline import BuildPipeline
-    from pisa_spark.corpus import pages_from_documents
-    from pisa_spark.query.executor import _n_buckets, topk_search
+    from pisa_spark.corpus import synth_pages
+    from pisa_spark.query.executor import (
+        _n_buckets, boolean_query, topk_search,
+    )
+    from pisa_spark.query.thresholds import quality_ranked
 
     cfg = replace(CFG, index=IndexConfig(salt_bucket_docs=64))
-    out = str(tmp_path_factory.mktemp("pipe_multi"))
-    pages = pages_from_documents(spark, SF).limit(200)
-    idx = BuildPipeline(spark, out, cfg).run(pages)
-    assert idx.segments_file_backed and _n_buckets(idx) > 1
+    out = str(tmp_path_factory.mktemp("pipe_lazy"))
+    idx = BuildPipeline(spark, out, cfg).run(synth_pages(spark, 200))
+    assert _n_buckets(idx) > 1
     parsed = _parse(spark, idx)
-    thr = parsed.select("query_id").distinct().withColumn(
-        "threshold_micro", F.lit(0).cast("long")
-    )
     sc = spark.sparkContext
 
     def jobs(name, action):
         sc.setJobGroup(name, name)
         try:
-            action()
+            result = action()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(name))
+        return result, len(sc.statusTracker().getJobIdsForGroup(name))
 
-    def request(prune):
-        return lambda: topk_search(
-            idx, parsed, algorithm="maxscore", thresholds=thr,
-            scan_prune=prune,
-        ).collect()
+    topk, n_topk = jobs("build_topk", lambda: topk_search(
+        idx, parsed, algorithm="maxscore"))
+    _, n_bool = jobs("build_boolean", lambda: boolean_query(idx, parsed))
+    assert (n_topk, n_bool) == (0, 0)
 
-    one_collect = jobs("prune_collect", lambda: parsed.select(
-        "term_id").distinct().limit(4097).collect())
-    assert one_collect >= 1
-    plain = jobs("request_plain", request(False))
-    pruned = jobs("request_pruned", request(True))
-    assert pruned - plain == one_collect, (plain, pruned, one_collect)
-
-
-def test_in_memory_index_skips_scan_prune(index, parsed):
-    """The auto heuristic must NOT add the collect+filter for computed
-    (non-file-backed) segment DAGs — there is no scan to prune."""
-    from pisa_spark.query.executor import _pruned_segments
-
-    assert _pruned_segments(index, parsed, None) is index.segments
+    got = topk.toPandas().sort_values(["query_id", "rank"])
+    exp = (
+        quality_ranked(idx, parsed, 10).toPandas()
+        .rename(columns={"rn": "rank"}).sort_values(["query_id", "rank"])
+    )
+    assert len(exp) > 0
+    cols = ["query_id", "rank", "doc_id"]
+    pd.testing.assert_frame_equal(
+        got[cols].astype({"rank": "int64"}).reset_index(drop=True),
+        exp[cols].astype({"rank": "int64"}).reset_index(drop=True),
+    )
 
 
 def test_live_range_join_is_unhinted(multi, multi_parsed):

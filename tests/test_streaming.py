@@ -95,7 +95,7 @@ def test_kept_block_bounds_stay_sound(spark, tmp_path):
     """After a generation that does NOT touch a term, its kept blocks'
     stored max_score TIMES the query-side term_meta.bound_factor must
     still upper-bound the true (fresh-stats) block max score — the
-    executor applies exactly this product (_query_segments)."""
+    executor applies exactly this product (_factored_rows)."""
     from pisa_spark.build import decode_segments
     from pisa_spark.functions.scoring import bm25_score_np
     from pisa_spark.streaming import IncrementalIndexer
@@ -836,7 +836,7 @@ def test_range_batch_on_incremental_index(spark, tmp_path):
     incremental index (with real bound_factor inflation in term_meta)
     must agree rank-identically with the exhaustive disjunction
     (thresholds.quality_ranked) on the same index — the bound-factor
-    contract goes through the shared _factored_segment_rows, so this
+    contract goes through the shared _factored_rows, so this
     pins that inflated bounds never prune a true top-k doc."""
     from pisa_spark.query.executor import topk_search
     from pisa_spark.query.parser import parse_queries
