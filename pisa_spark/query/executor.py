@@ -26,8 +26,11 @@ salt_bucket_docs) of them:
 The segment side has one shape for every request (_factored_rows):
 ``segments ⨝ broadcast(term_meta ⨝ broadcast(query side))``. There
 is no per-request scan decision, as the reference answers every query
-from its resident index: building an executor's DataFrame submits no
-Spark job, only the caller's action does. (A per-request term_id
+from its resident index. Building an unbootstrapped request's
+DataFrame submits no Spark job, only the caller's action does; a
+bootstrapped request first pins its query side with thresholds
+(_bootstrapped) and, over several buckets, its live ranges, each
+with one eager localCheckpoint. (A per-request term_id
 filter on the parquet scan, and segments partitioned by term range
 for dynamic partition pruning, were both measured to cost more jobs
 or scan tasks than they saved; ROADMAP.md keeps the numbers.)
@@ -167,7 +170,11 @@ def _stats(index: InvertedIndex) -> Stats:
 
 def _bootstrapped(parsed: DataFrame, algorithm: str, thresholds) -> DataFrame:
     """``parsed`` with each query's ``threshold_micro`` joined on (NULL
-    = no bootstrap); conjunctive algorithms are rejected."""
+    = no bootstrap); conjunctive algorithms are rejected. The join is
+    pinned by an eager localCheckpoint (over persist, the repo rule:
+    CacheManager entries leak in per-micro-batch callers), since the
+    live ranges, the batch term set, the cogroup's query side and the
+    merge's per-query k each re-plan it otherwise."""
     if thresholds is None:
         return parsed
     if algorithm not in DISJUNCTIVE_ALGORITHMS:
@@ -176,7 +183,9 @@ def _bootstrapped(parsed: DataFrame, algorithm: str, thresholds) -> DataFrame:
             f"algorithm {algorithm!r}: the cached k-th single-term "
             f"score can exceed the intersection's k-th score"
         )
-    return parsed.join(F.broadcast(thresholds), "query_id", "left")
+    return parsed.join(
+        F.broadcast(thresholds), "query_id", "left"
+    ).localCheckpoint()
 
 
 def _with_k(parsed: DataFrame, k: int) -> DataFrame:

@@ -30,14 +30,11 @@ Kernel inventory:
 - block_max_wand_kernel  BMW (block_max_wand_query.hpp:8-167), batched
                       interval-sweep form; block_max_wand_kernel_daat
                       is the literal cursor loop (agreement-tested)
-- maxscore_kernel     batch-vectorized MaxScore (maxscore_query.hpp:
-                      13-143): essential/non-essential split by
-                      max-score suffix sums, vectorized lookup phase —
-                      the bench fast path (prunes while staying in
-                      numpy instead of a per-doc Python loop)
-- block_max_maxscore_kernel  BMM (block_max_maxscore_query.hpp:9-99):
-                      MaxScore plus per-block bound tightening before
-                      any non-essential block is decoded
+- maxscore_kernel / block_max_maxscore_kernel  MaxScore
+                      (maxscore_query.hpp:13-143) and BMM
+                      (block_max_maxscore_query.hpp:9-99): one body,
+                      _maxscore, whose survivor bound is the term
+                      maxima or, for BMM, the block maxima
 - block_max_ranked_and_kernel  ranked conjunction with block-max
                       skipping (block_max_ranked_and_query.hpp:9-86)
 - adaptive_kernel     per-query choice between ranked_or (few total
@@ -379,6 +376,14 @@ class _Cursor:
 PRUNE_EPS = 2
 
 
+def _kth_floor(micros: np.ndarray, k: int) -> float:
+    """A sound θ from scored micros: the k-th best minus the rounding
+    slack, or 0 (scores <= 0 never enter a result) under k."""
+    if len(micros) < k:
+        return 0.0
+    return float(np.partition(micros, -k)[-k]) - PRUNE_EPS
+
+
 class _TopK:
     """k-heap with threshold (topk_queue.hpp:19-139): pruning decisions
     use strict ``> threshold`` (:67) with an epsilon slack; every doc
@@ -438,7 +443,7 @@ def _interval_sweep(terms: list[TermPostings], k: int, stats: Stats,
     all later intervals fail too).
 
     Python cost is per INTERVAL (≈ per block), never per posting —
-    the same batching that makes block_max_maxscore_kernel fast —
+    the same batching that makes _maxscore fast —
     while the pruning decisions are the cursor algorithms' own:
     a skipped doc has true score <= interval bound <= θ = k-th − eps,
     exactly _TopK.would_enter's test, so the top-k (incl. docID
@@ -471,10 +476,7 @@ def _interval_sweep(terms: list[TermPostings], k: int, stats: Stats,
             topk_buf = np.concatenate([topk_buf, s])
             if len(topk_buf) > k:
                 topk_buf = np.partition(topk_buf, -k)[-k:]
-            if len(topk_buf) >= k:
-                t_new = int(topk_buf.min()) - PRUNE_EPS
-                if t_new > theta:
-                    theta = float(t_new)
+            theta = max(theta, _kth_floor(topk_buf, k))
         if not cand_d:
             return np.empty(0, np.int64), np.empty(0, np.float64)
         return _finalize(
@@ -586,10 +588,7 @@ def _interval_sweep(terms: list[TermPostings], k: int, stats: Stats,
         topk_buf = np.concatenate([topk_buf, micros])
         if len(topk_buf) > k:
             topk_buf = np.partition(topk_buf, -k)[-k:]
-        if len(topk_buf) >= k:
-            t_new = int(topk_buf.min()) - PRUNE_EPS
-            if t_new > theta:
-                theta = float(t_new)
+        theta = max(theta, _kth_floor(topk_buf, k))
     if not cand_d:
         return np.empty(0, np.int64), np.empty(0, np.float64)
     return _finalize(np.concatenate(cand_d), np.concatenate(cand_s), k)
@@ -728,37 +727,60 @@ def block_max_wand_kernel_daat(terms: list[TermPostings], k: int,
     return topk.finalize(k)
 
 
-def block_max_maxscore_kernel(terms: list[TermPostings], k: int,
-                              stats: Stats,
-                              init_threshold: float = 0.0) -> tuple[np.ndarray, np.ndarray]:
-    """Batch-vectorized BMM (block_max_maxscore_query.hpp:9-99).
+def _lookup(tp: TermPostings, docs: np.ndarray, partial: np.ndarray,
+            stats: Stats) -> None:
+    """Add ``tp``'s scores of the sorted candidates ``docs`` into
+    ``partial``, decoding ONLY blocks that hold a candidate (the
+    reference's lookup cursors, maxscore_query.hpp:58-126). Sorted
+    candidates give non-decreasing block indices, so each block's
+    candidates are one contiguous run, and those past the last block
+    are a suffix."""
+    bi = np.searchsorted(tp.block_max_doc, docs, side="left")
+    bi = bi[:np.searchsorted(bi, len(tp.block_max_doc), side="left")]
+    starts = np.flatnonzero(np.diff(bi, prepend=-1))
+    for lo, hi in zip(starts.tolist(), [*starts[1:].tolist(), len(bi)]):
+        b_docs, b_tfs, b_lens = tp.decode_block(int(bi[lo]))
+        run = docs[lo:hi]
+        pos = np.minimum(np.searchsorted(b_docs, run), len(b_docs) - 1)
+        hit = b_docs[pos] == run
+        if hit.any():
+            partial[lo:hi][hit] += _score(
+                tp, b_tfs[pos[hit]], b_lens[pos[hit]], stats
+            )
 
-    Same essential/non-essential split as MaxScore, plus the BMM
-    refinement: before touching a non-essential list, each surviving
-    candidate's upper bound is tightened with the BLOCK max score of
-    the block that would contain it (searchsorted into the per-block
-    last-docID array — the wand_data_raw next_geq,
-    wand_data_raw.hpp:85-123); candidates whose bound falls below the
-    threshold are dropped, and only blocks still containing live
-    candidates are decoded at all. Exact top-k: every drop is
-    justified by final(d) <= bound(d) < theta - slack <= k-th score.
-    """
+
+def _maxscore(terms: list[TermPostings], k: int, stats: Stats,
+              init_threshold: float,
+              block_level: bool) -> tuple[np.ndarray, np.ndarray]:
+    """Batch-vectorized MaxScore (maxscore_query.hpp:13-143) and, with
+    ``block_level``, BMM (block_max_maxscore_query.hpp:9-99).
+
+    Phase 0: seed θ from fully scoring the highest-impact term.
+    Phase 1: essential lists = minimal suffix of the max-score-ascending
+    order whose prefix of non-essential upper bounds can't reach θ;
+    aggregate essential postings TAAT-style. Phase 2: keep candidates
+    whose bound reaches θ: partial + the non-essential term maxima, or
+    for BMM, after raising θ to the k-th best partial, partial + the
+    BLOCK max of the block that would hold the candidate in each
+    non-essential list (the wand_data_raw next_geq,
+    wand_data_raw.hpp:85-123). Phase 3: add non-essential scores
+    (_lookup); exact top-k, since every drop has final(d) <= bound(d)
+    < θ <= k-th score - slack."""
     if not terms:
         return np.empty(0, np.int64), np.empty(0, np.float64)
     order = sorted(terms, key=lambda t: t.max_score)  # ascending
-    prefix_ub = np.cumsum([t.max_score for t in order])
+    prefix_ub = np.cumsum([t.max_score for t in order])  # bound of lists 0..i
 
-    # θ seed: full scoring of the top-impact list (same as MaxScore).
     top = order[-1]
     docs_t, tfs_t, lens_t = top.decode_all()
     scores_t = _score(top, tfs_t, lens_t, stats)
-    theta = (
-        float(np.partition(scores_t, -k)[-k]) - PRUNE_EPS
-        if len(scores_t) >= k else 0.0
-    )
-    theta = max(theta, init_threshold)
+    theta = max(_kth_floor(scores_t, k), init_threshold)
+
+    # Non-essential = maximal prefix whose combined upper bound stays
+    # strictly below θ: a doc appearing ONLY there can never reach the
+    # top-k (not even as a rounding tie, thanks to the θ slack).
     split = int(np.searchsorted(prefix_ub, theta, side="left"))
-    split = min(split, len(order) - 1)
+    split = min(split, len(order) - 1)  # top list is always essential
     non_essential, essential = order[:split], order[split:]
 
     parts_d, parts_s = [], []
@@ -772,42 +794,32 @@ def block_max_maxscore_kernel(terms: list[TermPostings], k: int,
         parts_s.append(sc)
     docs, partial = _aggregate(np.concatenate(parts_d), np.concatenate(parts_s))
 
-    # Raise θ with the k-th best essential partial (a valid lower
-    # bound on the k-th final score), keeping the rounding slack.
-    if len(partial) >= k:
-        theta = max(theta, float(np.partition(partial, -k)[-k]) - PRUNE_EPS)
-
-    # Per-candidate bound via block maxes, tightest term first.
-    bound = partial.astype(np.float64).copy()
-    blk_ub = []
-    for tp in non_essential:
-        bi = np.searchsorted(tp.block_max_doc, docs, side="left")
-        ub = np.where(
-            bi < len(tp.block_max_doc),
-            tp.block_max_score[np.minimum(bi, len(tp.block_max_doc) - 1)],
-            0.0,
-        )
-        blk_ub.append((tp, bi, ub))
-        bound += ub
+    if block_level:
+        theta = max(theta, _kth_floor(partial, k))
+        bound = partial.astype(np.float64)
+        for tp in non_essential:  # past the last block: bound 0
+            bi = np.searchsorted(tp.block_max_doc, docs, side="left")
+            bound += np.append(tp.block_max_score, 0.0)[bi]
+    else:
+        bound = partial + (float(prefix_ub[split - 1]) if split else 0.0)
     alive = bound >= theta
     docs, partial = docs[alive], partial[alive]
-
-    for tp, bi_all, _ub in blk_ub:
-        bi = bi_all[alive]
-        # decode only blocks that still hold live candidates
-        in_range = bi < len(tp.block_max_doc)
-        for blk in np.unique(bi[in_range]):
-            sel = in_range & (bi == blk)
-            b_docs, b_tfs, b_lens = tp.decode_block(int(blk))
-            pos = np.searchsorted(b_docs, docs[sel])
-            pos_c = np.minimum(pos, len(b_docs) - 1)
-            hit = b_docs[pos_c] == docs[sel]
-            if hit.any():
-                idx = np.flatnonzero(sel)[hit]
-                partial[idx] += _score(
-                    tp, b_tfs[pos_c[hit]], b_lens[pos_c[hit]], stats
-                )
+    for tp in non_essential:
+        _lookup(tp, docs, partial, stats)
     return _finalize(docs, partial, k)
+
+
+def maxscore_kernel(terms: list[TermPostings], k: int,
+                    stats: Stats, init_threshold: float = 0.0) -> tuple[np.ndarray, np.ndarray]:
+    """MaxScore (maxscore_query.hpp:13-143); see _maxscore."""
+    return _maxscore(terms, k, stats, init_threshold, block_level=False)
+
+
+def block_max_maxscore_kernel(terms: list[TermPostings], k: int,
+                              stats: Stats,
+                              init_threshold: float = 0.0) -> tuple[np.ndarray, np.ndarray]:
+    """BMM (block_max_maxscore_query.hpp:9-99); see _maxscore."""
+    return _maxscore(terms, k, stats, init_threshold, block_level=True)
 
 
 def block_max_ranked_and_kernel(terms: list[TermPostings], k: int,
@@ -868,80 +880,6 @@ def block_max_ranked_and_kernel(terms: list[TermPostings], k: int,
             candidate = max(min(jumps) + 1, candidate + 1)
             li = 0
     return topk.finalize(k)
-
-
-def maxscore_kernel(terms: list[TermPostings], k: int,
-                    stats: Stats, init_threshold: float = 0.0) -> tuple[np.ndarray, np.ndarray]:
-    """Batch-vectorized MaxScore (maxscore_query.hpp:13-143).
-
-    Phase 0: seed threshold θ from fully scoring the highest-impact
-    term (vectorized). Phase 1: essential lists = minimal suffix of
-    the max-score-ascending order whose prefix of non-essential upper
-    bounds can't reach θ; aggregate essential postings TAAT-style.
-    Phase 2: for surviving candidates (partial + non-essential bound >
-    θ), add non-essential contributions via vectorized searchsorted
-    lookups; final exact top-k. Produces exactly the exhaustive
-    result — pruning only skips docs provably below the k-th score.
-    """
-    if not terms:
-        return np.empty(0, np.int64), np.empty(0, np.float64)
-    order = sorted(terms, key=lambda t: t.max_score)  # ascending
-    prefix_ub = np.cumsum([t.max_score for t in order])  # bound of lists 0..i
-
-    # Phase 0: θ seed from the top-impact list alone (a lower bound on
-    # the true k-th score), slackened by the rounding margin.
-    top = order[-1]
-    docs_t, tfs_t, lens_t = top.decode_all()
-    scores_t = _score(top, tfs_t, lens_t, stats)
-    if len(scores_t) >= k:
-        theta = float(np.partition(scores_t, -k)[-k]) - PRUNE_EPS
-    else:
-        theta = 0.0  # micro units throughout
-    theta = max(theta, init_threshold)
-
-    # Non-essential = maximal prefix whose combined upper bound stays
-    # strictly below θ: a doc appearing ONLY there can never reach the
-    # top-k (not even as a rounding tie, thanks to the θ slack).
-    split = int(np.searchsorted(prefix_ub, theta, side="left"))
-    split = min(split, len(order) - 1)  # top list is always essential
-    non_essential, essential = order[:split], order[split:]
-
-    parts_d, parts_s = [], []
-    for tp in essential:
-        if tp is top:  # phase-0 decode is reused, not repeated
-            docs, sc = docs_t, scores_t
-        else:
-            docs, tfs, lens = tp.decode_all()
-            sc = _score(tp, tfs, lens, stats)
-        parts_d.append(docs)
-        parts_s.append(sc)
-    docs, partial = _aggregate(np.concatenate(parts_d), np.concatenate(parts_s))
-
-    ne_bound = float(prefix_ub[split - 1]) if split > 0 else 0.0
-    alive = partial + ne_bound >= theta
-    docs, partial = docs[alive], partial[alive]
-    # Lookup phase: decode ONLY the blocks of non-essential lists that
-    # contain a surviving candidate (block index via searchsorted on
-    # the per-block last-docID array — the reference's lookup cursors
-    # skip the same blocks, maxscore_query.hpp:58-126). Previously
-    # decode_all per non-essential term.
-    for tp in non_essential:
-        if len(docs) == 0 or len(tp.block_max_doc) == 0:
-            continue
-        bi = np.searchsorted(tp.block_max_doc, docs, side="left")
-        in_range = bi < len(tp.block_max_doc)
-        for blk in np.unique(bi[in_range]):
-            sel = in_range & (bi == blk)
-            b_docs, b_tfs, b_lens = tp.decode_block(int(blk))
-            pos = np.searchsorted(b_docs, docs[sel])
-            pos_c = np.minimum(pos, len(b_docs) - 1)
-            hit = b_docs[pos_c] == docs[sel]
-            if hit.any():
-                idx = np.flatnonzero(sel)[hit]
-                partial[idx] += _score(
-                    tp, b_tfs[pos_c[hit]], b_lens[pos_c[hit]], stats
-                )
-    return _finalize(docs, partial, k)
 
 
 # ---------------------------------------------------------------------------

@@ -5,7 +5,11 @@ protocol) of exhaustive TAAT vs the pruned kernels over the sf0.1
 workload, bucketed by the query's TOTAL candidate postings (sum of
 term dfs) — the exact statistic choose_algorithm reads. Prints the
 per-bucket means and the empirical crossover so the constant in
-query/kernels.py can be pinned to measured data.
+query/kernels.py can be pinned to measured data. The kernels run over
+protos built with the executor's default cap: every term of at most
+executor.BATCH_CACHE_MAX_POSTINGS postings decodes once in the proto
+build, outside the timed calls, so pruning is not credited with decode
+savings the executor never sees.
 
 Run solo (shared-host VM — see BENCH.md measurement discipline):
     python scripts/calibrate_adaptive.py [sf_dir] [n_queries]
@@ -15,11 +19,12 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main() -> None:
@@ -104,9 +109,8 @@ def main() -> None:
         recs.append(rec)
         return np.empty(0, np.int64), np.empty(0)
 
-    # cap=0: block decode stays inside every timed kernel call
     protos, base_bm = _build_batch_protos(
-        pdf.drop_duplicates(["term_id", "block_id"]), decode, cap=0
+        pdf.drop_duplicates(["term_id", "block_id"]), decode
     )
     queries = pdf[["query_id", "k", "term_id", "weight"]].drop_duplicates()
     for _ in _walk_batch_queries(

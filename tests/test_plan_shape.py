@@ -221,44 +221,40 @@ def test_threshold_zero_disables_lexicon_broadcast(spark):
     assert idx.postings.count() > 0 and idx.segments.count() > 0
 
 
-def test_file_backed_request_builds_lazily(spark, tmp_path_factory):
-    """Building an executor's DataFrame over a file-backed index
-    submits no Spark job: every request plans the same lazy
-    ``segments ⨝ broadcast(term_meta ⨝ broadcast(queries))`` scan, with
-    no driver collect deciding a scan filter first. Only the caller's
-    action runs, and its top-k equals the exhaustive disjunction."""
+@pytest.fixture(scope="module")
+def file_backed(spark, tmp_path_factory):
+    """200 synth pages over four 64-doc buckets, written by the
+    checkpointed BuildPipeline: a file-backed multi-bucket index."""
     from dataclasses import replace
 
     from pisa_spark.build.pipeline import BuildPipeline
     from pisa_spark.corpus import synth_pages
-    from pisa_spark.query.executor import (
-        _n_buckets, boolean_query, topk_search,
-    )
-    from pisa_spark.query.thresholds import quality_ranked
+    from pisa_spark.query.executor import _n_buckets
 
     cfg = replace(CFG, index=IndexConfig(salt_bucket_docs=64))
     out = str(tmp_path_factory.mktemp("pipe_lazy"))
     idx = BuildPipeline(spark, out, cfg).run(synth_pages(spark, 200))
     assert _n_buckets(idx) > 1
-    parsed = _parse(spark, idx)
+    return idx
+
+
+def _jobs(spark, name, action):
+    """(action(), the number of Spark jobs it submitted)."""
     sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(name))
 
-    def jobs(name, action):
-        sc.setJobGroup(name, name)
-        try:
-            result = action()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return result, len(sc.statusTracker().getJobIdsForGroup(name))
 
-    topk, n_topk = jobs("build_topk", lambda: topk_search(
-        idx, parsed, algorithm="maxscore"))
-    _, n_bool = jobs("build_boolean", lambda: boolean_query(idx, parsed))
-    assert (n_topk, n_bool) == (0, 0)
+def _assert_exhaustive(index, parsed, topk):
+    from pisa_spark.query.thresholds import quality_ranked
 
     got = topk.toPandas().sort_values(["query_id", "rank"])
     exp = (
-        quality_ranked(idx, parsed, 10).toPandas()
+        quality_ranked(index, parsed, 10).toPandas()
         .rename(columns={"rn": "rank"}).sort_values(["query_id", "rank"])
     )
     assert len(exp) > 0
@@ -267,6 +263,43 @@ def test_file_backed_request_builds_lazily(spark, tmp_path_factory):
         got[cols].astype({"rank": "int64"}).reset_index(drop=True),
         exp[cols].astype({"rank": "int64"}).reset_index(drop=True),
     )
+
+
+def test_file_backed_request_builds_lazily(spark, file_backed):
+    """Building an executor's DataFrame over a file-backed index
+    submits no Spark job: every request plans the same lazy
+    ``segments ⨝ broadcast(term_meta ⨝ broadcast(queries))`` scan, with
+    no driver collect deciding a scan filter first. Only the caller's
+    action runs, and its top-k equals the exhaustive disjunction."""
+    from pisa_spark.query.executor import boolean_query, topk_search
+
+    parsed = _parse(spark, file_backed)
+    topk, n_topk = _jobs(spark, "build_topk", lambda: topk_search(
+        file_backed, parsed, algorithm="maxscore"))
+    _, n_bool = _jobs(spark, "build_boolean",
+                      lambda: boolean_query(file_backed, parsed))
+    assert (n_topk, n_bool) == (0, 0)
+    _assert_exhaustive(file_backed, parsed, topk)
+
+
+def test_bootstrapped_request_pins_query_side(spark, file_backed):
+    """A bootstrapped request pins ``parsed ⨝ thresholds`` once
+    (executor._bootstrapped), so the live ranges, the batch term set,
+    the cogroup's query side and the merge's k stop re-planning it. A
+    4-query ``maxscore`` request over the four buckets, frame build
+    plus action, measured 26-27 jobs (32-33 with the query side
+    unpinned); its top-k equals the exhaustive disjunction."""
+    from pisa_spark.query.executor import topk_search
+
+    parsed = _parse(spark, file_backed)
+    thr = parsed.select("query_id").distinct().withColumn(
+        "threshold_micro", F.lit(0).cast("long")
+    )
+    topk, n_build = _jobs(spark, "boot_build", lambda: topk_search(
+        file_backed, parsed, algorithm="maxscore", thresholds=thr))
+    _, n_action = _jobs(spark, "boot_action", topk.toPandas)
+    assert n_build + n_action <= 28, (n_build, n_action)
+    _assert_exhaustive(file_backed, parsed, topk)
 
 
 def test_live_range_join_is_unhinted(multi, multi_parsed):

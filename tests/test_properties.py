@@ -153,8 +153,10 @@ def _mk_term_postings(doc_ids, tfs, lens, weight, stats, rnd):
     st.integers(min_value=1, max_value=12),         # k
     st.floats(min_value=0.0, max_value=1.0),        # bootstrap frac
     st.booleans(),                                  # quantized index
+    st.booleans(),                                  # eager payload form
 )
-def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized):
+def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized,
+                                      eager):
     from pisa_spark.query import kernels as K
 
     rnd = np.random.default_rng(seed)
@@ -171,6 +173,11 @@ def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized):
         w = float(rnd.choice([1.0, 2.0]))
         terms.append(_mk_term_postings(
             d, tfs, lens_by_doc[d], w, stats, rnd))
+    if eager:  # the decoded view _build_batch_protos gives under-cap terms
+        for t in terms:
+            t.decoded = t.decode_all()
+            t.block_offsets = np.concatenate(([0], np.cumsum(t.block_count)))
+            t.doc_payloads = t.tf_payloads = t.len_payloads = None
 
     exp_docs, exp_scores = K.ranked_or_kernel(terms, k, stats)
     # a sound bootstrap never changes the result: anything strictly
@@ -180,13 +187,20 @@ def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized):
 
     from pisa_spark.query.executor import RANKED_KERNELS
 
+    blocks = {}
     for name in ("wand", "block_max_wand", "block_max_maxscore",
                  "maxscore", "adaptive"):
+        K.Profiler.reset()
         got_d, got_s = RANKED_KERNELS[name](
             terms, k, stats, init_threshold=boot)
+        blocks[name] = K.Profiler.blocks
         np.testing.assert_array_equal(got_d, exp_docs, err_msg=name)
         np.testing.assert_allclose(got_s, exp_scores, rtol=0, atol=0,
                                    err_msg=name)
+    # Same θ seed and split, and a block max never exceeds its term
+    # max: BMM decodes no more lazy blocks than MaxScore (the eager
+    # form decodes none inside a kernel).
+    assert blocks["block_max_maxscore"] <= blocks["maxscore"], blocks
     for fn in (K.wand_kernel_daat, K.block_max_wand_kernel_daat):
         got_d, got_s = fn(terms, k, stats, init_threshold=boot)
         np.testing.assert_array_equal(got_d, exp_docs, err_msg=fn.__name__)
