@@ -142,8 +142,8 @@ def _run_kernel(algorithm: str, variant: str = "default"):
 
 def _run_batched(algorithm: str, batches: int = 7):
     """executor.topk_search at a pinned batch count: shared term
-    payloads + per-batch decoded-block cache; must stay
-    rank-identical to ranked_or."""
+    payloads, each decoded once per batch; must stay rank-identical
+    to ranked_or."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pisa_spark.query.executor import topk_search

@@ -60,7 +60,6 @@ from pisa_spark.codecs.columns import binary_column, decode_column, docs_from_pa
 from pisa_spark.functions.scoring import MICRO
 from pisa_spark.index import InvertedIndex
 from pisa_spark.query.kernels import (
-    CappedBlockCache,
     adaptive_kernel,
     PRUNE_EPS,
     Profiler,
@@ -292,13 +291,12 @@ def boolean_query(
     are disjoint doc ranges, so their results need no merge."""
     op_kernel = BOOLEAN_KERNELS[op]
     decode = CODECS[index.config.index.codec][1]
-    cap = BATCH_CACHE_MAX_POSTINGS
 
     def kernel(terms, k, stats, init_threshold=0.0):  # docs, no scores
         return op_kernel(terms), None
 
     def run(left: pa.Table, right: pa.Table) -> pa.Table:
-        protos, base_bm = _build_batch_protos(left, decode, cap)
+        protos, base_bm = _build_batch_protos(left, decode)
         if op == "and":
             right = _complete_queries(right, protos)
         return _results_table(
@@ -370,15 +368,6 @@ def _merge_partials(
     )
 
 
-# Per-term working-set cap for batch-major execution: a term with at
-# most this many postings in a batch decodes eagerly with the batch's
-# columnar pass; beyond it the term decodes lazily per block through a
-# CappedBlockCache that stops growing at the same budget (blocks then
-# decode again per query). Bounds
-# task memory at ~24 bytes/posting/term regardless of batch
-# composition. Read on the driver when an executor is called.
-BATCH_CACHE_MAX_POSTINGS = 1 << 22
-
 _PAYLOADS = ("doc_bytes", "tf_bytes", "len_bytes")
 _RANKED_SCHEMA = pa.schema([
     ("query_id", pa.string()), ("rank", pa.int32()),
@@ -391,28 +380,24 @@ _BOOLEAN_SCHEMA = pa.schema([("query_id", pa.string()), ("doc_id", pa.int64())])
 
 
 def _build_batch_protos(left: pa.Table | pd.DataFrame, decode,
-                        cap: int | None = None):
+                        lazy: bool = False):
     """(protos, base_bm) for one cogroup's distinct term segment rows
     — the per-batch TermPostings prototypes every executor shares,
     with weight-neutral bounds (weight rebound per query via
     dataclasses.replace).
 
-    One columnar pass: rows sort once by (term_id, block_id); every
-    term with at most ``cap`` postings (default BATCH_CACHE_MAX_POSTINGS)
-    decodes eagerly — one decode call per payload column for
+    One columnar pass: rows sort once by (term_id, block_id) and every
+    term decodes eagerly — one decode call per payload column for
     self-delimiting codecs, one segmented cumsum rebuilding absolute
-    docIDs — and its proto carries term-level (docs, tfs, lens) views
-    plus block offsets. Over-cap terms keep lazy per-block decode from
-    zero-copy payload slices through a CappedBlockCache, so ``cap``
-    bounds per-term decoded memory either way. ``cap=0`` makes every
-    term lazy with a cache that holds nothing, so each block decode
-    happens (and is counted by kernels.Profiler) inside the query
-    that needs it. A pandas frame (in-process callers) is converted
-    first."""
+    docIDs — so its proto carries term-level (docs, tfs, lens) views
+    plus block offsets. A group holds one salt bucket of each term
+    (build/segments.py), which bounds the decoded working set.
+    ``lazy=True`` instead gives every term zero-copy per-block payload
+    slices, so each block decode happens (and is counted by
+    kernels.Profiler) inside the query that needs it. A pandas frame
+    (in-process callers) is converted first."""
     if isinstance(left, pd.DataFrame):
         left = pa.Table.from_pandas(left, preserve_index=False)
-    if cap is None:
-        cap = BATCH_CACHE_MAX_POSTINGS
     protos: dict[int, TermPostings] = {}
     base_bm: dict[int, np.ndarray] = {}
     if left.num_rows == 0:
@@ -439,43 +424,36 @@ def _build_batch_protos(left: pa.Table | pd.DataFrame, decode,
     # term t owns sorted rows tb[t]:tb[t + 1]; pcum = postings before row
     tb = np.concatenate(([0], np.flatnonzero(np.diff(term)) + 1, [len(term)]))
     pcum = np.concatenate(([0], np.cumsum(counts)))
-    term_postings = pcum[tb[1:]] - pcum[tb[:-1]]
-    eager = term_postings <= cap
-    eager_rows = np.repeat(eager, np.diff(tb))
-    e_counts = counts[eager_rows]
     columns = {c: binary_column(left, c) for c in _PAYLOADS}
-    if eager.any():
-        rows = order[eager_rows]
+    if not lazy:
         payload, tfs, lens = (
-            decode_column(columns[c], rows, e_counts, decode) for c in _PAYLOADS
+            decode_column(columns[c], order, counts, decode) for c in _PAYLOADS
         )
         tfs += 1
         lens += 1
-        docs = docs_from_payload(payload, e_counts)
+        docs = docs_from_payload(payload, counts)
         for a in (docs, tfs, lens):
             a.setflags(write=False)  # shared by every query of the batch
-        Profiler.blocks += len(rows)
-        Profiler.postings += int(e_counts.sum())
-    e_pos = 0
+        Profiler.blocks += len(order)
+        Profiler.postings += int(pcum[-1])
     for t in range(len(tb) - 1):
         r0, r1 = int(tb[t]), int(tb[t + 1])
         tid = int(term[r0])
         base_bm[tid] = bm_micro[r0:r1]
-        if eager[t]:
-            sl = slice(e_pos, e_pos + int(term_postings[t]))
-            e_pos = sl.stop
+        if lazy:
+            rows = order[r0:r1].tolist()
+            payloads = {}
+            for c, (off, data) in columns.items():
+                mv = memoryview(data)
+                payloads[c.replace("_bytes", "_payloads")] = [
+                    mv[off[r]:off[r + 1]] for r in rows
+                ]
+        else:
+            sl = slice(int(pcum[r0]), int(pcum[r1]))
             payloads = dict(
                 decoded=(docs[sl], tfs[sl], lens[sl]),
                 block_offsets=pcum[r0:r1 + 1] - pcum[r0],
             )
-        else:
-            rows = order[r0:r1]
-            payloads = dict(block_cache=CappedBlockCache(cap))
-            for c, (off, data) in columns.items():
-                mv = memoryview(data)
-                payloads[c.replace("_bytes", "_payloads")] = [
-                    mv[off[r]:off[r + 1]] for r in rows.tolist()
-                ]
         # Upper bounds in MICRO units (+1 covers the <=0.5-micro
         # quantization shift) so they stay sound vs micro-int scores.
         protos[tid] = TermPostings(
@@ -497,7 +475,7 @@ def _walk_batch_queries(right: pa.Table | pd.DataFrame, protos, base_bm,
     """Column-array walk over a batch's parsed rows, sorted by query —
     no per-query groupby/iterrows. Yields (query_id, docs, scores) per
     query: protos rebound to the query's weights (shared decoded
-    payloads/caches), threshold bootstrap honored, per-query k from
+    payloads), threshold bootstrap honored, per-query k from
     the mandatory k column, idf caches shared back into the protos. A
     pandas frame (in-process callers) is converted first."""
     from dataclasses import replace
@@ -703,9 +681,10 @@ def topk_search(
     returns a partial top-k and a window merges them per query
     (range_query.hpp's per-range runs, merged instead of sharing one
     heap), so per-task working set = the batch's distinct lists
-    WITHIN ONE BUCKET, with decoded postings capped at
-    BATCH_CACHE_MAX_POSTINGS per term. A parsed frame without a
-    per-query ``k`` column falls back to the ``k`` argument.
+    WITHIN ONE BUCKET: the salt bucket (at most salt_bucket_docs
+    postings per term) is the one bound on decoded memory. A parsed
+    frame without a per-query ``k`` column falls back to the ``k``
+    argument.
 
     ``thresholds``: optional (query_id, threshold_micro) sound lower
     bounds (thresholds.estimate_thresholds) that bootstrap each
@@ -723,20 +702,20 @@ def topk_search(
     batches run over the whole docID space, one heap per query like
     the reference's: a bucket's fresh heap cannot skip a list that
     has one block in the bucket. They decode every block inside the
-    query that needs it (``cap=0``), so the counts are per query."""
+    query that needs it (``lazy=True`` protos), so the counts are per
+    query."""
     kernel = RANKED_KERNELS[algorithm]
     decode = CODECS[index.config.index.codec][1]
     stats = _stats(index)
     parsed = _bootstrapped(parsed, algorithm, thresholds)
     n_buckets = 1 if profile else _n_buckets(index)
-    cap = 0 if profile else BATCH_CACHE_MAX_POSTINGS
 
     def run(left: pa.Table, right: pa.Table) -> pa.Table:
         # left: the group's distinct term segment rows (+ term stats);
         # right: the batch's parsed queries (query_id, k, term_id,
         # weight[, threshold_micro]). Shared proto build + query walk
         # (_build_batch_protos/_walk_batch_queries); one output table.
-        protos, base_bm = _build_batch_protos(left, decode, cap)
+        protos, base_bm = _build_batch_protos(left, decode, lazy=profile)
         if algorithm not in DISJUNCTIVE_ALGORITHMS:
             right = _complete_queries(right, protos)
         if not profile:

@@ -55,7 +55,9 @@ from pisa_spark.functions.scoring import MICRO, bm25_score_np, to_micro_np
 class Profiler:
     """Per-query decode counters (the reference's block_profiler /
     profile_queries analogue): every block decode anywhere in a kernel
-    is counted here. Reset per query group by the executor."""
+    is counted here. The counters only grow: the executor's eager
+    proto build adds its whole decode once, and profiled runs read
+    per-query deltas around each kernel call."""
 
     blocks = 0
     postings = 0
@@ -64,27 +66,6 @@ class Profiler:
     def reset(cls):
         cls.blocks = 0
         cls.postings = 0
-
-
-class CappedBlockCache(dict):
-    """Decoded-block cache with a POSTING budget: entries insert
-    until ``budget`` postings are held, then further inserts are
-    no-ops (those blocks re-decode per query). First-come blocks stay
-    cached, so a term just over the cap still amortizes its first
-    ``budget`` postings across the batch instead of losing caching
-    entirely — memory stays bounded without the all-or-nothing
-    cliff."""
-
-    def __init__(self, budget: int):
-        super().__init__()
-        self.budget = int(budget)
-
-    def __setitem__(self, key, value):
-        n = len(value[0])
-        if n > self.budget:
-            return
-        self.budget -= n
-        super().__setitem__(key, value)
 
 
 @dataclass
@@ -114,13 +95,6 @@ class TermPostings:
     len_payloads: list | None = None  # per-posting doc_len-1 (rides in the block)
     decode: object = None  # codec decode fn
     idf_cache: object = None  # lazily-built constant-idf array (_score)
-    # Optional shared decoded-block cache {block_idx: (docs, tfs,
-    # lens)} for lazily decoded terms that batch-major execution runs
-    # many queries over (over-cap terms, executor.
-    # BATCH_CACHE_MAX_POSTINGS), so a block decodes at most once per
-    # batch within the cache's budget. None for in-process callers
-    # that build TermPostings by hand.
-    block_cache: object = None
     decoded: tuple | None = None  # term-level (docs, tfs, lens)
     block_offsets: np.ndarray | None = None  # int64, n_blocks + 1
 
@@ -137,10 +111,6 @@ class TermPostings:
             lo, hi = self.block_offsets[bi], self.block_offsets[bi + 1]
             d, t, L = self.decoded
             return d[lo:hi], t[lo:hi], L[lo:hi]
-        if self.block_cache is not None:
-            hit = self.block_cache.get(bi)
-            if hit is not None:
-                return hit
         n = int(self.block_count[bi])
         Profiler.blocks += 1
         Profiler.postings += n
@@ -160,8 +130,6 @@ class TermPostings:
         docs = payload.copy()
         docs[1:] += 1
         docs = np.cumsum(docs)
-        if self.block_cache is not None:
-            self.block_cache[bi] = (docs, tfs, lens)
         return docs, tfs, lens
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

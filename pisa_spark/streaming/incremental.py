@@ -424,6 +424,10 @@ class IncrementalIndexer:
         counting: that would cost an extra delta-sized job per
         micro-batch — derive drop rates from the stored docs table
         offline instead)."""
+        if on_recrawl not in ("error", "filter"):  # before any side effect
+            raise ValueError(
+                f"on_recrawl={on_recrawl!r}: expected 'error' or 'filter'"
+            )
         if pages.isEmpty():
             prev = self._committed_gen()
             if prev is None:
@@ -460,10 +464,6 @@ class IncrementalIndexer:
         # url-key guards: NULL urls are rejected inside the id
         # assignment and duplicate urls by the stats guard below (both
         # the batch build's own); recrawls of stored urls here.
-        if on_recrawl not in ("error", "filter"):
-            raise ValueError(
-                f"on_recrawl={on_recrawl!r}: expected 'error' or 'filter'"
-            )
         if on_recrawl == "filter":
             # Crawl-stream mode: recrawls/refetches are ordinary data,
             # not poison. Deterministically keep ONE row per url

@@ -6,10 +6,9 @@ workload, bucketed by the query's TOTAL candidate postings (sum of
 term dfs) — the exact statistic choose_algorithm reads. Prints the
 per-bucket means and the empirical crossover so the constant in
 query/kernels.py can be pinned to measured data. The kernels run over
-protos built with the executor's default cap: every term of at most
-executor.BATCH_CACHE_MAX_POSTINGS postings decodes once in the proto
-build, outside the timed calls, so pruning is not credited with decode
-savings the executor never sees.
+protos built as the executor builds them: every term decodes once in
+the proto build, outside the timed calls, so pruning is not credited
+with decode savings the executor never sees.
 
 Run solo (shared-host VM — see BENCH.md measurement discipline):
     python scripts/calibrate_adaptive.py [sf_dir] [n_queries]
@@ -17,6 +16,7 @@ Run solo (shared-host VM — see BENCH.md measurement discipline):
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from pathlib import Path
@@ -24,7 +24,12 @@ from pathlib import Path
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, ROOT)
+# the JVM, and the Python workers it starts, inherit PYTHONPATH
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (ROOT, os.environ.get("PYTHONPATH")))
+)
 
 
 def main() -> None:

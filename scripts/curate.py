@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 from pathlib import Path
@@ -44,7 +45,12 @@ from pathlib import Path
 try:  # spark-submit --py-files pisa_spark.zip provides the package
     import pisa_spark  # noqa: F401
 except ImportError:
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    ROOT = str(Path(__file__).resolve().parent.parent)
+    sys.path.insert(0, ROOT)
+    # the JVM, and the Python workers it starts, inherit PYTHONPATH
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, (ROOT, os.environ.get("PYTHONPATH")))
+    )
 
 # Default quality gates (token-level analogues of the public
 # Gopher/C4 rules — see datapipe.textstats).

@@ -31,7 +31,12 @@ from pathlib import Path
 try:  # spark-submit --py-files pisa_spark.zip provides the package
     import pisa_spark  # noqa: F401
 except ImportError:  # plain `python scripts/run_pipeline.py` from anywhere
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    ROOT = str(Path(__file__).resolve().parent.parent)
+    sys.path.insert(0, ROOT)
+    # the JVM, and the Python workers it starts, inherit PYTHONPATH
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, (ROOT, os.environ.get("PYTHONPATH")))
+    )
 
 
 def main() -> None:

@@ -45,6 +45,10 @@ def probe_one(n_docs: int, cores: int, port: int, job: str = "build") -> dict:
     """Run ONE size in THIS process (fresh JVM per invocation when
     driven through main's subprocess mode)."""
     sys.path.insert(0, REPO)
+    # the JVM, and the Python workers it starts, inherit PYTHONPATH
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, (REPO, os.environ.get("PYTHONPATH")))
+    )
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 

@@ -21,13 +21,19 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the JVM, and the Python workers it starts, inherit PYTHONPATH
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (ROOT, os.environ.get("PYTHONPATH")))
+)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",

@@ -2,9 +2,10 @@
 
 Two layers:
 
-- the columnar proto build (_build_batch_protos) in-process: eager
-  term-level decode under the per-term cap, lazy CappedBlockCache
-  decode above it, identical kernel results either way;
+- the columnar proto build (_build_batch_protos) in-process: the
+  eager term-level decode every request uses and the lazy per-block
+  form of profiled requests, identical blocks and kernel results
+  either way, decodes counted once per build or once per query;
 - a small pinned configuration matrix (codec x quantization x
   compressed block maxes, over three docID buckets, plus one config
   at one bucket) run through the Spark executor, rank-identical to an
@@ -17,6 +18,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -81,45 +83,70 @@ def _queries() -> pa.Table:
     })
 
 
+def _profiled_walk(left, right, decode, lazy, algo, stats):
+    """[(query_id, docs, scores, blocks, postings)] of one batch walk
+    over fresh protos, with each query's kernels.Profiler delta (the
+    topk_search(profile=True) wrapper)."""
+    protos, base_bm = ex._build_batch_protos(left, decode, lazy=lazy)
+    if algo not in ex.DISJUNCTIVE_ALGORITHMS:
+        right = ex._complete_queries(right, protos)
+    kernel = ex.RANKED_KERNELS[algo]
+    deltas = []
+
+    def profiled(terms, k, stats, init_threshold=0.0):
+        b0, p0 = K.Profiler.blocks, K.Profiler.postings
+        out = kernel(terms, k, stats, init_threshold=init_threshold)
+        deltas.append((K.Profiler.blocks - b0, K.Profiler.postings - p0))
+        return out
+
+    walk = list(ex._walk_batch_queries(right, protos, base_bm, profiled, stats))
+    return [(*w, *d) for w, d in zip(walk, deltas)]
+
+
 @pytest.mark.parametrize("codec", ["varint", "bitpack"])
-def test_build_batch_protos_cap_splits_eager_and_lazy(codec):
-    """Terms above the cap decode lazily through a CappedBlockCache,
-    terms at or below it decode eagerly into term-level arrays; every
-    block and every kernel result is identical to the all-eager build
-    (varint: one decode call per payload column; bitpack: per block)."""
+def test_build_batch_protos_eager_matches_lazy(codec):
+    """The eager build (one columnar decode into term-level arrays)
+    and the lazy one (zero-copy per-block payloads, what profiled
+    requests use) give identical blocks and identical results for
+    every ranked kernel (varint: one decode call per payload column;
+    bitpack: per block). Eager counts its whole decode once in the
+    build and none inside a query; lazy counts each block decode
+    inside the query that needs it, the same whether the query runs
+    in its batch or alone (no decode is shared between queries)."""
     left, stats = _segment_table(codec)
     decode = CODECS[codec][1]
-    cap = 500
-    eager, _ = ex._build_batch_protos(left, decode, cap=1 << 30)
-    mixed, base_bm = ex._build_batch_protos(left, decode, cap=cap)
-    assert sorted(mixed) == list(range(6))
-    for tid, tp in mixed.items():
-        n = int(tp.block_count.sum())
-        if n > cap:
-            assert tp.decoded is None and tp.doc_payloads
-            assert isinstance(tp.block_cache, K.CappedBlockCache)
-        else:
-            assert tp.decoded is not None and tp.doc_payloads is None
+    b0, p0 = K.Profiler.blocks, K.Profiler.postings
+    lazy, _ = ex._build_batch_protos(left, decode, lazy=True)
+    assert (K.Profiler.blocks, K.Profiler.postings) == (b0, p0)
+    eager, _ = ex._build_batch_protos(left, decode)
+    assert sorted(eager) == sorted(lazy) == list(range(6))
+    for tid, tp in lazy.items():
         ref = eager[tid]
+        assert tp.decoded is None and tp.doc_payloads
+        assert ref.decoded is not None and ref.doc_payloads is None
         for bi in range(len(tp.block_count)):
             for got, exp in zip(tp.decode_block(bi), ref.decode_block(bi)):
                 np.testing.assert_array_equal(got, exp)
         for got, exp in zip(tp.decode_all(), ref.decode_all()):
             np.testing.assert_array_equal(got, exp)
-    over = [tp for tp in mixed.values() if tp.decoded is None]
-    assert over and len(over) < len(mixed)
-    for algo in ("ranked_or", "maxscore", "block_max_maxscore",
-                 "block_max_wand", "wand", "adaptive"):
-        kernel = ex.RANKED_KERNELS[algo]
-        fresh_eager, bm_e = ex._build_batch_protos(left, decode, cap=1 << 30)
-        fresh_mixed, bm_m = ex._build_batch_protos(left, decode, cap=cap)
-        a = list(ex._walk_batch_queries(_queries(), fresh_eager, bm_e, kernel, stats))
-        b = list(ex._walk_batch_queries(_queries(), fresh_mixed, bm_m, kernel, stats))
-        assert [q for q, _, _ in a] == ["q0", "q1", "q2", "q3", "q4"]
-        for (qa, da, sa), (qb, db, sb) in zip(a, b):
-            assert qa == qb
-            np.testing.assert_array_equal(da, db)
-            np.testing.assert_array_equal(sa, sb)
+    queries = _queries()
+    for algo in ex.RANKED_KERNELS:
+        a = _profiled_walk(left, queries, decode, False, algo, stats)
+        b = _profiled_walk(left, queries, decode, True, algo, stats)
+        assert [r[0] for r in a] == [r[0] for r in b]
+        assert {"q0", "q2", "q4"} <= {r[0] for r in a}, algo
+        for (qa, da, sa, ba, pa_), (qb, db, sb, bb, pb) in zip(a, b):
+            np.testing.assert_array_equal(da, db, err_msg=algo)
+            np.testing.assert_array_equal(sa, sb, err_msg=algo)
+            assert (ba, pa_) == (0, 0), algo
+            one = queries.filter(pc.equal(queries["query_id"], qb))
+            alone = _profiled_walk(left, one, decode, True, algo, stats)
+            assert alone[0][3:] == (bb, pb), (algo, qb)
+            if algo == "ranked_or":  # exhaustive: every block of its terms
+                want = [lazy[t].block_count
+                        for t in one["term_id"].to_pylist() if t in lazy]
+                assert bb == sum(len(c) for c in want)
+                assert pb == sum(int(c.sum()) for c in want)
 
 
 def test_build_batch_protos_accepts_pandas_and_counts_eager_decodes():

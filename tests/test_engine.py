@@ -1455,10 +1455,10 @@ def test_batched_kernels_match_daat(index, parsed, spark):
         n_q[0] += 1
         return np.empty(0, np.int64), np.empty(0)
 
-    # cap=0: every kernel decodes its own blocks, none shared
+    # lazy protos: every kernel decodes its own blocks, none shared
     pdf = _factored_rows(index, parsed).toPandas()
     protos, base_bm = _build_batch_protos(
-        pdf.drop_duplicates(["term_id", "block_id"]), decode, cap=0
+        pdf.drop_duplicates(["term_id", "block_id"]), decode, lazy=True
     )
     queries = pdf[["query_id", "k", "term_id", "weight"]].drop_duplicates()
     for _ in _walk_batch_queries(
@@ -1710,41 +1710,3 @@ def test_shuffled_id_join_matches_broadcast(spark):
         spark.conf.set(key, prev)
     assert "Broadcast" not in plan, plan
     assert got == want and sorted(got.values()) == list(range(300))
-
-
-def test_capped_block_cache_budget():
-    """CappedBlockCache: first-come blocks cache until the posting
-    budget is spent; later inserts are no-ops (over-cap terms keep
-    partial amortization instead of losing caching entirely)."""
-    from pisa_spark.query.kernels import CappedBlockCache
-
-    c = CappedBlockCache(5)
-    a3 = (np.arange(3), np.arange(3), np.arange(3))
-    a2 = (np.arange(2), np.arange(2), np.arange(2))
-    c[0] = a3
-    assert 0 in c and c.budget == 2
-    c[1] = a3  # needs 3 > remaining 2 -> dropped
-    assert 1 not in c
-    c[2] = a2  # exactly fits
-    assert 2 in c and c.budget == 0
-    c[3] = a2
-    assert 3 not in c
-    assert set(c) == {0, 2}
-
-
-def test_batch_executor_over_cap_term_matches(index, parsed, oracle_topk,
-                                              monkeypatch):
-    """With the cache cap forced below every term's postings, the
-    batch executor must return identical results — the capped cache
-    is transparent to correctness."""
-    from pisa_spark.query import executor
-
-    monkeypatch.setattr(executor, "BATCH_CACHE_MAX_POSTINGS", 4)
-    exp = oracle_topk.astype({"rank": "int64", "doc_id": "int64"})
-    got = _fetch(executor.topk_search(
-        index, parsed, algorithm="block_max_maxscore", k=10, batches=2
-    ))
-    pd.testing.assert_frame_equal(
-        got[["query_id", "rank", "doc_id"]],
-        exp[["query_id", "rank", "doc_id"]],
-    )

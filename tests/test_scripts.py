@@ -69,7 +69,8 @@ def test_run_pipeline_codec_profiles(tmp_path, profile):
     profiles: 'phased' (zstd build session -> fresh lz4 query session
     resuming from the build's manifests — the r4 shipped default) and
     'flat' (one lz4 session). Subprocess because each profile owns its
-    SparkSession lifecycle."""
+    SparkSession lifecycle; started outside the repository, so its
+    Python workers must find the package too."""
     import json
     import re
     import subprocess
@@ -84,7 +85,7 @@ def test_run_pipeline_codec_profiles(tmp_path, profile):
             "--codec-profile", profile,
             "--out", str(tmp_path / f"idx_{profile}"),
         ],
-        capture_output=True, text=True, timeout=600,
+        capture_output=True, text=True, timeout=600, cwd=tmp_path,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     m = re.findall(r'\{"n_docs".*\}', proc.stdout + proc.stderr)

@@ -99,6 +99,12 @@ def test_segment_bytes_pinned(spark, scored_corpus, name):
     bucket = seg["block_id"] // blocks_per_bucket(cfg)
     assert bucket.nunique() >= 5
     assert seg.groupby(["term_id", bucket]).size().max() >= 3
+    # the query side's one memory bound: a block's docs lie in its
+    # block_id's salt bucket, so a (term, bucket) group holds at most
+    # salt_bucket_docs postings
+    assert (seg["max_doc_id"] // cfg.salt_bucket_docs == bucket).all()
+    assert seg.groupby(["term_id", bucket])["count"].sum().max() \
+        <= cfg.salt_bucket_docs
     assert segments_digest(seg) == digest
 
 

@@ -763,6 +763,22 @@ def test_on_recrawl_filter_keeps_stream_alive(spark, tmp_path):
         inc.add_generation(_pages_slice(spark, 0, 6))
 
 
+def test_bad_on_recrawl_refused_before_any_side_effect(spark, tmp_path):
+    """An unknown on_recrawl policy is refused before the call touches
+    the dir: on a virgin dir no ownership marker (which would let a
+    later call take stray tables for its own crashed build) and no
+    file is left behind."""
+    from pisa_spark.streaming import IncrementalIndexer
+    from pisa_spark.streaming.incremental import _MARKER
+
+    out = tmp_path / "inc_bad_policy"
+    inc = IncrementalIndexer(spark, str(out), CFG)
+    with pytest.raises(ValueError, match="on_recrawl='keep'"):
+        inc.add_generation(_pages(spark).limit(5), on_recrawl="keep")
+    assert not (out / _MARKER).exists()
+    assert list(out.rglob("*")) == []
+
+
 def test_twenty_generation_soak_with_midstream_compact(spark, tmp_path):
     """Depth soak (VERDICT r3 next-#5): 21 generations of appends with
     a compact() mid-stream, asserting after every phase that the
