@@ -91,9 +91,10 @@ def varint_decode(data: bytes, n: int | None = None) -> np.ndarray:
 # Self-delimiting per-value code: decode(a + b, n_a + n_b) ==
 # concat(decode(a, n_a), decode(b, n_b)) and encode(a ++ b) ==
 # encode(a) + encode(b), with ``sizes`` the per-value byte lengths.
-# The kernels (TermPostings.decode_block) and codecs/columns.py use
-# this to decode or encode many blocks in ONE call — fixed-layout
-# codecs must NOT set it (tests/test_codecs.py checks flagged codecs).
+# codecs/columns.py (the one payload decode: segment encode,
+# decode_segments, the query proto build) uses this to decode or
+# encode many blocks in ONE call — fixed-layout codecs must NOT set
+# it (tests/test_codecs.py checks flagged codecs).
 varint_decode.concat_safe = True
 varint_encode.concat_safe = True
 varint_encode.sizes = varint_sizes

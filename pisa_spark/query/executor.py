@@ -379,8 +379,7 @@ _PROFILE_SCHEMA = _RANKED_SCHEMA.append(
 _BOOLEAN_SCHEMA = pa.schema([("query_id", pa.string()), ("doc_id", pa.int64())])
 
 
-def _build_batch_protos(left: pa.Table | pd.DataFrame, decode,
-                        lazy: bool = False):
+def _build_batch_protos(left: pa.Table | pd.DataFrame, decode):
     """(protos, base_bm) for one cogroup's distinct term segment rows
     — the per-batch TermPostings prototypes every executor shares,
     with weight-neutral bounds (weight rebound per query via
@@ -389,13 +388,12 @@ def _build_batch_protos(left: pa.Table | pd.DataFrame, decode,
     One columnar pass: rows sort once by (term_id, block_id) and every
     term decodes eagerly — one decode call per payload column for
     self-delimiting codecs, one segmented cumsum rebuilding absolute
-    docIDs — so its proto carries term-level (docs, tfs, lens) views
-    plus block offsets. A group holds one salt bucket of each term
-    (build/segments.py), which bounds the decoded working set.
-    ``lazy=True`` instead gives every term zero-copy per-block payload
-    slices, so each block decode happens (and is counted by
-    kernels.Profiler) inside the query that needs it. A pandas frame
-    (in-process callers) is converted first."""
+    docIDs (codecs/columns.py) — so its proto carries term-level
+    (docs, tfs, lens) views plus block offsets, and kernels.Profiler
+    counts every decoded block here, once. A group holds one salt
+    bucket of each term (build/segments.py), which bounds the decoded
+    working set. A pandas frame (in-process callers) is converted
+    first."""
     if isinstance(left, pd.DataFrame):
         left = pa.Table.from_pandas(left, preserve_index=False)
     protos: dict[int, TermPostings] = {}
@@ -424,36 +422,22 @@ def _build_batch_protos(left: pa.Table | pd.DataFrame, decode,
     # term t owns sorted rows tb[t]:tb[t + 1]; pcum = postings before row
     tb = np.concatenate(([0], np.flatnonzero(np.diff(term)) + 1, [len(term)]))
     pcum = np.concatenate(([0], np.cumsum(counts)))
-    columns = {c: binary_column(left, c) for c in _PAYLOADS}
-    if not lazy:
-        payload, tfs, lens = (
-            decode_column(columns[c], order, counts, decode) for c in _PAYLOADS
-        )
-        tfs += 1
-        lens += 1
-        docs = docs_from_payload(payload, counts)
-        for a in (docs, tfs, lens):
-            a.setflags(write=False)  # shared by every query of the batch
-        Profiler.blocks += len(order)
-        Profiler.postings += int(pcum[-1])
+    payload, tfs, lens = (
+        decode_column(binary_column(left, c), order, counts, decode)
+        for c in _PAYLOADS
+    )
+    tfs += 1
+    lens += 1
+    docs = docs_from_payload(payload, counts)
+    for a in (docs, tfs, lens):
+        a.setflags(write=False)  # shared by every query of the batch
+    Profiler.blocks += len(order)
+    Profiler.postings += int(pcum[-1])
     for t in range(len(tb) - 1):
         r0, r1 = int(tb[t]), int(tb[t + 1])
         tid = int(term[r0])
         base_bm[tid] = bm_micro[r0:r1]
-        if lazy:
-            rows = order[r0:r1].tolist()
-            payloads = {}
-            for c, (off, data) in columns.items():
-                mv = memoryview(data)
-                payloads[c.replace("_bytes", "_payloads")] = [
-                    mv[off[r]:off[r + 1]] for r in rows
-                ]
-        else:
-            sl = slice(int(pcum[r0]), int(pcum[r1]))
-            payloads = dict(
-                decoded=(docs[sl], tfs[sl], lens[sl]),
-                block_offsets=pcum[r0:r1 + 1] - pcum[r0],
-            )
+        sl = slice(int(pcum[r0]), int(pcum[r1]))
         # Upper bounds in MICRO units (+1 covers the <=0.5-micro
         # quantization shift) so they stay sound vs micro-int scores.
         protos[tid] = TermPostings(
@@ -464,8 +448,8 @@ def _build_batch_protos(left: pa.Table | pd.DataFrame, decode,
             block_max_doc=max_doc[r0:r1],
             block_max_score=base_bm[tid] + 1.0,
             block_count=counts[r0:r1],
-            decode=decode,
-            **payloads,
+            decoded=(docs[sl], tfs[sl], lens[sl]),
+            block_offsets=pcum[r0:r1 + 1] - pcum[r0],
         )
     return protos, base_bm
 
@@ -697,13 +681,16 @@ def topk_search(
 
     ``profile``: adds (blocks_decoded, postings_decoded) per query —
     the reference's profile_queries/block_profiler counters — making
-    pruning effectiveness measurable (a pruned kernel must decode
+    pruning effectiveness measurable (a pruned kernel must touch
     fewer blocks than the exhaustive one on the same query). Profiled
     batches run over the whole docID space, one heap per query like
     the reference's: a bucket's fresh heap cannot skip a list that
-    has one block in the bucket. They decode every block inside the
-    query that needs it (``lazy=True`` protos), so the counts are per
-    query."""
+    has one block in the bucket. Their protos are the same eager ones
+    every request builds; the counts are the blocks and postings each
+    query's kernel reads from them (kernels.Profiler read counters).
+    At one bucket a group holds its batch's whole decoded lists, not
+    one salt bucket of them: profiling is a diagnostic, sized for
+    tests, not for production corpora."""
     kernel = RANKED_KERNELS[algorithm]
     decode = CODECS[index.config.index.codec][1]
     stats = _stats(index)
@@ -715,7 +702,7 @@ def topk_search(
         # right: the batch's parsed queries (query_id, k, term_id,
         # weight[, threshold_micro]). Shared proto build + query walk
         # (_build_batch_protos/_walk_batch_queries); one output table.
-        protos, base_bm = _build_batch_protos(left, decode, lazy=profile)
+        protos, base_bm = _build_batch_protos(left, decode)
         if algorithm not in DISJUNCTIVE_ALGORITHMS:
             right = _complete_queries(right, protos)
         if not profile:
@@ -723,14 +710,15 @@ def topk_search(
                 _walk_batch_queries(right, protos, base_bm, kernel, stats),
                 _RANKED_SCHEMA,
             )
-        per_query = []  # (results, blocks, postings) from Profiler deltas
+        per_query = []  # (results, blocks, postings) from read deltas
 
         def profiled(terms, kk, stats, init_threshold=0.0):
-            b0, p0 = Profiler.blocks, Profiler.postings
+            b0, p0 = Profiler.blocks_read, Profiler.postings_read
             docs, scores = kernel(terms, kk, stats, init_threshold=init_threshold)
-            per_query.append(
-                (len(docs), Profiler.blocks - b0, Profiler.postings - p0)
-            )
+            per_query.append((
+                len(docs), Profiler.blocks_read - b0,
+                Profiler.postings_read - p0,
+            ))
             return docs, scores
 
         table = _results_table(

@@ -1,11 +1,13 @@
-"""numpy query kernels over block-encoded posting lists.
+"""numpy query kernels over block-structured posting lists.
 
 These are the engine's custom operators — the part of the reference
 Spark genuinely lacks (cursor-based dynamic pruning,
 query/algorithm/*.hpp). They run inside the executor's Python groups
 (executor.py): every executor runs many queries per ``applyInArrow``
-cogroup over term postings decoded once per batch. All array math is
-vectorized.
+cogroup over term postings decoded once per batch, columnar
+(codecs/columns.py). Kernels never decode payload bytes: a block
+"decode" (TermPostings.decode_block) is a slice of the decoded
+arrays, counted as a read (Profiler). All array math is vectorized.
 
 Result semantics (every kernel, pinned by tests vs the SQL oracle,
 mirroring the reference's own agreement tests
@@ -53,34 +55,37 @@ from pisa_spark.functions.scoring import MICRO, bm25_score_np, to_micro_np
 
 
 class Profiler:
-    """Per-query decode counters (the reference's block_profiler /
-    profile_queries analogue): every block decode anywhere in a kernel
-    is counted here. The counters only grow: the executor's eager
-    proto build adds its whole decode once, and profiled runs read
-    per-query deltas around each kernel call."""
+    """Decode and read counters (the reference's block_profiler /
+    profile_queries analogue), two pairs that only grow:
+
+    - ``blocks``/``postings``: payload blocks actually decoded. The
+      executor's batch proto build adds its whole columnar decode
+      once (executor._build_batch_protos); no kernel decodes.
+    - ``blocks_read``/``postings_read``: blocks a kernel reads from
+      the decoded arrays (TermPostings.decode_block/decode_all), the
+      blocks a reference cursor would touch. Profiled requests take
+      per-query deltas of this pair around each kernel call."""
 
     blocks = 0
     postings = 0
+    blocks_read = 0
+    postings_read = 0
 
     @classmethod
     def reset(cls):
-        cls.blocks = 0
-        cls.postings = 0
+        cls.blocks = cls.postings = 0
+        cls.blocks_read = cls.postings_read = 0
 
 
 @dataclass
 class TermPostings:
-    """One query term's posting data, block-encoded.
+    """One query term's posting data, decoded once per batch.
 
-    Arrays are per-block, ordered by block_id. Two payload forms:
-
-    - ``decoded`` + ``block_offsets``: term-level (docs, tfs, lens)
-      arrays already decoded (batch-major execution decodes a whole
-      batch columnar, executor._build_batch_protos); block ``bi`` is
-      the slice ``block_offsets[bi]:block_offsets[bi + 1]``.
-    - per-block ``*_payloads`` decoded lazily (decode_block),
-      mirroring the reference cursor's lazy freq-block decode
-      (block_posting_list.hpp:101-159).
+    Block metadata arrays are per block, ordered by block_id.
+    ``decoded`` holds the term-level (docs, tfs, lens) arrays (the
+    executor decodes a whole batch columnar,
+    executor._build_batch_protos); block ``bi`` is the slice
+    ``block_offsets[bi]:block_offsets[bi + 1]``.
     """
 
     term_id: int
@@ -90,60 +95,27 @@ class TermPostings:
     block_max_doc: np.ndarray  # u64 per block
     block_max_score: np.ndarray  # f64 per block, MICRO units, weight-multiplied
     block_count: np.ndarray  # int per block
-    doc_payloads: list | None = None  # bytes-like per block
-    tf_payloads: list | None = None
-    len_payloads: list | None = None  # per-posting doc_len-1 (rides in the block)
-    decode: object = None  # codec decode fn
+    decoded: tuple  # term-level (docs, tfs, lens)
+    block_offsets: np.ndarray  # int64, n_blocks + 1
     idf_cache: object = None  # lazily-built constant-idf array (_score)
-    decoded: tuple | None = None  # term-level (docs, tfs, lens)
-    block_offsets: np.ndarray | None = None  # int64, n_blocks + 1
 
     def decode_block(self, bi: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(docs, tfs, doc_lens) for one block. Doc lengths are stored
-        inline (segments.py len_bytes) — the wand_data.hpp:38-117
-        design of keeping lengths WITH the index data — so no kernel
-        ever needs a driver-side doc-length array.
-
-        Self-delimiting codecs (varint_decode.concat_safe) decode the
-        three payloads in ONE call — the per-call numpy overhead at
-        128-value granularity is the kernels' hot path."""
-        if self.decoded is not None:
-            lo, hi = self.block_offsets[bi], self.block_offsets[bi + 1]
-            d, t, L = self.decoded
-            return d[lo:hi], t[lo:hi], L[lo:hi]
-        n = int(self.block_count[bi])
-        Profiler.blocks += 1
-        Profiler.postings += n
-        if getattr(self.decode, "concat_safe", False):
-            fused = self.decode(
-                b"".join((self.doc_payloads[bi], self.tf_payloads[bi],
-                          self.len_payloads[bi])),
-                3 * n,
-            ).astype(np.int64)
-            payload = fused[:n]
-            tfs = fused[n:2 * n] + 1
-            lens = fused[2 * n:] + 1
-        else:
-            payload = self.decode(self.doc_payloads[bi], n).astype(np.int64)
-            tfs = self.decode(self.tf_payloads[bi], n).astype(np.int64) + 1
-            lens = self.decode(self.len_payloads[bi], n).astype(np.int64) + 1
-        docs = payload.copy()
-        docs[1:] += 1
-        docs = np.cumsum(docs)
-        return docs, tfs, lens
+        """(docs, tfs, doc_lens) of one block, counted as one block
+        read. Doc lengths are stored inline (segments.py len_bytes) —
+        the wand_data.hpp:38-117 design of keeping lengths WITH the
+        index data — so no kernel ever needs a driver-side doc-length
+        array."""
+        lo, hi = self.block_offsets[bi], self.block_offsets[bi + 1]
+        Profiler.blocks_read += 1
+        Profiler.postings_read += int(hi - lo)
+        d, t, L = self.decoded
+        return d[lo:hi], t[lo:hi], L[lo:hi]
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        if self.decoded is not None:
-            return self.decoded
-        if len(self.block_count) == 0:
-            e = np.empty(0, np.int64)
-            return e, e, e
-        parts = [self.decode_block(i) for i in range(len(self.block_count))]
-        return (
-            np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] for p in parts]),
-            np.concatenate([p[2] for p in parts]),
-        )
+        """The term's whole (docs, tfs, doc_lens), every block read."""
+        Profiler.blocks_read += len(self.block_count)
+        Profiler.postings_read += int(self.block_offsets[-1])
+        return self.decoded
 
 
 @dataclass
@@ -261,11 +233,12 @@ class _Cursor:
     """DAAT cursor with block skipping (block_posting_list.hpp:80-319).
 
     Python-loop-optimized: on block load the WHOLE block is scored
-    vectorized (the reference lazily decodes the freq block; we fuse
-    decode+score — one numpy pass per 128 postings instead of a numpy
-    round-trip per posting), and the hot-path state (doc list, score
-    list, block-max arrays) lives as plain Python lists/ints, which
-    beat numpy scalar indexing by ~10x inside the DAAT loop.
+    vectorized (the reference lazily decodes the freq block; we score
+    the block's slice of the decoded arrays — one numpy pass per 128
+    postings instead of a numpy round-trip per posting), and the
+    hot-path state (doc list, score list, block-max arrays) lives as
+    plain Python lists/ints, which beat numpy scalar indexing by ~10x
+    inside the DAAT loop.
     """
 
     __slots__ = ("tp", "bi", "pos", "docs", "scores", "done", "docid",

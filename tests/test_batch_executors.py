@@ -2,10 +2,11 @@
 
 Two layers:
 
-- the columnar proto build (_build_batch_protos) in-process: the
-  eager term-level decode every request uses and the lazy per-block
-  form of profiled requests, identical blocks and kernel results
-  either way, decodes counted once per build or once per query;
+- the columnar proto build (_build_batch_protos) in-process: every
+  proto block equals the postings it was encoded from, decodes are
+  counted once per build, and each query's kernel reads (what
+  profiled requests report) are counted per query, the same in a
+  batch or alone;
 - a small pinned configuration matrix (codec x quantization x
   compressed block maxes, over three docID buckets, plus one config
   at one bucket) run through the Spark executor, rank-identical to an
@@ -29,10 +30,11 @@ from pisa_spark.query import executor as ex
 from pisa_spark.query import kernels as K
 
 
-def _segment_table(codec: str, seed: int = 5) -> tuple[pa.Table, K.Stats]:
-    """A shuffled, two-chunk segment table (the cogroup's left side)
-    for six terms of very different lengths, blocks of 1-40 postings,
-    with sound block/term maxes."""
+def _segment_table(codec: str, seed: int = 5):
+    """(table, stats, raw): a shuffled, two-chunk segment table (the
+    cogroup's left side) for six terms of very different lengths,
+    blocks of 1-40 postings, with sound block/term maxes, and ``raw``
+    mapping each term to its blocks' encoded (docs, tfs, lens)."""
     enc, _ = CODECS[codec]
     rnd = np.random.default_rng(seed)
     n_docs = 3000
@@ -41,6 +43,7 @@ def _segment_table(codec: str, seed: int = 5) -> tuple[pa.Table, K.Stats]:
     cols = {c: [] for c in ("term_id", "block_id", "count", "max_doc_id",
                             "max_score", "doc_bytes", "tf_bytes",
                             "len_bytes", "df", "term_max_score")}
+    raw = {}
     for tid, n in enumerate((3, 40, 200, 900, 1500, 2500)):
         docs = np.sort(rnd.choice(n_docs, size=n, replace=False))
         tfs = rnd.integers(1, 9, size=n)
@@ -48,28 +51,31 @@ def _segment_table(codec: str, seed: int = 5) -> tuple[pa.Table, K.Stats]:
         probe = K.TermPostings(
             term_id=tid, df=float(n), weight=1.0, max_score=0.0,
             block_max_doc=None, block_max_score=None, block_count=None,
+            decoded=(docs, tfs, lens), block_offsets=np.array([0, n]),
         )
-        raw = K._score(probe, tfs, lens, stats) / 1e6
+        raw_scores = K._score(probe, tfs, lens, stats) / 1e6
         cuts = np.cumsum(rnd.integers(1, 41, size=n))
         cuts = np.concatenate(([0], cuts[cuts < n], [n]))
+        raw[tid] = []
         for b, (s, e) in enumerate(zip(cuts[:-1], cuts[1:])):
             d = docs[s:e]
+            raw[tid].append((d, tfs[s:e], lens[s:e]))
             cols["term_id"].append(tid)
             cols["block_id"].append(b)
             cols["count"].append(int(e - s))
             cols["max_doc_id"].append(int(d[-1]))
-            cols["max_score"].append(float(raw[s:e].max()) + 1e-6)
+            cols["max_score"].append(float(raw_scores[s:e].max()) + 1e-6)
             cols["doc_bytes"].append(enc(np.concatenate(([d[0]], np.diff(d) - 1))))
             cols["tf_bytes"].append(enc(tfs[s:e] - 1))
             cols["len_bytes"].append(enc(lens[s:e] - 1))
             cols["df"].append(n)
-            cols["term_max_score"].append(float(raw.max()) + 1e-6)
+            cols["term_max_score"].append(float(raw_scores.max()) + 1e-6)
     table = pa.table(cols)
     table = table.take(rnd.permutation(table.num_rows))
     half = table.num_rows // 2
     return pa.Table.from_batches(
         table.slice(0, half).to_batches() + table.slice(half).to_batches()
-    ), stats
+    ), stats, raw
 
 
 def _queries() -> pa.Table:
@@ -83,20 +89,21 @@ def _queries() -> pa.Table:
     })
 
 
-def _profiled_walk(left, right, decode, lazy, algo, stats):
+def _profiled_walk(left, right, decode, algo, stats):
     """[(query_id, docs, scores, blocks, postings)] of one batch walk
-    over fresh protos, with each query's kernels.Profiler delta (the
-    topk_search(profile=True) wrapper)."""
-    protos, base_bm = ex._build_batch_protos(left, decode, lazy=lazy)
+    over fresh protos, with each query's kernels.Profiler read delta
+    (the topk_search(profile=True) wrapper)."""
+    protos, base_bm = ex._build_batch_protos(left, decode)
     if algo not in ex.DISJUNCTIVE_ALGORITHMS:
         right = ex._complete_queries(right, protos)
     kernel = ex.RANKED_KERNELS[algo]
     deltas = []
 
     def profiled(terms, k, stats, init_threshold=0.0):
-        b0, p0 = K.Profiler.blocks, K.Profiler.postings
+        b0, p0 = K.Profiler.blocks_read, K.Profiler.postings_read
         out = kernel(terms, k, stats, init_threshold=init_threshold)
-        deltas.append((K.Profiler.blocks - b0, K.Profiler.postings - p0))
+        deltas.append((K.Profiler.blocks_read - b0,
+                       K.Profiler.postings_read - p0))
         return out
 
     walk = list(ex._walk_batch_queries(right, protos, base_bm, profiled, stats))
@@ -104,55 +111,55 @@ def _profiled_walk(left, right, decode, lazy, algo, stats):
 
 
 @pytest.mark.parametrize("codec", ["varint", "bitpack"])
-def test_build_batch_protos_eager_matches_lazy(codec):
-    """The eager build (one columnar decode into term-level arrays)
-    and the lazy one (zero-copy per-block payloads, what profiled
-    requests use) give identical blocks and identical results for
-    every ranked kernel (varint: one decode call per payload column;
-    bitpack: per block). Eager counts its whole decode once in the
-    build and none inside a query; lazy counts each block decode
-    inside the query that needs it, the same whether the query runs
-    in its batch or alone (no decode is shared between queries)."""
-    left, stats = _segment_table(codec)
+def test_build_batch_protos_match_raw_postings(codec):
+    """Every proto block (decode_block) and every term (decode_all)
+    equals the postings it was encoded from (varint: one decode call
+    per payload column; bitpack: per block), and the build counts its
+    decode once. Every disjunctive kernel matches ranked_or and the
+    two conjunctive kernels match each other. Each query's kernel
+    reads are the same whether it runs in its batch or alone (no
+    read is shared between queries), and ranked_or reads every block
+    of its terms."""
+    left, stats, raw = _segment_table(codec)
     decode = CODECS[codec][1]
     b0, p0 = K.Profiler.blocks, K.Profiler.postings
-    lazy, _ = ex._build_batch_protos(left, decode, lazy=True)
-    assert (K.Profiler.blocks, K.Profiler.postings) == (b0, p0)
-    eager, _ = ex._build_batch_protos(left, decode)
-    assert sorted(eager) == sorted(lazy) == list(range(6))
-    for tid, tp in lazy.items():
-        ref = eager[tid]
-        assert tp.decoded is None and tp.doc_payloads
-        assert ref.decoded is not None and ref.doc_payloads is None
-        for bi in range(len(tp.block_count)):
-            for got, exp in zip(tp.decode_block(bi), ref.decode_block(bi)):
+    protos, _ = ex._build_batch_protos(left, decode)
+    assert (K.Profiler.blocks - b0, K.Profiler.postings - p0) == (
+        left.num_rows, sum(left["count"].to_pylist())
+    )
+    assert sorted(protos) == sorted(raw) == list(range(6))
+    for tid, tp in protos.items():
+        assert len(tp.block_count) == len(raw[tid])
+        for bi, want in enumerate(raw[tid]):
+            for got, exp in zip(tp.decode_block(bi), want):
                 np.testing.assert_array_equal(got, exp)
-        for got, exp in zip(tp.decode_all(), ref.decode_all()):
-            np.testing.assert_array_equal(got, exp)
+        for got, exp in zip(tp.decode_all(), zip(*raw[tid])):
+            np.testing.assert_array_equal(got, np.concatenate(exp))
     queries = _queries()
-    for algo in ex.RANKED_KERNELS:
-        a = _profiled_walk(left, queries, decode, False, algo, stats)
-        b = _profiled_walk(left, queries, decode, True, algo, stats)
-        assert [r[0] for r in a] == [r[0] for r in b]
-        assert {"q0", "q2", "q4"} <= {r[0] for r in a}, algo
-        for (qa, da, sa, ba, pa_), (qb, db, sb, bb, pb) in zip(a, b):
-            np.testing.assert_array_equal(da, db, err_msg=algo)
-            np.testing.assert_array_equal(sa, sb, err_msg=algo)
-            assert (ba, pa_) == (0, 0), algo
-            one = queries.filter(pc.equal(queries["query_id"], qb))
-            alone = _profiled_walk(left, one, decode, True, algo, stats)
-            assert alone[0][3:] == (bb, pb), (algo, qb)
+    walks = {algo: _profiled_walk(left, queries, decode, algo, stats)
+             for algo in ex.RANKED_KERNELS}
+    for algo, walk in walks.items():
+        ref = walks["ranked_or" if algo in ex.DISJUNCTIVE_ALGORITHMS
+                    else "ranked_and"]
+        assert {"q0", "q2", "q4"} <= {r[0] for r in walk}, algo
+        assert [r[0] for r in walk] == [r[0] for r in ref], algo
+        for (q, d, s, b, p), (_, rd, rs, _, _) in zip(walk, ref):
+            np.testing.assert_array_equal(d, rd, err_msg=algo)
+            np.testing.assert_array_equal(s, rs, err_msg=algo)
+            one = queries.filter(pc.equal(queries["query_id"], q))
+            alone = _profiled_walk(left, one, decode, algo, stats)
+            assert alone[0][3:] == (b, p), (algo, q)
             if algo == "ranked_or":  # exhaustive: every block of its terms
-                want = [lazy[t].block_count
-                        for t in one["term_id"].to_pylist() if t in lazy]
-                assert bb == sum(len(c) for c in want)
-                assert pb == sum(int(c.sum()) for c in want)
+                want = [protos[t].block_count
+                        for t in one["term_id"].to_pylist() if t in protos]
+                assert b == sum(len(c) for c in want)
+                assert p == sum(int(c.sum()) for c in want)
 
 
 def test_build_batch_protos_accepts_pandas_and_counts_eager_decodes():
     """In-process callers pass pandas frames; eager decodes still feed
     kernels.Profiler (every shipped block counted once)."""
-    left, stats = _segment_table("varint")
+    left, stats, _ = _segment_table("varint")
     decode = CODECS["varint"][1]
     K.Profiler.reset()
     protos, base_bm = ex._build_batch_protos(left.to_pandas(), decode)

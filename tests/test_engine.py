@@ -1391,7 +1391,7 @@ def test_pair_kth_thresholds_values(spark, index, parsed):
 
 def test_pruned_kernels_decode_fewer_blocks(spark, index, parsed):
     """profile_queries analogue: dynamic pruning must actually skip
-    work — BMW/maxscore decode fewer blocks than the exhaustive TAAT
+    work — BMW/maxscore read fewer blocks than the exhaustive TAAT
     kernel on the same queries, with identical results (already pinned
     by test_kernels_match_oracle)."""
     from pisa_spark.query.executor import topk_search
@@ -1455,10 +1455,9 @@ def test_batched_kernels_match_daat(index, parsed, spark):
         n_q[0] += 1
         return np.empty(0, np.int64), np.empty(0)
 
-    # lazy protos: every kernel decodes its own blocks, none shared
     pdf = _factored_rows(index, parsed).toPandas()
     protos, base_bm = _build_batch_protos(
-        pdf.drop_duplicates(["term_id", "block_id"]), decode, lazy=True
+        pdf.drop_duplicates(["term_id", "block_id"]), decode
     )
     queries = pdf[["query_id", "k", "term_id", "weight"]].drop_duplicates()
     for _ in _walk_batch_queries(
@@ -1488,10 +1487,10 @@ def test_adaptive_choice_is_metadata_only():
 
 
 def test_batch_executor_matches_oracle(index, parsed, oracle_topk):
-    """Batch-major execution (shared term payloads + decoded-block
-    cache across a batch's queries) must be rank-identical to the
-    exhaustive oracle across batch counts (1 = everything shares one
-    cache; 7 = uneven hash groups)."""
+    """Batch-major execution (term payloads decoded once and shared
+    by a batch's queries) must be rank-identical to the exhaustive
+    oracle across batch counts (1 = everything shares one decode;
+    7 = uneven hash groups)."""
     from pisa_spark.query.executor import topk_search
 
     exp = oracle_topk.astype({"rank": "int64", "doc_id": "int64"})

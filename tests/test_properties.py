@@ -112,38 +112,38 @@ def test_capped_codec_roundtrip_property(vals, codec):
 # random sound bootstrap threshold — every kernel must match the
 # exhaustive kernel's (score desc, doc asc) top-k exactly.
 
-def _mk_term_postings(doc_ids, tfs, lens, weight, stats, rnd):
-    from pisa_spark.codecs import CODECS
-    from pisa_spark.functions.scoring import MICRO
+def _term_postings(doc_ids, tfs, lens, weight, sizes, stats):
+    """A TermPostings in the executor's one layout: the decoded
+    (docs, tfs, lens) arrays cut into blocks of ``sizes`` postings,
+    with exact block and term maxes (the codec round trip is
+    test_codec_roundtrip_property's)."""
     from pisa_spark.query import kernels as K
 
-    enc, dec = CODECS["varint"]
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    tfs, lens = np.asarray(tfs), np.asarray(lens)
+    offsets = np.concatenate(([0], np.cumsum(sizes)))
     tp = K.TermPostings(
-        term_id=0, df=float(len(doc_ids)), weight=weight,
-        max_score=0.0,
-        block_max_doc=None, block_max_score=None, block_count=None,
-        doc_payloads=[], tf_payloads=[], len_payloads=[], decode=dec,
+        term_id=0, df=float(len(doc_ids)), weight=weight, max_score=0.0,
+        block_max_doc=doc_ids[offsets[1:] - 1].astype(np.uint64),
+        block_max_score=None, block_count=np.asarray(sizes, dtype=np.int64),
+        decoded=(doc_ids, tfs, lens), block_offsets=offsets,
     )
     # exact per-posting micro scores (same path the kernels use)
-    micros = K._score(tp, np.asarray(tfs), np.asarray(lens), stats)
-    bmd, bms, bc = [], [], []
-    i = 0
-    while i < len(doc_ids):
-        n = min(int(rnd.integers(1, 6)), len(doc_ids) - i)
-        d = np.asarray(doc_ids[i:i + n], dtype=np.int64)
-        gaps = np.diff(d) - 1
-        tp.doc_payloads.append(enc(np.concatenate(([d[0]], gaps))))
-        tp.tf_payloads.append(enc(np.asarray(tfs[i:i + n]) - 1))
-        tp.len_payloads.append(enc(np.asarray(lens[i:i + n]) - 1))
-        bmd.append(d[-1])
-        bms.append(float(micros[i:i + n].max()))
-        bc.append(n)
-        i += n
-    tp.block_max_doc = np.asarray(bmd, dtype=np.uint64)
-    tp.block_max_score = np.asarray(bms, dtype=np.float64)
-    tp.block_count = np.asarray(bc, dtype=np.int64)
+    micros = K._score(tp, tfs, lens, stats)
+    tp.block_max_score = np.maximum.reduceat(micros, offsets[:-1]).astype(
+        np.float64
+    )
     tp.max_score = float(micros.max())
     return tp
+
+
+def _mk_term_postings(doc_ids, tfs, lens, weight, stats, rnd):
+    """_term_postings over random 1-5 posting blocks."""
+    sizes, i = [], 0
+    while i < len(doc_ids):
+        sizes.append(min(int(rnd.integers(1, 6)), len(doc_ids) - i))
+        i += sizes[-1]
+    return _term_postings(doc_ids, tfs, lens, weight, sizes, stats)
 
 
 @settings(max_examples=250, deadline=None)
@@ -153,10 +153,8 @@ def _mk_term_postings(doc_ids, tfs, lens, weight, stats, rnd):
     st.integers(min_value=1, max_value=12),         # k
     st.floats(min_value=0.0, max_value=1.0),        # bootstrap frac
     st.booleans(),                                  # quantized index
-    st.booleans(),                                  # eager payload form
 )
-def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized,
-                                      eager):
+def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized):
     from pisa_spark.query import kernels as K
 
     rnd = np.random.default_rng(seed)
@@ -173,11 +171,6 @@ def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized,
         w = float(rnd.choice([1.0, 2.0]))
         terms.append(_mk_term_postings(
             d, tfs, lens_by_doc[d], w, stats, rnd))
-    if eager:  # the decoded view _build_batch_protos gives every term
-        for t in terms:
-            t.decoded = t.decode_all()
-            t.block_offsets = np.concatenate(([0], np.cumsum(t.block_count)))
-            t.doc_payloads = t.tf_payloads = t.len_payloads = None
 
     exp_docs, exp_scores = K.ranked_or_kernel(terms, k, stats)
     # a sound bootstrap never changes the result: anything strictly
@@ -193,13 +186,12 @@ def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized,
         K.Profiler.reset()
         got_d, got_s = RANKED_KERNELS[name](
             terms, k, stats, init_threshold=boot)
-        blocks[name] = K.Profiler.blocks
+        blocks[name] = K.Profiler.blocks_read
         np.testing.assert_array_equal(got_d, exp_docs, err_msg=name)
         np.testing.assert_allclose(got_s, exp_scores, rtol=0, atol=0,
                                    err_msg=name)
     # Same θ seed and split, and a block max never exceeds its term
-    # max: BMM decodes no more lazy blocks than MaxScore (the eager
-    # form decodes none inside a kernel).
+    # max: BMM reads no more blocks than MaxScore.
     assert blocks["block_max_maxscore"] <= blocks["maxscore"], blocks
     for fn in (K.wand_kernel_daat, K.block_max_wand_kernel_daat):
         got_d, got_s = fn(terms, k, stats, init_threshold=boot)
@@ -215,6 +207,36 @@ def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized,
     bra_d, bra_s = K.block_max_ranked_and_kernel(terms, k, stats)
     np.testing.assert_array_equal(bra_d, ra_d)
     np.testing.assert_allclose(bra_s, ra_s, rtol=0, atol=0)
+
+
+def test_block_max_maxscore_reads_fewer_blocks_than_maxscore():
+    """A case where BMM's block-max survivor bound removes a lookup
+    MaxScore makes (k=1, impacts as scores): A holds doc 0 (3) and
+    doc 100 (10); non-essential B holds doc 0 (1) in its low-max block
+    and doc 100 (8) in its term-max block. θ = 10 − eps from A alone.
+    MaxScore keeps doc 0 alive (3 + B's term max 8 >= θ) and reads
+    both of B's blocks; BMM bounds it by 3 + 1 and reads only B's
+    second block. Both return ranked_or's top-1."""
+    from pisa_spark.query import kernels as K
+
+    stats = K.Stats(num_docs=200.0, avg_len=1.0, quantized=True)
+    ones = np.ones(2, dtype=np.int64)
+    terms = [
+        _term_postings([0, 100], [3, 10], ones, 1.0, [2], stats),
+        _term_postings([0, 100], [1, 8], ones, 1.0, [1, 1], stats),
+    ]
+    exp_docs, exp_scores = K.ranked_or_kernel(terms, 1, stats)
+    assert exp_docs.tolist() == [100] and exp_scores.tolist() == [18.0]
+    reads = {}
+    for name, fn in (("maxscore", K.maxscore_kernel),
+                     ("block_max_maxscore", K.block_max_maxscore_kernel)):
+        K.Profiler.reset()
+        got_d, got_s = fn(terms, 1, stats)
+        reads[name] = K.Profiler.blocks_read
+        np.testing.assert_array_equal(got_d, exp_docs, err_msg=name)
+        np.testing.assert_array_equal(got_s, exp_scores, err_msg=name)
+    # both read A's one block; MaxScore reads both of B's, BMM one
+    assert reads == {"maxscore": 3, "block_max_maxscore": 2}, reads
 
 
 @given(

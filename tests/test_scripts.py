@@ -84,6 +84,8 @@ def test_run_pipeline_codec_profiles(tmp_path, profile):
             "--partitions", "8", "--warmup", "0",
             "--codec-profile", profile,
             "--out", str(tmp_path / f"idx_{profile}"),
+            # a small heap: this JVM runs beside the test session's
+            "--conf", "spark.driver.memory=2g",
         ],
         capture_output=True, text=True, timeout=600, cwd=tmp_path,
     )
