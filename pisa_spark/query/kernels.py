@@ -7,7 +7,12 @@ query/algorithm/*.hpp). They run inside the executor's Python groups
 cogroup over term postings decoded once per batch, columnar
 (codecs/columns.py). Kernels never decode payload bytes: a block
 "decode" (TermPostings.decode_block) is a slice of the decoded
-arrays, counted as a read (Profiler). All array math is vectorized.
+arrays, counted as a read (Profiler). All array math is vectorized,
+and the shared helpers cost Python work per TERM, never per block or
+per posting: _lookup scores a term's candidates with one searchsorted
+over its decoded docs, _aggregate sums into a dense docID accumulator
+(a sort only over sparse spans), and _finalize cuts to the k-th score
+with np.partition before its lexsort.
 
 Result semantics (every kernel, pinned by tests vs the SQL oracle,
 mirroring the reference's own agreement tests
@@ -161,17 +166,41 @@ def _score(tp: TermPostings, tfs: np.ndarray, lens: np.ndarray,
 
 def _finalize(docs: np.ndarray, micros: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
     """(micro desc, doc asc) top-k, positive scores only; returns
-    double scores = micros / 1e6 (exact, deterministic)."""
+    double scores = micros / 1e6 (exact, deterministic).
+
+    With more than k candidates, ``np.partition`` first finds the k-th
+    micro and only candidates scoring at least that (and > 0) reach the
+    lexsort: every tie at the k-th score survives the cut, so the
+    doc-asc tie-break sees exactly the rows it would have seen uncut."""
     micros = np.asarray(micros, dtype=np.int64)
-    keep = micros > 0
+    floor = 1
+    if len(micros) > k:
+        floor = max(floor, int(np.partition(micros, -k)[-k]))
+    keep = micros >= floor
     docs, micros = docs[keep], micros[keep]
     order = np.lexsort((docs, -micros))[:k]
     return docs[order], micros[order].astype(np.float64) / MICRO
 
 
 def _aggregate(all_docs: np.ndarray, all_scores: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(unique docs ascending, int64 score sums) of concatenated
+    per-term postings. A docID span of at most 4x the postings count
+    sums into a dense int64 accumulator over [min_doc, max_doc] (no
+    sort); a sparser span (in-process callers, a whole-docID-space
+    walk) takes the ``np.unique`` sort, so cost stays O(postings)
+    either way. Both are integer-exact and return the same arrays."""
     if all_docs.size == 0:
         return all_docs, all_scores
+    lo = int(all_docs.min())
+    span = int(all_docs.max()) - lo + 1
+    if span <= 4 * all_docs.size:
+        off = all_docs - lo
+        sums = np.zeros(span, dtype=np.int64)
+        np.add.at(sums, off, all_scores)
+        present = np.zeros(span, dtype=bool)
+        present[off] = True
+        at = np.flatnonzero(present)
+        return (at + lo).astype(all_docs.dtype, copy=False), sums[at]
     uniq, inv = np.unique(all_docs, return_inverse=True)
     sums = np.zeros(len(uniq), dtype=np.int64)
     np.add.at(sums, inv, all_scores)
@@ -383,8 +412,8 @@ def _interval_sweep(terms: list[TermPostings], k: int, stats: Stats,
     whose bound fails ``> θ`` ends the query (bounds are sorted, so
     all later intervals fail too).
 
-    Python cost is per INTERVAL (≈ per block), never per posting —
-    the same batching that makes _maxscore fast —
+    Python cost is per (round, block), never per posting — coarser
+    than _maxscore, whose Python cost is per term —
     while the pruning decisions are the cursor algorithms' own:
     a skipped doc has true score <= interval bound <= θ = k-th − eps,
     exactly _TopK.would_enter's test, so the top-k (incl. docID
@@ -671,23 +700,27 @@ def block_max_wand_kernel_daat(terms: list[TermPostings], k: int,
 def _lookup(tp: TermPostings, docs: np.ndarray, partial: np.ndarray,
             stats: Stats) -> None:
     """Add ``tp``'s scores of the sorted candidates ``docs`` into
-    ``partial``, decoding ONLY blocks that hold a candidate (the
-    reference's lookup cursors, maxscore_query.hpp:58-126). Sorted
-    candidates give non-decreasing block indices, so each block's
-    candidates are one contiguous run, and those past the last block
-    are a suffix."""
+    ``partial`` (the reference's lookup cursors,
+    maxscore_query.hpp:58-126) in one pass per term: one
+    ``searchsorted`` of the candidates over the term's decoded docs,
+    one ``_score`` call on the hits. The blocks counted as read are
+    those a cursor would touch, one per candidate docID range: the
+    distinct ``searchsorted(block_max_doc, docs)`` indices below the
+    block count (sorted candidates make them non-decreasing), with
+    their ``block_count`` postings."""
     bi = np.searchsorted(tp.block_max_doc, docs, side="left")
     bi = bi[:np.searchsorted(bi, len(tp.block_max_doc), side="left")]
-    starts = np.flatnonzero(np.diff(bi, prepend=-1))
-    for lo, hi in zip(starts.tolist(), [*starts[1:].tolist(), len(bi)]):
-        b_docs, b_tfs, b_lens = tp.decode_block(int(bi[lo]))
-        run = docs[lo:hi]
-        pos = np.minimum(np.searchsorted(b_docs, run), len(b_docs) - 1)
-        hit = b_docs[pos] == run
-        if hit.any():
-            partial[lo:hi][hit] += _score(
-                tp, b_tfs[pos[hit]], b_lens[pos[hit]], stats
-            )
+    bi = bi[np.flatnonzero(np.diff(bi, prepend=-1))]
+    if not len(bi):
+        return
+    Profiler.blocks_read += len(bi)
+    Profiler.postings_read += int(tp.block_count[bi].sum())
+    t_docs, t_tfs, t_lens = tp.decoded
+    pos = np.minimum(np.searchsorted(t_docs, docs), len(t_docs) - 1)
+    hit = t_docs[pos] == docs
+    if hit.any():
+        at = pos[hit]
+        partial[hit] += _score(tp, t_tfs[at], t_lens[at], stats)
 
 
 def _maxscore(terms: list[TermPostings], k: int, stats: Stats,
@@ -706,7 +739,12 @@ def _maxscore(terms: list[TermPostings], k: int, stats: Stats,
     non-essential list (the wand_data_raw next_geq,
     wand_data_raw.hpp:85-123). Phase 3: add non-essential scores
     (_lookup); exact top-k, since every drop has final(d) <= bound(d)
-    < θ <= k-th score - slack."""
+    < θ <= k-th score - slack.
+
+    Every phase is a numpy pass per term (whole-term decodes, one
+    block-bound searchsorted, one _lookup), so Python cost grows with
+    the query's terms, not its blocks (pinned by
+    tests/test_per_term_lookup.py)."""
     if not terms:
         return np.empty(0, np.int64), np.empty(0, np.float64)
     order = sorted(terms, key=lambda t: t.max_score)  # ascending
@@ -834,10 +872,15 @@ def block_max_ranked_and_kernel(terms: list[TermPostings], k: int,
 # Measured with scripts/calibrate_adaptive.py on the sf0.1 workload,
 # whose vocabulary has 31 terms (BENCH.md): there pruned kernels won
 # 5-10% above ~4k total postings, and at or below TAAT matched or beat
-# them. That calibration does not carry over: an offline replay of the
-# Zipf query_batch workload (ROADMAP.md) puts its optimum at
-# always-exhaustive. One 4,000-doc corpus is too narrow to set the
-# value from, so it stays until a larger synth index re-derives it.
+# them. On the Zipf query_batch workload (offline replay of its 8
+# batches, one thread, best of 5, 4-core box; ROADMAP.md) the per-term
+# helpers (_lookup, _aggregate, _finalize) bring the routes together:
+# walk_s of ranked_or / adaptive / block_max_maxscore is 0.26 / 0.30 /
+# 0.31 s at seed 1 and 0.29 / 0.25 / 0.32 s at seed 3, against 0.38 /
+# 0.55 / 0.60 and 0.37 / 0.74 / 0.67 s with the per-block lookup, so
+# no value wins there by more than the replay's noise. One 4,000-doc
+# corpus is too narrow to set the value from, so it stays until a
+# larger synth index re-derives it.
 ADAPTIVE_TAAT_MAX_POSTINGS = 4096
 
 

@@ -63,7 +63,13 @@ def _cached_kth(parsed: DataFrame, cache: DataFrame) -> DataFrame:
     """``parsed`` left-joined to a broadcast single-term cache, with
     ``kth_micro`` nulled where the cache was built for a different k
     than the query asks (a smaller-k cache returns a higher k'-th
-    score, which is NOT a lower bound for the query's k)."""
+    score, which is NOT a lower bound for the query's k).
+
+    Both sides carry ``term_id`` from the same lexicon relation, so
+    the cache side is re-aliased to fresh attributes first: on an
+    index built from checkpointed pages Spark's own re-numbering of
+    that shared attribute fails the join ("conflicting references")."""
+    cache = cache.select([F.col(c).alias(c) for c in cache.columns])
     joined = parsed.join(F.broadcast(cache), "term_id", "left")
     if "cache_k" in cache.columns and "k" in parsed.columns:
         joined = joined.withColumn(

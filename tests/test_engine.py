@@ -1315,6 +1315,32 @@ def test_pair_threshold_bootstrap(spark, index, parsed, oracle_topk):
     assert blocks(combo) <= blocks(single)
 
 
+def test_thresholds_over_checkpointed_pages(spark, index, parsed):
+    """estimate_thresholds_with_pairs over an index built from
+    localCheckpoint'ed pages: both sides of the single-term cache join
+    carry the lexicon's term_id attribute, which Spark failed to
+    re-number ("conflicting references in Join") on that plan. The
+    same pages un-checkpointed build the module index, so the
+    estimates must match it row for row."""
+    from pisa_spark.query.thresholds import (
+        estimate_thresholds_with_pairs, kth_score_cache,
+    )
+
+    def estimates(idx, prs):
+        est = estimate_thresholds_with_pairs(
+            idx, prs, kth_score_cache(idx, k=10), k=10
+        )
+        return sorted(map(tuple, est.collect()))
+
+    pages = synth_pages(spark, N_DOCS, vocab_size=800, max_len=120)
+    ck_index = build_index(spark, pages.localCheckpoint(), index.config)
+    qdf = spark.createDataFrame(synth_queries(N_QUERIES, vocab_size=800))
+    ck_parsed = parse_queries(qdf, ck_index.lexicon, pre_tokenized=True)
+    got = estimates(ck_index, ck_parsed)
+    assert len(got) == N_QUERIES
+    assert got == estimates(index, parsed)
+
+
 def test_pair_kth_thresholds_values(spark, index, parsed):
     """pair_kth_thresholds equals an independent pandas recompute of
     the pair cache (kth_threshold.cpp:126-138): per query, every term

@@ -146,6 +146,26 @@ def _mk_term_postings(doc_ids, tfs, lens, weight, stats, rnd):
     return _term_postings(doc_ids, tfs, lens, weight, sizes, stats)
 
 
+def _oracle_topk(terms, k, stats, conjunctive=False):
+    """Plain-Python reference top-k, independent of the kernels'
+    aggregation and selection: per-posting micros (the one scoring
+    function, _score) summed in a dict, then ``sorted()`` by (micro
+    desc, doc asc), positive scores only. ``conjunctive`` keeps only
+    docs every term holds."""
+    from pisa_spark.query import kernels as K
+
+    acc, hits = {}, {}
+    for tp in terms:
+        docs, tfs, lens = tp.decoded
+        for d, m in zip(docs.tolist(), K._score(tp, tfs, lens, stats).tolist()):
+            acc[d] = acc.get(d, 0) + m
+            hits[d] = hits.get(d, 0) + 1
+    top = sorted((-m, d) for d, m in acc.items()
+                 if m > 0 and (not conjunctive or hits[d] == len(terms)))[:k]
+    return (np.array([d for _, d in top], dtype=np.int64),
+            np.array([-m for m, _ in top], dtype=np.float64) / K.MICRO)
+
+
 @settings(max_examples=250, deadline=None)
 @given(
     st.integers(min_value=0, max_value=2**32 - 1),  # corpus seed
@@ -153,12 +173,20 @@ def _mk_term_postings(doc_ids, tfs, lens, weight, stats, rnd):
     st.integers(min_value=1, max_value=12),         # k
     st.floats(min_value=0.0, max_value=1.0),        # bootstrap frac
     st.booleans(),                                  # quantized index
+    st.booleans(),                                  # sparse docID span
 )
-def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized):
+def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized,
+                                      sparse):
+    """Every kernel equals _oracle_topk. ``sparse`` draws docIDs from a
+    2^20-wide span (so _aggregate takes its sort path; dense draws take
+    the accumulator), and quantized impacts are 1-3, so ties at the
+    k-th score are common."""
     from pisa_spark.query import kernels as K
 
     rnd = np.random.default_rng(seed)
     n_docs = int(rnd.integers(5, 41))
+    doc_space = (np.sort(rnd.choice(1 << 20, size=n_docs, replace=False))
+                 if sparse else np.arange(n_docs))
     lens_by_doc = rnd.integers(1, 21, size=n_docs)
     stats = K.Stats(num_docs=float(n_docs),
                     avg_len=float(lens_by_doc.mean()),
@@ -166,13 +194,13 @@ def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized):
     terms = []
     for _ in range(n_terms):
         sz = int(rnd.integers(1, n_docs + 1))
-        d = np.sort(rnd.choice(n_docs, size=sz, replace=False)).astype(np.int64)
-        tfs = rnd.integers(1, 9, size=sz).astype(np.int64)
+        d = np.sort(rnd.choice(n_docs, size=sz, replace=False))
+        tfs = rnd.integers(1, 4 if quantized else 9, size=sz).astype(np.int64)
         w = float(rnd.choice([1.0, 2.0]))
         terms.append(_mk_term_postings(
-            d, tfs, lens_by_doc[d], w, stats, rnd))
+            doc_space[d].astype(np.int64), tfs, lens_by_doc[d], w, stats, rnd))
 
-    exp_docs, exp_scores = K.ranked_or_kernel(terms, k, stats)
+    exp_docs, exp_scores = _oracle_topk(terms, k, stats)
     # a sound bootstrap never changes the result: anything strictly
     # below (kth micro - PRUNE_EPS) keeps ties enterable
     kth = int(round(exp_scores[-1] * 1e6)) if len(exp_docs) >= k else 0
@@ -181,32 +209,88 @@ def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized):
     from pisa_spark.query.executor import RANKED_KERNELS
 
     blocks = {}
-    for name in ("wand", "block_max_wand", "block_max_maxscore",
+    for name in ("ranked_or", "wand", "block_max_wand", "block_max_maxscore",
                  "maxscore", "adaptive"):
         K.Profiler.reset()
         got_d, got_s = RANKED_KERNELS[name](
             terms, k, stats, init_threshold=boot)
         blocks[name] = K.Profiler.blocks_read
         np.testing.assert_array_equal(got_d, exp_docs, err_msg=name)
-        np.testing.assert_allclose(got_s, exp_scores, rtol=0, atol=0,
-                                   err_msg=name)
+        np.testing.assert_array_equal(got_s, exp_scores, err_msg=name)
     # Same θ seed and split, and a block max never exceeds its term
     # max: BMM reads no more blocks than MaxScore.
     assert blocks["block_max_maxscore"] <= blocks["maxscore"], blocks
     for fn in (K.wand_kernel_daat, K.block_max_wand_kernel_daat):
         got_d, got_s = fn(terms, k, stats, init_threshold=boot)
         np.testing.assert_array_equal(got_d, exp_docs, err_msg=fn.__name__)
-        np.testing.assert_allclose(got_s, exp_scores, rtol=0, atol=0)
+        np.testing.assert_array_equal(got_s, exp_scores, err_msg=fn.__name__)
 
     # conjunctive: brute-force AND of the decoded lists
-    sets = [set(t.decode_all()[0].tolist()) for t in terms]
+    sets = [set(t.decoded[0].tolist()) for t in terms]
     both = np.asarray(sorted(set.intersection(*sets)), dtype=np.int64)
-    and_docs = K.and_kernel(terms)
-    np.testing.assert_array_equal(and_docs, both)
-    ra_d, ra_s = K.ranked_and_kernel(terms, k, stats)
-    bra_d, bra_s = K.block_max_ranked_and_kernel(terms, k, stats)
-    np.testing.assert_array_equal(bra_d, ra_d)
-    np.testing.assert_allclose(bra_s, ra_s, rtol=0, atol=0)
+    np.testing.assert_array_equal(K.and_kernel(terms), both)
+    and_docs, and_scores = _oracle_topk(terms, k, stats, conjunctive=True)
+    for fn in (K.ranked_and_kernel, K.block_max_ranked_and_kernel):
+        got_d, got_s = fn(terms, k, stats)
+        np.testing.assert_array_equal(got_d, and_docs, err_msg=fn.__name__)
+        np.testing.assert_array_equal(got_s, and_scores, err_msg=fn.__name__)
+
+
+def _lookup_per_block(tp, docs, partial, stats):
+    """Reference for kernels._lookup: the per-block loop form, one
+    decode_block (a counted read) and one _score call per block that
+    holds a candidate's docID range."""
+    from pisa_spark.query import kernels as K
+
+    bi = np.searchsorted(tp.block_max_doc, docs, side="left")
+    bi = bi[:np.searchsorted(bi, len(tp.block_max_doc), side="left")]
+    starts = np.flatnonzero(np.diff(bi, prepend=-1))
+    for lo, hi in zip(starts.tolist(), [*starts[1:].tolist(), len(bi)]):
+        b_docs, b_tfs, b_lens = tp.decode_block(int(bi[lo]))
+        run = docs[lo:hi]
+        pos = np.minimum(np.searchsorted(b_docs, run), len(b_docs) - 1)
+        hit = b_docs[pos] == run
+        if hit.any():
+            partial[lo:hi][hit] += K._score(
+                tp, b_tfs[pos[hit]], b_lens[pos[hit]], stats
+            )
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.integers(min_value=0, max_value=2**32 - 1),  # list seed
+    st.integers(min_value=0, max_value=60),         # candidates
+    st.booleans(),                                  # quantized index
+)
+def test_lookup_matches_per_block_loop(seed, n_cand, quantized):
+    """The one-pass _lookup adds the same ``partial`` values and
+    counts the same Profiler blocks_read/postings_read as the
+    per-block loop, over random 1-5 posting blocks, with candidates in
+    the list, absent from it, past its last block, or none at all."""
+    from pisa_spark.query import kernels as K
+
+    rnd = np.random.default_rng(seed)
+    universe = int(rnd.integers(1, 200))
+    stats = K.Stats(num_docs=float(universe), avg_len=10.0,
+                    quantized=quantized)
+    sz = int(rnd.integers(1, universe + 1))
+    d = np.sort(rnd.choice(universe, size=sz, replace=False)).astype(np.int64)
+    tp = _mk_term_postings(d, rnd.integers(1, 9, size=sz),
+                           rnd.integers(1, 21, size=sz),
+                           float(rnd.choice([1.0, 2.0])), stats, rnd)
+    # candidates from a span past the list's last doc, so some fall
+    # beyond the last block
+    cand = np.unique(rnd.integers(0, universe + 20, size=n_cand)).astype(np.int64)
+    base = rnd.integers(0, 10**6, size=len(cand)).astype(np.int64)
+
+    got = {}
+    for name, fn in (("one_pass", K._lookup), ("per_block", _lookup_per_block)):
+        partial = base.copy()
+        K.Profiler.reset()
+        fn(tp, cand, partial, stats)
+        got[name] = (partial.tolist(), K.Profiler.blocks_read,
+                     K.Profiler.postings_read)
+    assert got["one_pass"] == got["per_block"]
 
 
 def test_block_max_maxscore_reads_fewer_blocks_than_maxscore():
