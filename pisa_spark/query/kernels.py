@@ -5,14 +5,17 @@ Spark genuinely lacks (cursor-based dynamic pruning,
 query/algorithm/*.hpp). They run inside the executor's Python groups
 (executor.py): every executor runs many queries per ``applyInArrow``
 cogroup over term postings decoded once per batch, columnar
-(codecs/columns.py). Kernels never decode payload bytes: a block
-"decode" (TermPostings.decode_block) is a slice of the decoded
-arrays, counted as a read (Profiler). All array math is vectorized,
-and the shared helpers cost Python work per TERM, never per block or
-per posting: _lookup scores a term's candidates with one searchsorted
-over its decoded docs, _aggregate sums into a dense docID accumulator
-(a sort only over sparse spans), and _finalize cuts to the k-th score
-with np.partition before its lexsort.
+(codecs/columns.py). Kernels never decode payload bytes and keep no
+cursor: each works on whole decoded term arrays, and the blocks a
+reference cursor would touch are counted as reads (Profiler;
+TermPostings.read_blocks / decode_all). All array math is vectorized,
+and Python work is per TERM (per term and round in _interval_sweep),
+never per block or per posting: _lookup scores a term's candidates
+with one searchsorted over its decoded docs, _aggregate sums into a
+dense docID accumulator (a sort only over sparse spans), and
+_finalize cuts to the k-th score with np.partition before its
+lexsort. The reference's per-posting cursor loops live in
+tests/daat_reference.py as the agreement baseline.
 
 Result semantics (every kernel, pinned by tests vs the SQL oracle,
 mirroring the reference's own agreement tests
@@ -32,18 +35,19 @@ Kernel inventory:
 - ranked_and_kernel   exhaustive conjunction (ranked_and_query.hpp)
 - and_kernel/or_kernel  Boolean (and_query.hpp / or_query.hpp)
 - wand_kernel         WAND dynamic pruning (wand_query.hpp:10-93),
-                      batched interval-sweep form (_interval_sweep);
-                      wand_kernel_daat is the literal cursor loop
-- block_max_wand_kernel  BMW (block_max_wand_query.hpp:8-167), batched
-                      interval-sweep form; block_max_wand_kernel_daat
-                      is the literal cursor loop (agreement-tested)
+                      interval sweep (_interval_sweep): bound-ordered
+                      rounds, Python work per term per round
+- block_max_wand_kernel  BMW (block_max_wand_query.hpp:8-167), the
+                      same sweep over block-max interval bounds
 - maxscore_kernel / block_max_maxscore_kernel  MaxScore
                       (maxscore_query.hpp:13-143) and BMM
                       (block_max_maxscore_query.hpp:9-99): one body,
                       _maxscore, whose survivor bound is the term
                       maxima or, for BMM, the block maxima
 - block_max_ranked_and_kernel  ranked conjunction with block-max
-                      skipping (block_max_ranked_and_query.hpp:9-86)
+                      skipping (block_max_ranked_and_query.hpp:9-86):
+                      block-bound filter of the shortest list's docs,
+                      then one _lookup per term
 - adaptive_kernel     per-query choice between ranked_or (few total
                       postings) and block_max_maxscore, from pre-decode
                       metadata only (choose_algorithm)
@@ -51,7 +55,6 @@ Kernel inventory:
 
 from __future__ import annotations
 
-from bisect import bisect_left
 from dataclasses import dataclass
 
 import numpy as np
@@ -67,9 +70,9 @@ class Profiler:
       executor's batch proto build adds its whole columnar decode
       once (executor._build_batch_protos); no kernel decodes.
     - ``blocks_read``/``postings_read``: blocks a kernel reads from
-      the decoded arrays, counted only by TermPostings.decode_block,
-      read_blocks and decode_all: the blocks a reference cursor would
-      touch. Profiled requests take
+      the decoded arrays, counted only by TermPostings.read_blocks
+      and decode_all (once per term, or per term and round): the
+      blocks a reference cursor would touch. Profiled requests take
       per-query deltas of this pair around each kernel call."""
 
     blocks = 0
@@ -91,7 +94,10 @@ class TermPostings:
     ``decoded`` holds the term-level (docs, tfs, lens) arrays (the
     executor decodes a whole batch columnar,
     executor._build_batch_protos); block ``bi`` is the slice
-    ``block_offsets[bi]:block_offsets[bi + 1]``.
+    ``block_offsets[bi]:block_offsets[bi + 1]``. Doc lengths are
+    stored inline (segments.py len_bytes) — the wand_data.hpp:38-117
+    design of keeping lengths WITH the index data — so no kernel ever
+    needs a driver-side doc-length array.
     """
 
     term_id: int
@@ -104,18 +110,6 @@ class TermPostings:
     decoded: tuple  # term-level (docs, tfs, lens)
     block_offsets: np.ndarray  # int64, n_blocks + 1
     idf_cache: object = None  # lazily-built constant-idf array (_score)
-
-    def decode_block(self, bi: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(docs, tfs, doc_lens) of one block, counted as one block
-        read. Doc lengths are stored inline (segments.py len_bytes) —
-        the wand_data.hpp:38-117 design of keeping lengths WITH the
-        index data — so no kernel ever needs a driver-side doc-length
-        array."""
-        lo, hi = self.block_offsets[bi], self.block_offsets[bi + 1]
-        Profiler.blocks_read += 1
-        Profiler.postings_read += int(hi - lo)
-        d, t, L = self.decoded
-        return d[lo:hi], t[lo:hi], L[lo:hi]
 
     def read_blocks(self, bi: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """The term's whole (docs, tfs, doc_lens), with the distinct
@@ -276,88 +270,6 @@ def or_kernel(terms: list[TermPostings]) -> np.ndarray:
 
 # ------------------------------------------------------------------ pruned
 
-class _Cursor:
-    """DAAT cursor with block skipping (block_posting_list.hpp:80-319).
-
-    Python-loop-optimized: on block load the WHOLE block is scored
-    vectorized (the reference lazily decodes the freq block; we score
-    the block's slice of the decoded arrays — one numpy pass per 128
-    postings instead of a numpy round-trip per posting), and the
-    hot-path state (doc list, score list, block-max arrays) lives as
-    plain Python lists/ints, which beat numpy scalar indexing by ~10x
-    inside the DAAT loop.
-    """
-
-    __slots__ = ("tp", "bi", "pos", "docs", "scores", "done", "docid",
-                 "_bmd", "_bms", "_n_blocks", "_stats", "ms", "bms", "bld")
-
-    SENTINEL = np.iinfo(np.int64).max
-
-    def __init__(self, tp: TermPostings, stats: Stats):
-        self.tp = tp
-        self._stats = stats
-        self._bmd = tp.block_max_doc.tolist()
-        self._bms = tp.block_max_score.tolist()
-        self._n_blocks = len(tp.block_count)
-        self.ms = tp.max_score  # hot-path copy (skip two attr hops)
-        self.bms = 0.0  # current block's max score (python float)
-        self.bld = self.SENTINEL  # current block's last docID
-        self.bi = -1
-        self.done = self._n_blocks == 0
-        self.docs: list[int] = []
-        self.scores: list[int] = []
-        self.docid = self.SENTINEL
-        self._load(0)
-
-    def _load(self, bi: int):
-        if bi >= self._n_blocks:
-            self.done = True
-            self.docid = self.SENTINEL
-            self.bms = 0.0
-            self.bld = self.SENTINEL
-            return
-        self.bi = bi
-        d, t, L = self.tp.decode_block(bi)
-        self.docs = d.tolist()
-        self.scores = _score(self.tp, t, L, self._stats).tolist()
-        self.pos = 0
-        self.docid = self.docs[0]
-        self.bms = self._bms[bi]
-        self.bld = self._bmd[bi]
-
-    def score(self) -> int:
-        return self.scores[self.pos]
-
-    def next(self):
-        if self.done:
-            return
-        self.pos += 1
-        if self.pos >= len(self.docs):
-            self._load(self.bi + 1)
-        else:
-            self.docid = self.docs[self.pos]
-
-    def next_geq(self, target: int):
-        if self.done:
-            return
-        # Block skip via block-max docIDs (next_geq, :115-137).
-        if self._bmd[self.bi] < target:
-            nbi = bisect_left(self._bmd, target)
-            if nbi >= self._n_blocks:
-                self.done = True
-                self.docid = self.SENTINEL
-                self.bms = 0.0  # match _load's done branch so
-                self.bld = self.SENTINEL  # bms/bld reads are never stale
-                return
-            self._load(nbi)
-        pos = bisect_left(self.docs, target, self.pos)
-        if pos >= len(self.docs):  # can't happen if block_max >= target
-            self._load(self.bi + 1)
-        else:
-            self.pos = pos
-            self.docid = self.docs[pos]
-
-
 # Pruning margin in MICRO units: per-posting quantization moves a
 # score by <= 0.5 micro, so bounds computed from unquantized maxima
 # get 2-micro slack before any candidate is pruned.
@@ -372,46 +284,6 @@ def _kth_floor(micros: np.ndarray, k: int) -> float:
     return float(np.partition(micros, -k)[-k]) - PRUNE_EPS
 
 
-class _TopK:
-    """k-heap with threshold (topk_queue.hpp:19-139): pruning decisions
-    use strict ``> threshold`` (:67) with an epsilon slack; every doc
-    actually scored is retained so the final (round desc, doc asc)
-    selection is exact regardless of heap tie order."""
-
-    def __init__(self, k: int, init_threshold: float = 0.0):
-        import heapq
-
-        self.heapq = heapq
-        self.k = k
-        self.init = float(init_threshold)  # sound lower bound - eps
-        self.threshold = self.init  # cached: max(init, kth-eps)
-        self.heap: list[int] = []  # k highest micro scores seen
-        self.docs: list[int] = []
-        self.scores: list[int] = []
-
-    def would_enter(self, bound: float) -> bool:
-        return bound > self.threshold
-
-    def insert(self, micro: int, doc: int):
-        self.docs.append(doc)
-        self.scores.append(micro)
-        if len(self.heap) < self.k:
-            self.heapq.heappush(self.heap, micro)
-        else:
-            if micro <= self.heap[0]:
-                return
-            self.heapq.heapreplace(self.heap, micro)
-        if len(self.heap) == self.k:
-            t = self.heap[0] - PRUNE_EPS
-            if t > self.threshold:
-                self.threshold = t
-
-    def finalize(self, k: int) -> tuple[np.ndarray, np.ndarray]:
-        docs = np.array(self.docs, dtype=np.int64)
-        scores = np.array(self.scores, dtype=np.float64)
-        return _finalize(docs, scores, k)
-
-
 def _interval_sweep(terms: list[TermPostings], k: int, stats: Stats,
                     init_threshold: float,
                     block_level: bool) -> tuple[np.ndarray, np.ndarray]:
@@ -423,92 +295,44 @@ def _interval_sweep(terms: list[TermPostings], k: int, stats: Stats,
     overlapping blocks' maxima (``block_level=True``, BMW's shallow
     check) or of the overlapping TERM maxima (``block_level=False``,
     WAND's pivot bound) — both computed in one vectorized
-    searchsorted per term. Intervals are then processed in DESCENDING
-    bound order: every candidate inside a surviving interval is
-    scored exactly (vectorized per block, each block decoded at most
-    once), the running k-th score raises θ, and the first interval
-    whose bound fails ``> θ`` ends the query (bounds are sorted, so
-    all later intervals fail too).
+    searchsorted per term. Intervals are then consumed in DESCENDING
+    bound order, in geometrically growing rounds: per round and term,
+    the postings inside the round's intervals are one boolean gather
+    over the term's posting->interval map (computed once), scored in
+    one ``_score`` call; the round's scores raise θ, and the first
+    interval whose bound fails ``> θ`` ends the query (bounds are
+    sorted, so all later intervals fail too).
 
-    Python cost is per (round, block), never per posting — coarser
-    than _maxscore, whose Python cost is per term —
-    while the pruning decisions are the cursor algorithms' own:
-    a skipped doc has true score <= interval bound <= θ = k-th − eps,
-    exactly _TopK.would_enter's test, so the top-k (incl. docID
-    tie-breaks) is identical to the DAAT form (pinned by
-    test_batched_kernels_match_daat)."""
+    Python cost is per (round, term), never per block or per posting,
+    while the pruning decisions are the cursor algorithms' own: a
+    skipped doc has true score <= interval bound <= θ = k-th − eps,
+    exactly the cursor loop's ``> threshold`` test, so the top-k (incl.
+    docID tie-breaks) is identical to the DAAT form (the cursor loops
+    in tests/daat_reference.py, agreement-tested on the gate workload).
+    A block counts as read once, in the first round that chooses an
+    interval inside it; a single term's intervals are its blocks, so
+    it reads a round's blocks at a time."""
     terms = [t for t in terms if len(t.block_count)]
     if not terms:
         return np.empty(0, np.int64), np.empty(0, np.float64)
-    if len(terms) == 1:
-        # Single term: intervals ARE the blocks and docs are already
-        # unique — skip the union/aggregate machinery. Blocks by
-        # descending bound (block max for BMW, term max for WAND),
-        # stop at the first failing bound; same pruning test as DAAT.
-        t = terms[0]
-        bounds = (
-            t.block_max_score if block_level
-            else np.full(len(t.block_max_doc), t.max_score)
-        )
-        order = np.argsort(-bounds, kind="stable")
-        theta = float(init_threshold)
-        cand_d, cand_s = [], []
-        topk_buf = np.empty(0, dtype=np.int64)
-        for bi in order:
-            if not bounds[bi] > theta:
-                break
-            d, tf, ln = t.decode_block(int(bi))
-            s = _score(t, tf, ln, stats)
-            cand_d.append(d)
-            cand_s.append(s)
-            topk_buf = np.concatenate([topk_buf, s])
-            if len(topk_buf) > k:
-                topk_buf = np.partition(topk_buf, -k)[-k:]
-            theta = max(theta, _kth_floor(topk_buf, k))
-        if not cand_d:
-            return np.empty(0, np.int64), np.empty(0, np.float64)
-        return _finalize(
-            np.concatenate(cand_d), np.concatenate(cand_s), k
-        )
     ends = np.unique(np.concatenate([t.block_max_doc for t in terms]))
     n_iv = len(ends)
     ubs = np.zeros(n_iv, dtype=np.float64)
-    term_bi = []
+    # per term: interval -> block, posting -> interval, and the blocks
+    # read so far (the slot past the last block holds nothing to read)
+    term_bi, post_iv, seen = [], [], []
     for t in terms:
-        nb = len(t.block_max_doc)
+        nb = len(t.block_count)
         bi = np.searchsorted(t.block_max_doc, ends, side="left")
-        in_r = bi < nb
-        if block_level:
-            contrib = np.where(in_r, t.block_max_score[np.minimum(bi, nb - 1)], 0.0)
-        else:
-            contrib = np.where(in_r, t.max_score, 0.0)
-        ubs += contrib
+        bound = t.block_max_score if block_level else np.full(nb, t.max_score)
+        ubs += np.append(bound, 0.0)[bi]
         term_bi.append(bi)
+        post_iv.append(np.searchsorted(ends, t.decoded[0], side="left"))
+        seen.append(np.zeros(nb + 1, dtype=bool))
+        seen[-1][nb] = True
     order = np.argsort(-ubs, kind="stable")
-
-    # Intervals are consumed in geometrically-growing ROUNDS (by ub
-    # desc): per round every needed block is decoded once (cached with
-    # its doc->interval mapping) and its postings inside the round's
-    # chosen intervals are selected with one boolean gather — Python
-    # cost is per (round, block), and θ rises between rounds so the
-    # sorted tail is abandoned wholesale at the first failing bound.
     ubs_sorted = ubs[order]
     theta = float(init_threshold)
-    caches: list[dict] = [{} for _ in terms]
-    # Each block covers a CONTIGUOUS interval-id range [first, last]
-    # (intervals are docID-ordered cuts of contiguous block ranges) —
-    # with a per-round prefix sum over the chosen mask, "fully/partly/
-    # not chosen" is O(1) per block and the doc->interval gather runs
-    # only for partially-chosen blocks.
-    blk_last: list[np.ndarray] = []
-    blk_first: list[np.ndarray] = []
-    for t in terms:
-        last = np.searchsorted(ends, t.block_max_doc, side="left")
-        first = np.empty_like(last)
-        first[0] = 0
-        first[1:] = last[:-1] + 1
-        blk_last.append(last)
-        blk_first.append(first)
     cand_d: list[np.ndarray] = []
     cand_s: list[np.ndarray] = []
     topk_buf = np.empty(0, dtype=np.int64)  # best k micros so far
@@ -524,48 +348,26 @@ def _interval_sweep(terms: list[TermPostings], k: int, stats: Stats,
         cut = int(np.searchsorted(-ubs_sorted, -theta, side="left"))
         if cut >= n_iv and pos > 0:
             # θ (seeded by round 1) prunes nothing: this is a
-            # flat-score/no-pruning query — finish in ONE round so
-            # each block is gathered once (≈ exhaustive TAAT cost)
-            # instead of re-masked every geometric round.
+            # flat-score/no-pruning query — finish in ONE round
+            # (≈ exhaustive TAAT cost) instead of re-masking every
+            # geometric round.
             hi = n_iv
         else:
             hi = min(pos + batch, cut)
         chosen = order[pos:hi]
         chosen_mask[chosen] = True
-        pref = np.empty(n_iv + 1, dtype=np.int64)
-        pref[0] = 0
-        np.cumsum(chosen_mask, out=pref[1:])
         parts_d, parts_s = [], []
         for ti, t in enumerate(terms):
-            nb = len(t.block_max_doc)
-            bis = np.unique(term_bi[ti][chosen])
-            cache = caches[ti]
-            first_a, last_a = blk_first[ti], blk_last[ti]
-            for bi in bis:
-                if bi >= nb:
-                    continue
-                blk = cache.get(bi)
-                if blk is None:
-                    d, tf, ln = t.decode_block(int(bi))
-                    blk = [d, _score(t, tf, ln, stats), None]
-                    cache[bi] = blk
-                d, s, iv = blk
-                lo_iv, hi_iv = int(first_a[bi]), int(last_a[bi])
-                if pref[hi_iv + 1] - pref[lo_iv] == hi_iv - lo_iv + 1:
-                    parts_d.append(d)  # whole block chosen: no gather
-                    parts_s.append(s)
-                else:
-                    if iv is None:
-                        iv = np.searchsorted(ends, d, side="left")
-                        blk[2] = iv
-                    keep = chosen_mask[iv]
-                    parts_d.append(d[keep])
-                    parts_s.append(s[keep])
+            new = np.unique(term_bi[ti][chosen])
+            new = new[~seen[ti][new]]
+            seen[ti][new] = True
+            docs, tfs, lens = t.read_blocks(new)
+            keep = chosen_mask[post_iv[ti]]
+            parts_d.append(docs[keep])
+            parts_s.append(_score(t, tfs[keep], lens[keep], stats))
         chosen_mask[chosen] = False
         pos = hi
         batch *= 4
-        if not parts_d:
-            continue
         docs, micros = _aggregate(
             np.concatenate(parts_d), np.concatenate(parts_s)
         )
@@ -586,7 +388,7 @@ def wand_kernel(terms: list[TermPostings], k: int,
                 stats: Stats, init_threshold: float = 0.0) -> tuple[np.ndarray, np.ndarray]:
     """WAND (wand_query.hpp:10-93), batched: the pivot's cumulative
     term-max bound becomes a per-interval overlapping-term-max bound
-    (see _interval_sweep). Identical top-k to wand_kernel_daat."""
+    (see _interval_sweep)."""
     return _interval_sweep(terms, k, stats, init_threshold, block_level=False)
 
 
@@ -596,127 +398,12 @@ def block_max_wand_kernel(terms: list[TermPostings], k: int,
     """BMW (block_max_wand_query.hpp:8-167), batched: the shallow
     block-max check becomes the per-interval bound and the "jump to
     the next block boundary" becomes interval skipping (see
-    _interval_sweep). Identical top-k to block_max_wand_kernel_daat."""
+    _interval_sweep)."""
     return _interval_sweep(terms, k, stats, init_threshold, block_level=True)
 
 
-def wand_kernel_daat(terms: list[TermPostings], k: int,
-                     stats: Stats, init_threshold: float = 0.0) -> tuple[np.ndarray, np.ndarray]:
-    """WAND (wand_query.hpp:10-93): per-posting DAAT cursor loop with
-    pivot by cumulative max-score — the reference's literal control
-    flow, kept as the agreement baseline for the batched kernel."""
-    from operator import attrgetter
-
-    by_docid = attrgetter("docid")
-    by_ms = attrgetter("ms")
-    cursors = [_Cursor(tp, stats) for tp in terms if len(tp.block_count)]
-    topk = _TopK(k, init_threshold)
-    while True:
-        cursors = [c for c in cursors if not c.done]
-        if not cursors:
-            break
-        cursors.sort(key=by_docid)
-        threshold = topk.threshold
-        ub, pivot = 0.0, -1
-        for i, c in enumerate(cursors):
-            ub += c.ms
-            if ub > threshold:
-                pivot = i
-                break
-        if pivot < 0:
-            break
-        pivot_doc = cursors[pivot].docid
-        if cursors[0].docid == pivot_doc:
-            score = 0
-            for c in cursors:
-                if c.docid != pivot_doc:
-                    break
-                score += c.scores[c.pos]
-            topk.insert(score, pivot_doc)
-            for c in cursors:
-                if c.docid == pivot_doc:
-                    c.next()
-        else:
-            # Advance the highest-impact lagging list (correctness is
-            # independent of the choice; only the trace differs).
-            lag = max(
-                (c for c in cursors[:pivot] if c.docid < pivot_doc),
-                key=by_ms,
-            )
-            lag.next_geq(pivot_doc)
-    return topk.finalize(k)
-
-
-def block_max_wand_kernel_daat(terms: list[TermPostings], k: int,
-                               stats: Stats,
-                               init_threshold: float = 0.0) -> tuple[np.ndarray, np.ndarray]:
-    """BMW (block_max_wand_query.hpp:8-167): per-posting DAAT cursor
-    loop — WAND pivot + block-max refinement + jump to min block
-    boundary when the shallow check fails. Kept as the agreement
-    baseline for the batched kernel."""
-    from operator import attrgetter
-
-    by_docid = attrgetter("docid")
-    by_ms = attrgetter("ms")
-    cursors = [_Cursor(tp, stats) for tp in terms if len(tp.block_count)]
-    topk = _TopK(k, init_threshold)
-    while True:
-        cursors = [c for c in cursors if not c.done]
-        if not cursors:
-            break
-        cursors.sort(key=by_docid)
-        threshold = topk.threshold
-        ub, pivot = 0.0, -1
-        for i, c in enumerate(cursors):
-            ub += c.ms
-            if ub > threshold:
-                pivot = i
-                break
-        if pivot < 0:
-            break
-        pivot_doc = cursors[pivot].docid
-        # Extend pivot over cursors tied at pivot_doc so the shallow
-        # check bounds the doc's FULL score (reference does the same,
-        # block_max_wand_query.hpp pivot extension) — without this the
-        # jump skips docs whose extra tied lists push them over θ.
-        while pivot + 1 < len(cursors) and cursors[pivot + 1].docid == pivot_doc:
-            pivot += 1
-        if cursors[0].docid == pivot_doc:
-            # Shallow check: blocks already contain pivot_doc (cursors
-            # 0..pivot are positioned AT pivot_doc); sum block maxes.
-            block_ub = 0.0
-            for c in cursors[: pivot + 1]:
-                block_ub += c.bms
-            if block_ub > threshold:
-                score = 0
-                for c in cursors:
-                    if c.docid != pivot_doc:
-                        break
-                    score += c.scores[c.pos]
-                topk.insert(score, pivot_doc)
-                for c in cursors:
-                    if c.docid == pivot_doc:
-                        c.next()
-            else:
-                # Jump past the limiting block boundary (:120-156).
-                nxt = min(c.bld for c in cursors[: pivot + 1]) + 1
-                if pivot + 1 < len(cursors):
-                    nxt = min(nxt, cursors[pivot + 1].docid)
-                nxt = max(nxt, pivot_doc + 1)
-                for c in cursors[: pivot + 1]:
-                    if c.docid < nxt:
-                        c.next_geq(nxt)
-        else:
-            lag = max(
-                (c for c in cursors[:pivot] if c.docid < pivot_doc),
-                key=by_ms,
-            )
-            lag.next_geq(pivot_doc)
-    return topk.finalize(k)
-
-
 def _lookup(tp: TermPostings, docs: np.ndarray, partial: np.ndarray,
-            stats: Stats) -> None:
+            stats: Stats) -> np.ndarray:
     """Add ``tp``'s scores of the sorted candidates ``docs`` into
     ``partial`` (the reference's lookup cursors,
     maxscore_query.hpp:58-126) in one pass per term: one
@@ -725,18 +412,20 @@ def _lookup(tp: TermPostings, docs: np.ndarray, partial: np.ndarray,
     those a cursor would touch, one per candidate docID range: the
     distinct ``searchsorted(block_max_doc, docs)`` indices below the
     block count (sorted candidates make them non-decreasing), with
-    their ``block_count`` postings."""
+    their ``block_count`` postings. Returns the mask of candidates the
+    term holds."""
     bi = np.searchsorted(tp.block_max_doc, docs, side="left")
     bi = bi[:np.searchsorted(bi, len(tp.block_max_doc), side="left")]
     bi = bi[np.flatnonzero(np.diff(bi, prepend=-1))]
     if not len(bi):
-        return
+        return np.zeros(len(docs), dtype=bool)
     t_docs, t_tfs, t_lens = tp.read_blocks(bi)
     pos = np.minimum(np.searchsorted(t_docs, docs), len(t_docs) - 1)
     hit = t_docs[pos] == docs
     if hit.any():
         at = pos[hit]
         partial[hit] += _score(tp, t_tfs[at], t_lens[at], stats)
+    return hit
 
 
 def _maxscore(terms: list[TermPostings], k: int, stats: Stats,
@@ -821,60 +510,30 @@ def block_max_ranked_and_kernel(terms: list[TermPostings], k: int,
                                 stats: Stats,
                                 init_threshold: float = 0.0) -> tuple[np.ndarray, np.ndarray]:
     """Ranked conjunction with block-max skipping
-    (block_max_ranked_and_query.hpp:9-86): leapfrog intersection, but
-    before aligning the lists on a candidate the per-cursor BLOCK
-    upper bounds (looked up by bisect on the block-max docID array —
-    no decode) must beat the threshold; otherwise jump past the
-    closest block boundary.
-    """
+    (block_max_ranked_and_query.hpp:9-86), per term. The shortest
+    list's docs are the candidates. A candidate past any list's last
+    block, or whose summed block maxima (one searchsorted over each
+    list's block-max docIDs — no read) cannot beat ``init_threshold``,
+    is dropped: the reference's check before it aligns the cursors.
+    The survivors are intersected list by list in ascending df, each a
+    ``_lookup`` that scores the candidates the list holds and drops
+    the rest, so a list reads only the blocks holding a candidate still
+    alive. θ is not raised from the scored docs: the intersection is
+    scored exactly and cut once by ``_finalize``."""
     if not terms:
         return np.empty(0, np.int64), np.empty(0, np.float64)
-    cursors = [_Cursor(tp, stats) for tp in terms]
-    if any(c.done for c in cursors):
-        return np.empty(0, np.int64), np.empty(0, np.float64)
-    cursors.sort(key=lambda c: c.tp.df)  # shortest list drives
-    topk = _TopK(k, init_threshold)
-    SEN = _Cursor.SENTINEL
-
-    n = len(cursors)
-    candidate = cursors[0].docid
-    li = 1  # candidate_list: next list to align (persists across rounds)
-    while candidate < SEN:
-        # block upper bound without decoding (block_max_next_geq)
-        ub = 0.0
-        exhausted = False
-        jumps = []
-        for c in cursors:
-            bi = bisect_left(c._bmd, candidate)
-            if bi >= c._n_blocks:
-                exhausted = True
-                break
-            ub += float(c.tp.block_max_score[bi])
-            jumps.append(c._bmd[bi])
-        if exhausted:
-            break
-        if topk.would_enter(ub):
-            advanced_past = False
-            while li < n:
-                c = cursors[li]
-                c.next_geq(candidate)
-                if c.docid != candidate:
-                    candidate = c.docid
-                    li = 0
-                    advanced_past = True
-                    break
-                li += 1
-            if not advanced_past:
-                # all n lists aligned at candidate
-                score = sum(c.score() for c in cursors)
-                topk.insert(score, candidate)
-                cursors[0].next()
-                candidate = cursors[0].docid
-                li = 1
-        else:
-            candidate = max(min(jumps) + 1, candidate + 1)
-            li = 0
-    return topk.finalize(k)
+    terms = sorted(terms, key=lambda t: t.df)  # shortest list drives
+    docs = terms[0].decoded[0]
+    ub = np.zeros(len(docs), dtype=np.float64)
+    for tp in terms:  # past a list's last block the bound is -inf
+        bi = np.searchsorted(tp.block_max_doc, docs, side="left")
+        ub += np.append(tp.block_max_score, -np.inf)[bi]
+    docs = docs[ub > init_threshold]
+    partial = np.zeros(len(docs), dtype=np.int64)
+    for tp in terms:
+        hit = _lookup(tp, docs, partial, stats)
+        docs, partial = docs[hit], partial[hit]
+    return _finalize(docs, partial, k)
 
 
 # ---------------------------------------------------------------------------

@@ -112,10 +112,10 @@ def _profiled_walk(left, right, decode, algo, stats):
 
 @pytest.mark.parametrize("codec", ["varint", "bitpack"])
 def test_build_batch_protos_match_raw_postings(codec):
-    """Every proto block (decode_block) and every term (decode_all)
-    equals the postings it was encoded from (varint: one decode call
-    per payload column; bitpack: per block), and the build counts its
-    decode once. Every disjunctive kernel matches ranked_or and the
+    """Every proto block (its block_offsets slice) and every term
+    (decode_all) equals the postings it was encoded from (varint: one
+    decode call per payload column; bitpack: per block), and the build
+    counts its decode once. Every disjunctive kernel matches ranked_or and the
     two conjunctive kernels match each other. Each query's kernel
     reads are the same whether it runs in its batch or alone (no
     read is shared between queries), and ranked_or reads every block
@@ -131,8 +131,9 @@ def test_build_batch_protos_match_raw_postings(codec):
     for tid, tp in protos.items():
         assert len(tp.block_count) == len(raw[tid])
         for bi, want in enumerate(raw[tid]):
-            for got, exp in zip(tp.decode_block(bi), want):
-                np.testing.assert_array_equal(got, exp)
+            lo, hi = tp.block_offsets[bi], tp.block_offsets[bi + 1]
+            for got, exp in zip(tp.read_blocks(np.array([bi])), want):
+                np.testing.assert_array_equal(got[lo:hi], exp)
         for got, exp in zip(tp.decode_all(), zip(*raw[tid])):
             np.testing.assert_array_equal(got, np.concatenate(exp))
     queries = _queries()

@@ -1440,20 +1440,17 @@ def test_pruned_kernels_decode_fewer_blocks(spark, index, parsed):
 def test_batched_kernels_match_daat(index, parsed, spark):
     """The batched interval-sweep WAND/BMW kernels must return the
     IDENTICAL top-k (docs and scores, incl. docID tie-breaks) as the
-    literal per-posting DAAT cursor implementations on the gate
-    workload — the agreement test behind the batched rewrite."""
+    literal per-posting DAAT cursor implementations
+    (tests/daat_reference.py) on the gate workload — the agreement
+    test behind the batched rewrite."""
     import numpy as np
+    from daat_reference import block_max_wand_kernel_daat, wand_kernel_daat
 
     from pisa_spark.codecs import CODECS
     from pisa_spark.query.executor import (
         _build_batch_protos, _factored_rows, _stats, _walk_batch_queries,
     )
-    from pisa_spark.query.kernels import (
-        block_max_wand_kernel,
-        block_max_wand_kernel_daat,
-        wand_kernel,
-        wand_kernel_daat,
-    )
+    from pisa_spark.query.kernels import block_max_wand_kernel, wand_kernel
 
     decode = CODECS[index.config.index.codec][1]
     from pisa_spark.query.kernels import PRUNE_EPS, ranked_or_kernel
@@ -1477,7 +1474,7 @@ def test_batched_kernels_match_daat(index, parsed, spark):
                 got = batched(terms, 10, stats, init_threshold=init)
                 want = daat(terms, 10, stats, init_threshold=init)
                 assert np.array_equal(got[0], want[0])
-                assert np.allclose(got[1], want[1])
+                assert np.array_equal(got[1], want[1])
         n_q[0] += 1
         return np.empty(0, np.int64), np.empty(0)
 

@@ -2,9 +2,8 @@
 function/class defined in pisa_spark must be REFERENCED by name
 somewhere outside its defining module — package code, scripts/,
 tests/, or __spark_entry__.py. Superseded helpers get
-deleted, not carried; deliberate agreement baselines (DAAT kernel
-forms) are referenced by their agreement tests, so they pass without
-an allowlist.
+deleted, not carried; deliberate agreement baselines (the DAAT
+cursor loops) live under tests/, outside this guard's scope.
 """
 
 from __future__ import annotations

@@ -7,8 +7,14 @@ from __future__ import annotations
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
+from daat_reference import (
+    _TopK,
+    block_max_wand_kernel_daat,
+    read_block,
+    wand_kernel_daat,
+)
 from pisa_spark.codecs import CODECS
-from pisa_spark.query.kernels import PRUNE_EPS, _TopK, _finalize
+from pisa_spark.query.kernels import PRUNE_EPS, _finalize
 
 u40 = st.integers(min_value=0, max_value=(1 << 40) - 1)
 
@@ -220,7 +226,10 @@ def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized,
     # Same θ seed and split, and a block max never exceeds its term
     # max: BMM reads no more blocks than MaxScore.
     assert blocks["block_max_maxscore"] <= blocks["maxscore"], blocks
-    for fn in (K.wand_kernel_daat, K.block_max_wand_kernel_daat):
+    # A sweep reads each block at most once; ranked_or reads them all.
+    assert blocks["wand"] <= blocks["ranked_or"], blocks
+    assert blocks["block_max_wand"] <= blocks["ranked_or"], blocks
+    for fn in (wand_kernel_daat, block_max_wand_kernel_daat):
         got_d, got_s = fn(terms, k, stats, init_threshold=boot)
         np.testing.assert_array_equal(got_d, exp_docs, err_msg=fn.__name__)
         np.testing.assert_array_equal(got_s, exp_scores, err_msg=fn.__name__)
@@ -231,22 +240,27 @@ def test_all_kernels_match_exhaustive(seed, n_terms, k, boot_frac, quantized,
     np.testing.assert_array_equal(K.and_kernel(terms), both)
     and_docs, and_scores = _oracle_topk(terms, k, stats, conjunctive=True)
     for fn in (K.ranked_and_kernel, K.block_max_ranked_and_kernel):
+        K.Profiler.reset()
         got_d, got_s = fn(terms, k, stats)
+        blocks[fn.__name__] = K.Profiler.blocks_read
         np.testing.assert_array_equal(got_d, and_docs, err_msg=fn.__name__)
         np.testing.assert_array_equal(got_s, and_scores, err_msg=fn.__name__)
+    # ranked_and reads every block of every list
+    assert (blocks["block_max_ranked_and_kernel"]
+            <= blocks["ranked_and_kernel"]), blocks
 
 
 def _lookup_per_block(tp, docs, partial, stats):
     """Reference for kernels._lookup: the per-block loop form, one
-    decode_block (a counted read) and one _score call per block that
-    holds a candidate's docID range."""
+    block_offsets slice (read_block, a counted read) and one _score
+    call per block that holds a candidate's docID range."""
     from pisa_spark.query import kernels as K
 
     bi = np.searchsorted(tp.block_max_doc, docs, side="left")
     bi = bi[:np.searchsorted(bi, len(tp.block_max_doc), side="left")]
     starts = np.flatnonzero(np.diff(bi, prepend=-1))
     for lo, hi in zip(starts.tolist(), [*starts[1:].tolist(), len(bi)]):
-        b_docs, b_tfs, b_lens = tp.decode_block(int(bi[lo]))
+        b_docs, b_tfs, b_lens = read_block(tp, int(bi[lo]))
         run = docs[lo:hi]
         pos = np.minimum(np.searchsorted(b_docs, run), len(b_docs) - 1)
         hit = b_docs[pos] == run
